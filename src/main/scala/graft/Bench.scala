@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spark.{GeoFunctions, SpatialJoin, Tables}
@@ -13,10 +14,12 @@ import graft.spark.{GeoFunctions, SpatialJoin, Tables}
  *    input, reporting rows/sec at both and the N→4N scaling efficiency
  *    (the sandbox stand-in for N vs 4N executors; ≥0.8 required).
  * 2. Per-query wall times for every SparkEntry query at local[32] over
- *    SPARK_GRAFT_SF_DIR.
+ *    SPARK_GRAFT_SF_DIR. A query that throws is reported as "error",
+ *    never as a time, and fails the run.
  *
  * Prints ONE JSON line: {"metric","value","unit","queries","sf",
- * "scaling":{...}}.
+ * "scaling":{...}}, then exits nonzero if a query or the sidecar write
+ * failed.
  */
 object Bench {
 
@@ -33,8 +36,8 @@ object Bench {
     s
   }
 
-  /** the headline job: SFC cell encode + range prefilter →
-    * broadcast-R-tree point-in-polygon join → single-tier tile
+  /** the headline job: broadcast-R-tree point-in-polygon join over
+    * points without a stored cell id (no range prefilter) → single-tier tile
     * assignment → aggregate, over an executor-cached input. Caching
     * mirrors cluster behavior: on a real cluster scan bandwidth scales
     * with executor count, while this box's single disk/page-cache path
@@ -84,6 +87,23 @@ object Bench {
       }.min
       (best, rows)
     } finally spark.stop()
+  }
+
+  /** wall seconds of each query's full run, or None when it threw: a
+    * failed query is an error, not a timing. */
+  private[graft] def timeQueries(queries: Seq[(String, () => Unit)]): Seq[(String, Option[Double])] =
+    queries.map { case (name, run) =>
+      val t0 = System.nanoTime()
+      try { run(); name -> Some((System.nanoTime() - t0) / 1e9) }
+      catch { case NonFatal(e) => System.err.println(s"query $name failed: $e"); name -> None }
+    }
+
+  /** the per-query JSON object and the total seconds of the queries that ran. */
+  private[graft] def queriesJson(results: Seq[(String, Option[Double])]): (String, Double) = {
+    val qs = results.map { case (k, v) =>
+      "\"" + k + "\":" + v.fold("\"error\"")(sec => f"$sec%.3f")
+    }.mkString("{", ",", "}")
+    (qs, results.flatMap(_._2).sum)
   }
 
   def main(args: Array[String]): Unit = {
@@ -136,14 +156,10 @@ object Bench {
 
     // per-query phase at local[32]
     val spark = session(32)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val results = timeQueries(SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (() => { fn(spark, sfDir).count(); () })
+    })
+    val (qs, total) = queriesJson(results)
     val scaling =
       f"""{"rows":$n,"join_output_rows":$joinRows,"n_cores":$nCores,"n4_cores":${4 * nCores},""" +
         f""""localN_sec":$sec8%.3f,"local4N_sec":$sec32%.3f,""" +
@@ -155,10 +171,11 @@ object Bench {
     // sidecar copy: the driver truncates long stdout tails, which hid the
     // first ~50 per-query timings from the round-4 judge — persist the
     // full line next to the repo so every round's table diffs cleanly
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_SIDECAR.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    val sidecarOk = try {
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SIDECAR.json"), (line + "\n").getBytes("UTF-8"))
+      true
+    } catch { case NonFatal(e) => System.err.println(s"BENCH_SIDECAR.json write failed: $e"); false }
     spark.stop()
+    if (results.exists(_._2.isEmpty) || !sidecarOk) sys.exit(1)
   }
 }

@@ -946,8 +946,8 @@ object SparkEntry {
     "q86_stats_clipped_box" -> ((s, dir) => {
       // stats-clipped scan (QueryIndexHelper.clipIndexedBBOXConstraints):
       // a REGIONAL shard queried with a box that mostly overhangs its
-      // bounding-box statistic — the planner decomposes only the clipped
-      // envelope, spending the range budget on the lived-in region
+      // bounding-box statistic — the clipped envelope is the fine filter,
+      // and over a stored cell_id the only box decomposed into ranges
       // (StatsClipQuerySpec pins the coarse-prefilter pruning; this oracle
       // pins result equivalence against the ORIGINAL query box)
       val shard = Tables.pages(s, dir)

@@ -66,13 +66,6 @@ final class HilbertSFC(val dimensions: Array[SFCDimension]) extends Serializable
     idToBytes(hilbert.index(p))
   }
 
-  def getIdLong(values: Array[Double]): Long = {
-    val p = new Array[Long](n)
-    var d = 0
-    while (d < n) { p(d) = normalizeToBucket(d, values(d), isMin = false, overInclusiveOnEdge = false); d += 1 }
-    hilbert.index(p)
-  }
-
   /** per-dimension inclusive bucket range of a query/data hyper-rectangle. */
   def bucketRanges(ranges: Array[NumericData], overInclusiveOnEdge: Boolean): (Array[Long], Array[Long]) = {
     val mins = new Array[Long](n)

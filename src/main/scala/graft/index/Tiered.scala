@@ -1,10 +1,7 @@
 package graft.index
 
 /** An insertion/query key range; keys are tier ‖ binId ‖ sfcBytes. */
-final case class KeyRange(start: Array[Byte], end: Array[Byte]) {
-  /** true when the range addresses every SFC id under its tier+bin prefix. */
-  def isPrefixOnly(sfcByteCount: Int): Boolean = start.length < sfcByteCount
-}
+final case class KeyRange(start: Array[Byte], end: Array[Byte])
 
 /**
  * Tiered SFC index strategy: one Hilbert curve per tier of increasing
@@ -134,8 +131,6 @@ final class TieredStrategy(
     val sfc = sfcs(tierToSfcIndex(tier))
     sfc.getCoordinates(java.util.Arrays.copyOfRange(rowId, 1 + binIdLength, rowId.length))
   }
-
-  def sfcForTier(tier: Byte): HilbertSFC = sfcs(tierToSfcIndex(tier))
 }
 
 /** Factories mirroring TieredSFCIndexFactory. */

@@ -14,31 +14,24 @@ object Ops {
 
   // ---------------------------------------------------------------- scans
 
-  /** Spatial range (box) query through the full index pipeline: coarse
-    * cell-id range prefilter from SFC decomposition + exact MBR test.
+  /** Spatial range (box) query through the index pipeline: coarse
+    * cell-id range prefilter from SFC decomposition over a stored
+    * `cell_id` ([[SpatialPlanner.prefilterStored]]) + exact MBR test.
+    * Output: the input columns.
     * (reference: SpatialQuery via BaseDataStore.query, SURVEY §3.1) */
   def spatialBoxQuery(pts: DataFrame, lonMin: Double, lonMax: Double,
-                      latMin: Double, latMax: Double,
-                      cellCol: String = "cell_id"): DataFrame = {
-    val withCell =
-      if (pts.columns.contains(cellCol)) pts
-      else pts.withColumn(cellCol, gw_cell_id(col("lon"), col("lat")))
-    val ranges = SpatialPlanner.spatialBoxRanges(lonMin, lonMax, latMin, latMax)
-    withCell
-      .where(SpatialPlanner.rangesPredicate(col(cellCol), ranges))
+                      latMin: Double, latMax: Double): DataFrame =
+    SpatialPlanner.prefilterStored(pts, "cell_id",
+        SpatialPlanner.spatialBoxRanges(lonMin, lonMax, latMin, latMax))
       .where(SpatialPlanner.boxPredicate(col("lon"), col("lat"), lonMin, lonMax, latMin, latMax))
-  }
 
-  /** Spatial geometry query: envelope-decomposed cell prefilter + exact
-    * prepared-geometry test (OVERLAPS → intersects).
+  /** Spatial geometry query: envelope-decomposed cell prefilter over a
+    * stored `cell_id` + exact prepared-geometry test (OVERLAPS →
+    * intersects). Output: the input columns.
     * (reference: SpatialQueryFilter.java:50-80; prepared interning :284-301) */
-  def spatialGeometryQuery(pts: DataFrame, geom: org.locationtech.jts.geom.Geometry,
-                           cellCol: String = "cell_id"): DataFrame = {
-    val withCell =
-      if (pts.columns.contains(cellCol)) pts
-      else pts.withColumn(cellCol, gw_cell_id(col("lon"), col("lat")))
-    val ranges = SpatialPlanner.spatialGeometryRanges(geom)
-    val coarse = withCell.where(SpatialPlanner.rangesPredicate(col(cellCol), ranges))
+  def spatialGeometryQuery(pts: DataFrame, geom: org.locationtech.jts.geom.Geometry): DataFrame = {
+    val coarse = SpatialPlanner.prefilterStored(pts, "cell_id",
+      SpatialPlanner.spatialGeometryRanges(geom))
     if (geom.isRectangle) {
       // residual-filter elision: the geometry IS its envelope, so the MBR
       // test alone decides — no prepared-geometry work per row
@@ -95,19 +88,17 @@ object Ops {
       .drop("cells")
   }
 
-  /** Spatial-temporal box query over the 20/20/20 YEAR-binned index. */
+  /** Spatial-temporal box query over the 20/20/20 YEAR-binned index: the
+    * range prefilter runs over a stored `cell_id_st`, then the exact box
+    * and time tests. Output: the input columns. */
   def stBoxQuery(evts: DataFrame, lonMin: Double, lonMax: Double,
                  latMin: Double, latMax: Double,
                  tsMin: java.sql.Timestamp, tsMax: java.sql.Timestamp,
-                 tsCol: String = "ts"): DataFrame = {
-    val withCell = evts.withColumn("cell_id_st", gw_cell_id_st(col("lon"), col("lat"), col(tsCol)))
-    val ranges = SpatialPlanner.stBoxRanges(lonMin, lonMax, latMin, latMax,
-      tsMin.getTime, tsMax.getTime)
-    withCell
-      .where(SpatialPlanner.rangesPredicate(col("cell_id_st"), ranges))
+                 tsCol: String = "ts"): DataFrame =
+    SpatialPlanner.prefilterStored(evts, "cell_id_st",
+        SpatialPlanner.stBoxRanges(lonMin, lonMax, latMin, latMax, tsMin.getTime, tsMax.getTime))
       .where(SpatialPlanner.boxPredicate(col("lon"), col("lat"), lonMin, lonMax, latMin, latMax))
       .where(col(tsCol) >= lit(tsMin) && col(tsCol) <= lit(tsMax))
-  }
 
   /** the store's bounding-box statistic as a pure envelope — the
     * reference's client-side FeatureBoundingBoxStatistics read feeding
@@ -131,12 +122,11 @@ object Ops {
     * exist by the statistic's definition. */
   def spatialBoxQueryClipped(pts: DataFrame, lonMin: Double, lonMax: Double,
                              latMin: Double, latMax: Double,
-                             statsEnv: Option[graft.index.StatsClip.Env],
-                             cellCol: String = "cell_id"): DataFrame = {
+                             statsEnv: Option[graft.index.StatsClip.Env]): DataFrame = {
     import graft.index.StatsClip
     StatsClip.clipEnvelope(StatsClip.Env(lonMin, lonMax, latMin, latMax), statsEnv) match {
       case None    => pts.where(lit(false))
-      case Some(e) => spatialBoxQuery(pts, e.minX, e.maxX, e.minY, e.maxY, cellCol)
+      case Some(e) => spatialBoxQuery(pts, e.minX, e.maxX, e.minY, e.maxY)
     }
   }
 
@@ -200,23 +190,19 @@ object Ops {
     * [[GeoCodec.haversineDiskEnvelopes]] (the disk's true east/west
     * extremes, poleward of the center), so no point within the radius is
     * ever excluded by the cover; the 4-cardinal
-    * GeometryCalculations envelope would under-cover near the E/W edges. */
+    * GeometryCalculations envelope would under-cover near the E/W edges.
+    * The range prefilter runs over a stored `cell_id`. Output: the input
+    * columns. */
   def radiusQueryMeters(pts: DataFrame, lon: Double, lat: Double,
-                        radiusMeters: Double,
-                        cellCol: String = "cell_id"): DataFrame = {
-    val withCell =
-      if (pts.columns.contains(cellCol)) pts
-      else pts.withColumn(cellCol, gw_cell_id(col("lon"), col("lat")))
+                        radiusMeters: Double): DataFrame = {
     val envs = GeoCodec.haversineDiskEnvelopes(lon, lat, radiusMeters)
-    val ranges = SpatialPlanner.mergeRanges(envs.flatMap { e =>
-      SpatialPlanner.spatialBoxRanges(e.minX, e.maxX, e.minY, e.maxY,
-        math.max(1, SpatialPlanner.MaxRangeDecomposition / envs.size))
-    })
     val inEnvelopes = envs.map { e =>
       SpatialPlanner.boxPredicate(col("lon"), col("lat"), e.minX, e.maxX, e.minY, e.maxY)
     }.reduce(_ || _)
-    withCell
-      .where(SpatialPlanner.rangesPredicate(col(cellCol), ranges))
+    SpatialPlanner.prefilterStored(pts, "cell_id", SpatialPlanner.mergeRanges(envs.flatMap { e =>
+        SpatialPlanner.spatialBoxRanges(e.minX, e.maxX, e.minY, e.maxY,
+          math.max(1, SpatialPlanner.MaxRangeDecomposition / envs.size))
+      }))
       .where(inEnvelopes)
       .where(st_distance_haversine(col("lon"), col("lat"), lit(lon), lit(lat)) <= radiusMeters)
   }

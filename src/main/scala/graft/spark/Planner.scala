@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.index._
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -203,6 +203,19 @@ object SpatialPlanner {
         ranges.map(_._1).toArray, ranges.map(_._2).toArray)
     }
   }
+
+  /** the coarse range prefilter where it can prune: over a STORED cell-id
+    * column (a sorted, pushable key). Without `cellCol` the input comes
+    * back unchanged and `ranges` is never decomposed — a key encoded per
+    * row would only re-test what the exact fine filter decides anyway.
+    * TRUST CONTRACT: a stored `cellCol` holds ids of the strategy `ranges`
+    * decomposes against (the ingested store's `cell_id` does); any other
+    * id kind silently drops matches, so a table keyed another way drops
+    * or renames that column first. */
+  def prefilterStored(df: DataFrame, cellCol: String,
+                      ranges: => Seq[(Array[Byte], Array[Byte])]): DataFrame =
+    if (df.columns.contains(cellCol)) df.where(rangesPredicate(col(cellCol), ranges))
+    else df
 
   /** Expression-level twin of [[rangesPredicate]] for optimizer rules
     * (Column-built trees are unresolved post-analysis in Spark 4). */

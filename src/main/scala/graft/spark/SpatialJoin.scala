@@ -15,8 +15,10 @@ import org.locationtech.jts.io.WKBReader
 
 /**
  * Point-in-polygon join: every point matched against a broadcast set of
- * polygons via an STRtree of PreparedGeometries, with a cell-id range
- * pre-filter from SFC decomposition of the polygon envelopes.
+ * polygons via an STRtree of PreparedGeometries. Over a stored `cell_id`
+ * a cell-id range pre-filter from SFC decomposition of the polygon
+ * envelopes prunes the scan first; over points without one the STRtree
+ * envelope probe is the only coarse test.
  *
  * This is the Spark-native form of the reference's per-polygon
  * SpatialQuery scan (core/geotime/.../query/SpatialQuery.java:28-125 +
@@ -213,34 +215,23 @@ object SpatialJoin {
    * (point, region) pairs for all polygons a point falls in.
    * Output: input columns + `region_id`, one row per match.
    */
-  def polygonJoin(pts: DataFrame, regions: Seq[(String, Geometry)],
-                  cellCol: String = "cell_id"): DataFrame = {
+  def polygonJoin(pts: DataFrame, regions: Seq[(String, Geometry)]): DataFrame = {
     require(regions.nonEmpty)
     import org.apache.spark.sql.GraftBridge.{column, expression}
-    // TRUST CONTRACT: a pre-existing `cellCol` must hold gw_cell_id values
-    // at the default spatial tiers (the committed store's cell_id does) —
-    // the coarse prefilter ranges are decomposed against that strategy, so
-    // any other id kind silently drops matches. Tables keyed differently
-    // must pass a cellCol name that is NOT present so it is synthesized.
-    val hadCell = pts.columns.contains(cellCol)
-    val withCell =
-      if (hadCell) pts
-      else pts.withColumn(cellCol, GeoFunctions.gw_cell_id(col("lon"), col("lat")))
-    // coarse union prefilter: decomposed ranges of every polygon envelope
+    // TRUST CONTRACT ([[SpatialPlanner.prefilterStored]]): a stored
+    // `cell_id` holds default-tier gw_cell_id values (the committed
+    // store's does); a table keyed another way drops or renames its
+    // `cell_id` before the join, or matches are silently dropped.
     val perPoly = math.max(1, SpatialPlanner.MaxRangeDecomposition / regions.size)
-    val ranges = regions.flatMap { case (_, g) =>
-      SpatialPlanner.spatialGeometryRanges(g, perPoly)
-    }
     val wkbWriter = new org.locationtech.jts.io.WKBWriter(2)
     val matches: Column = column(RegionsForPoint(
       expression(col("lon")), expression(col("lat")),
       regions.map(_._1).toArray, regions.map(r => wkbWriter.write(r._2)).toArray))
-    val out = withCell
-      .where(SpatialPlanner.rangesPredicate(col(cellCol), ranges))
+    // coarse union prefilter: decomposed ranges of every polygon envelope
+    SpatialPlanner.prefilterStored(pts, "cell_id", regions.flatMap { case (_, g) =>
+        SpatialPlanner.spatialGeometryRanges(g, perPoly)
+      })
       .withColumn("region_id", explode(matches))
-    // honor the documented output contract (point cols + region_id): a
-    // cell column WE synthesized is an internal artifact, not output
-    if (hadCell) out else out.drop(cellCol)
   }
 
   /**

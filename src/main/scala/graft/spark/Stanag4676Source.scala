@@ -100,11 +100,11 @@ object Stanag4676Source {
       try_to_timestamp(t, lit("yyyy-MM-dd'T'HH:mm:ss")))
   }
 
-  /** mission fallback: missionID, else the track comment; strip a
-    * "Mission:" prefix, trim; absent both → "". */
+  /** mission fallback: missionID, else the track comment; strip a LEADING
+    * "Mission:" prefix only, trim; absent both → "". */
   private def missionOf(trk: Column): Column = trim(regexp_replace(
     coalesce(trk.getField("missionID"), trk.getField("trackComment"), lit("")),
-    "Mission:", ""))
+    "^\\s*Mission:", ""))
 
   /** parse the raw document column; adds a `msg` struct. */
   def parse(docs: DataFrame, xmlCol: String): DataFrame =

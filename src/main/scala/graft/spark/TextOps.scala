@@ -667,26 +667,6 @@ object TextOps {
   }
 
   /**
-   * INLINE substring search: first-3-gram prefilter + exact `contains`
-   * verify, both as full-scan column predicates — the no-index fallback
-   * for one-off searches on unindexed data. For repeated searches at
-   * corpus scale use [[TextIndex]]: the STORED (gram, doc_id) posting
-   * table whose equality probe pushes into the parquet scan (the
-   * reference's secondary text index, core/store/.../index/text/
-   * TextIndexStrategy.java:21-130). Both paths end in the same exact
-   * verification, so results are identical by construction.
-   */
-  def ngramSearch(docs: DataFrame, idCol: String, textCol: String,
-                  pattern: String): DataFrame = {
-    require(pattern.length >= 3, "pattern must be >= 3 chars for the 3-gram prefilter")
-    val gram = pattern.substring(0, 3)
-    docs
-      .where(col(textCol).contains(gram)) // cheap prefilter (no stored postings)
-      .where(col(textCol).contains(pattern)) // exact verification
-      .select(col(idCol).as("id"))
-  }
-
-  /**
    * INCREMENTAL exact dedup against an existing corpus: which new docs
    * already exist (by content hash) in the seen corpus? The seen side is
    * summarized into a broadcast Bloom filter over content hashes —

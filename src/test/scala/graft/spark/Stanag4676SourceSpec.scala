@@ -131,6 +131,26 @@ class Stanag4676SourceSpec extends SparkTestBase {
     assert(ts(1).getAs[Long]("n_points") == 1L)
   }
 
+  test("mission strip is anchored: only a LEADING \"Mission:\" goes, a mid-text one survives") {
+    def doc(mission: String) =
+      s"""<TrackMessage xmlns:xsi="http://www.w3.org/2001/XMLSchema-instance">
+         |<tracks>
+         |  <trackUUID>t-m</trackUUID>
+         |  <missionID>$mission</missionID>
+         |  <items xsi:type="TrackPoint">
+         |    <trackItemUUID>p</trackItemUUID>
+         |    <trackItemTime>2024-02-01T10:00:00Z</trackItemTime>
+         |    <trackPointPosition><latitude>1.0</latitude><longitude>2.0</longitude><elevation>0.0</elevation></trackPointPosition>
+         |  </items>
+         |</tracks>
+         |</TrackMessage>""".stripMargin
+    val missions = Seq((1L, doc("Op Mission: Gamma")), (2L, doc(" Mission: Delta Mission: X")))
+      .toDF("input_id", "xml")
+    val got = Stanag4676Source.trackPoints(missions, "input_id", "xml")
+      .select("input_id", "mission").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(1L -> "Op Mission: Gamma", 2L -> "Delta Mission: X"))
+  }
+
   test("identity/classification/management items never leak into the point frames") {
     val all = Stanag4676Source.trackPoints(docs, "input_id", "xml")
       .select("track_item_uuid").collect().map(_.getString(0)).toSet
