@@ -89,16 +89,16 @@ object Ops {
   }
 
   /** Spatial-temporal box query over the 20/20/20 YEAR-binned index: the
-    * range prefilter runs over a stored `cell_id_st`, then the exact box
-    * and time tests. Output: the input columns. */
+    * range prefilter runs over a stored `cell_id_st` (encoded from `lon`,
+    * `lat`, `ts`), then the exact box and time tests on those columns.
+    * Output: the input columns. */
   def stBoxQuery(evts: DataFrame, lonMin: Double, lonMax: Double,
                  latMin: Double, latMax: Double,
-                 tsMin: java.sql.Timestamp, tsMax: java.sql.Timestamp,
-                 tsCol: String = "ts"): DataFrame =
+                 tsMin: java.sql.Timestamp, tsMax: java.sql.Timestamp): DataFrame =
     SpatialPlanner.prefilterStored(evts, "cell_id_st",
         SpatialPlanner.stBoxRanges(lonMin, lonMax, latMin, latMax, tsMin.getTime, tsMax.getTime))
       .where(SpatialPlanner.boxPredicate(col("lon"), col("lat"), lonMin, lonMax, latMin, latMax))
-      .where(col(tsCol) >= lit(tsMin) && col(tsCol) <= lit(tsMax))
+      .where(col("ts") >= lit(tsMin) && col("ts") <= lit(tsMax))
 
   /** the store's bounding-box statistic as a pure envelope — the
     * reference's client-side FeatureBoundingBoxStatistics read feeding
@@ -138,8 +138,7 @@ object Ops {
                         latMin: Double, latMax: Double,
                         tsMin: java.sql.Timestamp, tsMax: java.sql.Timestamp,
                         statsEnv: Option[graft.index.StatsClip.Env],
-                        statsTs: Option[(Long, Long)],
-                        tsCol: String = "ts"): DataFrame = {
+                        statsTs: Option[(Long, Long)]): DataFrame = {
     import graft.index.{StatsClip, TemporalAlgebra}
     val box = StatsClip.clipEnvelope(StatsClip.Env(lonMin, lonMax, latMin, latMax), statsEnv)
     val time = statsTs match {
@@ -150,7 +149,7 @@ object Ops {
     (box, time) match {
       case (Some(e), t :: _) =>
         stBoxQuery(evts, e.minX, e.maxX, e.minY, e.maxY,
-          new java.sql.Timestamp(t.start), new java.sql.Timestamp(t.end), tsCol)
+          new java.sql.Timestamp(t.start), new java.sql.Timestamp(t.end))
       case _ => evts.where(lit(false))
     }
   }

@@ -209,9 +209,9 @@ object SpatialPlanner {
     * back unchanged and `ranges` is never decomposed — a key encoded per
     * row would only re-test what the exact fine filter decides anyway.
     * TRUST CONTRACT: a stored `cellCol` holds ids of the strategy `ranges`
-    * decomposes against (the ingested store's `cell_id` does); any other
-    * id kind silently drops matches, so a table keyed another way drops
-    * or renames that column first. */
+    * decomposes against, encoded from the columns the exact filter reads
+    * (`lon`/`lat`, plus `ts` for `cell_id_st`); any other id silently
+    * drops matches, so a table keyed another way drops or renames it. */
   def prefilterStored(df: DataFrame, cellCol: String,
                       ranges: => Seq[(Array[Byte], Array[Byte])]): DataFrame =
     if (df.columns.contains(cellCol)) df.where(rangesPredicate(col(cellCol), ranges))

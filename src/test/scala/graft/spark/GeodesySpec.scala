@@ -71,6 +71,11 @@ class GeodesySpec extends SparkTestBase {
     val (cx, cy, r) = (179.8, 10.0, 1500000.0)
     val got = Ops.radiusQueryMeters(pts, cx, cy, r)
       .select("doc_id").collect().map(_.getLong(0)).toSet
+    // the same query over a stored cell id runs the two-envelope range
+    // prefilter, which must not drop any disk row either
+    val gotStored = Ops.radiusQueryMeters(
+      pts.withColumn("cell_id", GeoFunctions.gw_cell_id(col("lon"), col("lat"))), cx, cy, r)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(GeoCodec.haversineDiskEnvelopes(cx, cy, r).size == 2,
       "fixture must actually cross the dateline")
     // brute force applies NO envelope: any under-coverage of the disk by
@@ -79,6 +84,7 @@ class GeodesySpec extends SparkTestBase {
       .where(GeoFunctions.st_distance_haversine(col("lon"), col("lat"), lit(cx), lit(cy)) <= r)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == brute && got.nonEmpty, s"got ${got.size} brute ${brute.size}")
+    assert(gotStored == brute, s"stored: got ${gotStored.size} brute ${brute.size}")
     // rows from BOTH sides of the antimeridian are found
     val lons = pts.where(col("doc_id").isin(got.toSeq: _*)).select("lon")
       .collect().map(_.getDouble(0))

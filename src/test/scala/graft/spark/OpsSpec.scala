@@ -15,6 +15,10 @@ import org.locationtech.jts.io.WKTReader
 class OpsSpec extends SparkTestBase {
 
   private lazy val pages: DataFrame = Tables.synthPages(spark, 2000).cache()
+  // the scan operators run over input without and with a stored cell id;
+  // only the second runs the SFC range prefilter
+  private lazy val inputs: Seq[(String, DataFrame)] = Seq("unstored" -> pages,
+    "stored" -> pages.withColumn("cell_id", GeoFunctions.gw_cell_id(col("lon"), col("lat"))).cache())
 
   private lazy val localPts: Array[(Long, Double, Double)] =
     pages.select("doc_id", "lon", "lat").collect()
@@ -30,37 +34,43 @@ class OpsSpec extends SparkTestBase {
 
   test("spatialBoxQuery == brute-force box filter") {
     val (lonMin, lonMax, latMin, latMax) = (-20.0, 55.0, -10.0, 48.0)
-    val got = Ops.spatialBoxQuery(pages, lonMin, lonMax, latMin, latMax)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
     val want = localPts.collect {
       case (id, lon, lat) if lon >= lonMin && lon <= lonMax && lat >= latMin && lat <= latMax => id
     }.toSet
-    assert(got == want)
+    for ((kind, in) <- inputs) {
+      val got = Ops.spatialBoxQuery(in, lonMin, lonMax, latMin, latMax)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(got == want, kind)
+    }
     assert(want.nonEmpty)
   }
 
   test("spatialGeometryQuery == brute-force JTS intersects") {
     val wkt = "POLYGON ((-30 -20, 40 -25, 55 35, -10 45, -30 -20))"
     val geom = new WKTReader().read(wkt)
-    val got = Ops.spatialGeometryQuery(pages, geom)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
     val gf = new GeometryFactory()
     val want = localPts.collect {
       case (id, lon, lat) if geom.intersects(gf.createPoint(new Coordinate(lon, lat))) => id
     }.toSet
-    assert(got == want)
+    for ((kind, in) <- inputs) {
+      val got = Ops.spatialGeometryQuery(in, geom)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(got == want, kind)
+    }
     assert(want.nonEmpty)
   }
 
   test("dateline-crossing box query wraps (LongitudeDefinition split)") {
     // box lon [175, -175] crosses the antimeridian; synthPages plants ~1%
     // of points hugging +-180
-    val got = Ops.spatialBoxQuery(pages, 175.0, -175.0, -90.0, 90.0)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
     val want = localPts.collect {
       case (id, lon, _) if lon >= 175.0 || lon <= -175.0 => id
     }.toSet
-    assert(got == want)
+    for ((kind, in) <- inputs) {
+      val got = Ops.spatialBoxQuery(in, 175.0, -175.0, -90.0, 90.0)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(got == want, kind)
+    }
     assert(want.exists(id => localPts.find(_._1 == id).get._2 > 175),
       "east-side points present")
     assert(want.exists(id => localPts.find(_._1 == id).get._2 < -175),
@@ -87,14 +97,18 @@ class OpsSpec extends SparkTestBase {
       col("warc_ts").as("ts"))
     val tsMin = java.sql.Timestamp.valueOf("2011-06-01 00:00:00")
     val tsMax = java.sql.Timestamp.valueOf("2012-09-01 00:00:00")
-    val got = Ops.stBoxQuery(ev, -90, 90, -60, 60, tsMin, tsMax)
-      .select("event_id").collect().map(_.getLong(0)).toSet
     val want = pages.select("doc_id", "lon", "lat", "warc_ts").collect().collect {
       case r if r.getDouble(1) >= -90 && r.getDouble(1) <= 90 &&
         r.getDouble(2) >= -60 && r.getDouble(2) <= 60 &&
         !r.getTimestamp(3).before(tsMin) && !r.getTimestamp(3).after(tsMax) => r.getLong(0)
     }.toSet
-    assert(got == want)
+    val stored = ev.withColumn("cell_id_st",
+      GeoFunctions.gw_cell_id_st(col("lon"), col("lat"), col("ts")))
+    for (in <- Seq(ev, stored)) {
+      val got = Ops.stBoxQuery(in, -90, 90, -60, 60, tsMin, tsMax)
+        .select("event_id").collect().map(_.getLong(0)).toSet
+      assert(got == want, in.columns.mkString(","))
+    }
     assert(want.nonEmpty)
   }
 

@@ -6,10 +6,15 @@ import org.apache.spark.sql.functions._
  * Seeded fuzz over the decomposition → prefilter → fine-filter pipeline:
  * many random query boxes (tiny, huge, degenerate, bin-edge-straddling,
  * dateline-crossing) must return exactly the brute-force result set.
+ * Every query runs twice: over input WITH a stored cell id (the range
+ * prefilter runs, so a decomposition that drops a matching cell fails
+ * here) and WITHOUT one (the exact fine filter alone decides).
  */
 class PlannerFuzzSpec extends SparkTestBase {
 
   private lazy val pages = Tables.synthPages(spark, 2500).cache()
+  private lazy val inputs = Seq("unstored" -> pages,
+    "stored" -> pages.withColumn("cell_id", GeoFunctions.gw_cell_id(col("lon"), col("lat"))).cache())
   private lazy val localPts =
     pages.select("doc_id", "lon", "lat").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
@@ -34,14 +39,14 @@ class PlannerFuzzSpec extends SparkTestBase {
       (-1e-12, 1e-12, -1e-12, 1e-12),     // sub-ulp box
       (120.0, 121.0, 89.99, 90.0),        // pole-hugging
       (0.004999999, 0.005000001, 0.0049999, 0.0050001)) // grid-point epsilon
-    for ((lonMin, lonMax, latMin, latMax) <- boxes) {
-      val got = Ops.spatialBoxQuery(pages, lonMin, lonMax, latMin, latMax)
+    for ((lonMin, lonMax, latMin, latMax) <- boxes; (kind, in) <- inputs) {
+      val got = Ops.spatialBoxQuery(in, lonMin, lonMax, latMin, latMax)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       val want = localPts.collect {
         case (id, lon, lat) if lon >= lonMin && lon <= lonMax &&
           lat >= latMin && lat <= latMax => id
       }.toSet
-      assert(got == want, s"box ($lonMin,$lonMax,$latMin,$latMax): " +
+      assert(got == want, s"$kind box ($lonMin,$lonMax,$latMin,$latMax): " +
         s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
   }
@@ -53,14 +58,14 @@ class PlannerFuzzSpec extends SparkTestBase {
       val latMin = rnd.nextDouble() * 150 - 85
       (lonMin, lonMax, latMin, math.min(latMin + 5 + rnd.nextDouble() * 60, 90))
     }
-    for ((lonMin, lonMax, latMin, latMax) <- boxes) {
-      val got = Ops.spatialBoxQuery(pages, lonMin, lonMax, latMin, latMax)
+    for ((lonMin, lonMax, latMin, latMax) <- boxes; (kind, in) <- inputs) {
+      val got = Ops.spatialBoxQuery(in, lonMin, lonMax, latMin, latMax)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       val want = localPts.collect {
         case (id, lon, lat) if (lon >= lonMin || lon <= lonMax) &&
           lat >= latMin && lat <= latMax => id
       }.toSet
-      assert(got == want, s"dateline box ($lonMin,$lonMax,$latMin,$latMax)")
+      assert(got == want, s"$kind dateline box ($lonMin,$lonMax,$latMin,$latMax)")
     }
   }
 
@@ -76,13 +81,15 @@ class PlannerFuzzSpec extends SparkTestBase {
       }
       val tri = gf.createPolygon(pts3 :+ pts3(0))
       if (tri.getArea > 0) {
-        val got = Ops.spatialGeometryQuery(pages, tri)
-          .select("doc_id").collect().map(_.getLong(0)).toSet
         val want = localPts.collect {
           case (id, lon, lat) if tri.intersects(gf.createPoint(
             new org.locationtech.jts.geom.Coordinate(lon, lat))) => id
         }.toSet
-        assert(got == want, s"triangle around ($cx,$cy) r=$r")
+        for ((kind, in) <- inputs) {
+          val got = Ops.spatialGeometryQuery(in, tri)
+            .select("doc_id").collect().map(_.getLong(0)).toSet
+          assert(got == want, s"$kind triangle around ($cx,$cy) r=$r")
+        }
       }
     }
   }
@@ -90,6 +97,8 @@ class PlannerFuzzSpec extends SparkTestBase {
   test("10 random ST boxes == brute force over warc_ts") {
     val ev = pages.select(col("doc_id").as("event_id"), col("lon"), col("lat"),
       col("warc_ts").as("ts"))
+    val evInputs = Seq("unstored" -> ev, "stored" -> ev.withColumn("cell_id_st",
+      GeoFunctions.gw_cell_id_st(col("lon"), col("lat"), col("ts"))).cache())
     val local = pages.select("doc_id", "lon", "lat", "warc_ts").collect()
     for (_ <- 0 until 10) {
       val lonMin = rnd.nextDouble() * 300 - 170
@@ -100,14 +109,16 @@ class PlannerFuzzSpec extends SparkTestBase {
       val t1 = t0 + (rnd.nextDouble() * 300 * 86400).toLong
       val tsMin = new java.sql.Timestamp(t0 * 1000)
       val tsMax = new java.sql.Timestamp(t1 * 1000)
-      val got = Ops.stBoxQuery(ev, lonMin, lonMax, latMin, latMax, tsMin, tsMax)
-        .select("event_id").collect().map(_.getLong(0)).toSet
       val want = local.collect {
         case r if r.getDouble(1) >= lonMin && r.getDouble(1) <= lonMax &&
           r.getDouble(2) >= latMin && r.getDouble(2) <= latMax &&
           !r.getTimestamp(3).before(tsMin) && !r.getTimestamp(3).after(tsMax) => r.getLong(0)
       }.toSet
-      assert(got == want, s"st box ($lonMin,$lonMax,$latMin,$latMax,$tsMin,$tsMax)")
+      for ((kind, in) <- evInputs) {
+        val got = Ops.stBoxQuery(in, lonMin, lonMax, latMin, latMax, tsMin, tsMax)
+          .select("event_id").collect().map(_.getLong(0)).toSet
+        assert(got == want, s"$kind st box ($lonMin,$lonMax,$latMin,$latMax,$tsMin,$tsMax)")
+      }
     }
   }
 }

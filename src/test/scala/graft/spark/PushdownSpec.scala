@@ -26,7 +26,7 @@ class PushdownSpec extends SparkTestBase {
     val pushed = plan.linesIterator.filter(_.contains("PushedFilters")).mkString
     assert(pushed.contains("GreaterThanOrEqual(cell_id"),
       s"cell_id range not pushed to scan:\n${plan.take(2000)}")
-    // correctness unchanged vs recomputing cell ids
+    // same result as the exact box filter with no prefilter
     val want = Ops.spatialBoxQuery(store.drop("cell_id"), -20, 55, -10, 48)
       .select("url").collect().map(_.getString(0)).toSet
     val got = q.select("url").collect().map(_.getString(0)).toSet
@@ -42,6 +42,12 @@ class PushdownSpec extends SparkTestBase {
     val pushed = plan.linesIterator.filter(_.contains("PushedFilters")).mkString
     assert(pushed.contains("GreaterThanOrEqual(cell_id"),
       s"bounding cell_id range not pushed:\n${plan.take(2000)}")
+    // the merged per-polygon range budget drops no match: same pairs as
+    // the exact PIP join with no prefilter
+    def pairs(q: org.apache.spark.sql.DataFrame) =
+      q.select("url", "region_id").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val want = pairs(SpatialJoin.polygonJoin(store.drop("cell_id"), regions))
+    assert(pairs(joined) == want && want.nonEmpty)
   }
 
   private def pushedFilters(q: org.apache.spark.sql.DataFrame): String =

@@ -6,22 +6,28 @@ import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 class SpatialJoinSpec extends SparkTestBase {
 
   private lazy val pages = Tables.synthPages(spark, 2000).cache()
+  // each join runs over input without and with a stored cell id: the
+  // second runs the merged per-polygon range prefilter
+  private lazy val inputs = Seq("unstored" -> pages,
+    "stored" -> pages.withColumn("cell_id", GeoFunctions.gw_cell_id(col("lon"), col("lat"))).cache())
   private lazy val localPts =
     pages.select("doc_id", "lon", "lat").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
 
   test("polygonJoin == brute-force point-in-polygon over region set") {
     val regions = Tables.regionGeoms(40)
-    val got = SpatialJoin.polygonJoin(pages, regions)
-      .select("doc_id", "region_id").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
     val gf = new GeometryFactory()
     val want = (for {
       (id, lon, lat) <- localPts
       (rid, g) <- regions
       if g.intersects(gf.createPoint(new Coordinate(lon, lat)))
     } yield (id, rid)).toSet
-    assert(got == want)
+    for ((kind, in) <- inputs) {
+      val got = SpatialJoin.polygonJoin(in, regions)
+        .select("doc_id", "region_id").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got == want, kind)
+    }
     assert(want.nonEmpty)
   }
 
@@ -32,16 +38,18 @@ class SpatialJoinSpec extends SparkTestBase {
     val multi = reader.read(
       "MULTIPOLYGON (((100 10, 130 10, 130 40, 100 40, 100 10)), ((-130 -40, -100 -40, -100 -10, -130 -10, -130 -40)))")
     val regions = Seq(("concave", concave), ("multi", multi))
-    val got = SpatialJoin.polygonJoin(pages, regions)
-      .select("doc_id", "region_id").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
     val gf = new GeometryFactory()
     val want = (for {
       (id, lon, lat) <- localPts
       (rid, g) <- regions
       if g.intersects(gf.createPoint(new Coordinate(lon, lat)))
     } yield (id, rid)).toSet
-    assert(got == want)
+    for ((kind, in) <- inputs) {
+      val got = SpatialJoin.polygonJoin(in, regions)
+        .select("doc_id", "region_id").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got == want, kind)
+    }
     assert(want.nonEmpty)
   }
 
