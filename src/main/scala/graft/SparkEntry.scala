@@ -45,12 +45,12 @@ object SparkEntry {
     }),
     "q04_distance_join" -> ((s, dir) => {
       Ops.distanceJoin(Tables.geoEvents(s, dir).withColumnRenamed("event_id", "id"),
-        "id", d = 1.0, bits = 8)
+        "id", d = 1.0, bits = 8).select(col("a_id"), col("b_id"))
     }),
     "q107_distance_join_topk" -> ((s, dir) => {
       // per-item neighbor-capped distance join (NNMapReduce maxNeighbors):
       // each event keeps only its 3 nearest in-threshold neighbors, the
-      // rank limit running map-side via WindowGroupLimit (Round5Spec pins
+      // rank limit running map-side via WindowGroupLimit (DistanceJoinSpec pins
       // the partial limit below the shuffle)
       Ops.distanceJoinTopK(Tables.geoEvents(s, dir).withColumnRenamed("event_id", "id"),
         "id", d = 1.0, bits = 8, k = 3)
@@ -303,9 +303,9 @@ object SparkEntry {
       // haversine filter decides every pair
       val pts = Tables.pages(s, dir).where(col("doc_id") % 101 === 0)
         .select(col("doc_id").as("id"), col("lon"), col("lat"))
-      Ops.distanceJoinMeters(pts, "id", dMeters = 1.2e7, bits = 1)
+      Ops.distanceJoin(pts, "id", d = 1.2e7, bits = 1, Ops.Meters())
         .select(col("a_id"), col("b_id"),
-          round(col("dist_m")).cast("long").as("dist_m"))
+          round(col("dist")).cast("long").as("dist_m"))
     }),
     "q36_time_bin" -> ((s, dir) => {
       import graft.spark.GeoFunctions.gw_time_bin
@@ -343,8 +343,9 @@ object SparkEntry {
       graft.spark.Analytics.multiLevelKmeans(pts, init, childK = 3, iters = 2)
     }),
     "q45_st_distance_join" -> ((s, dir) => {
-      Ops.distanceJoinST(Tables.geoEvents(s, dir).withColumnRenamed("event_id", "id"),
-        "id", "ts", d = 1.0, dtMillis = 3600000L, bits = 8)
+      Ops.distanceJoin(Tables.geoEvents(s, dir).withColumnRenamed("event_id", "id"),
+        "id", d = 1.0, bits = 8, window = Some(("ts", 3600000L)))
+        .select(col("a_id"), col("b_id"))
     }),
     "q46_region_counts" -> ((s, dir) => {
       Ops.regionCounts(Tables.pages(s, dir), Tables.regionGeoms(40))
@@ -367,9 +368,9 @@ object SparkEntry {
     "q41_distance_join_m" -> ((s, dir) => {
       val pts = Tables.pages(s, dir).where(abs(col("lat")) <= 85)
         .select(col("doc_id").as("id"), col("lon"), col("lat"))
-      Ops.distanceJoinMeters(pts, "id", dMeters = 100000.0, bits = 7)
+      Ops.distanceJoin(pts, "id", d = 100000.0, bits = 7, Ops.Meters())
         .select(col("a_id"), col("b_id"),
-          round(col("dist_m")).cast("long").as("dist_m"))
+          round(col("dist")).cast("long").as("dist_m"))
     }),
     "q47_polygon_join_dist" -> ((s, dir) => {
       // the DISTRIBUTED polygon-join strategy (tile-cover equi-join +
@@ -1766,6 +1767,8 @@ object SparkEntry {
          |JOIN (SELECT doc_id, count(*) AS sz FROM shC GROUP BY 1) sb ON sb.doc_id = p.b_id
          |WHERE CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) >= 0.5""".stripMargin,
     "q113_mixture_sample" -> mixtureSampleSql(MixWeights, default = 1.0),
+    // BMP text only: pairs are cut by code point on both sides, checked
+    // over ASCII corpora alone (see TextOps.bpePairCounts)
     "q116_bpe_pairs" ->
       """WITH w AS (SELECT unnest(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS w FROM documents),
         |p AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair

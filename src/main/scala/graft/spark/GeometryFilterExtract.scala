@@ -115,17 +115,17 @@ object GeometryFilterExtract {
   /** Column predicate evaluating the node EXACTLY over a WKB geometry
     * column — the fine filter that keeps refused ops correct. */
   def predicate(n: Node, wkb: Column): Column = n match {
-    case Intersects(g) => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "intersects")
-    case Overlaps(g)   => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "overlaps")
-    case Crosses(g)    => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "crosses")
-    case Touches(g)    => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "touches")
-    case Within(g)     => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "within")
-    case Contains(g)   => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "contains")
-    case GEquals(g)    => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "equals")
-    case b: BBox       => GeoFunctions.st_geom_relate(wkb, wkbOf(boxGeom(b)), "intersects")
+    case Intersects(g) => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.Intersects)
+    case Overlaps(g)   => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.Overlaps)
+    case Crosses(g)    => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.Crosses)
+    case Touches(g)    => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.Touches)
+    case Within(g)     => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.Within)
+    case Contains(g)   => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.Contains)
+    case GEquals(g)    => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.GEquals)
+    case b: BBox       => GeoFunctions.st_geom_relate(wkb, wkbOf(boxGeom(b)), RelateOp.Intersects)
     case DWithinDeg(g, d) => GeoFunctions.st_geom_distance(wkb, lit(wkbOf(g))) <= d
     case Beyond(g, d)  => GeoFunctions.st_geom_distance(wkb, lit(wkbOf(g))) > d
-    case Disjoint(g)   => GeoFunctions.st_geom_relate(wkb, wkbOf(g), "disjoint")
+    case Disjoint(g)   => GeoFunctions.st_geom_relate(wkb, wkbOf(g), RelateOp.Disjoint)
     case And(cs)       => cs.map(predicate(_, wkb)).reduceOption(_ && _).getOrElse(lit(true))
     case Or(cs)        => cs.map(predicate(_, wkb)).reduceOption(_ || _).getOrElse(lit(false))
     case Not(c)        => !predicate(c, wkb)

@@ -270,165 +270,140 @@ object Ops {
   }
 
   /**
-   * Distance self-join: all pairs (a, b), a.id < b.id, within euclidean
-   * degree distance `d`. Cell-partitioned: each left point expands to its
-   * 3x3 tile neighborhood at a tier whose cell size >= d, the right side is
-   * keyed by its own tile, so each qualifying pair meets on exactly one key
-   * (no pair dedup needed — the reference needs a primary-cell flag for
-   * this, NNMapReduce.java:119-203).
-   *
-   * Scale note: the equi-join on (cx, cy) is a standard shuffle join;
-   * hot cells are split by AQE skew handling, matching the salted
-   * repartition the reference lacks (fixed hashCode%100,
-   * GeowavePartitioner.scala:8-21).
+   * Metric of the distance self-joins — the reference's pluggable
+   * DistanceFn (euclidean, or CoordinateCircleDistanceFn meters). It
+   * decides the tile neighborhood (half-widths, antimeridian wrap), the
+   * rows admitted to the join, and the exact score with its bound; the
+   * score orders pairs by distance, `dist` converts it to the metric's unit.
    */
-  def distanceJoin(pts: DataFrame, idCol: String, d: Double, bits: Int): DataFrame = {
-    require(360.0 / (1L << bits) >= d, s"cell size at $bits bits must be >= d=$d")
-    val d2 = (col("a_lon") - col("b_lon")) * (col("a_lon") - col("b_lon")) +
-      (col("a_lat") - col("b_lat")) * (col("a_lat") - col("b_lat"))
-    neighborhoodSelfJoin(pts.select(col(idCol).as("id"), col("lon"), col("lat")),
-        bits, d, d)
-      .where(col("a_id") < col("b_id") && d2 < lit(d * d))
-      .select(col("a_id"), col("b_id"))
+  sealed trait Metric {
+    private[spark] def halfWidths(d: Double, bits: Int): (Double, Double)
+    private[spark] def wrapX: Boolean
+    private[spark] def band: Column
+    private[spark] def score: Column
+    private[spark] def bound(d: Double): Double
+    private[spark] def dist(score: Column): Column
   }
+
+  /** Euclidean degrees. Filters and ranks on d², never on sqrt: a sqrt can
+    * merge adjacent d² values and reorder ties. Does not wrap. */
+  case object Degrees extends Metric {
+    private[spark] def halfWidths(d: Double, bits: Int): (Double, Double) = {
+      require(360.0 / (1L << bits) >= d, s"cell size at $bits bits must be >= d=$d")
+      (d, d)
+    }
+    private[spark] def wrapX = false
+    private[spark] def band: Column = lit(true)
+    private[spark] def score: Column =
+      (col("a_lon") - col("b_lon")) * (col("a_lon") - col("b_lon")) +
+        (col("a_lat") - col("b_lat")) * (col("a_lat") - col("b_lat"))
+    private[spark] def bound(d: Double): Double = d * d
+    private[spark] def dist(score: Column): Column = sqrt(score)
+  }
+
+  /**
+   * Haversine meters, with the neighborhood sized from the radius at the
+   * band's worst-case latitude (the reference's orthodromic buffering,
+   * OrthodromicDistancePartitioner.java:210-240, as one static bound so the
+   * join stays a single equi-join) and wrapped at the antimeridian, as
+   * haversine is. LATITUDE BAND CONTRACT: rows with |lat| > `maxAbsLatDeg`
+   * are EXCLUDED from the join — the lon bound only holds inside the band.
+   * Polar data needs a wider band (cos(89°) still bounds, at ~57× the lon
+   * expansion); callers with possibly-polar data should pre-count the
+   * excluded rows, which the join does not (an extra scan per call).
+   */
+  final case class Meters(maxAbsLatDeg: Double = 85.0) extends Metric {
+    private[spark] def halfWidths(d: Double, bits: Int): (Double, Double) = {
+      val latDeg = d / (2 * math.Pi * 6371008.8 / 360.0) // Δφ <= d/R exactly
+      // EXACT in-band lon bound, not the small-angle d/(R·cos φ), which
+      // under-covers near the band edge: hav(d/R) = hav(Δφ) +
+      // cosφ1·cosφ2·hav(Δλ) gives Δλ <= 2·asin(sin(d/2R)/cos(maxAbsLat))
+      // (the same form backs GeoCodec.haversineDiskEnvelopes)
+      val sinHalf = math.sin(d / (2.0 * 6371008.8)) / math.cos(math.toRadians(maxAbsLatDeg))
+      val lonDeg = if (sinHalf >= 1.0) 360.0 else math.toDegrees(2.0 * math.asin(sinHalf))
+      val cellDeg = 360.0 / (1L << bits)
+      require(lonDeg <= 8 * cellDeg && latDeg <= 8 * cellDeg,
+        s"radius spans too many cells at $bits bits (lonDeg=$lonDeg, latDeg=$latDeg)")
+      (lonDeg, latDeg)
+    }
+    private[spark] def wrapX = true
+    private[spark] def band: Column = abs(col("lat")) <= lit(maxAbsLatDeg)
+    private[spark] def score: Column =
+      st_distance_haversine(col("a_lon"), col("a_lat"), col("b_lon"), col("b_lat"))
+    private[spark] def bound(d: Double): Double = d
+    private[spark] def dist(score: Column): Column = score
+  }
+
+  /**
+   * Candidate core of the distance self-joins, which the reference computes
+   * as one job (NNMapReduce + NNProcessor, NNMapReduce.java:119-431): the
+   * DIRECTED pairs (a, b), a ≠ b, within `d` under `metric`, with their
+   * exact `score`. Over [[neighborhoodSelfJoin]], each qualifying pair
+   * meets on exactly one key (no primary-cell flag needed, unlike
+   * NNMapReduce.java:119-203); AQE splits hot cells.
+   *
+   * `window` = (tsCol, dtMillis) also requires the event times within
+   * `dtMillis` (the join form of SpatialTemporalQuery.java:132-164),
+   * compared in MICROseconds so the millisecond contract is exact (seconds
+   * truncation both drops and admits sub-second pairs wrongly).
+   * `partitionCap` is NNProcessor's per-cell member bound
+   * (NNProcessor.java:71,111; Int.MaxValue = off, the reference uses
+   * 75 000): an over-cap cell keeps its `partitionCap` LOWEST ids on both
+   * sides (a deterministic twin of the reference's arrival-order drop).
+   */
+  private def distanceCandidates(pts: DataFrame, idCol: String, d: Double, bits: Int,
+                                 metric: Metric, window: Option[(String, Long)],
+                                 partitionCap: Int): DataFrame = {
+    val (dxDeg, dyDeg) = metric.halfWidths(d, bits)
+    val ts = window.map { case (tsCol, _) => unix_micros(col(tsCol).cast("timestamp")).as("ts_us") }
+    val base = pts.where(metric.band)
+      .select(Seq(col(idCol).as("id"), col("lon"), col("lat")) ++ ts: _*)
+    val capped =
+      if (partitionCap == Int.MaxValue) base
+      else base
+        .withColumn("cap_rn", row_number().over(Window
+          .partitionBy(gw_tile_x(col("lon"), bits), gw_tile_y(col("lat"), bits))
+          .orderBy(col("id"))))
+        .where(col("cap_rn") <= partitionCap)
+        .drop("cap_rn")
+    val inWindow = window.fold(lit(true)) { case (_, dtMillis) =>
+      abs(col("a_ts_us") - col("b_ts_us")) <= lit(dtMillis * 1000L)
+    }
+    neighborhoodSelfJoin(capped, bits, dxDeg, dyDeg, metric.wrapX)
+      .where(col("a_id") =!= col("b_id") && inWindow)
+      .withColumn("score", metric.score)
+      .where(col("score") < lit(metric.bound(d)))
+  }
+
+  /** Distance self-join: the undirected pairs (a_id, b_id, dist),
+    * a_id < b_id, within `d` under `metric` (`dist` in its unit), and
+    * within the event-time `window` when one is given. */
+  def distanceJoin(pts: DataFrame, idCol: String, d: Double, bits: Int,
+                   metric: Metric = Degrees,
+                   window: Option[(String, Long)] = None): DataFrame =
+    distanceCandidates(pts, idCol, d, bits, metric, window, Int.MaxValue)
+      .where(col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"), metric.dist(col("score")).as("dist"))
 
   /**
    * Per-item k-nearest within threshold — the neighbor-capped distance
-   * join. The reference bounds NN output two ways: `maxNeighbors`
-   * (MAX_MEMBER_SELECTION → NNProcessor.setUpperBoundPerPartition,
-   * NNMapReduce.java:211,243,404-410) and the 75 000-item partition bound
-   * (NNProcessor.java:71,111 — items arriving after a cell is full are
-   * DROPPED). Here: `k` ranks each item's in-threshold neighbors by
-   * (distance², id) and keeps the top k — a row_number window Spark
-   * rewrites to WindowGroupLimit, so the per-item limit runs map-side
-   * BEFORE the rank shuffle (a skewed point with millions of in-threshold
-   * neighbors ships at most k·partitions rows, plan-pinned in
-   * Round5Spec); `partitionCap` mirrors the reference's per-cell member
-   * bound (default Int.MaxValue = off; the reference defaults 75 000) —
-   * cells over the cap keep their `partitionCap` LOWEST ids and drop the
-   * rest entirely (deterministic twin of the reference's arrival-order
-   * drop). Output is DIRECTED: (a_id, b_id, rnk), a ≠ b.
+   * join (NNMapReduce's `maxNeighbors`, MAX_MEMBER_SELECTION →
+   * NNProcessor.setUpperBoundPerPartition, NNMapReduce.java:211,243,404-410,
+   * plus the `partitionCap` of [[distanceCandidates]]). Each item keeps its
+   * k in-threshold neighbors lowest by (score, b_id): a row_number window
+   * Spark rewrites to WindowGroupLimit, so the limit runs map-side BEFORE
+   * the rank shuffle (a skewed point ships at most k·partitions rows,
+   * plan-pinned in DistanceJoinSpec). Output is DIRECTED: (a_id, b_id,
+   * rnk), a ≠ b.
    */
   def distanceJoinTopK(pts: DataFrame, idCol: String, d: Double, bits: Int,
-                       k: Int, partitionCap: Int = Int.MaxValue): DataFrame = {
-    require(360.0 / (1L << bits) >= d, s"cell size at $bits bits must be >= d=$d")
-    val base0 = pts.select(col(idCol).as("id"), col("lon"), col("lat"))
-    val base =
-      if (partitionCap == Int.MaxValue) base0
-      else {
-        val capW = Window.partitionBy(col("cx"), col("cy")).orderBy(col("id"))
-        base0
-          .withColumn("cx", GeoFunctions.gw_tile_x(col("lon"), bits))
-          .withColumn("cy", GeoFunctions.gw_tile_y(col("lat"), bits))
-          .withColumn("cap_rn", row_number().over(capW))
-          .where(col("cap_rn") <= partitionCap)
-          .select(col("id"), col("lon"), col("lat"))
-      }
-    val d2 = (col("a_lon") - col("b_lon")) * (col("a_lon") - col("b_lon")) +
-      (col("a_lat") - col("b_lat")) * (col("a_lat") - col("b_lat"))
-    val rankW = Window.partitionBy(col("a_id")).orderBy(col("d2"), col("b_id"))
-    neighborhoodSelfJoin(base, bits, d, d)
-      .where(col("a_id") =!= col("b_id"))
-      .withColumn("d2", d2)
-      .where(col("d2") < lit(d * d))
+                       k: Int, partitionCap: Int = Int.MaxValue,
+                       metric: Metric = Degrees): DataFrame = {
+    val rankW = Window.partitionBy(col("a_id")).orderBy(col("score"), col("b_id"))
+    distanceCandidates(pts, idCol, d, bits, metric, None, partitionCap)
       .withColumn("rnk", row_number().over(rankW).cast("long"))
       .where(col("rnk") <= k)
       .select(col("a_id"), col("b_id"), col("rnk"))
-  }
-
-  /** [[distanceJoinTopK]] in METERS (haversine ranking) — the same
-    * per-item neighbor cap over [[distanceJoinMeters]]'s banded,
-    * antimeridian-wrapping candidate join (same latitude-band contract). */
-  def distanceJoinMetersTopK(pts: DataFrame, idCol: String, dMeters: Double,
-                             bits: Int, k: Int,
-                             maxAbsLatDeg: Double = 85.0): DataFrame = {
-    val undirected = distanceJoinMeters(pts, idCol, dMeters, bits, maxAbsLatDeg)
-    // directed view: each unordered qualifying pair feeds both endpoints
-    val directed = undirected.unionByName(undirected.select(
-      col("b_id").as("a_id"), col("a_id").as("b_id"), col("dist_m")))
-    val rankW = Window.partitionBy(col("a_id")).orderBy(col("dist_m"), col("b_id"))
-    directed
-      .withColumn("rnk", row_number().over(rankW).cast("long"))
-      .where(col("rnk") <= k)
-      .select(col("a_id"), col("b_id"), col("rnk"))
-  }
-
-  /**
-   * Distance self-join in METERS (haversine): pairs within `dMeters`.
-   * Tile neighborhood sized from the meters radius at the worst-case
-   * latitude in the data: degrees-per-meter grows with |lat|, so the
-   * lon expansion uses 1/cos(maxAbsLat) — the reference's orthodromic
-   * buffering (OrthodromicDistancePartitioner.java:210-240 meters→degrees
-   * via geodetic calc), done as a static worst-case bound so the join
-   * stays a single equi-join. Exact haversine re-check after the join.
-   *
-   * LATITUDE BAND CONTRACT: rows with |lat| > `maxAbsLatDeg` (default 85°)
-   * are EXCLUDED from the join entirely — the 1/cos lon-expansion bound is
-   * only valid inside the band, so near-pole rows would otherwise silently
-   * miss qualifying pairs. Polar data needs either a wider band (cos(89°)
-   * still bounds, at ~57× the lon expansion) or a dedicated polar-cap pass;
-   * counting the excluded rows here would cost an extra full scan per
-   * call, so the exclusion is contractual rather than logged — callers
-   * with possibly-polar data should pre-count `|lat| > maxAbsLatDeg`.
-   */
-  def distanceJoinMeters(pts: DataFrame, idCol: String, dMeters: Double,
-                         bits: Int, maxAbsLatDeg: Double = 85.0): DataFrame = {
-    val mPerDegEquator = 2 * math.Pi * 6371008.8 / 360.0
-    val latDeg = dMeters / mPerDegEquator // Δφ <= d/R exactly (haversine)
-    // EXACT in-band lon bound, not the small-angle linear one: from
-    // hav(d/R) = hav(Δφ) + cosφ1·cosφ2·hav(Δλ), two in-band points within
-    // d satisfy sin²(Δλ/2) <= sin²(d/2R)/cos²(maxAbsLat), so
-    // Δλ <= 2·asin(sin(d/2R)/cos(maxAbsLat)). The linear d/(R·cos φ)
-    // under-covers at high latitude (missing pairs near the band edge);
-    // the same asin form backs GeoCodec.haversineDiskEnvelopes.
-    val sinHalf = math.sin(dMeters / (2.0 * 6371008.8)) /
-      math.cos(math.toRadians(maxAbsLatDeg))
-    val lonDeg =
-      if (sinHalf >= 1.0) 360.0
-      else math.toDegrees(2.0 * math.asin(sinHalf))
-    val cellDeg = 360.0 / (1L << bits)
-    // neighborhood half-width in cells per axis
-    require(lonDeg <= 8 * cellDeg && latDeg <= 8 * cellDeg,
-      s"radius spans too many cells at $bits bits (lonDeg=$lonDeg, latDeg=$latDeg)")
-    val dist = GeoFunctions.st_distance_haversine(
-      col("a_lon"), col("a_lat"), col("b_lon"), col("b_lat"))
-    // the lon-expansion bound is only valid up to maxAbsLatDeg; enforce it
-    // here (near-pole rows would otherwise silently miss qualifying pairs)
-    val inBand = pts.where(abs(col("lat")) <= lit(maxAbsLatDeg))
-    // wrapX: haversine wraps at the antimeridian, so the tile
-    // neighborhood must too — otherwise pairs straddling ±180° never
-    // meet on a join key and silently vanish (the exact-haversine oracle
-    // DOES count them)
-    neighborhoodSelfJoin(inBand.select(col(idCol).as("id"), col("lon"), col("lat")),
-        bits, lonDeg, latDeg, wrapX = true)
-      .where(col("a_id") < col("b_id"))
-      .withColumn("dist_m", dist)
-      .where(col("dist_m") < lit(dMeters))
-      .select(col("a_id"), col("b_id"), col("dist_m"))
-  }
-
-  /**
-   * Spatio-temporal distance self-join: pairs within euclidean degree
-   * distance `d` AND within `dtMillis` of each other in event time — the
-   * join form of SpatialTemporalQuery (space and time constraints
-   * composed, SpatialTemporalQuery.java:132-164). Same tile equi-join as
-   * [[distanceJoin]]; the time test rides in the join filter.
-   */
-  def distanceJoinST(pts: DataFrame, idCol: String, tsCol: String,
-                     d: Double, dtMillis: Long, bits: Int): DataFrame = {
-    require(360.0 / (1L << bits) >= d, s"cell size at $bits bits must be >= d=$d")
-    val d2 = (col("a_lon") - col("b_lon")) * (col("a_lon") - col("b_lon")) +
-      (col("a_lat") - col("b_lat")) * (col("a_lat") - col("b_lat"))
-    // MICROsecond precision so the millisecond contract holds exactly —
-    // seconds truncation both dropped sub-second-window pairs and admitted
-    // pairs up to 999 ms outside the window (sessionize uses the same
-    // unix_micros form). NTZ timestamps need the intermediate cast;
-    // session TZ is UTC.
-    val dt = abs(col("a_ts_us") - col("b_ts_us"))
-    neighborhoodSelfJoin(pts.select(col(idCol).as("id"), col("lon"), col("lat"),
-        unix_micros(col(tsCol).cast("timestamp")).as("ts_us")), bits, d, d)
-      .where(col("a_id") < col("b_id") && d2 < lit(d * d) && dt <= lit(dtMillis * 1000L))
-      .select(col("a_id"), col("b_id"))
   }
 
   /** per-region counts over the point-in-polygon join — server-side

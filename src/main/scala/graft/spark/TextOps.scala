@@ -599,6 +599,12 @@ object TextOps {
    * AGGREGATED pair table only (≤ |alphabet|² rows — bounded regardless
    * of corpus size, so the single-partition window is safe by
    * construction). Output: (pair, cnt, rnk ≤ k).
+   *
+   * Assumes BMP text (the corpora here are ASCII). Pairs are cut by code
+   * point (Spark `substring`), so an astral-plane character is one symbol.
+   * The q116 oracle's DuckDB `substr` also counted code points on DuckDB
+   * 1.0.0, but an engine counting UTF-16 units or grapheme clusters cuts
+   * such text differently, and the oracle only ever sees ASCII.
    */
   def bpePairCounts(docs: DataFrame, idCol: String, textCol: String,
                     k: Int): DataFrame = {

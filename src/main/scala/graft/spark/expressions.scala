@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
+import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.io.WKBReader
 
@@ -189,30 +189,6 @@ case class STCoversPoint(left: Expression, right: Expression, wkb: Array[Byte], 
     copy(left = l, right = r)
 }
 
-/**
- * General geometry fine-filter: stored WKB geometry vs constant query
- * polygon. `contains=false` → OVERLAPS (prepared.intersects),
- * `contains=true` → CONTAINS (prepared.contains) — the exact semantics of
- * the reference's SpatialQueryFilter.CompareOperation
- * (core/geotime/.../store/filter/SpatialQueryFilter.java:50-80), pinned by
- * the ported SpatialQueryTest truth table.
- */
-case class STGeomPredicate(child: Expression, wkb: Array[Byte], contains: Boolean)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-
-  @transient private lazy val prepared: PreparedGeometry =
-    PreparedGeometryFactory.prepare(new WKBReader().read(wkb))
-  @transient private lazy val reader = new WKBReader()
-
-  override def nullSafeEval(geomWkb: Any): Any = {
-    val g = reader.read(geomWkb.asInstanceOf[Array[Byte]])
-    if (contains) prepared.contains(g) else prepared.intersects(g)
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** 2-D WKB point constructor (matches the reference's JTS 2-D WKB encoding,
   * core/geotime/GeometryUtils.java:249-261). */
 case class STPointWkb(left: Expression, right: Expression)
@@ -227,36 +203,43 @@ case class STPointWkb(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** Spatial relate op of [[STGeomRelate]], with the ROW geometry as the
+  * CQL predicate's expression1 and the prepared QUERY geometry `q`. */
+sealed abstract class RelateOp(val holds: (PreparedGeometry, Geometry) => Boolean)
+object RelateOp {
+  case object Intersects extends RelateOp((q, g) => q.intersects(g))
+  case object Within extends RelateOp((q, g) => q.contains(g)) // row within query
+  case object Contains extends RelateOp((q, g) => q.within(g)) // row contains query
+  case object Crosses extends RelateOp((q, g) => q.crosses(g))
+  case object Touches extends RelateOp((q, g) => q.touches(g))
+  case object Overlaps extends RelateOp((q, g) => q.overlaps(g))
+  case object Disjoint extends RelateOp((q, g) => q.disjoint(g))
+  case object GEquals extends RelateOp((q, g) => q.getGeometry.equalsTopo(g))
+}
+
 /**
  * General spatial relate of a stored WKB geometry against a constant query
  * geometry — the fine-filter arm for every ExtractGeometryFilterVisitor op
- * (ExtractGeometryFilterVisitor.java:57-555). `op` names the CQL predicate
- * with the ROW geometry as expression1: within = prepared(query) CONTAINS
- * row, contains = prepared(query) WITHIN row; the symmetric ops call the
- * prepared geometry directly.
+ * (ExtractGeometryFilterVisitor.java:57-555), resolved to its [[RelateOp]]
+ * once, not per row.
  */
-case class STGeomRelate(child: Expression, wkb: Array[Byte], op: String)
-    extends UnaryExpression with CodegenFallback {
+case class STGeomRelate(child: Expression, wkb: Array[Byte], op: RelateOp)
+    extends UnaryExpression {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
 
   @transient private lazy val prepared: PreparedGeometry =
     PreparedGeometryFactory.prepare(new WKBReader().read(wkb))
+  // task-local (see STCoversPoint)
   @transient private lazy val reader = new WKBReader()
 
-  override def nullSafeEval(geomWkb: Any): Any = {
-    val g = reader.read(geomWkb.asInstanceOf[Array[Byte]])
-    op match {
-      case "intersects" => prepared.intersects(g)
-      case "within"     => prepared.contains(g) // row within query
-      case "contains"   => prepared.within(g) // row contains query
-      case "crosses"    => prepared.crosses(g)
-      case "touches"    => prepared.touches(g)
-      case "overlaps"   => prepared.overlaps(g)
-      case "disjoint"   => prepared.disjoint(g)
-      case "equals"     => prepared.getGeometry.equalsTopo(g)
-      case other        => throw new IllegalArgumentException(s"unknown relate op $other")
-    }
+  /** codegen entry point. */
+  def test(geomWkb: Array[Byte]): Boolean = op.holds(prepared, reader.read(geomWkb))
+
+  override def nullSafeEval(geomWkb: Any): Any = test(geomWkb.asInstanceOf[Array[Byte]])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("stGeomRelate", this, classOf[STGeomRelate].getName)
+    defineCodeGen(ctx, ev, g => s"$ref.test($g)")
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -697,9 +680,12 @@ object GeoFunctions {
     column(DotLongArrays(expression(a), expression(b)))
   def st_envelope(wkb: Column): Column = column(STEnvelope(expression(wkb)))
   def st_centroid(wkb: Column): Column = column(STCentroid(expression(wkb)))
+  /** the reference's SpatialQueryFilter.CompareOperation
+    * (SpatialQueryFilter.java:50-80): `contains=false` → OVERLAPS
+    * (prepared.intersects), `contains=true` → CONTAINS (prepared.contains). */
   def st_geom_predicate(geomWkb: Column, queryWkb: Array[Byte], contains: Boolean = false): Column =
-    column(STGeomPredicate(expression(geomWkb), queryWkb, contains))
-  def st_geom_relate(geomWkb: Column, queryWkb: Array[Byte], op: String): Column =
+    st_geom_relate(geomWkb, queryWkb, if (contains) RelateOp.Within else RelateOp.Intersects)
+  def st_geom_relate(geomWkb: Column, queryWkb: Array[Byte], op: RelateOp): Column =
     column(STGeomRelate(expression(geomWkb), queryWkb, op))
   def gw_time_bin(ts: Column, unit: graft.index.TimeUnits.Value = graft.index.TimeUnits.Year): Column =
     column(TimeBinId(expression(ts), unit))

@@ -71,7 +71,7 @@ class GeometryFilterExtractSpec extends SparkTestBase {
     }
 
   private def runCase(filter: Node, wantConstrained: Boolean,
-                      brute: Geometry => Boolean): Unit = {
+                      brute: Geometry => Boolean): Set[Long] = {
     val geoms = fixture
     val df = geoms.map { case (i, g) => (i, wkb.write(g)) }.toDF("id", "geom")
     val store = GeometryQuery.encodeGeometries(df, "id", "geom")
@@ -80,6 +80,7 @@ class GeometryFilterExtractSpec extends SparkTestBase {
     val got = res.select("id").collect().map(_.getLong(0)).toSet
     val want = geoms.filter { case (_, g) => brute(g) }.map(_._1).toSet
     assert(got == want, s"$filter: got ${got.size} want ${want.size}")
+    want
   }
 
   test("constrain ops answer exactly THROUGH the range prefilter") {
@@ -95,6 +96,13 @@ class GeometryFilterExtractSpec extends SparkTestBase {
     runCase(BBox(0, 30, 0, 24), wantConstrained = true,
       g => g.intersects(wkt.read("POLYGON ((0 0, 30 0, 30 24, 0 24, 0 0))")))
     runCase(DWithinDeg(tri, 2.5), wantConstrained = true, g => g.distance(tri) <= 2.5)
+    // a box inside fixture box 2, one overlapping it, and box 2 itself
+    val inner = wkt.read("POLYGON ((-42.5 -29.5, -41 -29.5, -41 -28, -42.5 -28, -42.5 -29.5))")
+    assert(runCase(Contains(inner), wantConstrained = true, g => g.contains(inner)) == Set(2L))
+    val part = wkt.read("POLYGON ((-41.5 -28.5, -38 -28.5, -38 -25, -41.5 -25, -41.5 -28.5))")
+    assert(runCase(Overlaps(part), wantConstrained = true, g => g.overlaps(part)) == Set(2L))
+    val box2 = fixture(2)._2
+    assert(runCase(GEquals(box2), wantConstrained = true, g => g.equalsTopo(box2)) == Set(2L))
   }
 
   test("REFUSED ops (Disjoint/Beyond/Not/unconstrained-OR) still answer exactly, unpruned") {

@@ -8,8 +8,8 @@ import org.locationtech.jts.io.WKTReader
 /**
  * Spark-layer operator suite: every operator checked against an in-test
  * brute-force oracle, re-expressing the reference's own test contract
- * (AnalyticRecipesTest.scala:25-110 — partitioned distance-join must equal
- * compareAll brute force; SpatialQueryTest.java:73-170 — exact-geometry
+ * (AnalyticRecipesTest.scala:25-110 — partitioned results must equal
+ * brute force, the distance joins in DistanceJoinSpec; SpatialQueryTest.java:73-170 — exact-geometry
  * semantics; GeoWaveBasicIT.java:894-979 — result-set equality by id set).
  */
 class OpsSpec extends SparkTestBase {
@@ -109,42 +109,6 @@ class OpsSpec extends SparkTestBase {
         .select("event_id").collect().map(_.getLong(0)).toSet
       assert(got == want, in.columns.mkString(","))
     }
-    assert(want.nonEmpty)
-  }
-
-  test("distanceJoin == brute-force all-pairs (AnalyticRecipesTest contract)") {
-    val pts = pages.limit(1000).select(col("doc_id").as("id"), col("lon"), col("lat"))
-    val d = 0.8
-    val got = Ops.distanceJoin(pts, "id", d, bits = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val local = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val want = (for {
-      (ia, xa, ya) <- local; (ib, xb, yb) <- local
-      if ia < ib && (xa - xb) * (xa - xb) + (ya - yb) * (ya - yb) < d * d
-    } yield (ia, ib)).toSet
-    assert(got == want)
-    assert(want.nonEmpty, "fixture must produce at least one close pair")
-  }
-
-  test("distanceJoinMeters == brute-force haversine all-pairs") {
-    val pts = pages.where(abs(col("lat")) <= 85).limit(800)
-      .select(col("doc_id").as("id"), col("lon"), col("lat"))
-    val dM = 150000.0 // 150 km
-    val got = Ops.distanceJoinMeters(pts, "id", dM, bits = 7)
-      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val local = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    def hav(a: (Long, Double, Double), b: (Long, Double, Double)): Double = {
-      val dLat = math.toRadians(b._3 - a._3) / 2
-      val dLon = math.toRadians(b._2 - a._2) / 2
-      val s = math.sin(dLat) * math.sin(dLat) +
-        math.cos(math.toRadians(a._3)) * math.cos(math.toRadians(b._3)) *
-          math.sin(dLon) * math.sin(dLon)
-      2 * 6371008.8 * math.asin(math.sqrt(s))
-    }
-    val want = (for {
-      a <- local; b <- local if a._1 < b._1 && hav(a, b) < dM
-    } yield (a._1, b._1)).toSet
-    assert(got == want)
     assert(want.nonEmpty)
   }
 

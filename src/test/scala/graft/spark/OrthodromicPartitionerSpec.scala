@@ -70,7 +70,7 @@ class OrthodromicPartitionerSpec extends AnyFunSuite {
       val pLon = if (pLonRaw < -180) pLonRaw + 360 else if (pLonRaw > 180) pLonRaw - 360 else pLonRaw
       val pLat = math.max(-90, math.min(90, lat + (rnd.nextDouble() * 2 - 1) * thr))
       val own = (GeoCodec.bucketLon(pLon, bits), GeoCodec.bucketLat(pLat, bits))
-      // wrapped partners only meet when the caller wraps (distanceJoinMeters);
+      // wrapped partners only meet when the caller wraps (Ops.Meters does);
       // assert coverage for the unwrapped-partner case and the wrapped case
       if (pLonRaw == pLon)
         assert(cells.contains(own), s"($lon,$lat) thr-box misses partner ($pLon,$pLat)")

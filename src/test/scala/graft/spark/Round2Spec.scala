@@ -3,7 +3,7 @@ package graft.spark
 import org.apache.spark.sql.functions._
 
 /** Round-2 hardening: distributed KDE CDF, DBSCAN loop hygiene, scale
-  * guards, pole guard, multi-index chooser, codegen'd fine filters,
+  * guards, multi-index chooser, codegen'd fine filters,
   * round-robin prefix, real raster resample. */
 class Round2Spec extends SparkTestBase {
   import spark.implicits._
@@ -107,17 +107,6 @@ class Round2Spec extends SparkTestBase {
     val out = SpatialJoin.knnRing(pts, "id", pts.where(lit(false)), "id", k = 3)
     assert(out != null && out.count() == 0)
     assert(out.columns.toSeq == Seq("q_id", "id", "rn"))
-  }
-
-  test("distanceJoinMeters excludes near-pole rows outside the latitude band") {
-    val pts = Seq(
-      (0L, 10.0, 89.0), (1L, 10.001, 89.0), // near-pole pair, outside band
-      (2L, 20.0, 0.0), (3L, 20.5, 0.0), // equatorial pair ~55 km apart
-      (4L, 120.0, 40.0) // isolated
-    ).toDF("id", "lon", "lat")
-    val got = Ops.distanceJoinMeters(pts, "id", dMeters = 100000.0, bits = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((2L, 3L)))
   }
 
   // -------------------------------------------------------- multi-index

@@ -292,29 +292,6 @@ class Round3Spec extends SparkTestBase {
     assert(Ingest.readStore(spark, dir).where(col("doc_id") === victim).count() == 0)
   }
 
-  test("wrapped neighborhood wider than the grid yields no duplicate pairs") {
-    // bits=3 → 8 tiles of 45°; dMeters=2000km → kx=5, 2kx+1=11 > 8: the
-    // wrapped offsets must reduce to distinct residues or every pair
-    // would join on two keys and duplicate
-    val pts = Seq((1L, -170.0, 0.0), (2L, 170.0, 0.0), (3L, -150.0, 0.0),
-      (4L, 10.0, 0.0), (5L, 25.0, 0.0)).toDF("id", "lon", "lat")
-    val got = Ops.distanceJoinMeters(pts, "id", dMeters = 2000000.0, bits = 3)
-      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == got.distinct.length, s"duplicate pairs: ${got.toSeq}")
-    // brute-force haversine oracle
-    val rows = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    def hav(a: (Long, Double, Double), b: (Long, Double, Double)): Double = {
-      val dLat = math.toRadians(b._3 - a._3); val dLon = math.toRadians(b._2 - a._2)
-      val s = math.pow(math.sin(dLat / 2), 2) +
-        math.cos(math.toRadians(a._3)) * math.cos(math.toRadians(b._3)) *
-          math.pow(math.sin(dLon / 2), 2)
-      2 * 6371008.8 * math.asin(math.sqrt(s))
-    }
-    val want = (for (a <- rows; b <- rows if a._1 < b._1 && hav(a, b) < 2000000.0)
-      yield (a._1, b._1)).toSet
-    assert(got.toSet == want, s"got ${got.toSet} want $want")
-  }
-
   test("readStore recovers a bucket a crashed delete left retired") {
     val dir = graft.TestTmp.dir("graft-delrec").toString
     val pages = Tables.synthPages(spark, 1000)
@@ -402,16 +379,6 @@ class Round3Spec extends SparkTestBase {
     // WindowGroupLimit caps the per-key rows BEFORE the window shuffle
     assert(q.queryExecution.executedPlan.toString.contains("WindowGroupLimit"),
       q.queryExecution.executedPlan.toString.take(1200))
-  }
-
-  test("distanceJoinMeters finds pairs straddling the antimeridian") {
-    // wrapped Δlon = 0.08° ≈ 8.8 km at lat 10 — within 20 km; the
-    // unwrapped tile neighborhood would put these in non-adjacent cells
-    val pts = Seq((1L, 179.96, 10.0), (2L, -179.96, 10.0), (3L, 0.0, 10.0),
-      (4L, 179.96, 10.05)).toDF("id", "lon", "lat")
-    val got = Ops.distanceJoinMeters(pts, "id", dMeters = 20000.0, bits = 7)
-      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 2L), (1L, 4L), (2L, 4L)), got.toString)
   }
 
   // ------------------------------------------------- dateline box query

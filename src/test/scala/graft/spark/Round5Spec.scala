@@ -77,71 +77,6 @@ class Round5Spec extends SparkTestBase {
     assert(got == expected)
   }
 
-  // ------------------------------------ neighbor-capped distance join
-
-  private def gridPts(n: Int): Seq[(Long, Double, Double)] =
-    (0L until n.toLong).map(i => (i, (i % 25).toDouble * 0.3 - 3.0, (i / 25).toDouble * 0.3 + 10.0))
-
-  test("distanceJoinTopK matches a brute-force per-item top-k oracle (ties -> lowest b_id)") {
-    val pts = gridPts(200)
-    val d = 0.95; val k = 3
-    val got = Ops.distanceJoinTopK(pts.toDF("id", "lon", "lat"), "id", d, bits = 6, k = k)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = pts.flatMap { case (i, x, y) =>
-      pts.filter { case (j, u, v) => j != i && (x - u) * (x - u) + (y - v) * (y - v) < d * d }
-        .map { case (j, u, v) => (j, (x - u) * (x - u) + (y - v) * (y - v)) }
-        .sortBy { case (j, dd) => (dd, j) }.take(k).zipWithIndex
-        .map { case ((j, _), r) => (i, j, (r + 1).toLong) }
-    }.toSet
-    assert(got == want)
-    // the 0.3 grid puts 4 equidistant axis neighbors inside d=0.95: the
-    // rank ties must break to the lowest b_id, so interior point 62's
-    // top-3 is (37, 61, 63) in that order
-    assert(got.filter(_._1 == 62L).toList.sortBy(_._3).map(_._2) == List(37L, 61L, 63L))
-  }
-
-  test("distanceJoinTopK: rank limit runs map-side (WindowGroupLimit Partial below the shuffle)") {
-    import org.apache.spark.sql.execution.window.WindowGroupLimitExec
-    val df = Ops.distanceJoinTopK(gridPts(200).toDF("id", "lon", "lat"), "id", 0.95, bits = 6, k = 3)
-    val modes = df.queryExecution.sparkPlan.collect {
-      case w: WindowGroupLimitExec => w.mode.toString
-    }
-    assert(modes.toSet == Set("Partial", "Final"),
-      "expected a partial+final WindowGroupLimit pair:\n" + df.queryExecution.sparkPlan)
-  }
-
-  test("distanceJoinTopK partitionCap drops over-cap cell members entirely (NNProcessor bound)") {
-    // one hot cell: 40 co-located points, cap 10 -> only ids 0..9 survive,
-    // on BOTH sides of the join
-    val hot = (0L until 40L).map(i => (i, 1.0 + (i % 7) * 0.01, 1.0 + (i / 7) * 0.01))
-    val got = Ops.distanceJoinTopK(hot.toDF("id", "lon", "lat"), "id",
-        d = 2.0, bits = 2, k = 100, partitionCap = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.map(_._1).toSet == (0L until 10L).toSet)
-    assert(got.map(_._2).toSet == (0L until 10L).toSet)
-    assert(got.length == 90, "10 surviving members x 9 neighbors each")
-  }
-
-  test("distanceJoinMetersTopK: directed haversine top-k vs brute force") {
-    val pts = gridPts(100)
-    val dM = 60000.0; val k = 2
-    val got = Ops.distanceJoinMetersTopK(pts.toDF("id", "lon", "lat"), "id", dM, bits = 6, k = k)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def hav(x1: Double, y1: Double, x2: Double, y2: Double): Double = {
-      val dLat = math.toRadians(y2 - y1) / 2; val dLon = math.toRadians(x2 - x1) / 2
-      val a = math.sin(dLat) * math.sin(dLat) +
-        math.cos(math.toRadians(y1)) * math.cos(math.toRadians(y2)) * math.sin(dLon) * math.sin(dLon)
-      2.0 * 6371008.8 * math.asin(math.sqrt(a))
-    }
-    val want = pts.flatMap { case (i, x, y) =>
-      pts.filter { case (j, u, v) => j != i && hav(x, y, u, v) < dM }
-        .map { case (j, u, v) => (j, hav(x, y, u, v)) }
-        .sortBy { case (j, dd) => (dd, j) }.take(k).zipWithIndex
-        .map { case ((j, _), r) => (i, j, (r + 1).toLong) }
-    }.toSet
-    assert(got == want)
-  }
-
   test("annIvfTrained parity: map-side assignment honors trained centroids (ties -> lowest cid)") {
     val emb = embFixture(150)
     // two byte-identical centroids force exact argmin ties
