@@ -1400,20 +1400,24 @@ object SparkEntry {
       |FROM pairs p JOIN sizes sa ON sa.doc_id = p.a_id JOIN sizes sb ON sb.doc_id = p.b_id
       |WHERE CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) >= 0.5""".stripMargin
 
+  /** the 16 MinHash signature aggregates over `h` (q17/q44/q112 oracles). */
+  private val minhashSigCols: String = (0 until 16)
+    .map(j => s"min((${2 * j + 1} * h + ${12345L * j + 1}) % 2147483647) AS sig$j").mkString(", ")
+
+  /** the 4×4 LSH band rows (id, band, bucket) of signature table `sig`. */
+  private def minhashBandsSql(sig: String): String = (0 until 4).map { b =>
+    val bucket = (0 until 4).map(r => s"sig${b * 4 + r}")
+      .reduce((acc, s2) => s"(($acc) * 786433 + $s2) % 2147483647")
+    s"SELECT id, $b AS band, $bucket AS bucket FROM $sig"
+  }.mkString(" UNION ALL ")
+
   /** shared CTE chain of the MinHash+LSH pipeline (hot-bucket cap
     * mirrored from minhashLshPairs(maxBucket = 10)). */
-  private val minhashCtes: String = {
-    val sigCols = (0 until 16)
-      .map(j => s"min((${2 * j + 1} * h + ${12345L * j + 1}) % 2147483647) AS sig$j").mkString(", ")
-    val bands = (0 until 4).map { b =>
-      val bucket = (0 until 4).map(r => s"sig${b * 4 + r}")
-        .reduce((acc, s2) => s"(($acc) * 786433 + $s2) % 2147483647")
-      s"SELECT id, $b AS band, $bucket AS bucket FROM sig"
-    }.mkString(" UNION ALL ")
+  private val minhashCtes: String =
     s"""$shCte,
        |shh AS (SELECT doc_id, ${duckHash("shingle")} AS h FROM sh),
-       |sig AS (SELECT doc_id AS id, $sigCols FROM shh GROUP BY doc_id),
-       |buckets0 AS ($bands),
+       |sig AS (SELECT doc_id AS id, $minhashSigCols FROM shh GROUP BY doc_id),
+       |buckets0 AS (${minhashBandsSql("sig")}),
        |buckets AS (SELECT * FROM buckets0
        |            QUALIFY COUNT(*) OVER (PARTITION BY band, bucket) <= 10),
        |cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id FROM buckets a
@@ -1423,7 +1427,6 @@ object SparkEntry {
        |          JOIN sh sb ON sb.doc_id = c.b_id AND sa.shingle = sb.shingle
        |          GROUP BY 1, 2),
        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1)""".stripMargin
-  }
 
   private val minhashSql: String = s"WITH $minhashCtes\n$jaccardTail"
 
@@ -1461,21 +1464,13 @@ object SparkEntry {
   /** the q17 CTE chain parameterized PER SIDE for the recrawl-delta oracle
     * (q112): shingles, signatures and LSH buckets of the docs matching
     * `filter`, all suffixed so two sides coexist in one WITH. */
-  private def minhashSideCtes(suffix: String, filter: String): String = {
-    val sigCols = (0 until 16)
-      .map(j => s"min((${2 * j + 1} * h + ${12345L * j + 1}) % 2147483647) AS sig$j").mkString(", ")
-    val bands = (0 until 4).map { b =>
-      val bucket = (0 until 4).map(r => s"sig${b * 4 + r}")
-        .reduce((acc, s2) => s"(($acc) * 786433 + $s2) % 2147483647")
-      s"SELECT id, $b AS band, $bucket AS bucket FROM sig$suffix"
-    }.mkString(" UNION ALL ")
+  private def minhashSideCtes(suffix: String, filter: String): String =
     s"""sh$suffix AS (
        |  SELECT DISTINCT doc_id, unnest([array_to_string(words[i:i+2], ' ') FOR i IN range(1, greatest(len(words)-1, 1))]) AS shingle
        |  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE ($filter) AND len(string_split(text, ' ')) >= 3)),
        |shh$suffix AS (SELECT doc_id, ${duckHash("shingle")} AS h FROM sh$suffix),
-       |sig$suffix AS (SELECT doc_id AS id, $sigCols FROM shh$suffix GROUP BY doc_id),
-       |buckets$suffix AS ($bands)""".stripMargin
-  }
+       |sig$suffix AS (SELECT doc_id AS id, $minhashSigCols FROM shh$suffix GROUP BY doc_id),
+       |buckets$suffix AS (${minhashBandsSql(s"sig$suffix")})""".stripMargin
 
   private val quantCte =
     "quant AS (SELECT vec_id, [CAST(ROUND(x * 1000) AS BIGINT) FOR x IN embedding] AS v FROM embeddings)"
@@ -1958,13 +1953,10 @@ object SparkEntry {
          |  ON p.lon >= r.lon_min AND p.lon <= r.lon_max
          | AND p.lat >= r.lat_min AND p.lat <= r.lat_max
          |GROUP BY 1""".stripMargin,
-    "q44_minhash_sigs" -> {
-      val sigCols = (0 until 16)
-        .map(j => s"min((${2 * j + 1} * h + ${12345L * j + 1}) % 2147483647) AS sig$j").mkString(", ")
+    "q44_minhash_sigs" ->
       s"""WITH $shCte,
          |shh AS (SELECT doc_id, ${duckHash("shingle")} AS h FROM sh)
-         |SELECT doc_id AS id, $sigCols FROM shh GROUP BY doc_id""".stripMargin
-    },
+         |SELECT doc_id AS id, $minhashSigCols FROM shh GROUP BY doc_id""".stripMargin,
     "q43_ann_ivf" ->
       s"""WITH $quantCte,
          |qn AS (SELECT vec_id, v, CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS n2 FROM quant),

@@ -172,12 +172,11 @@ object Analytics {
       .join(core.withColumnRenamed("id", "b_id"), "b_id")
       .select("a_id", "b_id")
       .cache()
-    // min-label propagation (checkpointed rounds — see Graphs) over the
-    // core-core edges; self-loops are present, so the shared helper's
-    // inner join loses no core node
+    // connected components (driver collapse or checkpointed rounds — see
+    // Graphs) over the core-core edges; self-loops are present, so the
+    // shared helper's inner join loses no core node
     val labels = Graphs.minLabelComponents(
       coreEdges.select(col("a_id").as("src"), col("b_id").as("dst")))
-    coreEdges.unpersist() // only the propagation loop reads core-core edges
     val coreOut = labels.select(col("id"), col("lbl").as("cluster"), lit("core").as("role"))
     // border: non-core with >= 1 core neighbor → lowest core cluster
     val nonCore = base.select("id").join(core, Seq("id"), "left_anti")
@@ -197,6 +196,7 @@ object Analytics {
     // caches can be released NOW — without this, every dbscan call leaks
     // two cached tables into executor memory for the session's lifetime
     val out = coreOut.unionByName(borderLbl).unionByName(noise).localCheckpoint()
+    coreEdges.unpersist() // read by the labels' lazy remap until `out` exists
     edges.unpersist()
     core.unpersist()
     out

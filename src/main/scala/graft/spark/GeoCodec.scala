@@ -1,6 +1,8 @@
 package graft.spark
 
 import graft.index._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * JVM-static codec entry points for the hot row-at-a-time paths. Catalyst
@@ -37,10 +39,6 @@ object GeoCodec {
     * (reference: PrimitiveHilbertSFCOperations.normalizeDimension:248-261) */
   @inline def bucketPoint(norm: Double, bins: Long): Long =
     math.max(math.ceil(norm * bins) - 1L, 0L).toLong
-
-  /** range-min bucket rule `min(floor(norm*bins), bins-1)` */
-  @inline def bucketMin(norm: Double, bins: Long): Long =
-    math.min(math.floor(norm * bins), (bins - 1).toDouble).toLong
 
   @inline def normLon(lon: Double): Double = {
     val c = if (lon < -180) -180 else if (lon > 180) 180 else lon
@@ -111,8 +109,7 @@ object GeoCodec {
   /** integer dot product over two long-array columns — the hot inner loop
     * of embedding similarity, called from generated code (no per-row
     * allocation, stays in whole-stage codegen). */
-  def dotLong(a: org.apache.spark.sql.catalyst.util.ArrayData,
-              b: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+  def dotLong(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var acc = 0L
     var i = 0
@@ -127,8 +124,7 @@ object GeoCodec {
     * (the q20 hot path). Weight table cached per (dims, bits). */
   private val hyperplaneWeights =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Long]]()
-  def hyperplaneSig(v: org.apache.spark.sql.catalyst.util.ArrayData,
-                    dims: Int, bits: Int): Long = {
+  def hyperplaneSig(v: ArrayData, dims: Int, bits: Int): Long = {
     // ArrayData.getLong does NO bounds check (unsafe memory read): a
     // caller-supplied dims larger than the vector would read adjacent row
     // memory — nondeterministic buckets or a crash. Fail loudly instead.
@@ -165,7 +161,7 @@ object GeoCodec {
     * surrogate pairs whole and ascii() yields the full code point) and the
     * DuckDB `ord` twin. Codegen entry point — one JVM loop instead of an
     * eval-mode higher-order-function chain per row. */
-  def portableHash(s: org.apache.spark.unsafe.types.UTF8String): Long = {
+  def portableHash(s: UTF8String): Long = {
     val str = s.toString
     var acc = 0L
     var i = 0
@@ -192,8 +188,7 @@ object GeoCodec {
     * substr/length) = fold (acc·31 + codePoint) mod p over code points
     * [i, i+k) — identical values to the unrolled column-expression fold
     * over `substr`+`ascii` for any input, not just ASCII. */
-  def kgramHashes(s: org.apache.spark.unsafe.types.UTF8String, k: Int)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
+  def kgramHashes(s: UTF8String, k: Int): ArrayData = {
     val str = s.toString
     // code-point array (char-indexed walk would split surrogate pairs)
     val cps = new Array[Int](str.codePointCount(0, str.length))
@@ -203,7 +198,7 @@ object GeoCodec {
       cps(ci) = cp; ci += 1; off += Character.charCount(cp)
     }
     val n = cps.length - k + 1
-    if (n <= 0) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    if (n <= 0) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Long](n)
     var i = 0
     while (i < n) {
@@ -213,7 +208,7 @@ object GeoCodec {
       out(i) = acc
       i += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    ArrayData.toArrayData(out)
   }
 
   /** all character n-grams of a string for n in [minN, maxN], CODE-POINT
@@ -221,8 +216,7 @@ object GeoCodec {
     * substr/length) — the reference's NGramTokenizer gram enumeration
     * (core/store/.../index/text/TextIndexStrategy.java:21-130, default
     * n = 2..4). One pass; grams of each length in positional order. */
-  def charGrams(s: org.apache.spark.unsafe.types.UTF8String, minN: Int, maxN: Int)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
+  def charGrams(s: UTF8String, minN: Int, maxN: Int): ArrayData = {
     val str = s.toString
     val cpCount = str.codePointCount(0, str.length)
     // char offsets of each code point (so substring extraction is O(1))
@@ -239,45 +233,80 @@ object GeoCodec {
     while (n <= maxN) {
       var i = 0
       while (i + n <= cpCount) {
-        out += org.apache.spark.unsafe.types.UTF8String.fromString(
+        out += UTF8String.fromString(
           str.substring(offs(i), offs(i + n)))
         i += 1
       }
       n += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+    new GenericArrayData(out.toArray)
   }
 
-  private val SpaceUtf8 = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
-
-  /** all word n-gram shingles of a text in one pass: words via
-    * UTF8String.split(" ", -1) — the exact code path of Spark's `split`
-    * column function — n-grams joined with a single space. Empty array
-    * when the text has fewer than n words. Codegen entry point replacing
-    * a transform/slice/array_join eval-mode chain. */
-  def wordShingles(s: org.apache.spark.unsafe.types.UTF8String, n: Int)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val words = s.split(SpaceUtf8, -1)
-    if (words.length < n)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    val out = new Array[Any](words.length - n + 1)
+  /** all word n-gram shingles of a text in one pass: words are the pieces
+    * between single spaces (Spark's `split(text, ' ')`, empties included),
+    * joined by single spaces. A space byte never occurs inside a UTF-8
+    * multi-byte sequence, so shingle i is one byte-range copy of the text.
+    * Empty array below n words. Codegen entry point. */
+  def wordShingles(s: UTF8String, n: Int): GenericArrayData = {
+    // word w spans bytes [starts(w), starts(w + 1) - 2]
+    val b = Array.newBuilder[Int]
+    b += 0
     var i = 0
-    while (i < out.length) {
-      var sh = words(i)
-      var j = 1
-      while (j < n) {
-        sh = org.apache.spark.unsafe.types.UTF8String.concat(sh, SpaceUtf8, words(i + j))
-        j += 1
-      }
-      out(i) = sh
+    while (i < s.numBytes()) { if (s.getByte(i) == ' ') b += i + 1; i += 1 }
+    b += s.numBytes() + 1
+    val starts = b.result()
+    new GenericArrayData(Array.tabulate[Any](math.max(starts.length - n, 0))(i =>
+      s.copyUTF8String(starts(i), starts(i + n) - 2)))
+  }
+
+  /** the [[wordShingles]] of all of a doc's texts as one distinct set in
+    * UTF-8 byte order (UTF8String.compareTo) — what [[minhashBands]] folds
+    * and [[sortedIntersectCount]] merges. Codegen entry point. */
+  def shingleSet(texts: ArrayData, n: Int): ArrayData = {
+    val all = Array.tabulate(texts.numElements())(i =>
+      wordShingles(texts.getUTF8String(i), n).array).flatten
+    java.util.Arrays.sort(all.asInstanceOf[Array[AnyRef]])
+    new GenericArrayData(all.distinct)
+  }
+
+  /** |a ∩ b| of two [[shingleSet]] arrays by one sorted merge — exact on
+    * the strings themselves, never on hashes. Codegen entry point. */
+  def sortedIntersectCount(a: ArrayData, b: ArrayData): Long = {
+    var i = 0
+    var j = 0
+    var inter = 0L
+    while (i < a.numElements() && j < b.numElements()) {
+      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      if (c == 0) { inter += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    inter
+  }
+
+  /** MinHash LSH band keys of a non-empty shingle set in one fold: hash j
+    * = min over shingles of ((2j+1)·portableHash + 12345j + 1) mod p; band
+    * b folds its rowsPerBand hashes as (acc·786433 + sig) mod p, so with
+    * rowsPerBand = 1 the keys are the signature. Codegen entry point. */
+  def minhashBands(sh: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+    val P = 2147483647L
+    val sig = Array.fill(bands * rowsPerBand)(Long.MaxValue)
+    var i = 0
+    while (i < sh.numElements()) {
+      val h = portableHash(sh.getUTF8String(i))
+      var j = 0
+      while (j < sig.length) { sig(j) = math.min(sig(j), ((2L * j + 1) * h + 12345L * j + 1) % P); j += 1 }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    ArrayData.toArrayData(Array.tabulate(bands) { b =>
+      (1 until rowsPerBand).foldLeft(sig(b * rowsPerBand))((acc, r) =>
+        (acc * 786433L + sig(b * rowsPerBand + r)) % P)
+    })
   }
 
   /** geohash cell id (codegen entry point; returns Spark's UTF8String). */
-  def geohash(lon: Double, lat: Double, precision: Int): org.apache.spark.unsafe.types.UTF8String =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
+  def geohash(lon: Double, lat: Double, precision: Int): UTF8String =
+    UTF8String.fromString(
       graft.index.Geohash.encode(lon, lat, precision))
 
   /** Year-bin epochs cached; GMT calendar-year semantics

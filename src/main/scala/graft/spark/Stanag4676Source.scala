@@ -46,9 +46,6 @@ import org.apache.spark.sql.types._
  */
 object Stanag4676Source {
 
-  private val positionDdl =
-    "STRUCT<latitude: DOUBLE, longitude: DOUBLE, elevation: DOUBLE>"
-
   /** TrackMessage subset schema for `from_xml`. The `xsi:type`
     * discriminator surfaces as the attribute field `_xsi:type`. */
   val trackMessageSchema: StructType = {

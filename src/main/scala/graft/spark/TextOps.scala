@@ -1,7 +1,12 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Training-data text pipeline: near-duplicate detection (n-gram Jaccard,
@@ -11,8 +16,8 @@ import org.apache.spark.sql.functions._
  * All hashing is portable integer arithmetic — a fold of character codes
  * mod p = 2^31-1 — so a SQL oracle reproduces every value exactly. Every
  * operator is a declarative plan: inverted-index joins for candidate
- * generation (never an n² crossJoin on the big side), aggregation for
- * signatures, equi-joins on bucket keys for LSH.
+ * generation (never an n² crossJoin on the big side), codegen'd folds
+ * for signatures, one bucket grouping for LSH candidates.
  */
 object TextOps {
 
@@ -22,20 +27,12 @@ object TextOps {
     * (SQL twin: list_reduce over ord(substr(w,i,1)).) One codegen'd
     * expression — the higher-order aggregate/transform/split chain it
     * replaces ran in eval mode per row. */
-  def portableHash(s: Column): Column = {
-    import org.apache.spark.sql.GraftBridge.{column, expression}
-    column(PortableHash(expression(s)))
-  }
+  def portableHash(s: Column): Column = column(PortableHash(expression(s)))
 
-  /** distinct word-n-gram shingles per doc: (id, shingle). The shingle
-    * array is one codegen'd pass (WordShingles — same word split as
-    * Spark's `split`); sub-n-word docs yield no rows. */
-  def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge.{column, expression}
-    docs.select(col(idCol).as("id"),
-        explode(column(WordShingles(expression(col(textCol)), n))).as("shingle"))
-      .distinct()
-  }
+  /** distinct word-n-gram shingles per doc: (id, shingle) — the rows of
+    * the per-doc shingle sets, so sub-n-word docs yield no rows. */
+  def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    shingleSets(docs, idCol, textCol, n).select(col("id"), explode(col("sh")).as("shingle"))
 
   /**
    * Benchmark decontamination screen — the training-data hygiene step
@@ -108,155 +105,151 @@ object TextOps {
           .join(sh.withColumnRenamed("id", "b_id"), Seq("b_id", "shingle"))
           .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
       }
-    pairs
+    jaccardAtLeast(pairs
       .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("sz", "size_a"), "a_id")
-      .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("sz", "size_b"), "b_id")
-      .withColumn("jac", col("inter").cast("double") /
+      .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("sz", "size_b"), "b_id"), tau)
+  }
+
+  /** (a_id, b_id, inter, size_a, size_b, jac) rows with jac >= tau. */
+  private def jaccardAtLeast(pairs: DataFrame, tau: Double): DataFrame =
+    pairs.withColumn("jac", col("inter").cast("double") /
         (col("size_a") + col("size_b") - col("inter")).cast("double"))
       .where(col("jac") >= tau)
       .select("a_id", "b_id", "inter", "size_a", "size_b", "jac")
-  }
+
+  /** per-doc shingle sets (id, sh): the doc's distinct word n-grams sorted
+    * in UTF-8 byte order. One aggregate collects each id's texts (so rows
+    * repeating an id union their shingles) and one codegen'd kernel
+    * shingles them; a doc with fewer than n words gets no row. */
+  private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+                          n: Int): DataFrame =
+    docs.groupBy(col(idCol).as("id"))
+      .agg(column(ShingleSet(expression(collect_list(col(textCol))), n)).as("sh"))
+      .where(size(col("sh")) > 0)
 
   /** MinHash signature: numHashes columns min_j = min over shingles of
-    * ((2j+1)*h + 12345j + 1) mod p. */
+    * ((2j+1)*h + 12345j + 1) mod p — the band fold with one row per band. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, numHashes: Int): DataFrame =
-    minhashSignaturesFrom(shingles(docs, idCol, textCol, n), numHashes)
-
-  /** signatures from an ALREADY-built (id, shingle) frame — lets
-    * [[minhashLshPairs]] shingle the corpus once for both the signature
-    * and the verification sides. */
-  private def minhashSignaturesFrom(sh: DataFrame, numHashes: Int): DataFrame = {
-    val withH = sh.withColumn("h", portableHash(col("shingle")))
-    val aggs = (0 until numHashes).map { j =>
-      min((lit(2L * j + 1) * col("h") + lit(12345L * j + 1)) % P).as(s"sig$j")
-    }
-    withH.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
+    shingleSets(docs, idCol, textCol, n)
+      .select(col("id"), column(MinhashBands(expression(col("sh")), numHashes, 1)).as("sig"))
+      .select(col("id") +: (0 until numHashes).map(j => col("sig")(j).as(s"sig$j")): _*)
 
   /**
    * MinHash + LSH near-dup pairs: signatures banded (bands × rowsPerBand),
-   * candidates share >= 1 band bucket, then exact Jaccard filter — the
-   * shingle→minhash→band→bucket-join ladder. Output like
-   * [[ngramJaccardPairs]] restricted to LSH candidates.
+   * candidates share >= 1 band bucket, then exact Jaccard filter. Output
+   * like [[ngramJaccardPairs]] restricted to LSH candidates. The ladder:
+   * per-doc shingle sets (one aggregate, checkpointed once) → band keys
+   * (one codegen'd fold) → buckets grouped and capped in one pass
+   * ([[bucketPairs]]) → distinct a < b pairs → merge verify.
    */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       n: Int, bands: Int, rowsPerBand: Int, tau: Double,
                       maxBucket: Long = Long.MaxValue): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // ONE shingle pass feeds both the signatures and the exact verify —
-    // localCheckpoint materializes it eagerly and, unlike cache(), its
-    // blocks are context-cleaner-released when the frame is GC'd
-    val sh = shingles(docs, idCol, textCol, n).localCheckpoint(true)
-    val allBuckets =
-      lshBuckets(minhashSignaturesFrom(sh, numHashes), bands, rowsPerBand)
-    val buckets = capHotBuckets(allBuckets, maxBucket, "minhashLshPairs")
-    val cand = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
+    // localCheckpoint, not cache(): its blocks are context-cleaner-released
+    // when the frame is GC'd
+    val sh = shingleSets(docs, idCol, textCol, n).localCheckpoint(true)
+    lshJaccard(sh, None, bands, rowsPerBand, tau, maxBucket, Seq("minhashLshPairs"))
+  }
+
+  /** the banded candidates of shingle-set frame `shA` (against `shB`, or
+    * within `shA`), distinct'd, then the exact Jaccard verify. */
+  private def lshJaccard(shA: DataFrame, shB: Option[DataFrame], bands: Int, rowsPerBand: Int,
+                         tau: Double, maxBucket: Long, tags: Seq[String]): DataFrame = {
+    val cand = bucketPairs(bandKeys(shA, bands, rowsPerBand),
+        shB.map(bandKeys(_, bands, rowsPerBand)), maxBucket, tags)
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
       .distinct()
-    // exact verification on candidates only (shingle inside the equi-key —
-    // see ngramJaccardPairs: join-then-filter would cross size_a × size_b),
-    // reusing the checkpointed shingle frame from the signature side
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(sh.withColumnRenamed("id", "a_id"), "a_id")
-      .join(sh.withColumnRenamed("id", "b_id"), Seq("b_id", "shingle"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("sz", "size_a"), "a_id")
-      .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("sz", "size_b"), "b_id")
-      .withColumn("jac", col("inter").cast("double") /
-        (col("size_a") + col("size_b") - col("inter")).cast("double"))
-      .where(col("jac") >= tau)
-      .select("a_id", "b_id", "inter", "size_a", "size_b", "jac")
+    verifyJaccard(cand, shA, shB.getOrElse(shA), tau)
   }
 
-  /** (band, bucket) LSH keys from a signature frame: band b's bucket is
-    * the mod-p polynomial fold of its rowsPerBand signature columns. */
-  private def lshBuckets(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val B = 786433L
-    val bandCols = (0 until bands).map { b =>
-      val bucket = (0 until rowsPerBand)
-        .map(r => col(s"sig${b * rowsPerBand + r}"))
-        .reduce((acc, s) => (acc * B + s) % P)
-      struct(lit(b).as("band"), bucket.as("bucket"))
-    }
-    sig.select(col("id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+  /** (id, band, bucket) rows of a shingle-set frame. */
+  private def bandKeys(sh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sh.select(col("id"), posexplode(column(MinhashBands(expression(col("sh")), bands, rowsPerBand)))
+      .as(Seq("band", "bucket")))
+
+  /** exact Jaccard of candidate pairs (a_id, b_id) over shingle-set
+    * frames: the small candidate side is broadcast onto each set frame in
+    * turn (the sets are never shuffled) and `inter` is a sorted merge. */
+  private def verifyJaccard(cand: DataFrame, shA: DataFrame, shB: DataFrame,
+                            tau: Double): DataFrame = {
+    val withA = broadcast(cand)
+      .join(shA.select(col("id").as("a_id"), col("sh").as("sh_a")), "a_id")
+    val both = broadcast(withA)
+      .join(shB.select(col("id").as("b_id"), col("sh").as("sh_b")), "b_id")
+    val inter = column(SortedIntersectCount(expression(col("sh_a")), expression(col("sh_b"))))
+    jaccardAtLeast(both.select(col("a_id"), col("b_id"), inter.as("inter"),
+      size(col("sh_a")).cast("long").as("size_a"), size(col("sh_b")).cast("long").as("size_b")), tau)
   }
 
-  /** hot-bucket guard shared by every banded candidate join: a degenerate
-    * bucket with f members yields f² candidate pairs, so rows in
-    * (band, bucket) groups over `maxBucket` are dropped BEFORE candidate
-    * generation (logged; the window shuffles on the same key the join
-    * needs, so this adds no extra exchange). Works on any frame carrying
-    * band/bucket columns; extra columns ride along. */
-  private def capHotBuckets(allBuckets: DataFrame, maxBucket: Long,
-                            tag: String): DataFrame =
-    if (maxBucket == Long.MaxValue) allBuckets
-    else {
-      // cache the bucket table: the telemetry count below must not re-run
-      // the whole upstream signature pipeline a second time
-      val ab = allBuckets.cache()
-      val szW = org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bucket"))
-      val kept = ab
-        .withColumn("bsz", count(lit(1)).over(szW))
-        .where(col("bsz") <= maxBucket)
-        .drop("bsz")
-        .localCheckpoint(true)
-      val droppedRows = ab.count() - kept.count()
-      ab.unpersist()
-      println(s"[graft] $tag: dropped $droppedRows bucket memberships in buckets larger than $maxBucket")
-      kept
-    }
+  /** candidate pairs of every banded join, with its hot-bucket guard:
+    * ONE grouping of the (band, bucket, member…) rows of `keys`; a
+    * bucket's pairs are its members with a.id < b.id, or with `against`
+    * each (keys member, against member). A side with more than
+    * `maxBucket` members in a bucket (f members would make f² pairs) is
+    * dropped; a Dataset.observe on the one checkpoint of the kept buckets
+    * counts the dropped memberships, logged per side (`tags`). Output:
+    * member structs `a`, `b`, one row per (bucket, pair). */
+  private def bucketPairs(keys: DataFrame, against: Option[DataFrame], maxBucket: Long,
+                          tags: Seq[String]): DataFrame = {
+    val sides = Seq("a", "b").take(1 + against.size)
+    val tagged = sides.zip(keys +: against.toSeq).map { case (side, df) =>
+      df.select(col("band"), col("bucket"), lit(side).as("side"),
+        struct(df.columns.filterNot(Set("band", "bucket")).map(col).toIndexedSeq: _*).as("m"))
+    }.reduce(_ unionByName _)
+    val lists = sides.map(s => collect_list(when(col("side") === s, col("m"))).as(s))
+    // a group yields pairs only with two members (self) or one per side
+    val productive = sides.map(s => size(col(s)) >= (if (against.isEmpty) 2 else 1)).reduce(_ && _)
+    def groups(rows: DataFrame) =
+      rows.groupBy(col("band"), col("bucket")).agg(lists.head, lists.tail: _*).where(productive)
+    val kept =
+      if (maxBucket == Long.MaxValue) groups(tagged)
+      else {
+        // sizes from a window count (its buffer spills; the exchange is the
+        // grouping's own), so an over-cap bucket is never collected
+        val w = Window.partitionBy(col("band"), col("bucket"))
+        val sized = sides.foldLeft(tagged)((df, s) =>
+          df.withColumn(s"n_$s", count(when(col("side") === s, 1)).over(w)))
+        val obs = org.apache.spark.sql.Observation(s"${tags.head}-${System.nanoTime()}")
+        val dropped = sides.map(s =>
+          sum(when(col("side") === s && col(s"n_$s") > maxBucket, 1L).otherwise(0L)).as(s))
+        val cut = groups(sized.observe(obs, dropped.head, dropped.tail: _*)
+          .where(sides.map(s => col(s"n_$s") <= maxBucket).reduce(_ && _))).localCheckpoint(true)
+        val m = obs.get
+        sides.zip(tags).foreach { case (s, tag) =>
+          println(s"[graft] $tag: dropped ${Option(m(s)).getOrElse(0L)} bucket memberships in buckets larger than $maxBucket")
+        }
+        cut
+      }
+    val pairs =
+      if (against.isEmpty)
+        flatten(transform(col("a"), x =>
+          transform(filter(col("a"), y => x("id") < y("id")), y => struct(x.as("a"), y.as("b")))))
+      else
+        flatten(transform(col("a"), x => transform(col("b"), y => struct(x.as("a"), y.as("b")))))
+    kept.select(explode(pairs).as("p")).select(col("p.a").as("a"), col("p.b").as("b"))
+  }
 
   /**
    * Incremental (recrawl-delta) MinHash+LSH near-dup pairs: each NEW
    * document against an EXISTING corpus — the asymmetric twin of
    * [[minhashLshPairs]] for the recrawl pipeline, where only the delta
    * batch should pay signature+probe cost while the corpus side's
-   * buckets are a stable, reusable artifact (here recomputed from text;
-   * a store deployment persists them like the q60 Bloom/posting
-   * artifacts). Candidates share ≥ 1 band bucket ACROSS sides (never a
-   * self-join over the union), the exact Jaccard verify runs on each
-   * side's own shingles, and with no caps the output equals exactly the
-   * cross-side subset of [[minhashLshPairs]] over the union (same bands,
-   * same hashing — spec-pinned). Output: (a_id = new doc, b_id = corpus
-   * doc, inter, size_a, size_b, jac ≥ tau); a recrawled unchanged page
-   * pairs with its own previous crawl.
+   * buckets are a reusable artifact (here recomputed from text).
+   * Candidates share ≥ 1 band bucket ACROSS sides (never a self-join over
+   * the union); `maxBucket` caps each side separately. With no caps the
+   * output equals the cross-side subset of [[minhashLshPairs]] over the
+   * union (spec-pinned). Output: (a_id = new doc, b_id = corpus doc,
+   * inter, size_a, size_b, jac ≥ tau).
    */
   def minhashLshPairsAgainst(corpus: DataFrame, newDocs: DataFrame,
                              idCol: String, textCol: String,
                              n: Int, bands: Int, rowsPerBand: Int, tau: Double,
                              maxBucket: Long = Long.MaxValue): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val shN = shingles(newDocs, idCol, textCol, n).localCheckpoint(true)
-    val shC = shingles(corpus, idCol, textCol, n).localCheckpoint(true)
-    val bN = capHotBuckets(
-      lshBuckets(minhashSignaturesFrom(shN, numHashes), bands, rowsPerBand),
-      maxBucket, "minhashLshPairsAgainst(new)")
-    val bC = capHotBuckets(
-      lshBuckets(minhashSignaturesFrom(shC, numHashes), bands, rowsPerBand),
-      maxBucket, "minhashLshPairsAgainst(corpus)")
-    val cand = bN.as("a").join(bC.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
-      .distinct()
-    val sizesN = shN.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val sizesC = shC.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(shN.withColumnRenamed("id", "a_id"), "a_id")
-      .join(shC.withColumnRenamed("id", "b_id"), Seq("b_id", "shingle"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizesN.withColumnRenamed("id", "a_id").withColumnRenamed("sz", "size_a"), "a_id")
-      .join(sizesC.withColumnRenamed("id", "b_id").withColumnRenamed("sz", "size_b"), "b_id")
-      .withColumn("jac", col("inter").cast("double") /
-        (col("size_a") + col("size_b") - col("inter")).cast("double"))
-      .where(col("jac") >= tau)
-      .select("a_id", "b_id", "inter", "size_a", "size_b", "jac")
+    val shN = shingleSets(newDocs, idCol, textCol, n).localCheckpoint(true)
+    val shC = shingleSets(corpus, idCol, textCol, n).localCheckpoint(true)
+    lshJaccard(shN, Some(shC), bands, rowsPerBand, tau, maxBucket,
+      Seq("minhashLshPairsAgainst(new)", "minhashLshPairsAgainst(corpus)"))
   }
 
   /**
@@ -321,13 +314,13 @@ object TextOps {
    * bits. Candidate generation is the paper's pigeonhole banding — the
    * signature splits into `maxHamming + 1` contiguous bit bands, and any
    * pair within the Hamming ball must agree EXACTLY on at least one whole
-   * band — so candidates come from banded equi-joins (never an n² pass)
+   * band — so candidates come from per-bucket pairs (never an n² pass)
    * and, uncapped, the output EQUALS brute force: banding is lossless for
    * ≤ maxHamming, and the popcount filter removes every false positive.
    * Output: (a_id, b_id, hamming) with a < b.
    *
    * Scale: each document emits maxHamming+1 bucket rows; a band bucket
-   * with f members yields f² candidate rows in the self-join, and with 31
+   * with f members yields f² candidate pairs, and with 31
    * signature bits a band carries only ~31/(h+1) bits, so web-scale
    * corpora concentrate into few buckets (the paper counters this with
    * 64-bit fingerprints and permuted tables). `maxBucket` is the same
@@ -342,22 +335,13 @@ object TextOps {
     val nBands = maxHamming + 1
     val lens = Array.tabulate(nBands)(b => 31 / nBands + (if (b < 31 % nBands) 1 else 0))
     val starts = lens.scanLeft(0)(_ + _)
-    val sigs = simhash(docs, idCol, textCol)
-    val bandCols = (0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("simhash"), starts(b))
-          .bitwiseAND(lit((1L << lens(b)) - 1)).as("bucket"))
-    }
-    val allBuckets = sigs
-      .select(col("id"), col("simhash"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("simhash"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val buckets = capHotBuckets(allBuckets, maxBucket, "simhashNearDupPairs")
+    val bandCols = (0 until nBands).map(b =>
+      shiftright(col("simhash"), starts(b)).bitwiseAND(lit((1L << lens(b)) - 1)))
+    val keys = simhash(docs, idCol, textCol).select(col("id"), col("simhash"),
+      posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
     // popcount BEFORE distinct: the cheap codegen'd filter shrinks the
     // distinct's input (a pair matching on k bands appears k times)
-    buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
+    bucketPairs(keys, None, maxBucket, Seq("simhashNearDupPairs"))
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
@@ -385,33 +369,38 @@ object TextOps {
     * (embeddingNearDupAuto) that have already sized the input. */
   private def embeddingNearDupPairsUnguarded(emb: DataFrame, idCol: String, vecCol: String,
                                              tau: Double): DataFrame = {
-    // norms are per-vector: compute them once BEFORE the pair join, not
-    // per pair (the n² side only pays the dot product)
-    val q = emb.select(col(idCol).as("id"),
-        transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")).as("v"))
-      .withColumn("n2", GeoFunctions.dot_long(col("v"), col("v")))
-    val dot = GeoFunctions.dot_long(col("a.v"), col("b.v"))
-    // a quantized-to-zero vector has no direction: its cosine is 0/0 = NaN
-    // and Spark orders NaN ABOVE every double, so without the n2 guard one
-    // zero vector passes `>= tau` against every row and a downstream
-    // connected-components collapse would link the whole corpus
-    q.as("a").join(q.as("b"), col("a.id") < col("b.id"))
-      .where(col("a.n2") > 0 && col("b.n2") > 0)
-      .withColumn("cos", dot.cast("double") /
-        sqrt(col("a.n2").cast("double") * col("b.n2").cast("double")))
-      .where(col("cos") >= tau)
+    val q = quantized(emb, idCol, vecCol)
+    cosineAtLeast(q.as("a").join(q.as("b"), col("a.id") < col("b.id")), tau)
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"), col("cos"))
   }
+
+  /** (id, v, n2): the embedding quantized to round(x·1000) longs and its
+    * squared norm — norms are per-vector, computed once BEFORE any pair
+    * join, so the pair side only pays the dot product. */
+  private def quantized(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).as("id"),
+        transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")).as("v"))
+      .withColumn("n2", GeoFunctions.dot_long(col("v"), col("v")))
+
+  /** exact quantized cosine `cos` of joined [[quantized]] sides a and b,
+    * kept when >= tau. A quantized-to-zero vector has no direction: its
+    * cosine is 0/0 = NaN and Spark orders NaN ABOVE every double, so
+    * without the n2 guard one zero vector passes `>= tau` against every
+    * row and a downstream connected-components collapse would link the
+    * whole corpus. */
+  private def cosineAtLeast(pairs: DataFrame, tau: Double): DataFrame =
+    pairs.where(col("a.n2") > 0 && col("b.n2") > 0)
+      .withColumn("cos", GeoFunctions.dot_long(col("a.v"), col("b.v")).cast("double") /
+        sqrt(col("a.n2").cast("double") * col("b.n2").cast("double")))
+      .where(col("cos") >= tau)
 
   /** deterministic random-hyperplane signature (`bits` sign bits): plane j
     * weight at dim i is ((j*1000003 + (i+1)*7919) mod 2001) - 1000. One
     * codegen'd static-call expression (GeoCodec.hyperplaneSig) instead of a
     * bits×dims column-expression tree — same values, ~none of the eval
     * overhead. */
-  def hyperplaneSig(v: Column, dims: Int, bits: Int): Column = {
-    import org.apache.spark.sql.GraftBridge.{column, expression}
+  def hyperplaneSig(v: Column, dims: Int, bits: Int): Column =
     column(HyperplaneSig(expression(v), dims, bits))
-  }
 
   /**
    * LSH-bucketed near-dup: candidates share the full hyperplane signature
@@ -421,17 +410,9 @@ object TextOps {
    */
   def embeddingLshPairs(emb: DataFrame, idCol: String, vecCol: String,
                         dims: Int, bits: Int, tau: Double): DataFrame = {
-    val q = emb.select(col(idCol).as("id"),
-        transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")).as("v"))
-      .withColumn("n2", GeoFunctions.dot_long(col("v"), col("v")))
-      .withColumn("bucket", hyperplaneSig(col("v"), dims, bits))
-    val dot = GeoFunctions.dot_long(col("a.v"), col("b.v"))
-    q.as("a").join(q.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .where(col("a.n2") > 0 && col("b.n2") > 0) // zero vectors: see exact path
-      .withColumn("cos", dot.cast("double") /
-        sqrt(col("a.n2").cast("double") * col("b.n2").cast("double")))
-      .where(col("cos") >= tau)
+    val q = quantized(emb, idCol, vecCol).withColumn("bucket", hyperplaneSig(col("v"), dims, bits))
+    cosineAtLeast(q.as("a").join(q.as("b"),
+        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id")), tau)
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"), col("a.bucket").as("bucket"), col("cos"))
   }
 
@@ -448,17 +429,10 @@ object TextOps {
   def embeddingLshPairsAgainst(corpus: DataFrame, newVecs: DataFrame,
                                idCol: String, vecCol: String,
                                dims: Int, bits: Int, tau: Double): DataFrame = {
-    def prep(df: DataFrame) = df.select(col(idCol).as("id"),
-        transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")).as("v"))
-      .withColumn("n2", GeoFunctions.dot_long(col("v"), col("v")))
-      .withColumn("bucket", hyperplaneSig(col("v"), dims, bits))
-    val dot = GeoFunctions.dot_long(col("a.v"), col("b.v"))
-    prep(newVecs).as("a").join(prep(corpus).as("b"),
-        col("a.bucket") === col("b.bucket"))
-      .where(col("a.n2") > 0 && col("b.n2") > 0) // zero vectors: see exact path
-      .withColumn("cos", dot.cast("double") /
-        sqrt(col("a.n2").cast("double") * col("b.n2").cast("double")))
-      .where(col("cos") >= tau)
+    def prep(df: DataFrame) =
+      quantized(df, idCol, vecCol).withColumn("bucket", hyperplaneSig(col("v"), dims, bits))
+    cosineAtLeast(prep(newVecs).as("a").join(prep(corpus).as("b"),
+        col("a.bucket") === col("b.bucket")), tau)
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
         col("a.bucket").as("bucket"), col("cos"))
   }
@@ -509,23 +483,16 @@ object TextOps {
     * argmax (ties broken by language order), 'und' (undetermined) when no
     * marker hits. */
   def languageId(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val words = docs.select(col(idCol).as("id"), 
-      explode(split(col(textCol), " ")).as("w"))
+    val words = docs.select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("w"))
     val scores = LangMarkers.map { case (lang, ms) =>
       sum(when(col("w").isin(ms: _*), 1L).otherwise(0L)).as(s"n_$lang")
     }
     val scored = words.groupBy(col("id")).agg(scores.head, scores.tail: _*)
-    val best = LangMarkers.map(_._1).foldRight(lit("und")) { (lang, els) =>
-      val isMax = LangMarkers.map(_._1).filter(_ != lang)
-        .map { o =>
-          if (LangMarkers.map(_._1).indexOf(o) < LangMarkers.map(_._1).indexOf(lang))
-            col(s"n_$lang") > col(s"n_$o")
-          else col(s"n_$lang") >= col(s"n_$o")
-        }
-        .reduce(_ && _) && col(s"n_$lang") > 0
-      when(isMax, lit(lang)).otherwise(els)
-    }
-    scored.withColumn("lang_id", best)
+    // argmax: the largest count, ties to the earlier language
+    val best = greatest(LangMarkers.zipWithIndex.map { case ((lang, _), i) =>
+      struct(col(s"n_$lang").as("n"), lit(-i).as("rank"), lit(lang).as("lang"))
+    }: _*)
+    scored.withColumn("lang_id", when(best("n") > 0, best("lang")).otherwise(lit("und")))
       .select(col("id") +: LangMarkers.map(l => col(s"n_${l._1}")) :+ col("lang_id"): _*)
   }
 
@@ -578,9 +545,8 @@ object TextOps {
     require(budget > 0, s"budget must be positive, got $budget")
     require(shards > 0, s"shards must be positive, got $shards")
     val toks = regexp_count(col(textCol), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]")).cast("long")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("shard")).orderBy(col("id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val w = Window.partitionBy(col("shard")).orderBy(col("id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
     docs.select(col(idCol).as("id"), toks.as("n_tokens"))
       // portableHash is already non-negative (mod p of a non-negative fold)
       .withColumn("shard", portableHash(col("id").cast("string")) % lit(shards.toLong))
@@ -612,8 +578,7 @@ object TextOps {
     val words = docs
       .select(explode(nonEmptyWords(textCol)).as("w"))
       .where(length(col("w")) >= 2)
-    val rankW = org.apache.spark.sql.expressions.Window
-      .orderBy(col("cnt").desc, col("pair"))
+    val rankW = Window.orderBy(col("cnt").desc, col("pair"))
     words
       .select(explode(expr(
         "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("pair"))
@@ -667,8 +632,7 @@ object TextOps {
     // partition-order-dependent; callers with a non-unique ordCol pass a
     // unique tie-break column (q66 uses the doc id)
     val order = (col(ordCol) +: tieCols.map(col)).map(_.asc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(keyCol)).orderBy(order: _*)
+    val w = Window.partitionBy(col(keyCol)).orderBy(order: _*)
     df.withColumn("rn", row_number().over(w)).where(col("rn") <= k).drop("rn")
   }
 
@@ -715,7 +679,6 @@ object TextOps {
     }
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    import org.apache.spark.sql.GraftBridge.{column, expression}
     val mightBeSeen = column(BloomMightContain(expression(col("text_md5")), bos.toByteArray))
     newDocs
       .withColumn("text_md5", hash)
@@ -730,29 +693,21 @@ object TextOps {
 
   /** membership probe against a serialized Bloom filter (codegen'd; the
     * filter deserializes once per task). */
-  case class BloomMightContain(child: org.apache.spark.sql.catalyst.expressions.Expression,
-                               bloomBytes: Array[Byte])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-    override def dataType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.BooleanType
+  case class BloomMightContain(child: Expression, bloomBytes: Array[Byte]) extends UnaryExpression {
+    override def dataType: org.apache.spark.sql.types.DataType = org.apache.spark.sql.types.BooleanType
     override def nullIntolerant: Boolean = true
     @transient private lazy val bloom =
-      org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(bloomBytes))
-    def test(s: org.apache.spark.unsafe.types.UTF8String): Boolean =
+      org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(bloomBytes))
+    def test(s: UTF8String): Boolean =
       // same bytes the build side hashed (putBinary of UTF-8), without the
       // per-row String round-trip of mightContainString
       bloom.mightContainBinary(s.getBytes)
-    override def nullSafeEval(s: Any): Any =
-      test(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    override def nullSafeEval(s: Any): Any = test(s.asInstanceOf[UTF8String])
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val ref = ctx.addReferenceObj("bloomMightContain", this, classOf[BloomMightContain].getName)
       defineCodeGen(ctx, ev, s => s"$ref.test($s)")
     }
-    override protected def withNewChildInternal(
-        c: org.apache.spark.sql.catalyst.expressions.Expression)
-        : org.apache.spark.sql.catalyst.expressions.Expression = copy(child = c)
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
   /** corpus vocabulary: top-k tokens by total occurrence count (ties →
@@ -917,7 +872,6 @@ object TextOps {
     * char k-grams (winnowing-style signature). Docs shorter than k chars
     * are dropped. */
   def fingerprintKgram(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge.{column, expression}
     val t = col(textCol)
     // all gram hashes in ONE codegen'd pass (the per-gram substr-fold
     // column tree it replaces was O(len·k) eval-mode expressions per row)

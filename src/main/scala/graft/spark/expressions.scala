@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.io.WKBReader
@@ -254,8 +255,8 @@ case class STMultiPointWkb(left: Expression, right: Expression)
   @transient private lazy val gf = new GeometryFactory()
   @transient private lazy val writer = new org.locationtech.jts.io.WKBWriter(2)
   override def nullSafeEval(lons: Any, lats: Any): Any = {
-    val xs = lons.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val ys = lats.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val xs = lons.asInstanceOf[ArrayData]
+    val ys = lats.asInstanceOf[ArrayData]
     val coords = Array.tabulate(xs.numElements())(i =>
       new Coordinate(xs.getDouble(i), ys.getDouble(i)))
     writer.write(gf.createMultiPointFromCoords(coords))
@@ -310,7 +311,7 @@ case class TimeBinId(child: Expression, unit: graft.index.TimeUnits.Value)
   @transient private lazy val binning = graft.index.TemporalBinning(unit)
   override def nullSafeEval(tsMicros: Any): Any = {
     val millis = Math.floorDiv(tsMicros.asInstanceOf[Long], 1000L)
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(binning.binnedValue(millis)._1)
+    UTF8String.fromBytes(binning.binnedValue(millis)._1)
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -347,8 +348,7 @@ case class DotLongArrays(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def nullSafeEval(a: Any, b: Any): Any =
-    GeoCodec.dotLong(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+    GeoCodec.dotLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) => s"graft.spark.GeoCodec.dotLong($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -383,8 +383,7 @@ case class HyperplaneSig(child: Expression, dims: Int, bits: Int)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def nullSafeEval(v: Any): Any =
-    GeoCodec.hyperplaneSig(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      dims, bits)
+    GeoCodec.hyperplaneSig(v.asInstanceOf[ArrayData], dims, bits)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, v => s"graft.spark.GeoCodec.hyperplaneSig($v, $dims, $bits)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -410,7 +409,7 @@ case class PortableHash(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def nullSafeEval(s: Any): Any =
-    GeoCodec.portableHash(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    GeoCodec.portableHash(s.asInstanceOf[UTF8String])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s => s"graft.spark.GeoCodec.portableHash($s)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -471,7 +470,7 @@ case class KgramHashes(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def nullSafeEval(s: Any): Any =
-    GeoCodec.kgramHashes(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
+    GeoCodec.kgramHashes(s.asInstanceOf[UTF8String], k)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s => s"graft.spark.GeoCodec.kgramHashes($s, $k)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -485,7 +484,7 @@ case class CharGrams(child: Expression, minN: Int, maxN: Int) extends UnaryExpre
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def nullSafeEval(s: Any): Any =
-    GeoCodec.charGrams(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], minN, maxN)
+    GeoCodec.charGrams(s.asInstanceOf[UTF8String], minN, maxN)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s => s"graft.spark.GeoCodec.charGrams($s, $minN, $maxN)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -498,9 +497,44 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def nullSafeEval(s: Any): Any =
-    GeoCodec.wordShingles(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
+    GeoCodec.wordShingles(s.asInstanceOf[UTF8String], n)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s => s"graft.spark.GeoCodec.wordShingles($s, $n)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** a doc's sorted, distinct shingle set from its texts (codegen'd static call). */
+case class ShingleSet(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(texts: Any): Any = GeoCodec.shingleSet(texts.asInstanceOf[ArrayData], n)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"graft.spark.GeoCodec.shingleSet($t, $n)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** |a ∩ b| of two ShingleSet arrays by sorted merge (codegen'd static call). */
+case class SortedIntersectCount(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any =
+    GeoCodec.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.spark.GeoCodec.sortedIntersectCount($a, $b)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** MinHash LSH band keys of a ShingleSet array (codegen'd static call). */
+case class MinhashBands(child: Expression, bands: Int, rowsPerBand: Int) extends UnaryExpression {
+  require(bands >= 1 && rowsPerBand >= 1)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(sh: Any): Any =
+    GeoCodec.minhashBands(sh.asInstanceOf[ArrayData], bands, rowsPerBand)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, sh => s"graft.spark.GeoCodec.minhashBands($sh, $bands, $rowsPerBand)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -624,7 +658,7 @@ case class NearestCentroidVec(child: Expression,
     cvs.map(cv => { var s = 0L; var i = 0; while (i < cv.length) { s += cv(i) * cv(i); i += 1 }; s })
 
   /** codegen entry point. */
-  def nearest(v: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+  def nearest(v: ArrayData): Long = {
     var best = Long.MaxValue
     var bestCid = -1L
     var c = 0
@@ -641,7 +675,7 @@ case class NearestCentroidVec(child: Expression,
   }
 
   override def nullSafeEval(v: Any): Any =
-    nearest(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+    nearest(v.asInstanceOf[ArrayData])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("nearestCentroidVec", this, classOf[NearestCentroidVec].getName)
     defineCodeGen(ctx, ev, v => s"$ref.nearest($v)")

@@ -66,7 +66,7 @@ class DistanceJoinSpec extends SparkTestBase {
     assert(all(1).size < all(0).size, "the window must drop some pairs")
   }
 
-  test("distanceJoinMeters == brute-force haversine all-pairs") {
+  test("distanceJoin(..., Meters()) == brute-force haversine all-pairs") {
     val pts = withTs(pages.where(abs(col("lat")) <= 85).limit(800)
       .select(col("doc_id").as("id"), col("lon"), col("lat")))
     val dM = 150000.0 // 150 km
@@ -85,7 +85,7 @@ class DistanceJoinSpec extends SparkTestBase {
     assert(all(1).size < all(0).size, "the window must drop some pairs")
   }
 
-  test("distanceJoinST honors sub-second windows exactly (no seconds truncation)") {
+  test("distanceJoin window honors sub-second windows exactly (no seconds truncation)") {
     val pts = Seq(
       (1L, 0.0, 0.0, "2024-01-01 00:00:00.900"),
       (2L, 0.0, 0.0, "2024-01-01 00:00:01.100"), // 200 ms from id 1
@@ -103,7 +103,7 @@ class DistanceJoinSpec extends SparkTestBase {
     assert(pairs(199L) == Set.empty)
   }
 
-  test("distanceJoinMeters excludes near-pole rows outside the latitude band") {
+  test("distanceJoin(..., Meters()) excludes near-pole rows outside the latitude band") {
     val pts = Seq(
       (0L, 10.0, 89.0), (1L, 10.001, 89.0), // near-pole pair, outside band
       (2L, 20.0, 0.0), (3L, 20.5, 0.0), // equatorial pair ~55 km apart
@@ -114,7 +114,7 @@ class DistanceJoinSpec extends SparkTestBase {
     assert(got == Set((2L, 3L)))
   }
 
-  test("distanceJoinMeters finds band-edge pairs the linear lon bound would drop") {
+  test("distanceJoin(..., Meters()) finds band-edge pairs the linear lon bound would drop") {
     // two points at lat 85 whose lon separation exceeds the small-angle
     // bound d/(R cos lat) in degrees but whose haversine distance is
     // within d — the exact asin bound must cover them
@@ -134,7 +134,7 @@ class DistanceJoinSpec extends SparkTestBase {
     assert(got == Set((1L, 2L)), s"band-edge pair must be found: $got")
   }
 
-  test("distanceJoinMeters finds pairs straddling the antimeridian") {
+  test("distanceJoin(..., Meters()) finds pairs straddling the antimeridian") {
     // wrapped Δlon = 0.08° ≈ 8.8 km at lat 10 — within 20 km; the
     // unwrapped tile neighborhood would put these in non-adjacent cells
     val pts = Seq((1L, 179.96, 10.0), (2L, -179.96, 10.0), (3L, 0.0, 10.0),
@@ -217,7 +217,7 @@ class DistanceJoinSpec extends SparkTestBase {
     }
   }
 
-  test("distanceJoinMetersTopK: directed haversine top-k vs brute force") {
+  test("distanceJoinTopK(..., Meters()): directed haversine top-k vs brute force") {
     // the 0.3° grid plus points straddling ±180°, whose nearest neighbors
     // lie across the antimeridian: the directed path must wrap
     val dateline = Seq((1000L, 179.9, 10.0), (1001L, 179.97, 10.0), (1002L, -179.98, 10.0),

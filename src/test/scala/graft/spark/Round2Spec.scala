@@ -415,16 +415,6 @@ class Round2Spec extends SparkTestBase {
     assert(got == Map((1L, 1L) -> 2L, (1L, 2L) -> 1L, (2L, 1L) -> 3L))
   }
 
-  test("nearDupClusters: components and keepers over a pair graph") {
-    val ids = (0L to 6L).toDF("doc_id")
-    val pairs = Seq((1L, 3L), (3L, 5L), (2L, 6L)).toDF("a_id", "b_id")
-    val got = TextOps.nearDupClusters(ids, "doc_id", pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(got == Set(
-      (0L, 0L, true), (1L, 1L, true), (3L, 1L, false), (5L, 1L, false),
-      (2L, 2L, true), (6L, 2L, false), (4L, 4L, true)))
-  }
-
   test("streaming spatial enrichment: stream-static polygon join per micro-batch") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -118,20 +118,6 @@ class Round3Spec extends SparkTestBase {
     assert(capped.nonEmpty)
   }
 
-  test("minhashLsh bucket cap: capped ⊆ LSH-uncapped with identical jaccards") {
-    val docs = Tables.synthDocs(spark, 60)
-    def asMap(maxBucket: Long) =
-      TextOps.minhashLshPairs(docs, "doc_id", "text", n = 3,
-        bands = 4, rowsPerBand = 4, tau = 0.5, maxBucket = maxBucket)
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(5))).toMap
-    val uncapped = asMap(Long.MaxValue)
-    val capped = asMap(10)
-    capped.foreach { case (k, jac) =>
-      assert(uncapped.contains(k) && uncapped(k) == jac, s"pair $k")
-    }
-    assert(capped.nonEmpty)
-  }
-
   // -------------------------------------------- stats-driven index choice
 
   test("queryBestStats beats the uniformity chooser on time-degenerate data") {

@@ -91,52 +91,6 @@ class Round5Spec extends SparkTestBase {
     assert(got.minBy(_._3)._2 == 7L)
   }
 
-  test("minLabelComponents: a high-diameter path converges in bounded time (Lineage.cut regression)") {
-    // A 150k-node path needs ~18 propagation+jump rounds. With chained
-    // Dataset.localCheckpoint the retained RDD DAG doubled per round (the
-    // jump step reads the previous generation twice) and the single
-    // materialization task crossed 40 s by round 21 — this graph was
-    // effectively unfinishable. Lineage.cut keeps every round O(1) deep.
-    val n = 150000L
-    val nodes = spark.range(n).select(col("id").as("src"), col("id").as("dst"))
-    val fwd = spark.range(n - 1).select(col("id").as("src"), (col("id") + 1).as("dst"))
-    val bwd = fwd.select(col("dst").as("src"), col("src").as("dst"))
-    val t0 = System.nanoTime
-    val labels = Graphs.minLabelComponents(nodes.unionByName(fwd).unionByName(bwd))
-    val byLbl = labels.groupBy("lbl").count().collect()
-    val secs = (System.nanoTime - t0) / 1e9
-    assert(byLbl.length == 1 && byLbl.head.getLong(0) == 0L &&
-      byLbl.head.getLong(1) == n)
-    // new code: ~8 s on this box; pre-fix: minutes and growing. The bound
-    // is deliberately loose against co-tenant noise while still firmly
-    // rejecting the exponential regression.
-    assert(secs < 90.0, f"high-diameter components took $secs%.1f s")
-  }
-
-  test("minLabelComponents: over-cap quotient falls back to propagation rounds; fixpoint identical") {
-    // two path components (0..59 and 100..139) + an isolated node: the
-    // round-0 quotient (= the raw undirected edge set, 99 pairs) exceeds
-    // a cap of 8, forcing propagation rounds; each round shrinks the
-    // distinct-label count until the quotient fits and the driver
-    // collapse finishes. The fixpoint must equal the default-cap path's.
-    def path(lo: Long, hi: Long): DataFrame = {
-      val fwd = spark.range(lo, hi).select(col("id").as("src"), (col("id") + 1).as("dst"))
-      fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    }
-    val nodes = spark.range(0L, 60L).union(spark.range(100L, 140L)).union(spark.range(999L, 1000L))
-      .select(col("id").as("src"), col("id").as("dst"))
-    val edges = nodes.unionByName(path(0L, 59L)).unionByName(path(100L, 139L))
-    val tight = Graphs.minLabelComponents(edges, maxQuotientEdges = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val loose = Graphs.minLabelComponents(edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(tight == loose)
-    assert((0L until 60L).forall(tight(_) == 0L))
-    assert((100L until 140L).forall(tight(_) == 100L))
-    assert(tight(999L) == 999L)
-    assert(tight.size == 101)
-  }
-
   // Exchange-count pins read the EXECUTED plan after an action:
   // queryExecution.sparkPlan predates EnsureRequirements (no inserted
   // exchanges yet), and AQE hides children behind the adaptive wrapper —

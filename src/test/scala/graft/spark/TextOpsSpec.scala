@@ -1,6 +1,10 @@
 package graft.spark
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge.{column, expression}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Dedup/text suite vs literal Scala reimplementations of the same
   * portable integer hashing. */
@@ -347,4 +351,206 @@ class TextOpsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!lsh.exists(p => p._1 == 0L || p._2 == 0L), s"lsh path leaked the zero vector: $lsh")
   }
+
+  test("nearDupClusters: components and keepers over a pair graph") {
+    import spark.implicits._
+    val ids = (0L to 6L).toDF("doc_id")
+    val pairs = Seq((1L, 3L), (3L, 5L), (2L, 6L)).toDF("a_id", "b_id")
+    val got = TextOps.nearDupClusters(ids, "doc_id", pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    assert(got == Set(
+      (0L, 0L, true), (1L, 1L, true), (3L, 1L, false), (5L, 1L, false),
+      (2L, 2L, true), (6L, 2L, false), (4L, 4L, true)))
+  }
+
+  test("minhashLsh bucket cap: capped ⊆ LSH-uncapped with identical jaccards") {
+    val docs = Tables.synthDocs(spark, 60)
+    def asMap(maxBucket: Long) =
+      TextOps.minhashLshPairs(docs, "doc_id", "text", n = 3,
+        bands = 4, rowsPerBand = 4, tau = 0.5, maxBucket = maxBucket)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(5))).toMap
+    val uncapped = asMap(Long.MaxValue)
+    val capped = asMap(10)
+    capped.foreach { case (k, jac) =>
+      assert(uncapped.contains(k) && uncapped(k) == jac, s"pair $k")
+    }
+    assert(capped.nonEmpty)
+  }
+
+  // ---------------------------------------- MinHash ladder exactness
+
+  /** code-point fold, the reference twin of portableHash for any text. */
+  private def hashCp(s: String): Long =
+    s.codePoints().toArray.foldLeft(0L)((acc, c) => (acc * 31 + c) % P)
+
+  /** the band keys the MinHash ladder must produce, computed in Scala:
+    * min over shingles of ((2j+1)h + 12345j + 1) mod p, then the
+    * (acc·786433 + sig) mod p fold per band. */
+  private def bruteBands(sh: Set[String], bands: Int, rows: Int): Seq[Long] = {
+    val sig = (0 until bands * rows).map(j => sh.map(s => ((2L * j + 1) * hashCp(s) + 12345L * j + 1) % P).min)
+    (0 until bands).map(b => (1 until rows).foldLeft(sig(b * rows))((acc, r) => (acc * 786433L + sig(b * rows + r)) % P))
+  }
+
+  /** seeded docs over a vocabulary with multi-byte and astral code points. */
+  private lazy val unicodeDocs: DataFrame = {
+    import spark.implicits._
+    val vocab = Seq("the", "über", "naïve", "日本語", "café", "😀", "Ａ", "ß", "𝄞", "river", "fox", "Ω")
+    val rnd = new scala.util.Random(42)
+    val base = (0L until 40L).map(i => (i, Seq.fill(4 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+    // near-dups: every fifth doc reappears with its last word changed
+    (base ++ base.collect { case (i, t) if i % 5 == 0 => (i + 100, t.split(" ").init.mkString(" ") + " fox") })
+      .toDF("doc_id", "text")
+  }
+
+  test("MinHash band kernel equals the column formula it replaced (non-ASCII words)") {
+    val n = 3
+    // the old plan: explode distinct shingles, hash, one min aggregate per
+    // hash function, band keys as a column fold over the signature columns
+    val words = split(col("text"), " ")
+    val sh = unicodeDocs.select(col("doc_id").as("id"), explode(when(size(words) >= n,
+        transform(sequence(lit(1), size(words) - n + 1), i => array_join(slice(words, i, lit(n)), " ")))
+        .otherwise(array().cast("array<string>"))).as("shingle"))
+      .distinct().withColumn("h", TextOps.portableHash(col("shingle")))
+    val sigs = sh.groupBy("id").agg(min((lit(1L) * col("h") + lit(1L)) % P).as("sig0"),
+      (1 until 16).map(j => min((lit(2L * j + 1) * col("h") + lit(12345L * j + 1)) % P).as(s"sig$j")): _*)
+    val oldBands = sigs.select(col("id") +: (0 until 4).map { b =>
+      (0 until 4).map(r => col(s"sig${b * 4 + r}")).reduce((acc, s) => (acc * 786433L + s) % P).as(s"band$b")
+    }: _*).collect().map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
+    val sets = unicodeDocs.groupBy(col("doc_id").as("id"))
+      .agg(column(ShingleSet(expression(collect_list(col("text"))), n)).as("sh"))
+      .where(size(col("sh")) > 0)
+    val kernel = sets.select(col("id"), column(MinhashBands(expression(col("sh")), 4, 4)).as("k"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(kernel == oldBands)
+    val local = unicodeDocs.collect().map(r => r.getLong(0) -> wordShingles(r.getString(1), n))
+      .filter(_._2.nonEmpty).toMap
+    assert(kernel == local.map { case (id, s) => id -> bruteBands(s, 4, 4) })
+    // minhashSignatures (q44) reads the same fold with one row per band
+    val sigCols = sigs.collect().map(r => r.getLong(0) -> (1 to 16).map(r.getLong)).toMap
+    val got = TextOps.minhashSignatures(unicodeDocs, "doc_id", "text", n, 16)
+      .collect().map(r => r.getLong(0) -> (1 to 16).map(r.getLong)).toMap
+    assert(got == sigCols)
+  }
+
+  test("sorted-merge intersection equals Scala set intersection (multi-byte code points)") {
+    import spark.implicits._
+    // U+FF21 sorts AFTER U+1F600 in UTF-16 but BEFORE it in UTF-8 bytes: a
+    // merge over sets sorted in different orders would miscount
+    val alphabet = Seq("a", "b", "z", "é", "ß", "日", "本", "😀", "𝄞", "Ω", "Ａ")
+    val rnd = new scala.util.Random(7)
+    def words(): Seq[String] =
+      Seq.fill(rnd.nextInt(14))(Seq.fill(1 + rnd.nextInt(3))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    val cases = Seq.fill(300)((words(), words()))
+    def set(ws: Seq[String]) = GeoCodec.shingleSet(
+      new GenericArrayData(ws.map(UTF8String.fromString).toArray[Any]), 1)
+    for ((a, b) <- cases) {
+      val (sa, sb) = (set(a), set(b))
+      val utf8Order = a.distinct.sortWith((x, y) => java.util.Arrays.compareUnsigned(
+        x.getBytes("UTF-8"), y.getBytes("UTF-8")) < 0)
+      assert((0 until sa.numElements()).map(sa.getUTF8String(_).toString) == utf8Order)
+      assert(GeoCodec.sortedIntersectCount(sa, sb) == (a.toSet & b.toSet).size, s"$a / $b")
+    }
+    // the codegen'd expressions agree row by row
+    val got = cases.toDF("a", "b").select(column(SortedIntersectCount(
+        expression(column(ShingleSet(expression(col("a")), 1))),
+        expression(column(ShingleSet(expression(col("b")), 1)))))).collect().map(_.getLong(0)).toSeq
+    assert(got == cases.map { case (a, b) => (a.toSet & b.toSet).size.toLong })
+  }
+
+  test("minhashLshPairs: docs with fewer than n words never pair") {
+    import spark.implicits._
+    // identical short docs would all share the empty signature's bucket
+    val short = Seq((100L, "a b"), (101L, "a b"), (102L, "x"), (103L, ""), (104L, "a b")).toDF("doc_id", "text")
+    val pairs = TextOps.minhashLshPairs(docs.unionByName(short), "doc_id", "text", 3,
+        bands = 4, rowsPerBand = 4, tau = 0.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.nonEmpty && pairs.forall { case (a, b) => a < 100 && b < 100 }, pairs.toSeq)
+    val sigIds = TextOps.minhashSignatures(docs.unionByName(short), "doc_id", "text", 3, 16)
+      .collect().map(_.getLong(0)).toSet
+    assert(sigIds == (0L to 7L).toSet)
+  }
+
+  test("minhashLshPairs: a doc id split over two rows pairs exactly as its unioned text") {
+    import spark.implicits._
+    // doc 20's two rows' shingles union to exactly doc 21's one text
+    val rows = Seq(
+      (20L, "the quick brown fox jumps over the lazy dog"),
+      (20L, "the lazy dog near the river bank"),
+      (21L, "the quick brown fox jumps over the lazy dog near the river bank")).toDF("doc_id", "text")
+    val got = TextOps.minhashLshPairs(docs.unionByName(rows), "doc_id", "text", 3,
+        bands = 4, rowsPerBand = 4, tau = 0.1)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toMap
+    assert(got((20L, 21L)) == ((11L, 11L, 11L)))
+    def partners(id: Long) = got.collect {
+      case ((a, b), v) if a == id && b != 20L && b != 21L => (b, v)
+      case ((a, b), (i, sa, sb)) if b == id && a != 20L && a != 21L => (a, (i, sb, sa))
+    }.toSet
+    assert(partners(20L) == partners(21L) && partners(20L).nonEmpty)
+  }
+
+  test("hot-bucket cap: logged drop counts equal a brute-force count of over-cap memberships") {
+    import spark.implicits._
+    val hot = "alpha beta gamma delta epsilon zeta eta theta"
+    val corpus = docs.unionByName((200L until 212L).map(i => (i, hot)).toDF("doc_id", "text"))
+    val cap = 5L
+    def logged(f: => Unit): Seq[(String, Long)] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(f)
+      "\\[graft\\] (\\S+): dropped (\\d+) bucket memberships".r
+        .findAllMatchIn(buf.toString("UTF-8")).map(m => m.group(1) -> m.group(2).toLong).toSeq
+    }
+    /** memberships in (band, key) groups over the cap */
+    def overCap(keys: Seq[Seq[Long]]): Long =
+      keys.flatMap(_.zipWithIndex).groupBy(identity).values.map(_.size.toLong).filter(_ > cap).sum
+    def minhashKeys(df: DataFrame): Seq[Seq[Long]] = df.collect()
+      .groupBy(_.getLong(0)).values.map(rs => rs.flatMap(r => wordShingles(r.getString(1), 3)).toSet)
+      .filter(_.nonEmpty).map(bruteBands(_, 4, 4)).toSeq
+    val mh = logged(TextOps.minhashLshPairs(corpus, "doc_id", "text", 3, 4, 4, 0.5, maxBucket = cap).collect())
+    assert(mh == Seq("minhashLshPairs" -> overCap(minhashKeys(corpus))))
+    assert(mh.head._2 >= 4 * 12, "the twelve hot copies fill every band's bucket")
+    // the recrawl twin caps each side on its own
+    val fresh = (300L until 307L).map(i => (i, hot)).toDF("doc_id", "text").unionByName(docs.where(col("doc_id") < 3))
+    val against = logged(TextOps.minhashLshPairsAgainst(corpus, fresh, "doc_id", "text",
+      3, 4, 4, 0.5, maxBucket = cap).collect())
+    assert(against == Seq("minhashLshPairsAgainst(new)" -> overCap(minhashKeys(fresh)),
+      "minhashLshPairsAgainst(corpus)" -> overCap(minhashKeys(corpus))))
+    assert(against.forall(_._2 > 0))
+    // the simhash rung: 3 contiguous bit bands of the 31-bit signature
+    val sims = TextOps.simhash(corpus, "doc_id", "text").collect().map(_.getLong(1))
+    val lens = Seq(11, 10, 10)
+    val starts = lens.scanLeft(0)(_ + _)
+    val simKeys = sims.toSeq.map(h => lens.indices.map(b => (h >> starts(b)) & ((1L << lens(b)) - 1)))
+    val sh = logged(TextOps.simhashNearDupPairs(corpus, "doc_id", "text", maxHamming = 2, maxBucket = cap).collect())
+    assert(sh == Seq("simhashNearDupPairs" -> overCap(simKeys)) && sh.head._2 >= 3 * 12)
+  }
+
+  test("dedup op job pin: minhashLshPairs → collect, nearDupClusters → count") {
+    // counts every job the session runs: the suites of this build run one
+    // at a time in the forked test JVM
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      // the benchmark's dedup op: pairs cached for the cluster step
+      val pairs = TextOps.minhashLshPairs(docs, "doc_id", "text", 3,
+        bands = 4, rowsPerBand = 4, tau = 0.5, maxBucket = 200).cache()
+      assert(pairs.collect().nonEmpty)
+      assert(TextOps.nearDupClusters(docs, "doc_id", pairs).where(col("is_keeper")).count() > 0)
+      pairs.unpersist(blocking = true)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= JobPin, s"${jobs.get} Spark jobs (pinned at $JobPin)")
+  }
+
+  /** jobs of the dedup op above over this suite's planted docs: 15 with
+    * the shingle-set / band-fold / one-pass-cap / merge-verify ladder and
+    * the round-0 driver collapse (the per-hash-aggregate ladder it
+    * replaced ran 31). */
+  private val JobPin = 15
 }
