@@ -156,8 +156,8 @@ object Bench {
 
     // per-query phase at local[32]
     val spark = session(32)
-    val results = timeQueries(SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> (() => { fn(spark, sfDir).count(); () })
+    val results = timeQueries(SparkEntry.registry.sortBy(_.name).map { q =>
+      q.name -> (() => { q.plan(spark, sfDir).count(); () })
     })
     val (qs, total) = queriesJson(results)
     val scaling =

@@ -4,19 +4,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spark.{Ops, Tables}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry (SURVEY.md §7): one `registry` row per query.
   *
-  * Each query runs an operator from SURVEY.md §2 over the driver-provided
-  * parquet at `sfDir`; `oracleSql` holds the DuckDB-equivalent SQL over the
-  * same tables. Geo columns are derived deterministically from row ids with
-  * integer arithmetic so both engines compute identical doubles
-  * (see Tables.pages / Tables.geoEvents).
+  * Each row names a query, its oracle and its Spark plan. The plan runs an
+  * operator from SURVEY.md §2 over the parquet tables at `sfDir`; a `Sql`
+  * oracle is the DuckDB-equivalent SQL over the same tables, and `queries` /
+  * `oracleSql` are the registry's name-keyed views (read by `graft.Verify`
+  * and external callers). Geo columns are derived deterministically from
+  * row ids with integer arithmetic so both engines compute identical
+  * doubles (see Tables.pages / Tables.geoEvents).
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q01_spatial_box")(spark, "/root/testdata/sf0.001")
+    query("q01_spatial_box").plan(spark, "/root/testdata/sf0.001")
 
   // query window constants (shared between Spark and oracle SQL)
   private val Box = (10.0, 120.0, -20.0, 60.0) // lonMin, lonMax, latMin, latMax
@@ -29,87 +31,204 @@ object SparkEntry {
   // 0.01-grid point sits on a non-horizontal edge (see q02 oracle)
   private val TriWkt = "POLYGON ((0.005 0.005, 60.005 0.005, 30.005 40.005, 0.005 0.005))"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_spatial_box" -> ((s, dir) => {
+  /** How a row's result is checked: `Sql` is its DuckDB twin over the same
+    * tables, with matching column names and dtypes; `GoldenSpec` names the
+    * suite that gates a row no SQL can express. */
+  sealed trait Oracle
+  final case class Sql(sql: String) extends Oracle
+  final case class GoldenSpec(suite: String) extends Oracle
+
+  /** One query: its name, its oracle and its Spark plan over `sfDir`. */
+  final case class Query(name: String, oracle: Oracle)(val plan: (SparkSession, String) => DataFrame)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry.map(q => q.name -> q.plan).toMap
+  lazy val oracleSql: Map[String, String] = registry.collect { case Query(n, Sql(sql)) => n -> sql }.toMap
+
+  /** The registry row named `name`; an unknown name throws, listing the known ones. */
+  def query(name: String): Query = registry.find(_.name == name).getOrElse(throw new NoSuchElementException(
+    s"unknown query '$name' (known: ${registry.map(_.name).sorted.mkString(", ")})"))
+
+  lazy val registry: Seq[Query] = Seq(
+    Query("q01_spatial_box", Sql(pagesBoxSql)) { (s, dir) =>
       Ops.spatialBoxQuery(Tables.pages(s, dir), Box._1, Box._2, Box._3, Box._4)
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q02_spatial_polygon" -> ((s, dir) => {
+    },
+    Query("q02_spatial_polygon", Sql(
+      // triangle (0.005,0.005) (60.005,0.005) (30.005,40.005): half-plane signs.
+      // edge1: y >= 0.005 (horizontal); edge2 right: cross((60.005,0.005)->(30.005,40.005), p) >= 0;
+      // edge3 left: cross((30.005,40.005)->(0.005,0.005), p) >= 0
+      s"""$pagesCte
+         |SELECT doc_id, lon, lat FROM pages
+         |WHERE lat >= 0.005
+         |  AND (30.005 - 60.005) * (lat - 0.005) - (40.005 - 0.005) * (lon - 60.005) >= 0
+         |  AND (0.005 - 30.005) * (lat - 40.005) - (0.005 - 40.005) * (lon - 30.005) >= 0""".stripMargin)) { (s, dir) =>
       val geom = new org.locationtech.jts.io.WKTReader().read(TriWkt)
       Ops.spatialGeometryQuery(Tables.pages(s, dir), geom)
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q03_st_box" -> ((s, dir) => {
+    },
+    Query("q03_st_box", Sql(eventsStBoxSql)) { (s, dir) =>
       Ops.stBoxQuery(Tables.geoEvents(s, dir), Box._1, Box._2, Box._3, Box._4, TsMin, TsMax)
         .select(col("event_id"), col("lon"), col("lat"), col("ts"))
-    }),
-    "q04_distance_join" -> ((s, dir) => {
+    },
+    Query("q04_distance_join", Sql(
+      s"""$eventsCte
+         |SELECT a.event_id AS a_id, b.event_id AS b_id
+         |FROM ev a JOIN ev b ON a.event_id < b.event_id
+         |WHERE (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat) < 1.0""".stripMargin)) { (s, dir) =>
       Ops.distanceJoin(Tables.geoEvents(s, dir).withColumnRenamed("event_id", "id"),
         "id", d = 1.0, bits = 8).select(col("a_id"), col("b_id"))
-    }),
-    "q107_distance_join_topk" -> ((s, dir) => {
+    },
+    Query("q107_distance_join_topk", Sql(
+      s"""$eventsCte
+         |SELECT a_id, b_id, rnk FROM (
+         |  SELECT a.event_id AS a_id, b.event_id AS b_id,
+         |         ROW_NUMBER() OVER (PARTITION BY a.event_id ORDER BY
+         |           (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat), b.event_id) AS rnk
+         |  FROM ev a JOIN ev b ON a.event_id <> b.event_id
+         |  WHERE (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat) < 1.0
+         |) WHERE rnk <= 3""".stripMargin)) { (s, dir) =>
       // per-item neighbor-capped distance join (NNMapReduce maxNeighbors):
       // each event keeps only its 3 nearest in-threshold neighbors, the
       // rank limit running map-side via WindowGroupLimit (DistanceJoinSpec pins
       // the partial limit below the shuffle)
       Ops.distanceJoinTopK(Tables.geoEvents(s, dir).withColumnRenamed("event_id", "id"),
         "id", d = 1.0, bits = 8, k = 3)
-    }),
-    "q05_knn" -> ((s, dir) => {
+    },
+    Query("q05_knn", Sql(
+      s"""$pagesCte
+         |SELECT centroid_id, id, rn FROM (
+         |  SELECT c.doc_id AS centroid_id, p.doc_id AS id,
+         |         ROW_NUMBER() OVER (PARTITION BY c.doc_id ORDER BY
+         |           (p.lon - c.lon) * (p.lon - c.lon) + (p.lat - c.lat) * (p.lat - c.lat), p.doc_id) AS rn
+         |  FROM pages p CROSS JOIN (SELECT * FROM pages WHERE doc_id % 50 = 0) c
+         |) WHERE rn <= 10""".stripMargin)) { (s, dir) =>
       val pts = Tables.pages(s, dir)
       val cents = pts.where(col("doc_id") % 50 === 0)
       Ops.knnToCentroids(pts, "doc_id", cents, "doc_id", k = 10)
-    }),
-    "q06_tile_assign" -> ((s, dir) => {
+    },
+    Query("q06_tile_assign", Sql(
+      s"""$pagesCte
+         |SELECT doc_id,
+         |  CAST(GREATEST(CEIL(((lon + 180) / 360) * 256) - 1, 0) AS BIGINT) AS tx,
+         |  CAST(GREATEST(CEIL(((lat + 180) / 360) * 256) - 1, 0) AS BIGINT) AS ty
+         |FROM pages""".stripMargin)) { (s, dir) =>
       import graft.spark.GeoFunctions._
       Tables.pages(s, dir).select(
         col("doc_id"),
         gw_tile_x(col("lon"), 8).as("tx"),
         gw_tile_y(col("lat"), 8).as("ty"))
-    }),
-    "q07_bbox_stats" -> ((s, dir) => {
+    },
+    Query("q07_bbox_stats", Sql(
+      s"""$pagesCte
+         |SELECT lang, COUNT(*) AS cnt, MIN(lon) AS min_lon, MAX(lon) AS max_lon,
+         |       MIN(lat) AS min_lat, MAX(lat) AS max_lat
+         |FROM pages GROUP BY lang""".stripMargin)) { (s, dir) =>
       Ops.bboxStats(Tables.pages(s, dir), Seq("lang"))
-    }),
-    "q08_time_range" -> ((s, dir) => {
+    },
+    Query("q08_time_range", Sql(
+      """SELECT event_type, COUNT(*) AS cnt, MIN(ts) AS min_ts, MAX(ts) AS max_ts
+        |FROM events GROUP BY event_type""".stripMargin)) { (s, dir) =>
       s.read.parquet(s"$dir/events.parquet")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"), min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"))
-    }),
-    "q09_histogram" -> ((s, dir) => {
+    },
+    Query("q09_histogram", Sql(
+      """SELECT CAST(FLOOR(o_totalprice / 10000.0) AS BIGINT) AS bin, COUNT(*) AS cnt
+        |FROM orders GROUP BY 1""".stripMargin)) { (s, dir) =>
       Ops.fixedBinHistogram(s.read.parquet(s"$dir/orders.parquet"), "o_totalprice", 10000.0)
-    }),
-    "q10_dedup_exact" -> ((s, dir) => {
+    },
+    Query("q10_dedup_exact", Sql(
+      """SELECT md5(text) AS text_md5, MIN(doc_id) AS keeper_id, COUNT(*) AS dup_cnt
+        |FROM documents GROUP BY 1""".stripMargin)) { (s, dir) =>
       Ops.exactDedup(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    }),
-    "q11_text_quality" -> ((s, dir) => {
+    },
+    Query("q11_text_quality", Sql(
+      """SELECT doc_id,
+        |  CAST(LENGTH(text) AS BIGINT) AS n_chars,
+        |  CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) AS BIGINT) AS n_spaces,
+        |  CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT) AS token_est,
+        |  CAST((LENGTH(text) - LENGTH(REPLACE(text, 'the', ''))) / 3 AS BIGINT) AS the_cnt
+        |FROM documents""".stripMargin)) { (s, dir) =>
       Ops.textQuality(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    }),
-    "q12_ann_topk" -> ((s, dir) => {
+    },
+    Query("q12_ann_topk", Sql(
+      """WITH quant AS (
+        |  SELECT vec_id, [CAST(ROUND(x * 1000) AS BIGINT) FOR x IN embedding] AS v
+        |  FROM embeddings
+        |), q AS (SELECT vec_id AS q_id, v AS qv FROM quant WHERE vec_id < 5),
+        |scored AS (
+        |  SELECT q.q_id, b.vec_id,
+        |    CAST(list_sum(list_transform(list_zip(q.qv, b.v), t -> t[1] * t[2])) AS DOUBLE) /
+        |      SQRT(CAST(list_sum(list_transform(q.qv, x -> x * x)) AS DOUBLE) *
+        |           CAST(list_sum(list_transform(b.v, x -> x * x)) AS DOUBLE)) AS cos
+        |  FROM quant b CROSS JOIN q
+        |)
+        |SELECT q_id, vec_id, rn FROM (
+        |  SELECT q_id, vec_id, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
+        |  FROM scored
+        |) WHERE rn <= 10""".stripMargin)) { (s, dir) =>
       Ops.annBruteForce(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
         queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10)
-    }),
-    "q13_distinct_knn" -> ((s, dir) => {
+    },
+    Query("q13_distinct_knn", Sql(
+      s"""$pagesCte
+         |SELECT centroid_id, id, rn FROM (
+         |  SELECT centroid_id, id,
+         |         ROW_NUMBER() OVER (PARTITION BY centroid_id ORDER BY d2, id) AS rn
+         |  FROM (
+         |    SELECT c.doc_id AS centroid_id, p.doc_id AS id,
+         |           (p.lon - c.lon) * (p.lon - c.lon) + (p.lat - c.lat) * (p.lat - c.lat) AS d2,
+         |           ROW_NUMBER() OVER (PARTITION BY p.doc_id ORDER BY
+         |             (p.lon - c.lon) * (p.lon - c.lon) + (p.lat - c.lat) * (p.lat - c.lat), c.doc_id) AS cr
+         |    FROM pages p CROSS JOIN (SELECT * FROM pages WHERE doc_id % 50 = 0) c
+         |  ) WHERE cr = 1
+         |) WHERE rn <= 10""".stripMargin)) { (s, dir) =>
       val pts = Tables.pages(s, dir)
       val cents = pts.where(col("doc_id") % 50 === 0)
       Ops.distinctKnnToCentroids(pts, "doc_id", cents, "doc_id", k = 10)
-    }),
-    "q14_polygon_join" -> ((s, dir) => {
+    },
+    Query("q14_polygon_join", Sql(regionJoinSql)) { (s, dir) =>
       graft.spark.SpatialJoin.polygonJoin(Tables.pages(s, dir), Tables.regionGeoms(40))
         .select(col("doc_id"), col("region_id"))
-    }),
-    "q15_knn_ring" -> ((s, dir) => {
+    },
+    Query("q15_knn_ring", Sql(
+      s"""$pagesCte
+         |SELECT q_id, id, rn FROM (
+         |  SELECT q.doc_id AS q_id, p.doc_id AS id,
+         |         ROW_NUMBER() OVER (PARTITION BY q.doc_id ORDER BY
+         |           (p.lon - q.lon) * (p.lon - q.lon) + (p.lat - q.lat) * (p.lat - q.lat), p.doc_id) AS rn
+         |  FROM pages p CROSS JOIN (SELECT * FROM pages WHERE doc_id % 97 = 0) q
+         |) WHERE rn <= 10""".stripMargin)) { (s, dir) =>
       val pts = Tables.pages(s, dir)
       val queries = pts.where(col("doc_id") % 97 === 0)
       graft.spark.SpatialJoin.knnRing(pts, "doc_id", queries, "doc_id", k = 10)
-    }),
-    "q16_ngram_jaccard" -> ((s, dir) => {
+    },
+    Query("q16_ngram_jaccard", Sql(
+      // hot-shingle cap (maxDf = 5) mirrored from ngramJaccardPairs:
+      // candidates only from rare shingles, exact inter over full sets
+      s"""WITH $shCte,
+         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
+         |rareshingle AS (SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= 5),
+         |rare AS (SELECT s.doc_id, s.shingle FROM sh s JOIN rareshingle USING (shingle)),
+         |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+         |         FROM rare a JOIN rare b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
+         |pairs AS (SELECT c.a_id, c.b_id, count(*) AS inter FROM cand c
+         |          JOIN sh sa ON sa.doc_id = c.a_id
+         |          JOIN sh sb ON sb.doc_id = c.b_id AND sa.shingle = sb.shingle
+         |          GROUP BY 1, 2)
+         |$jaccardTail""".stripMargin)) { (s, dir) =>
       // maxDf=5 BINDS on this corpus (shingle df reaches 9): the scale
       // guard is exercised, and the oracle applies the identical cap
       graft.spark.TextOps.ngramJaccardPairs(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", n = 3, tau = 0.5,
         maxDf = 5)
-    }),
-    "q95_property_query" -> ((s, dir) => {
+    },
+    Query("q95_property_query", Sql(
+      // the index route is an access-path choice; the result set is the
+      // raw predicate over orders
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE (o_totalprice > 50000.0 AND o_totalprice <= 80000.0)
+        |   OR (o_totalprice >= 140000.0 AND o_totalprice < 160000.0)""".stripMargin)) { (s, dir) =>
       // arbitrary boolean NUMERIC predicate routed through the stored
       // secondary numeric index: the PropertyFilterVisitor port extracts
       // one per-attribute interval (AND intersects with the reference's
@@ -123,8 +242,15 @@ object SparkEntry {
         (col("o_totalprice") >= 140000.0 && col("o_totalprice") < 160000.0)
       graft.spark.PropertyQuery.numericIndexedQuery(orders, idx, "o_orderkey", "o_totalprice", pred)
         .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-    "q94_time_filter_query" -> ((s, dir) => {
+    },
+    Query("q94_time_filter_query", Sql(
+      // the index route is an access-path choice; the result set is the
+      // raw predicate over events
+      """SELECT event_id, ts FROM events
+        |WHERE (ts > TIMESTAMP '2024-01-03 00:00:00'
+        |       AND ts < TIMESTAMP '2024-01-06 00:00:00')
+        |   OR NOT (ts >= TIMESTAMP '2024-01-20 00:00:00'
+        |        OR ts < TIMESTAMP '2024-01-12 00:00:00')""".stripMargin)) { (s, dir) =>
       // arbitrary boolean time predicate routed through the TEMPORAL
       // secondary index: the ExtractTimeFilterVisitor port turns the
       // (AND/OR/NOT) predicate into closed ms ranges, the index probe
@@ -141,8 +267,22 @@ object SparkEntry {
           col("ts") < to_timestamp(lit("2024-01-12 00:00:00")))
       graft.spark.TemporalQuery.timeIndexedQuery(ev, idx, "event_id", "ts", pred)
         .select(col("event_id"), col("ts"))
-    }),
-    "q93_best_k_per_group" -> ((s, dir) => {
+    },
+    Query("q93_best_k_per_group", Sql(
+      // the jump scan re-derived in SQL: ascending-count lag deltas (base
+      // 0.0), first maximal jump wins = smallest count among the maxima
+      s"""WITH g AS (SELECT DISTINCT doc_id % 5 AS group_id FROM documents),
+         |d AS (SELECT group_id, cc AS cluster_count,
+         |        CAST((group_id * 7 + cc * cc * 13) % 100 AS DOUBLE) / 10.0 AS distortion
+         |      FROM g, (SELECT unnest(range(1, 5)) AS cc)),
+         |j AS (SELECT group_id, cluster_count,
+         |        distortion - COALESCE(lag(distortion) OVER (
+         |          PARTITION BY group_id ORDER BY cluster_count), 0.0) AS jump
+         |      FROM d)
+         |SELECT j.group_id, CAST(min(j.cluster_count) AS BIGINT) AS best_count
+         |FROM j JOIN (SELECT group_id, max(jump) AS mj FROM j GROUP BY 1) m
+         |  ON j.group_id = m.group_id AND j.jump = m.mj
+         |GROUP BY 1""".stripMargin)) { (s, dir) =>
       // per-group cluster-count selection by the reference's distortion
       // jump rule (DistortionGroupManagement.bestCount): a deterministic
       // distortion table over 5 groups × counts 1..4, selected by ONE
@@ -158,8 +298,15 @@ object SparkEntry {
             lit(100)).cast("double") / 10.0)
       graft.spark.Analytics.bestGroupCount(d)
         .select(col("group_id"), col("best_count").cast("long").as("best_count"))
-    }),
-    "q92_decontaminate" -> ((s, dir) => {
+    },
+    Query("q92_decontaminate", Sql(
+      // every-97th-doc benchmark; hits = distinct shared 3-gram shingles
+      s"""WITH $shCte,
+         |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0)
+         |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hits
+         |FROM sh s JOIN ev USING (shingle)
+         |WHERE s.doc_id % 97 <> 0
+         |GROUP BY 1""".stripMargin)) { (s, dir) =>
       // benchmark decontamination (the pre-training hygiene screen):
       // treat every 97th doc as the held-out benchmark; flag TRAIN docs
       // sharing any 3-gram shingle with it, with the distinct-overlap
@@ -171,57 +318,156 @@ object SparkEntry {
           docs.where(col("doc_id") % 97 === 0),
           "doc_id", "text", n = 3)
         .select(col("id").as("doc_id"), col("n_hits"))
-    }),
-    "q17_minhash_lsh" -> ((s, dir) => {
+    },
+    Query("q17_minhash_lsh", Sql(minhashSql)) { (s, dir) =>
       graft.spark.TextOps.minhashLshPairs(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         n = 3, bands = 4, rowsPerBand = 4, tau = 0.5, maxBucket = 10)
-    }),
-    "q18_simhash" -> ((s, dir) => {
+    },
+    Query("q18_simhash", Sql(
+      s"""WITH words AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents),
+         |wh AS (SELECT doc_id, ${duckHash("w")} AS h FROM words),
+         |bits AS (SELECT doc_id, j, sum(((h >> j) & 1) * 2 - 1) AS s
+         |         FROM wh, (SELECT unnest(range(31)) AS j) GROUP BY 1, 2)
+         |SELECT doc_id AS id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
+         |FROM bits GROUP BY 1""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.simhash(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    }),
-    "q19_embed_neardup" -> ((s, dir) => {
+    },
+    Query("q19_embed_neardup", Sql(
+      s"""WITH $quantCte
+         |SELECT a.vec_id AS a_id, b.vec_id AS b_id, $cosExpr AS cos
+         |FROM quant a JOIN quant b ON a.vec_id < b.vec_id
+         |WHERE $cosExpr >= 0.4""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.embeddingNearDupPairs(
         s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding", tau = 0.4)
-    }),
-    "q20_embed_lsh" -> ((s, dir) => {
+    },
+    Query("q20_embed_lsh", Sql(
+      s"""WITH $quantCte,
+         |sigs AS (
+         |  SELECT vec_id, CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS bucket FROM (
+         |    SELECT q.vec_id, jj.j, sum(q.v[ii.i + 1] * ((jj.j * 1000003 + (ii.i + 1) * 7919) % 2001 - 1000)) AS dot
+         |    FROM quant q, (SELECT unnest(range(8)) AS j) jj, (SELECT unnest(range(64)) AS i) ii
+         |    GROUP BY 1, 2) GROUP BY 1),
+         |qb AS (SELECT q.vec_id, q.v, s.bucket FROM quant q JOIN sigs s USING (vec_id))
+         |SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.bucket AS bucket, $cosExpr AS cos
+         |FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+         |WHERE $cosExpr >= 0.4""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.embeddingLshPairs(
         s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
         dims = 64, bits = 8, tau = 0.4)
-    }),
-    "q21_langid" -> ((s, dir) => {
+    },
+    Query("q21_langid", Sql(
+      """WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+        |sc AS (SELECT doc_id AS id,
+        |  CAST(sum(CASE WHEN w IN ('the','and','of') THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
+        |  CAST(sum(CASE WHEN w IN ('der','und','die') THEN 1 ELSE 0 END) AS BIGINT) AS n_de,
+        |  CAST(sum(CASE WHEN w IN ('le','et','les') THEN 1 ELSE 0 END) AS BIGINT) AS n_fr,
+        |  CAST(sum(CASE WHEN w IN ('el','y','los') THEN 1 ELSE 0 END) AS BIGINT) AS n_es
+        |  FROM words GROUP BY 1)
+        |SELECT id, n_en, n_de, n_fr, n_es,
+        |  CASE WHEN n_en >= n_de AND n_en >= n_fr AND n_en >= n_es AND n_en > 0 THEN 'en'
+        |       WHEN n_de > n_en AND n_de >= n_fr AND n_de >= n_es AND n_de > 0 THEN 'de'
+        |       WHEN n_fr > n_en AND n_fr > n_de AND n_fr >= n_es AND n_fr > 0 THEN 'fr'
+        |       WHEN n_es > n_en AND n_es > n_de AND n_es > n_fr AND n_es > 0 THEN 'es'
+        |       ELSE 'und' END AS lang_id
+        |FROM sc""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.languageId(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    }),
-    "q22_tokens" -> ((s, dir) => {
+    },
+    Query("q22_tokens", Sql(
+      """SELECT doc_id AS id,
+        |  CAST(len(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS BIGINT) AS n_words,
+        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_tokens
+        |FROM documents""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.tokenCount(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    }),
-    "q23_fingerprint" -> ((s, dir) => {
+    },
+    Query("q23_fingerprint", Sql {
+      val gram = (0 until 8).foldLeft("0::BIGINT") { (acc, off) =>
+        s"(($acc) * 31 + ord(substr(text, i + $off, 1))) % 2147483647"
+      }
+      s"""WITH grams AS (
+         |  SELECT doc_id, unnest([$gram FOR i IN range(1, length(text) - 6)]) AS h
+         |  FROM documents WHERE length(text) >= 8)
+         |SELECT doc_id AS id, min(h) AS fp_min, max(h) AS fp_max, bit_xor(h) AS fp_xor
+         |FROM grams GROUP BY 1""".stripMargin
+    }) { (s, dir) =>
       graft.spark.TextOps.fingerprintKgram(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 8)
-    }),
-    "q24_kmeans" -> ((s, dir) => {
+    },
+    Query("q24_kmeans", Sql(kmeansSql(3))) { (s, dir) =>
       val pts = Tables.pages(s, dir).select(col("doc_id").as("id"), col("lon"), col("lat"))
       val init = pts.where(col("id") % 50 === 0).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq.sortBy(_._1)
       graft.spark.Analytics.kmeans(pts, init, iters = 3)
-    }),
-    "q25_dbscan" -> ((s, dir) => {
+    },
+    Query("q25_dbscan", Sql(dbscanSql(eps = 0.4, minPts = 4))) { (s, dir) =>
       val pts = Tables.pages(s, dir).select(col("doc_id").as("id"), col("lon"), col("lat"))
       graft.spark.Analytics.dbscan(pts, "id", eps = 0.4, minPts = 4)
-    }),
-    "q26_kde" -> ((s, dir) => {
+    },
+    Query("q26_kde", Sql(kdeSql(bits = 5))) { (s, dir) =>
       graft.spark.Analytics.kdeHeatmap(Tables.pages(s, dir), bits = 5)
-    }),
-    "q27_tile_cover" -> ((s, dir) => {
+    },
+    Query("q27_tile_cover", Sql {
+      val bins = 64
+      s"""WITH envs AS (SELECT * FROM (VALUES ${Tables.regionBoxesSqlValues(20)})
+         |  v(env_id, lon_min, lon_max, lat_min, lat_max)),
+         |b AS (SELECT env_id,
+         |  CAST(GREATEST(CEIL(((lon_min + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS x0,
+         |  CAST(GREATEST(CEIL(((lon_max + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS x1,
+         |  CAST(GREATEST(CEIL(((lat_min + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS y0,
+         |  CAST(GREATEST(CEIL(((lat_max + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS y1
+         |  FROM envs)
+         |SELECT env_id, xs.tx, ys.ty
+         |FROM b, LATERAL (SELECT unnest(range(x0, x1 + 1)) AS tx) xs,
+         |        LATERAL (SELECT unnest(range(y0, y1 + 1)) AS ty) ys""".stripMargin
+    }) { (s, dir) =>
       import s.implicits._
       val envs = Tables.regionBoxes(20)
         .toDF("env_id", "lon_min", "lon_max", "lat_min", "lat_max")
       graft.spark.Tiling.tileCover(envs, bits = 6).select("env_id", "tx", "ty")
-    }),
-    "q28_tile_bounds" -> ((s, dir) => {
+    },
+    Query("q28_tile_bounds", Sql {
+      val bins = 64
+      s"""$pagesCte
+         |SELECT tx, ty,
+         |  CAST(tx AS DOUBLE) / $bins * 360 - 180 AS lon_min,
+         |  CAST(tx + 1 AS DOUBLE) / $bins * 360 - 180 AS lon_max,
+         |  GREATEST(CAST(ty AS DOUBLE) / $bins * 360 - 180, -90.0) AS lat_min,
+         |  LEAST(CAST(ty + 1 AS DOUBLE) / $bins * 360 - 180, 90.0) AS lat_max
+         |FROM (
+         |  SELECT DISTINCT
+         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
+         |  FROM pages)""".stripMargin
+    }) { (s, dir) =>
       graft.spark.Tiling.occupiedTileBounds(Tables.pages(s, dir), bits = 6)
-    }),
-    "q29_hull" -> ((s, dir) => {
+    },
+    // convex hull per group, oracled on exact integer geometry: a directed
+    // pair (a, b) is a minimal-hull edge iff every other point of the group
+    // is strictly left of line a→b, or collinear and strictly between a and
+    // b (so collinear boundary points are NOT vertices — JTS ConvexHull's
+    // cleanRing semantics). Vertices = edges; ring closes, so
+    // n_vertices = edges + 1; CCW edge walk gives 2×area via the shoelace.
+    // Coordinates lie on the 0.01° grid → centi-degree longs are exact.
+    Query("q29_hull", Sql(
+      s"""$pagesCte,
+         |hp AS (SELECT DISTINCT doc_id % 5 AS g,
+         |         CAST(ROUND(lon * 100) AS BIGINT) AS x,
+         |         CAST(ROUND(lat * 100) AS BIGINT) AS y
+         |       FROM pages),
+         |edges AS (
+         |  SELECT a.g, a.x AS ax, a.y AS ay, b.x AS bx, b.y AS b_y
+         |  FROM hp a JOIN hp b ON a.g = b.g AND (a.x <> b.x OR a.y <> b.y)
+         |  WHERE NOT EXISTS (
+         |    SELECT 1 FROM hp c
+         |    WHERE c.g = a.g AND (c.x <> a.x OR c.y <> a.y) AND (c.x <> b.x OR c.y <> b.y)
+         |      AND NOT ((b.x - a.x) * (c.y - a.y) - (b.y - a.y) * (c.x - a.x) > 0
+         |        OR ((b.x - a.x) * (c.y - a.y) - (b.y - a.y) * (c.x - a.x) = 0
+         |            AND (b.x - a.x) * (c.x - a.x) + (b.y - a.y) * (c.y - a.y) > 0
+         |            AND (b.x - a.x) * (c.x - a.x) + (b.y - a.y) * (c.y - a.y)
+         |              < (b.x - a.x) * (b.x - a.x) + (b.y - a.y) * (b.y - a.y)))))
+         |SELECT g AS group_id, CAST(COUNT(*) + 1 AS BIGINT) AS n_vertices,
+         |       CAST(SUM(ax * b_y - ay * bx) AS BIGINT) AS area_x2_c2
+         |FROM edges GROUP BY g""".stripMargin)) { (s, dir) =>
       val pts = Tables.pages(s, dir)
         .select(col("doc_id").as("id"), col("lon"), col("lat"))
         .withColumn("g", col("id") % 5)
@@ -229,25 +475,54 @@ object SparkEntry {
       // (the WKT itself is pinned by the JTS-oracle spec in AnalyticsSpec)
       graft.spark.Analytics.convexHullPerGroup(pts, "g")
         .select(col("group_id"), col("n_vertices"), col("area_x2_c2"))
-    }),
-    "q30_stats_profile" -> ((s, dir) => {
+    },
+    Query("q30_stats_profile", Sql(
+      s"""$pagesCte
+         |SELECT COUNT(*) AS cnt, COUNT(DISTINCT doc_id) AS n_ids,
+         |  MIN(lon) AS min_lon, MAX(lon) AS max_lon,
+         |  MIN(lat) AS min_lat, MAX(lat) AS max_lat
+         |FROM pages""".stripMargin)) { (s, dir) =>
       Ops.statsProfile(Tables.pages(s, dir))
-    }),
-    "q31_subsample" -> ((s, dir) => {
+    },
+    Query("q31_subsample", Sql {
+      val bins = 64
+      s"""$pagesCte
+         |SELECT MIN(doc_id) AS doc_id, tx, ty FROM (
+         |  SELECT doc_id,
+         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
+         |  FROM pages) GROUP BY tx, ty""".stripMargin
+    }) { (s, dir) =>
       val pts = Tables.pages(s, dir)
       Ops.subsample(pts, "doc_id", bits = 6)
-    }),
-    "q32_range_histogram" -> ((s, dir) => {
+    },
+    Query("q32_range_histogram", Sql {
+      val bins = 64
+      s"""$pagesCte
+         |SELECT tx, ty, COUNT(*) AS cnt FROM (
+         |  SELECT
+         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
+         |  FROM pages) GROUP BY tx, ty""".stripMargin
+    }) { (s, dir) =>
       Ops.rangeHistogram(Tables.pages(s, dir), bits = 6)
-    }),
-    "q33_media_features" -> ((s, dir) => {
+    },
+    Query("q33_media_features", Sql(
+      s"""SELECT doc_id AS id, CAST(length(text) AS BIGINT) AS n_bytes,
+         |  CAST(ord(substr(text, 1, 1)) AS BIGINT) AS head_byte,
+         |  ${duckHash("text")} AS checksum
+         |FROM documents""".stripMargin)) { (s, dir) =>
       // fused-plan media features: every band is a codegen'd column
       // expression (no mapPartitions hop — Round3Spec pins the plan)
       val media = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
       graft.spark.Multimodal.mediaFeatureColumns(media, "doc_id", "payload")
-    }),
-    "q34_stream_ingest" -> ((s, dir) => {
+    },
+    Query("q34_stream_ingest", Sql(
+      s"""SELECT event_id,
+         |  CAST(GREATEST(CEIL(((${Tables.eventsLonSql} + 180) / 360) * 256) - 1, 0) AS BIGINT) AS tx,
+         |  CAST(GREATEST(CEIL(((${Tables.eventsLatSql} + 180) / 360) * 256) - 1, 0) AS BIGINT) AS ty
+         |FROM events""".stripMargin)) { (s, dir) =>
       // the streamed ingest output is itself an ingest-time artifact:
       // fingerprinted per corpus, built once (the streaming sink has no
       // _SUCCESS — completion is our own marker, written only after
@@ -294,8 +569,21 @@ object SparkEntry {
           .foreach(f => graft.FsUtils.deleteRecursively(f.toPath))
       }
       s.read.parquet(s"$root/out").select("event_id", "tx", "ty")
-    }),
-    "q35_haversine" -> ((s, dir) => {
+    },
+    Query("q35_haversine", Sql(
+      s"""$pagesCte
+         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+         |  CAST(ROUND(2.0 * 6371008.8 * ASIN(SQRT(
+         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
+         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
+         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2)))) AS BIGINT) AS dist_m
+         |FROM (SELECT * FROM pages WHERE doc_id % 101 = 0 AND ABS(lat) <= 85) a,
+         |     (SELECT * FROM pages WHERE doc_id % 101 = 0 AND ABS(lat) <= 85) b
+         |WHERE a.doc_id < b.doc_id
+         |  AND 2.0 * 6371008.8 * ASIN(SQRT(
+         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
+         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
+         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2))) < 12000000.0""".stripMargin)) { (s, dir) =>
       // the haversine scalar-fn oracle routed through the REAL meters
       // join (no crossJoin node in any query body): a sparse global
       // sample under a generous-but-legal threshold — the wrapped tile
@@ -306,19 +594,44 @@ object SparkEntry {
       Ops.distanceJoin(pts, "id", d = 1.2e7, bits = 1, Ops.Meters())
         .select(col("a_id"), col("b_id"),
           round(col("dist")).cast("long").as("dist_m"))
-    }),
-    "q36_time_bin" -> ((s, dir) => {
+    },
+    Query("q36_time_bin", Sql(
+      """SELECT event_id, CAST(year(ts) AS VARCHAR) AS bin_y,
+        |  CAST(year(ts) AS VARCHAR) || '_' || lpad(CAST(month(ts) - 1 AS VARCHAR), 2, '0') AS bin_m
+        |FROM events""".stripMargin)) { (s, dir) =>
       import graft.spark.GeoFunctions.gw_time_bin
       s.read.parquet(s"$dir/events.parquet").select(col("event_id"),
         gw_time_bin(col("ts")).as("bin_y"),
         gw_time_bin(col("ts"), graft.index.TimeUnits.Month).as("bin_m"))
-    }),
-    "q37_kde_compare" -> ((s, dir) => {
+    },
+    Query("q37_kde_compare", Sql {
+      val bins = 32
+      val kern = graft.spark.Analytics.KdeKernel
+        .map { case (dx, dy, w) => s"($dx, $dy, $w)" }.mkString(", ")
+      def splat(pred: String) =
+        s"""SELECT tx, ty, CAST(SUM(w) AS BIGINT) AS weight FROM (
+           |  SELECT
+           |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) + k.dx AS tx,
+           |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) + k.dy AS ty,
+           |    k.w
+           |  FROM pages, (SELECT * FROM (VALUES $kern) v(dx, dy, w)) k
+           |  WHERE $pred)
+           |WHERE tx >= 0 AND tx <= ${bins - 1} AND ty >= 0 AND ty <= ${bins - 1}
+           |GROUP BY 1, 2""".stripMargin
+      s"""$pagesCte,
+         |wa AS (${splat("doc_id % 2 = 0")}),
+         |wb AS (${splat("doc_id % 2 = 1")})
+         |SELECT COALESCE(wa.tx, wb.tx) AS tx, COALESCE(wa.ty, wb.ty) AS ty,
+         |  COALESCE(wa.weight, 0) AS w_a, COALESCE(wb.weight, 0) AS w_b,
+         |  COALESCE(wa.weight, 0) - COALESCE(wb.weight, 0) AS diff
+         |FROM wa FULL OUTER JOIN wb ON wa.tx = wb.tx AND wa.ty = wb.ty""".stripMargin
+    }) { (s, dir) =>
       val p = Tables.pages(s, dir)
       graft.spark.Analytics.kdeCompare(
         p.where(col("doc_id") % 2 === 0), p.where(col("doc_id") % 2 === 1), bits = 5)
-    }),
-    "q38_text_search" -> ((s, dir) => {
+    },
+    Query("q38_text_search", Sql(
+      "SELECT doc_id AS id FROM documents WHERE text LIKE '%scan merge%'")) { (s, dir) =>
       // STORED posting-list text index: (gram, doc_id) parquet sorted by
       // gram, equality probe pushed into the scan, exact contains verify —
       // no full-text scan on the probe side (TextIndexSpec pins the plan)
@@ -328,51 +641,111 @@ object SparkEntry {
       // (tmpIndexPath: content fingerprint + superseded-store cleanup)
       graft.spark.TextIndex.searchStored(s, docs, "doc_id", "text",
         "scan merge", tmpIndexPath(dir, "graft-textindex"))
-    }),
-    "q39_zorder" -> ((s, dir) => {
+    },
+    Query("q39_zorder", Sql {
+      val bins = 256
+      // morton interleave, x-major: x bit b → out bit 2b+1, y bit b → 2b
+      val interleave = (0 until 8).map { b =>
+        s"(((tx >> $b) & 1) << ${2 * b + 1}) + (((ty >> $b) & 1) << ${2 * b})"
+      }.mkString(" + ")
+      s"""$pagesCte
+         |SELECT doc_id, CAST($interleave AS BIGINT) AS zid FROM (
+         |  SELECT doc_id,
+         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
+         |  FROM pages)""".stripMargin
+    }) { (s, dir) =>
       import graft.spark.GeoFunctions._
       Tables.pages(s, dir).select(col("doc_id"),
         graft.spark.Tiling.gw_zorder_id_xy(
           gw_tile_x(col("lon"), 8), gw_tile_y(col("lat"), 8), 8).as("zid"))
-    }),
-    "q40_multilevel_kmeans" -> ((s, dir) => {
+    },
+    Query("q40_multilevel_kmeans", Sql(multiLevelKmeansSql(iters = 2, childK = 3))) { (s, dir) =>
       val pts = Tables.pages(s, dir).select(col("doc_id").as("id"), col("lon"), col("lat"))
       // fixed 4-parent init (scale-independent: the driver loop is per parent)
       val init = pts.where(col("id").isin(0L, 150L, 300L, 450L)).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq.sortBy(_._1)
       graft.spark.Analytics.multiLevelKmeans(pts, init, childK = 3, iters = 2)
-    }),
-    "q45_st_distance_join" -> ((s, dir) => {
+    },
+    Query("q45_st_distance_join", Sql(
+      s"""$eventsCte
+         |SELECT a.event_id AS a_id, b.event_id AS b_id
+         |FROM ev a JOIN ev b ON a.event_id < b.event_id
+         |WHERE (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat) < 1.0
+         |  AND ABS(epoch_us(a.ts) - epoch_us(b.ts)) <= 3600000000""".stripMargin)) { (s, dir) =>
       Ops.distanceJoin(Tables.geoEvents(s, dir).withColumnRenamed("event_id", "id"),
         "id", d = 1.0, bits = 8, window = Some(("ts", 3600000L)))
         .select(col("a_id"), col("b_id"))
-    }),
-    "q46_region_counts" -> ((s, dir) => {
+    },
+    Query("q46_region_counts", Sql(
+      s"""$pagesCte
+         |SELECT r.region_id, COUNT(*) AS cnt
+         |FROM pages p
+         |JOIN (VALUES ${Tables.regionBoxesSqlValues(40)}) r(region_id, lon_min, lon_max, lat_min, lat_max)
+         |  ON p.lon >= r.lon_min AND p.lon <= r.lon_max
+         | AND p.lat >= r.lat_min AND p.lat <= r.lat_max
+         |GROUP BY 1""".stripMargin)) { (s, dir) =>
       Ops.regionCounts(Tables.pages(s, dir), Tables.regionGeoms(40))
-    }),
-    "q44_minhash_sigs" -> ((s, dir) => {
+    },
+    Query("q44_minhash_sigs", Sql(
+      s"""WITH $shCte,
+         |shh AS (SELECT doc_id, ${duckHash("shingle")} AS h FROM sh)
+         |SELECT doc_id AS id, $minhashSigCols FROM shh GROUP BY doc_id""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.minhashSignatures(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", n = 3, numHashes = 16)
-    }),
-    "q43_ann_ivf" -> ((s, dir) => {
+    },
+    Query("q43_ann_ivf", Sql(
+      s"""WITH $quantCte,
+         |qn AS (SELECT vec_id, v, CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS n2 FROM quant),
+         |cents AS (SELECT vec_id AS cid, v AS cv, n2 AS cn2 FROM qn WHERE vec_id < 16),
+         |ranked AS (
+         |  SELECT q.vec_id, q.v, q.n2, c.cid, ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+         |    q.n2 + c.cn2 - 2 * CAST(list_sum(list_transform(list_zip(q.v, c.cv), t -> t[1] * t[2])) AS BIGINT),
+         |    c.cid) AS crn
+         |  FROM qn q CROSS JOIN cents c),
+         |lists AS (SELECT vec_id, cid, v AS vv, n2 AS vn2 FROM ranked WHERE crn = 1),
+         |probes AS (SELECT vec_id AS q_id, cid, v AS qv, n2 AS qn2 FROM ranked
+         |           WHERE crn <= 4 AND vec_id IN (0, 100, 200, 300, 400))
+         |SELECT q_id, vec_id, rn FROM (
+         |  SELECT p.q_id, l.vec_id, ROW_NUMBER() OVER (PARTITION BY p.q_id ORDER BY
+         |    CAST(list_sum(list_transform(list_zip(p.qv, l.vv), t -> t[1] * t[2])) AS DOUBLE) /
+         |      SQRT(CAST(p.qn2 AS DOUBLE) * CAST(l.vn2 AS DOUBLE)) DESC, l.vec_id) AS rn
+         |  FROM probes p JOIN lists l USING (cid)
+         |) WHERE rn <= 10""".stripMargin)) { (s, dir) =>
       Ops.annIvf(s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
         nlist = 16, nProbe = 4, queryIds = Seq(0L, 100L, 200L, 300L, 400L), k = 10)
-    }),
-    "q42_envelope_query" -> ((s, dir) => {
+    },
+    Query("q42_envelope_query", Sql(
+      s"""SELECT region_id AS rid
+         |FROM (VALUES ${Tables.regionBoxesSqlValues(60)}) v(region_id, lon_min, lon_max, lat_min, lat_max)
+         |WHERE lon_max >= -50 AND lon_min <= 50 AND lat_max >= -40 AND lat_min <= 40""".stripMargin)) { (s, dir) =>
       import s.implicits._
       val geoms = Tables.regionBoxes(60)
         .toDF("rid", "env_lon_min", "env_lon_max", "env_lat_min", "env_lat_max")
       val store = Ops.encodeEnvelopes(geoms, "rid")
       Ops.spatialBoxQueryEnvelopes(store, "rid", -50, 50, -40, 40).select("rid")
-    }),
-    "q41_distance_join_m" -> ((s, dir) => {
+    },
+    Query("q41_distance_join_m", Sql(
+      s"""$pagesCte
+         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+         |  CAST(ROUND(2.0 * 6371008.8 * ASIN(SQRT(
+         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
+         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
+         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2)))) AS BIGINT) AS dist_m
+         |FROM (SELECT * FROM pages WHERE ABS(lat) <= 85) a,
+         |     (SELECT * FROM pages WHERE ABS(lat) <= 85) b
+         |WHERE a.doc_id < b.doc_id
+         |  AND 2.0 * 6371008.8 * ASIN(SQRT(
+         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
+         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
+         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2))) < 100000.0""".stripMargin)) { (s, dir) =>
       val pts = Tables.pages(s, dir).where(abs(col("lat")) <= 85)
         .select(col("doc_id").as("id"), col("lon"), col("lat"))
       Ops.distanceJoin(pts, "id", d = 100000.0, bits = 7, Ops.Meters())
         .select(col("a_id"), col("b_id"),
           round(col("dist")).cast("long").as("dist_m"))
-    }),
-    "q47_polygon_join_dist" -> ((s, dir) => {
+    },
+    Query("q47_polygon_join_dist", Sql(regionJoinSql)) { (s, dir) =>
       // the DISTRIBUTED polygon-join strategy (tile-cover equi-join +
       // per-row WKB test), forced via maxBroadcast=0 through the auto
       // selector — same contract and oracle as the broadcast path (q14)
@@ -385,8 +758,16 @@ object SparkEntry {
       graft.spark.SpatialJoin.polygonJoinAuto(Tables.pages(s, dir), regions,
         maxBroadcast = 0, bits = 6)
         .select(col("doc_id"), col("region_id"))
-    }),
-    "q59_range_join" -> ((s, dir) => {
+    },
+    Query("q59_range_join", Sql {
+      // literal VALUES twin of the Spark-side bands
+      val values = (0 until 20).map(i => f"('b$i%02d', ${i * 15000.0}, ${i * 15000.0 + 25000.0})")
+        .mkString(", ")
+      s"""SELECT o.o_orderkey, b.band_id
+         |FROM orders o
+         |JOIN (VALUES $values) b(band_id, lo, hi)
+         |  ON o.o_totalprice >= b.lo AND o.o_totalprice <= b.hi""".stripMargin
+    }) { (s, dir) =>
       // binned interval join: orders matched to overlapping price bands
       import s.implicits._
       val bands = (0 until 20).map(i => (f"b$i%02d", i * 15000.0, i * 15000.0 + 25000.0))
@@ -394,8 +775,12 @@ object SparkEntry {
       Ops.rangeJoinBinned(s.read.parquet(s"$dir/orders.parquet"), "o_totalprice",
         bands, "lo", "hi", binWidth = 20000.0)
         .select(col("o_orderkey"), col("band_id"))
-    }),
-    "q60_incremental_dedup" -> ((s, dir) => {
+    },
+    Query("q60_incremental_dedup", Sql(
+      """SELECT a.doc_id, md5(a.text) AS text_md5
+        |FROM documents a
+        |WHERE a.doc_id < 250
+        |  AND EXISTS (SELECT 1 FROM documents b WHERE b.doc_id >= 200 AND b.text = a.text)""".stripMargin)) { (s, dir) =>
       // recrawl overlap: the "new" batch shares docs 200..249 with the
       // seen corpus; Bloom prefilter + exact verify finds exactly those
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -403,18 +788,40 @@ object SparkEntry {
         docs.where(col("doc_id") < 250), docs.where(col("doc_id") >= 200),
         "doc_id", "text", expectedSeen = 1000)
         .select(col("doc_id"), col("text_md5"))
-    }),
-    "q57_top_tokens" -> ((s, dir) => {
+    },
+    Query("q57_top_tokens", Sql(
+      """WITH t AS (SELECT unnest(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS token
+        |           FROM documents)
+        |SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM t
+        |GROUP BY 1 ORDER BY cnt DESC, token LIMIT 50""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.topTokens(
         s.read.parquet(s"$dir/documents.parquet"), "text", k = 50)
-    }),
-    "q58_tf_df" -> ((s, dir) => {
+    },
+    Query("q58_tf_df", Sql(
+      """WITH t AS (SELECT doc_id AS id,
+        |             unnest(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS token
+        |           FROM documents),
+        |tf AS (SELECT id, token, CAST(COUNT(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2),
+        |df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1)
+        |SELECT tf.id, tf.token, tf.tf, df.df FROM tf JOIN df USING (token)
+        |WHERE tf.id % 10 = 0""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.tfDf(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
         // integer-exact projection; sampled to keep the oracle compare fast
         .where(col("id") % 10 === 0)
-    }),
-    "q56_asof_join" -> ((s, dir) => {
+    },
+    Query("q56_asof_join", Sql(
+      """WITH u AS (
+        |  SELECT event_id, user_id, ts, 1 AS side, CAST(NULL AS BIGINT) AS sid, event_id AS tie
+        |  FROM events WHERE event_type = 'purchase'
+        |  UNION ALL
+        |  SELECT NULL, user_id, ts, 0, event_id, event_id
+        |  FROM events WHERE event_type = 'signup'),
+        |m AS (SELECT *, LAST_VALUE(sid IGNORE NULLS) OVER (
+        |        PARTITION BY user_id ORDER BY ts, side, tie
+        |        ROWS UNBOUNDED PRECEDING) AS ls FROM u)
+        |SELECT event_id, user_id, COALESCE(ls, -1) AS last_signup_id
+        |FROM m WHERE side = 1""".stripMargin)) { (s, dir) =>
       // as-of: each purchase matched to the user's latest signup at-or-
       // before it (union + one per-key window; no range explosion)
       val ev = s.read.parquet(s"$dir/events.parquet")
@@ -425,16 +832,42 @@ object SparkEntry {
       Ops.asofJoin(purchases, signups, "user_id", "ts", "event_id")
         .select(col("event_id"), col("user_id"),
           coalesce(col("__m.event_id"), lit(-1L)).as("last_signup_id"))
-    }),
-    "q100_pii_redact" -> ((s, dir) => {
+    },
+    Query("q100_pii_redact", Sql(
+      s"""WITH $plantedPiiCte
+         |SELECT doc_id AS id,
+        |  regexp_replace(regexp_replace(regexp_replace(text,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}', '<IP>', 'g'),
+        |    '[0-9]{3}[-][0-9]{3}[-][0-9]{4}', '<PHONE>', 'g') AS clean_text,
+        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+        |  CAST(len(regexp_extract_all(text, '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}')) AS BIGINT) AS n_ips,
+        |  CAST(len(regexp_extract_all(text, '[0-9]{3}[-][0-9]{3}[-][0-9]{4}')) AS BIGINT) AS n_phones
+        |FROM planted""".stripMargin)) { (s, dir) =>
       // PII scrub over deterministically PLANTED contact blocks (the
       // corpus itself is synthetic words): every 5th doc gains an email,
       // an IPv4 and a phone; redaction swaps typed placeholders and
       // emits pre-redaction match counts
       graft.spark.TextOps.redactPii(
         plantPii(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text")
-    }),
-    "q108_stanag4676_ingest" -> ((s, dir) => {
+    },
+    Query("q108_stanag4676_ingest", Sql(
+      s"""WITH ev AS (
+         |  SELECT event_id, ${Tables.eventsLonSql} AS lon, ${Tables.eventsLatSql} AS lat, ts, value
+         |  FROM events WHERE event_id < 500)
+         |SELECT event_id AS input_id,
+         |  'm' || CAST(event_id % 7 AS VARCHAR) AS mission,
+         |  'TN' || CAST(event_id AS VARCHAR) AS track_number,
+         |  'uuid-' || CAST(event_id AS VARCHAR) AS track_uuid,
+         |  CASE CAST(event_id % 4 AS INTEGER) WHEN 0 THEN 'INITIATING' WHEN 1 THEN 'MAINTAINING'
+         |    WHEN 2 THEN 'DROPPING' ELSE 'STOPPED' END AS track_status,
+         |  'UNKNOWN' AS track_item_classification,
+         |  date_trunc('milliseconds', ts) AS ts,
+         |  value AS speed,
+         |  CAST(event_id % 360 AS DOUBLE) AS course,
+         |  lat, lon,
+         |  CAST(-1 AS BIGINT) AS end_ts_ms
+         |FROM ev""".stripMargin)) { (s, dir) =>
       // STANAG 4676 FORMAT-PLUGIN round trip: deterministic NATO track
       // messages built from the events geocode (one message per event:
       // one track, one TrackPoint item), parsed back through the
@@ -471,8 +904,17 @@ object SparkEntry {
           col("track_uuid"), col("track_status"), col("track_item_classification"),
           col("ts"), col("speed"), col("course"), col("lat"), col("lon"),
           col("end_ts_ms"))
-    }),
-    "q103_gdelt_ingest" -> ((s, dir) => {
+    },
+    Query("q103_gdelt_ingest", Sql(
+      s"""WITH ev AS (
+         |  SELECT event_id, event_type, ${graft.spark.Tables.eventsLonSql} AS lon,
+         |         ${graft.spark.Tables.eventsLatSql} AS lat, ts
+         |  FROM events)
+         |SELECT CAST(event_id AS INTEGER) AS eventid, CAST(ts AS DATE) AS ts, lat, lon,
+         |  event_type AS actor1, 'US' AS action_country,
+         |  CAST(event_id % 11 AS INTEGER) AS n_articles,
+         |  (event_id % 100) / 10.0 AS avg_tone
+         |FROM ev WHERE event_id < 500""".stripMargin)) { (s, dir) =>
       // GDELT format plugin round trip: 57-column tab-separated event
       // lines synthesized from the events geocode, parsed back through
       // the declarative line parser (column-count window, geo-type gate,
@@ -499,8 +941,18 @@ object SparkEntry {
       graft.spark.FlatGeoSource.gdeltEvents(lines, "line", extended = true)
         .select(col("eventid"), col("ts"), col("lat"), col("lon"),
           col("actor1"), col("action_country"), col("n_articles"), col("avg_tone"))
-    }),
-    "q102_gpx_ingest" -> ((s, dir) => {
+    },
+    Query("q102_gpx_ingest", Sql(
+      s"""$eventsCte
+         |SELECT
+         |  'e' || CAST(event_id AS VARCHAR) || '_' ||
+         |    (CASE WHEN lat < 0 THEN '-' ELSE '' END ||
+         |     lpad(CAST(CAST(round(abs(lat) * 10000000) AS BIGINT) AS VARCHAR), 10, '0')) || '_' ||
+         |    (CASE WHEN lon < 0 THEN '-' ELSE '' END ||
+         |     lpad(CAST(CAST(round(abs(lon) * 10000000) AS BIGINT) AS VARCHAR), 10, '0')) AS id,
+         |  'e' || CAST(event_id AS VARCHAR) AS name,
+         |  lat, lon, CAST(event_id % 100 AS DOUBLE) AS elevation
+         |FROM ev WHERE event_id < 500""".stripMargin)) { (s, dir) =>
       // FORMAT-PLUGIN round trip: deterministic GPX waypoint documents
       // built from the events geocode, parsed back through the
       // declarative GPX source (from_xml). The oracle recomputes the
@@ -520,8 +972,26 @@ object SparkEntry {
           lit("</ele></wpt></gpx>")))
       graft.spark.GpxSource.waypoints(src, "event_id", "xml")
         .select(col("id"), col("name"), col("lat"), col("lon"), col("elevation"))
-    }),
-    "q101_corpus_pipeline" -> ((s, dir) => {
+    },
+    Query("q101_corpus_pipeline", Sql(
+      s"""WITH $plantedPiiCte,
+         |scrub AS (
+         |  SELECT doc_id,
+         |    regexp_replace(regexp_replace(regexp_replace(text,
+         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}', '<EMAIL>', 'g'),
+         |      '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}', '<IP>', 'g'),
+         |      '[0-9]{3}[-][0-9]{3}[-][0-9]{4}', '<PHONE>', 'g') AS text
+         |  FROM planted),
+         |${chunkDedupCtes("scrub")},
+         |gated AS (
+         |  SELECT doc_id, clean_text,
+         |    CAST(len(list_filter(string_split(clean_text, ' '), x -> length(x) > 0)) AS BIGINT) AS n_words
+         |  FROM cclean)
+         |SELECT doc_id AS id,
+         |  CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val' ELSE 'test' END AS split,
+         |  n_words
+         |FROM (SELECT doc_id, n_words, ${duckHash("clean_text")} % 100 AS h
+         |      FROM gated WHERE n_words >= 20)""".stripMargin)) { (s, dir) =>
       // the COMPOSITE training-data pipeline as ONE declarative plan:
       // PII scrub → corpus-wide chunk dedup → word-count quality gate →
       // deterministic content-hash fold split. Every stage is an already
@@ -541,37 +1011,106 @@ object SparkEntry {
         .where(col("n_words") >= 20)
       t.hashSplit(gated, "clean_text", pctTrain = 80, pctVal = 10)
         .select(col("id"), col("split"), col("n_words"))
-    }),
-    "q98_repetition_quality" -> ((s, dir) => {
+    },
+    Query("q98_repetition_quality", Sql(
+      """WITH w AS (
+        |  SELECT doc_id, u.word
+        |  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws
+        |        FROM documents) d, UNNEST(d.ws) AS u(word)),
+        |wc AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
+        |tw AS (SELECT doc_id, max(c) AS top_word_cnt, CAST(sum(c) AS BIGINT) AS n_words
+        |       FROM wc GROUP BY 1),
+        |tri AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(ws) >= 3 THEN len(ws) - 2 ELSE 0 END AS n_trigrams,
+        |    CASE WHEN len(ws) >= 3 THEN len(ws) - 2 - len(list_distinct(
+        |      list_transform(range(1, CAST(len(ws) - 1 AS BIGINT)),
+        |        i -> ws[CAST(i AS BIGINT)] || ' ' || ws[CAST(i + 1 AS BIGINT)] || ' ' || ws[CAST(i + 2 AS BIGINT)])))
+        |    ELSE 0 END AS dup_trigram_cnt
+        |  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws
+        |        FROM documents))
+        |SELECT d.doc_id AS id,
+        |  COALESCE(tw.n_words, 0) AS n_words,
+        |  COALESCE(tw.top_word_cnt, 0) AS top_word_cnt,
+        |  CAST(tri.n_trigrams AS BIGINT) AS n_trigrams,
+        |  CAST(tri.dup_trigram_cnt AS BIGINT) AS dup_trigram_cnt
+        |FROM documents d
+        |LEFT JOIN tw ON tw.doc_id = d.doc_id
+        |JOIN tri ON tri.doc_id = d.doc_id""".stripMargin)) { (s, dir) =>
       // Gopher-style repetition signals: top-word share + duplicate-trigram
       // fraction as exact integer counts (thresholds stay caller policy)
       graft.spark.TextOps.repetitionSignals(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    }),
-    "q99_chunk_dedup" -> ((s, dir) => {
+    },
+    Query("q99_chunk_dedup", Sql(
+      s"""WITH ${chunkDedupCtes("documents")}
+         |SELECT doc_id AS id, clean_text FROM cclean""".stripMargin)) { (s, dir) =>
       // corpus-wide chunk dedup: 8-word chunks occurring in >2 distinct
       // docs are boilerplate — removed everywhere, survivors reassemble
       // in order (docs losing everything come back empty, not dropped)
       graft.spark.TextOps.dedupChunks(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         chunkWords = 8, maxDocs = 2)
-    }),
-    "q54_quality_ext" -> ((s, dir) => {
+    },
+    Query("q54_quality_ext", Sql(
+      """WITH w AS (SELECT doc_id, text,
+        |  list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws FROM documents)
+        |SELECT doc_id AS id,
+        |  CAST(len(ws) AS BIGINT) AS n_words,
+        |  CASE WHEN len(ws) = 0 THEN CAST(0 AS BIGINT)
+        |       ELSE CAST(FLOOR(CAST(CAST(list_sum(list_transform(ws, x -> length(x))) AS BIGINT) * 100 AS DOUBLE) / len(ws)) AS BIGINT) END AS mean_word_len_c,
+        |  CAST(len(list_filter(ws, x -> x IN ('the', 'and', 'of'))) AS BIGINT) AS stopword_cnt,
+        |  CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS digit_cnt,
+        |  CAST(len(regexp_extract_all(text, '[A-Z]')) AS BIGINT) AS upper_cnt,
+        |  CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS BIGINT) AS symbol_cnt
+        |FROM w""".stripMargin)) { (s, dir) =>
       graft.spark.TextOps.qualityScore(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")
-    }),
-    "q55_geohash" -> ((s, dir) => {
+    },
+    Query("q55_geohash", Sql {
+      // 6 chars = 30 bits (15 lon ‖ 15 lat, interleaved lon-first): the
+      // bisection equals the binary digits of floor(norm * 2^15); boundary
+      // grid points are dyadic, so the float math agrees bit-for-bit
+      val interleave = (0 until 15).map { b =>
+        s"(((xi >> ${14 - b}) & 1) << ${29 - 2 * b}) + (((yi >> ${14 - b}) & 1) << ${28 - 2 * b})"
+      }.mkString(" + ")
+      val chars = (0 until 6).map { c =>
+        s"substr('0123456789bcdefghjkmnpqrstuvwxyz', CAST((v >> ${25 - 5 * c}) & 31 AS INTEGER) + 1, 1)"
+      }.mkString(" || ")
+      s"""$pagesCte,
+         |gidx AS (SELECT doc_id,
+         |  CAST(FLOOR((lon + 180) / 360 * 32768) AS BIGINT) AS xi,
+         |  CAST(FLOOR((lat + 90) / 180 * 32768) AS BIGINT) AS yi
+         |  FROM pages),
+         |iv AS (SELECT doc_id, $interleave AS v FROM gidx)
+         |SELECT doc_id, $chars AS gh FROM iv""".stripMargin
+    }) { (s, dir) =>
       import graft.spark.GeoFunctions._
       // geohash as an alternative cell scheme; decoded bounds must contain
       // the point — the SQL twin recomputes the prefix bisection directly
       Tables.pages(s, dir).select(col("doc_id"),
         gw_geohash(col("lon"), col("lat"), 6).as("gh"))
-    }),
-    "q53_decimate" -> ((s, dir) => {
+    },
+    Query("q53_decimate", Sql {
+      val bins = 32
+      s"""$pagesCte
+         |SELECT doc_id, tx, ty FROM (
+         |  SELECT doc_id, tx, ty, ROW_NUMBER() OVER (PARTITION BY tx, ty ORDER BY doc_id) AS rn
+         |  FROM (
+         |    SELECT doc_id,
+         |      CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+         |      CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
+         |    FROM pages)
+         |) WHERE rn <= 3""".stripMargin
+    }) { (s, dir) =>
       Ops.decimateForRender(Tables.pages(s, dir), "doc_id", viewBits = 5, maxPerCell = 3)
         .select(col("doc_id"), col("tx"), col("ty"))
-    }),
-    "q97_field_visibility" -> ((s, dir) => {
+    },
+    Query("q97_field_visibility", Sql(
+      """SELECT doc_id,
+        |  CASE WHEN CAST(doc_id % 3 AS INTEGER) = 2 THEN source END AS source,
+        |  CASE WHEN CAST(doc_id % 3 AS INTEGER) <> 1 THEN text END AS text
+        |FROM documents""".stripMargin)) { (s, dir) =>
       // FIELD-level visibility from a JSON definition attribute
       // (JsonDefinitionColumnVisibilityManagement): rotating definitions —
       // exact key + ordered regex, a catch-all regex, and an unparseable
@@ -585,8 +1124,12 @@ object SparkEntry {
       graft.spark.Visibility.redactFields(docs, "vis", Seq("a"),
           Seq("source", "text"), defaultVis = "a")
         .select(col("doc_id"), col("source"), col("text"))
-    }),
-    "q52_visibility" -> ((s, dir) => {
+    },
+    Query("q52_visibility", Sql(
+      """SELECT doc_id,
+        |  CASE CAST(doc_id % 4 AS INTEGER) WHEN 0 THEN 'a' WHEN 1 THEN 'b&a'
+        |       WHEN 2 THEN 'c|b' ELSE '(a|c)&d' END AS vis
+        |FROM documents WHERE doc_id % 4 IN (0, 3)""".stripMargin)) { (s, dir) =>
       // row-level visibility: 4 rotating expressions, auths {a, d} pass
       // 'a' and '(a|c)&d' but not 'b&a' or 'c|b'
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -595,34 +1138,71 @@ object SparkEntry {
           (col("doc_id") % 4).cast("int") + 1))
       graft.spark.Visibility.filter(docs, "vis", Seq("a", "d"))
         .select(col("doc_id"), col("vis"))
-    }),
-    "q50_sessionize" -> ((s, dir) => {
+    },
+    Query("q50_sessionize", Sql(
+      """WITH w AS (
+        |  SELECT user_id, event_id, ts,
+        |    CASE WHEN LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+        |      OR epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
+        |      THEN 1 ELSE 0 END AS new_sess
+        |  FROM events),
+        |s AS (SELECT user_id, ts,
+        |  SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |    ROWS UNBOUNDED PRECEDING) AS session_id FROM w)
+        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+        |  COUNT(*) AS n_events, MIN(ts) AS start_ts, MAX(ts) AS end_ts
+        |FROM s GROUP BY 1, 2""".stripMargin)) { (s, dir) =>
       Ops.sessionize(s.read.parquet(s"$dir/events.parquet"),
         "user_id", "event_id", "ts", gapMicros = 1800L * 1000000)
-    }),
-    "q51_neardup_clusters" -> ((s, dir) => {
+    },
+    Query("q51_neardup_clusters", Sql(
+      s"""WITH RECURSIVE $minhashCtes,
+         |dup AS (SELECT a_id, b_id FROM ($jaccardTail)),
+         |e AS (SELECT a_id AS src, b_id AS dst FROM dup
+         |      UNION ALL SELECT b_id, a_id FROM dup
+         |      UNION ALL SELECT doc_id, doc_id FROM documents),
+         |reach(src, dst) AS (
+         |  SELECT src, dst FROM e
+         |  UNION
+         |  SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
+         |SELECT src AS id, MIN(dst) AS cluster, (MIN(dst) = src) AS is_keeper
+         |FROM reach GROUP BY 1""".stripMargin)) { (s, dir) =>
       // LSH pairs → connected components → keeper pick, the full dedup
       // collapse over the q17 candidate/verify ladder
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val pairs = graft.spark.TextOps.minhashLshPairs(docs, "doc_id", "text",
         n = 3, bands = 4, rowsPerBand = 4, tau = 0.5, maxBucket = 10)
       graft.spark.TextOps.nearDupClusters(docs, "doc_id", pairs)
-    }),
-    "q49_secondary_index" -> ((s, dir) => {
+    },
+    Query("q49_secondary_index", Sql(
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_totalprice >= 50000.0 AND o_totalprice <= 100000.0""".stripMargin)) { (s, dir) =>
       // stored secondary numeric index: lexicoded-value byte-range scan on
       // the index table, primary-key join back — exact vs a plain BETWEEN
       val orders = s.read.parquet(s"$dir/orders.parquet")
       val idx = graft.spark.SecondaryIndex.build(orders, "o_orderkey", "o_totalprice")
       graft.spark.SecondaryIndex.queryRange(orders, idx, "o_orderkey", 50000.0, 100000.0)
         .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-    "q61_kde_levels" -> ((s, dir) => {
+    },
+    Query("q61_kde_levels", Sql(kdeLevelsSql(minBits = 3, maxBits = 5))) { (s, dir) =>
       // pyramid KDE: all zoom levels in one job, 3 bands per cell
       // (weight, normalized, percentile) — KDEJobRunner per-level loop +
       // AccumuloKDEReducer 3-band emit as a single dataflow
       graft.spark.Analytics.kdeMultiLevel(Tables.pages(s, dir), minBits = 3, maxBits = 5)
-    }),
-    "q62_bucketed_join" -> ((s, dir) => {
+    },
+    Query("q62_bucketed_join", Sql {
+      val bins = 64
+      def tileCte(src: String, lonSql: String, latSql: String) =
+        s"""SELECT
+           |  CAST(GREATEST(CEIL((($lonSql + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+           |  CAST(GREATEST(CEIL((($latSql + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
+           |FROM $src""".stripMargin
+      s"""WITH p AS (${tileCte("documents", Tables.pagesLonSql, Tables.pagesLatSql)}),
+         |e AS (${tileCte("events", Tables.eventsLonSql, Tables.eventsLatSql)})
+         |SELECT p.tx, p.ty, CAST(COUNT(*) AS BIGINT) AS n_pairs
+         |FROM p JOIN e ON p.tx = e.tx AND p.ty = e.ty
+         |GROUP BY 1, 2""".stripMargin
+    }) { (s, dir) =>
       // store⋈store tile join over two tables BUCKETED by (tx, ty): Spark
       // reads matching buckets pairwise — no exchange on either side
       // (Round2Spec pins the plan); at 100 TB this removes the dominant
@@ -641,46 +1221,61 @@ object SparkEntry {
       s.table("graft_q62_pages")
         .join(s.table("graft_q62_events"), Seq("tx", "ty"))
         .groupBy("tx", "ty").agg(count(lit(1)).as("n_pairs"))
-    }),
-    "q63_dateline_box" -> ((s, dir) => {
+    },
+    Query("q63_dateline_box", Sql(
+      s"""$pagesCte
+         |SELECT doc_id, lon, lat FROM pages
+         |WHERE (lon >= 150.0 OR lon <= -150.0) AND lat >= -40.0 AND lat <= 40.0""".stripMargin)) { (s, dir) =>
       // antimeridian-crossing box (lonMin > lonMax): the longitude bin
       // split fires on the index side (LongitudeDefinition semantics) and
       // the fine filter wraps (boxPredicate OR-form) — end to end
       Ops.spatialBoxQuery(Tables.pages(s, dir), 150.0, -150.0, -40.0, 40.0)
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q48_multi_index" -> ((s, dir) => {
+    },
+    Query("q48_multi_index", Sql(eventsStBoxSql)) { (s, dir) =>
       // multi-index store (spatial + spatial-temporal keys) queried through
       // the best-match chooser; same semantics and oracle as q03
       val store = graft.spark.MultiIndex.encode(Tables.geoEvents(s, dir))
       graft.spark.MultiIndex.queryBest(store, Box._1, Box._2, Box._3, Box._4,
         Some(TsMin), Some(TsMax))._2
         .select(col("event_id"), col("lon"), col("lat"), col("ts"))
-    }),
-    "q65_hash_split" -> ((s, dir) => {
+    },
+    Query("q65_hash_split", Sql(
+      s"""SELECT CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val' ELSE 'test' END AS split,
+         |       CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
+         |FROM (SELECT n_chars, ${duckHash("text")} % 100 AS h FROM documents)
+         |GROUP BY 1""".stripMargin)) { (s, dir) =>
       // deterministic content-hash train/val/test split (dup pairs land in
       // one fold; assignment survives re-ingest) — per-fold profile
       graft.spark.TextOps.hashSplit(
           s.read.parquet(s"$dir/documents.parquet"), "text", pctTrain = 80, pctVal = 10)
         .groupBy("split")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-    }),
-    "q66_host_cap" -> ((s, dir) => {
+    },
+    Query("q66_host_cap", Sql(
+      s"""SELECT doc_id, source FROM (
+         |  SELECT doc_id, source,
+         |         ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+         |  FROM documents) WHERE rn <= 3""".stripMargin)) { (s, dir) =>
       // per-host page cap (keep the 3 lowest doc_ids per source) — the
       // domain-balance guard of web-crawl training pipelines
       graft.spark.TextOps.capPerKey(
           s.read.parquet(s"$dir/documents.parquet"), "source", "doc_id", k = 3)
         .select(col("doc_id"), col("source"))
-    }),
-    "q68_text_range" -> ((s, dir) => {
+    },
+    Query("q68_text_range", Sql(
+      s"""SELECT doc_id, n_chars FROM documents
+         |WHERE lower(text) >= 'the' AND lower(text) <= 'these'""".stripMargin)) { (s, dir) =>
       // case-insensitive lexicographic text range (TextRangeFilter):
       // whole-value BETWEEN with both sides case-folded
       graft.spark.TextOps.textRange(
           s.read.parquet(s"$dir/documents.parquet"), "text",
           "the", "these", caseSensitive = false)
         .select(col("doc_id"), col("n_chars"))
-    }),
-    "q69_text_range_indexed" -> ((s, dir) => {
+    },
+    Query("q69_text_range_indexed", Sql(
+      s"""SELECT doc_id AS id FROM documents
+         |WHERE lower(text) >= 'the' AND lower(text) <= 'these'""".stripMargin)) { (s, dir) =>
       // the same whole-value range THROUGH the stored ANCHORED index:
       // boundary-gram byte-range probe + exact verify (same answer as
       // q68 by construction; the index is an ingest artifact, reused)
@@ -688,8 +1283,8 @@ object SparkEntry {
       graft.spark.TextIndex.rangeSearchStored(s, docs, "doc_id", "text",
         "the", "these", tmpIndexPath(dir, "graft-textanchored"),
         caseSensitive = false)
-    }),
-    "q72_kde_pyramid_tiles" -> ((s, dir) => {
+    },
+    Query("q72_kde_pyramid_tiles", Sql(kdePyramidTilesSql(minBits = 3, maxBits = 5, tileBits = 2))) { (s, dir) =>
       // per-(level, tile) 3-band pyramid KDE tiles in one job
       // (AccumuloKDEReducer 3-band emit × KDEJobRunner level loop);
       // posexplode projects the assembled band arrays back to dense
@@ -703,8 +1298,8 @@ object SparkEntry {
           col("col.band_weight").as("w"),
           col("col.band_norm").as("norm"),
           col("col.band_pct").as("pr"))
-    }),
-    "q73_balanced_scan" -> ((s, dir) => {
+    },
+    Query("q73_balanced_scan", Sql(pagesBoxSql)) { (s, dir) =>
       // the MR-split equalizer END TO END: a box scan routed through
       // histogram-planned splits (SplitsProvider semantics, ZERO sampling
       // passes — boundaries come from the stored prefix histogram), split
@@ -723,15 +1318,32 @@ object SparkEntry {
         .where(graft.spark.SpatialPlanner.boxPredicate(col("lon"), col("lat"),
           Box._1, Box._2, Box._3, Box._4))
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q76_like_filter" -> ((s, dir) => {
+    },
+    Query("q76_like_filter", Sql {
+      // regexp_full_match (RE2), not LIKE: SQL LIKE's % crosses newlines
+      // while the reference's Matcher.matches() `.*` does not. RE2's `.`
+      // excludes only \n, while Java's also excludes \r, NEL and the
+      // Unicode line/paragraph separators - spell out the exact Java
+      // dot class so the oracle matches likeSearch on ANY corpus.
+      val d = """[^\x{000A}\x{000D}\x{0085}\x{2028}\x{2029}]"""
+      s"SELECT doc_id AS id FROM documents WHERE regexp_full_match(text, '$d*the$d* the$d*')"
+    }) { (s, dir) =>
       // the reference's LIKE filter semantics (LikeFilter/
       // FilterableLikeConstraint: % -> .*, FULL-value match) — the
       // %-only pattern makes SQL LIKE the exact oracle
       graft.spark.TextOps.likeSearch(s.read.parquet(s"$dir/documents.parquet"),
         "doc_id", "text", "%the% the%", caseSensitive = true)
-    }),
-    "q77_stream_window" -> ((s, dir) => {
+    },
+    Query("q77_stream_window", Sql {
+      val bins = 64
+      s"""$eventsCte
+         |SELECT TIMESTAMP '1970-01-01 00:00:00'
+         |         + INTERVAL '1 day' * CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS win_start,
+         |  CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+         |  CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty,
+         |  COUNT(*) AS cnt
+         |FROM ev GROUP BY 1, 2, 3""".stripMargin
+    }) { (s, dir) =>
       // watermarked tumbling-window per-tile counts as a REAL streaming
       // query (file source -> watermark -> window agg -> memory sink,
       // complete mode so every window is emitted under AvailableNow);
@@ -747,8 +1359,16 @@ object SparkEntry {
       streamToTable(s, agg, "complete", "q77")
         .select(col("win_start").cast("timestamp_ntz").as("win_start"),
           col("tx"), col("ty"), col("cnt"))
-    }),
-    "q79_stream_state" -> ((s, dir) => {
+    },
+    Query("q79_stream_state", Sql {
+      val bins = 64
+      s"""$eventsCte
+         |SELECT tx * $bins + ty AS tile, COUNT(*) AS cnt FROM (
+         |  SELECT
+         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
+         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
+         |  FROM ev) GROUP BY 1""".stripMargin
+    }) { (s, dir) =>
       // custom streaming state end to end: mapGroupsWithState running
       // per-tile totals (update-mode memory sink). Totals are monotone
       // across micro-batches, so max(total) per tile == the batch count
@@ -760,8 +1380,14 @@ object SparkEntry {
       val totals = graft.streaming.StreamIngest.runningTileCounts(withGeo, bits = 6)
       streamToTable(s, totals.toDF("tile", "total"), "update", "q79")
         .groupBy("tile").agg(max(col("total")).as("cnt"))
-    }),
-    "q80_stream_enrich" -> ((s, dir) => {
+    },
+    Query("q80_stream_enrich", Sql(
+      s"""$eventsCte
+         |SELECT e.event_id, r.region_id
+         |FROM ev e
+         |JOIN (VALUES ${Tables.regionBoxesSqlValues(40)}) r(region_id, lon_min, lon_max, lat_min, lat_max)
+         |  ON e.lon >= r.lon_min AND e.lon <= r.lon_max
+         | AND e.lat >= r.lat_min AND e.lat <= r.lat_max""".stripMargin)) { (s, dir) =>
       // stream-static spatial enrichment end to end: the region polygons
       // ride inside the broadcast point-in-polygon expression (stateless
       // per micro-batch — no stream state, no watermark needed in append
@@ -773,8 +1399,10 @@ object SparkEntry {
         Tables.addEventGeo(in), Tables.regionGeoms(40))
       streamToTable(s, enriched.select(col("event_id"), col("region_id")),
         "append", "q80")
-    }),
-    "q81_stream_dedup" -> ((s, dir) => {
+    },
+    Query("q81_stream_dedup", Sql(
+      ("SELECT DISTINCT event_type || '#' || CAST(event_id % 1000 AS VARCHAR) " +
+        "AS content FROM events"))) { (s, dir) =>
       // streaming exact dedup (dropDuplicatesWithinWatermark) end to
       // end: the horizon exceeds the fixture's whole time span, so no
       // state is evicted and the emitted key set is exactly the batch
@@ -790,8 +1418,15 @@ object SparkEntry {
       val dd = graft.streaming.StreamIngest.dedupedStream(
         keyed, "ts", "content", watermarkDelay = "3650 days")
       streamToTable(s, dd.select(col("content")), "append", "q81")
-    }),
-    "q82_coord_cosine" -> ((s, dir) => {
+    },
+    Query("q82_coord_cosine", Sql(
+      s"""WITH ev AS (
+         |  SELECT event_id, ${Tables.eventsLonSql} AS lon, ${Tables.eventsLatSql} AS lat, value
+         |  FROM events)
+         |SELECT event_id,
+         |  (lon*3.0 + lat*2.0 + value*1.0) /
+         |    (sqrt(lon*lon + lat*lat + value*value) * sqrt(3.0*3.0 + 2.0*2.0 + 1.0*1.0)) AS cosine
+         |FROM ev WHERE NOT (lon = 0 AND lat = 0 AND value = 0)""".stripMargin)) { (s, dir) =>
       // CoordinateCosineDistanceFn over (lon, lat, value) vs the FIXED
       // vector (3, 2, 1): division/sqrt are IEEE-deterministic, so the
       // DuckDB twin with the identical expression tree matches
@@ -808,8 +1443,8 @@ object SparkEntry {
         .select(col("event_id"),
           st_coord_cosine(col("lon"), col("lat"), col("value"),
             lit(3.0), lit(2.0), lit(1.0)).as("cosine"))
-    }),
-    "q83_vincenty" -> ((s, dir) => {
+    },
+    Query("q83_vincenty", GoldenSpec("graft.spark.SpatialQueryPortSpec")) { (s, dir) =>
       // ellipsoidal geodesic meters to a fixed anchor. Vincenty is an
       // iterative formula — not SQL-expressible — so this runs under the
       // weaker rows-only gate; the bit-level gate is the reference's own
@@ -818,8 +1453,12 @@ object SparkEntry {
       import graft.spark.GeoFunctions.st_distance_vincenty
       Tables.geoEvents(s, dir).select(col("event_id"),
         st_distance_vincenty(col("lon"), col("lat"), lit(0.0), lit(0.0)).as("dist_m"))
-    }),
-    "q84_quantile_hist" -> ((s, dir) => {
+    },
+    Query("q84_quantile_hist", Sql(
+      // the oracle pins the IN-QUERY verification verdicts (see the q84
+      // query comment): exact row count + all rank/monotonicity checks TRUE
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n, TRUE AS cnt_ok, TRUE AS ok25,
+        |  TRUE AS ok50, TRUE AS ok75, TRUE AS mono_ok FROM events""".stripMargin)) { (s, dir) =>
       // the mergeable Ben-Haim/Tom-Tov histogram end to end: per-
       // partition streaming histograms -> Algorithm-2 merge -> quartiles
       // of the events value column. The trim's tie-break PRNG and the
@@ -845,8 +1484,61 @@ object SparkEntry {
         rankOk(p50, 0.50).as("ok50"),
         rankOk(p75, 0.75).as("ok75"),
         lit(p25 <= p50 && p50 <= p75).as("mono_ok"))
-    }),
-    "q78_raster_mosaic" -> ((s, dir) => {
+    },
+    Query("q78_raster_mosaic", Sql {
+      def px(x: String, y: String) =
+        s"CAST(CASE WHEN (tx*64 + ty*16 + ($y*8 + $x)) % 13 = 0 THEN 0 " +
+          s"ELSE (tx*31 + ty*17 + ($y*8 + $x)*7) % 256 END AS DOUBLE)"
+      s"""WITH targets AS (
+         |  SELECT a.gx, b.gy FROM (SELECT unnest(range(4)) AS gx) a,
+         |                         (SELECT unnest(range(4)) AS gy) b),
+         |tb AS (
+         |  SELECT gx, gy,
+         |    CAST(gx AS DOUBLE)/4*360 - 180 AS dlonmin,
+         |    CAST(gx+1 AS DOUBLE)/4*360 - 180 AS dlonmax,
+         |    GREATEST(CAST(gy AS DOUBLE)/4*360 - 180, -90.0) AS dlatmin,
+         |    LEAST(CAST(gy+1 AS DOUBLE)/4*360 - 180, 90.0) AS dlatmax
+         |  FROM targets),
+         |pairs AS (
+         |  SELECT t.*, gx*2 + x.cx AS tx, gy*2 + y.cy AS ty,
+         |    CAST(gx*2 + x.cx AS DOUBLE)/8*360 - 180 AS slonmin,
+         |    CAST(gx*2 + x.cx + 1 AS DOUBLE)/8*360 - 180 AS slonmax,
+         |    GREATEST(CAST(gy*2 + y.cy AS DOUBLE)/8*360 - 180, -90.0) AS slatmin,
+         |    LEAST(CAST(gy*2 + y.cy + 1 AS DOUBLE)/8*360 - 180, 90.0) AS slatmax
+         |  FROM tb t, (SELECT unnest(range(2)) AS cx) x, (SELECT unnest(range(2)) AS cy) y),
+         |pixels AS (
+         |  SELECT p.*, ii.i, jj.j, CAST(jj.j*8 + ii.i AS BIGINT) AS pos,
+         |    dlonmin + (ii.i + 0.5)/8*(dlonmax - dlonmin) AS wx,
+         |    dlatmin + (jj.j + 0.5)/8*(dlatmax - dlatmin) AS wy,
+         |    slonmax - slonmin AS sw, slatmax - slatmin AS sh
+         |  FROM pairs p, (SELECT unnest(range(8)) AS i) ii, (SELECT unnest(range(8)) AS j) jj),
+         |uv AS (
+         |  SELECT *,
+         |    CASE WHEN sw > 0 AND sh > 0 AND wx >= slonmin AND wx < slonmax
+         |              AND wy >= slatmin AND wy < slatmax THEN 1 ELSE 0 END AS ok,
+         |    CASE WHEN sw > 0 THEN (wx - slonmin)/sw*8 - 0.5 ELSE 0.0 END AS u,
+         |    CASE WHEN sh > 0 THEN (wy - slatmin)/sh*8 - 0.5 ELSE 0.0 END AS v
+         |  FROM pixels),
+         |cl AS (
+         |  SELECT *, GREATEST(0, LEAST(7, CAST(FLOOR(u) AS INTEGER))) AS u0,
+         |            GREATEST(0, LEAST(7, CAST(FLOOR(v) AS INTEGER))) AS v0
+         |  FROM uv),
+         |cl2 AS (
+         |  SELECT *, LEAST(7, u0 + 1) AS u1, LEAST(7, v0 + 1) AS v1,
+         |    GREATEST(0.0, LEAST(1.0, u - u0)) AS fu,
+         |    GREATEST(0.0, LEAST(1.0, v - v0)) AS fv
+         |  FROM cl),
+         |contrib AS (
+         |  SELECT gx, gy, pos, ok,
+         |    ${px("u0", "v0")}*(1 - fu)*(1 - fv) + ${px("u1", "v0")}*fu*(1 - fv)
+         |      + ${px("u0", "v1")}*(1 - fu)*fv + ${px("u1", "v1")}*fu*fv AS value
+         |  FROM cl2)
+         |SELECT CAST(gx AS BIGINT) AS ntx, CAST(gy AS BIGINT) AS nty, pos,
+         |  CAST(SUM(CASE WHEN ok = 1
+         |                THEN LEAST(255, GREATEST(0, CAST(ROUND(value) AS INTEGER)))
+         |                ELSE 0 END) AS BIGINT) AS v
+         |FROM contrib GROUP BY 1, 2, 3""".stripMargin
+    }) { (s, dir) =>
       // the UPSCALE direction of the re-tile: bits=3 tiles into bits=2
       // targets — four children resample into disjoint pixel regions of
       // each target and mosaicMerge composes them (no-data override;
@@ -870,8 +1562,61 @@ object SparkEntry {
         .select(col("ntx"), col("nty"), posexplode(expr(
           "transform(sequence(0, 63), k -> CAST(conv(hex(substring(payload, k + 1, 1)), 16, 10) AS BIGINT))")))
         .select(col("ntx"), col("nty"), col("pos").cast("long").as("pos"), col("col").as("v"))
-    }),
-    "q75_raster_resize" -> ((s, dir) => {
+    },
+    Query("q75_raster_resize", Sql {
+      def px(x: String, y: String) =
+        s"CAST(CASE WHEN (tx*64 + ty*16 + ($y*8 + $x)) % 13 = 0 THEN 0 " +
+          s"ELSE (tx*31 + ty*17 + ($y*8 + $x)*7) % 256 END AS DOUBLE)"
+      s"""WITH parents AS (
+         |  SELECT a.tx, b.ty FROM (SELECT unnest(range(4)) AS tx) a,
+         |                         (SELECT unnest(range(4)) AS ty) b),
+         |cb AS (
+         |  SELECT tx, ty,
+         |    CAST(tx AS DOUBLE)/4*360 - 180 AS slonmin,
+         |    CAST(tx+1 AS DOUBLE)/4*360 - 180 AS slonmax,
+         |    GREATEST(CAST(ty AS DOUBLE)/4*360 - 180, -90.0) AS slatmin,
+         |    LEAST(CAST(ty+1 AS DOUBLE)/4*360 - 180, 90.0) AS slatmax
+         |  FROM parents),
+         |children AS (
+         |  SELECT cb.*, tx*2 + x.cx AS ntx, ty*2 + y.cy AS nty,
+         |    CAST(tx*2 + x.cx AS DOUBLE)/8*360 - 180 AS dlonmin,
+         |    CAST(tx*2 + x.cx + 1 AS DOUBLE)/8*360 - 180 AS dlonmax,
+         |    GREATEST(CAST(ty*2 + y.cy AS DOUBLE)/8*360 - 180, -90.0) AS dlatmin,
+         |    LEAST(CAST(ty*2 + y.cy + 1 AS DOUBLE)/8*360 - 180, 90.0) AS dlatmax
+         |  FROM cb, (SELECT unnest(range(2)) AS cx) x, (SELECT unnest(range(2)) AS cy) y),
+         |pixels AS (
+         |  SELECT c.*, ii.i, jj.j, CAST(jj.j*8 + ii.i AS BIGINT) AS pos,
+         |    dlonmin + (ii.i + 0.5)/8*(dlonmax - dlonmin) AS wx,
+         |    dlatmin + (jj.j + 0.5)/8*(dlatmax - dlatmin) AS wy,
+         |    slonmax - slonmin AS sw, slatmax - slatmin AS sh
+         |  FROM children c, (SELECT unnest(range(8)) AS i) ii, (SELECT unnest(range(8)) AS j) jj),
+         |uv AS (
+         |  SELECT *,
+         |    CASE WHEN sw > 0 AND sh > 0 AND wx >= slonmin AND wx < slonmax
+         |              AND wy >= slatmin AND wy < slatmax THEN 1 ELSE 0 END AS ok,
+         |    CASE WHEN sw > 0 THEN (wx - slonmin)/sw*8 - 0.5 ELSE 0.0 END AS u,
+         |    CASE WHEN sh > 0 THEN (wy - slatmin)/sh*8 - 0.5 ELSE 0.0 END AS v
+         |  FROM pixels),
+         |cl AS (
+         |  SELECT *, GREATEST(0, LEAST(7, CAST(FLOOR(u) AS INTEGER))) AS u0,
+         |            GREATEST(0, LEAST(7, CAST(FLOOR(v) AS INTEGER))) AS v0
+         |  FROM uv),
+         |cl2 AS (
+         |  SELECT *, LEAST(7, u0 + 1) AS u1, LEAST(7, v0 + 1) AS v1,
+         |    GREATEST(0.0, LEAST(1.0, u - u0)) AS fu,
+         |    GREATEST(0.0, LEAST(1.0, v - v0)) AS fv
+         |  FROM cl),
+         |vals AS (
+         |  SELECT ntx, nty, pos, ok,
+         |    ${px("u0", "v0")}*(1 - fu)*(1 - fv) + ${px("u1", "v0")}*fu*(1 - fv)
+         |      + ${px("u0", "v1")}*(1 - fu)*fv + ${px("u1", "v1")}*fu*fv AS value
+         |  FROM cl2)
+         |SELECT CAST(ntx AS BIGINT) AS ntx, CAST(nty AS BIGINT) AS nty, pos,
+         |  CAST(CASE WHEN ok = 1
+         |            THEN LEAST(255, GREATEST(0, CAST(ROUND(value) AS INTEGER)))
+         |            ELSE 0 END AS BIGINT) AS v
+         |FROM vals""".stripMargin
+    }) { (s, dir) =>
       // REAL bilinear world-to-screen tile resample oracle-gated per
       // pixel (RasterDataAdapter.java:665-733 resample ×
       // RasterTileResizeJobRunner map→merge): deterministic synthetic
@@ -898,8 +1643,28 @@ object SparkEntry {
         .select(col("ntx"), col("nty"), posexplode(expr(
           "transform(sequence(0, 63), k -> CAST(conv(hex(substring(payload, k + 1, 1)), 16, 10) AS BIGINT))")))
         .select(col("ntx"), col("nty"), col("pos").cast("long").as("pos"), col("col").as("v"))
-    }),
-    "q74_raster_stats" -> ((s, dir) => {
+    },
+    Query("q74_raster_stats", Sql(
+      s"""WITH px AS (
+         |  SELECT doc_id AS tile_id, i,
+         |    CASE WHEN (doc_id + i) % 11 = 0 THEN 0 ELSE (doc_id * 31 + i * 7) % 256 END AS v
+         |  FROM documents, (SELECT unnest(range(64)) AS i)),
+         |st AS (
+         |  SELECT tile_id,
+         |    CAST(COUNT(*) AS BIGINT) AS n_pixels,
+         |    CAST(SUM(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_nodata,
+         |    CAST(COALESCE(MIN(CASE WHEN v <> 0 THEN v END), 0) AS BIGINT) AS px_min,
+         |    CAST(COALESCE(MAX(CASE WHEN v <> 0 THEN v END), 0) AS BIGINT) AS px_max,
+         |    CAST(COALESCE(SUM(CASE WHEN v <> 0 THEN v END), 0) AS BIGINT) AS px_sum
+         |  FROM px GROUP BY 1),
+         |hist AS (
+         |  SELECT p.tile_id, b.bin,
+         |    CAST(COALESCE(SUM(CASE WHEN p.v <> 0 AND (p.v >> 4) = b.bin THEN 1 END), 0) AS BIGINT) AS bin_cnt
+         |  FROM px p, (SELECT unnest(range(16)) AS bin) b
+         |  GROUP BY 1, 2)
+         |SELECT st.tile_id, st.n_pixels, st.n_nodata, st.px_min, st.px_max, st.px_sum,
+         |       h.bin, h.bin_cnt
+         |FROM st JOIN hist h USING (tile_id)""".stripMargin)) { (s, dir) =>
       // per-tile raster pixel statistics (RasterBoundingBoxStatistics /
       // HistogramStatistics family) over deterministic synthetic
       // grayscale tiles: byte i of tile t is (t*31 + i*7) % 256 with
@@ -920,8 +1685,15 @@ object SparkEntry {
         .select(col("tile_id"), col("n_pixels"), col("n_nodata"),
           col("px_min"), col("px_max"), col("px_sum"),
           col("pos").cast("long").as("bin"), col("col").as("bin_cnt"))
-    }),
-    "q70_delete_store" -> ((s, dir) => {
+    },
+    Query("q70_delete_store", Sql(
+      // the delete path's anti-join oracle (BaseDataStore.java:327-499
+      // semantics): survivors = everything minus the id set minus the
+      // spatial predicate
+      s"""$pagesCte
+         |SELECT doc_id, lon, lat FROM pages
+         |WHERE doc_id NOT IN (11, 101, 202, 303, 404)
+         |  AND NOT (lon >= 100.0 AND lat >= 20.0)""".stripMargin)) { (s, dir) =>
       // the copy-on-write DELETE path, oracle-gated end to end: ingest a
       // salted sorted store (fingerprinted artifact — committed buckets
       // skip), delete by ids THROUGH the inline-maintained alt index,
@@ -943,8 +1715,14 @@ object SparkEntry {
         col("lon") >= 100.0 && col("lat") >= 20.0)
       graft.spark.Ingest.readStore(s, path)
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q86_stats_clipped_box" -> ((s, dir) => {
+    },
+    Query("q86_stats_clipped_box", Sql(
+      // the clip is a pure pruning optimization: the oracle filters the
+      // shard with the ORIGINAL (unclipped) query box
+      s"""$pagesCte
+         |SELECT doc_id, lon, lat FROM pages
+         |WHERE lon >= 0.0 AND lon <= 50.0 AND lat >= 0.0 AND lat <= 40.0
+         |  AND lon >= 25.0 AND lon <= 179.0 AND lat >= 20.0 AND lat <= 89.0""".stripMargin)) { (s, dir) =>
       // stats-clipped scan (QueryIndexHelper.clipIndexedBBOXConstraints):
       // a REGIONAL shard queried with a box that mostly overhangs its
       // bounding-box statistic — the clipped envelope is the fine filter,
@@ -956,8 +1734,19 @@ object SparkEntry {
       Ops.spatialBoxQueryClipped(shard, 25.0, 179.0, 20.0, 89.0,
           Ops.bboxStatsEnv(shard))
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q87_radius_meters" -> ((s, dir) => {
+    },
+    Query("q87_radius_meters", Sql(
+      // PURE haversine oracle (q41's exact operation order) — no envelope
+      // terms: the Spark side's haversine-disk envelope cover must be a
+      // SOUND superset of the disk, so any under-coverage shows up here
+      // as a hash mismatch
+      s"""$pagesCte
+         |SELECT doc_id, lon, lat FROM pages
+         |WHERE 2.0 * 6371008.8 * ASIN(SQRT(
+         |    SIN(RADIANS(lat - ${RadCenter._2}) / 2) * SIN(RADIANS(lat - ${RadCenter._2}) / 2) +
+         |    COS(RADIANS(${RadCenter._2})) * COS(RADIANS(lat)) *
+         |    SIN(RADIANS(lon - ${RadCenter._1}) / 2) * SIN(RADIANS(lon - ${RadCenter._1}) / 2)))
+         |    <= $RadMeters""".stripMargin)) { (s, dir) =>
       // meters-radius DWITHIN at the antimeridian: the SOUND
       // haversine-disk envelopes (dateline-SPLIT into two) bound the
       // coarse ranges and the box fine filter; haversine decides. The
@@ -965,8 +1754,14 @@ object SparkEntry {
       // hash-mismatch.
       Ops.radiusQueryMeters(Tables.pages(s, dir), RadCenter._1, RadCenter._2, RadMeters)
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q88_rowkey_scan" -> ((s, dir) => {
+    },
+    Query("q88_rowkey_scan", Sql(
+      // the row_key compound-range scan is an access-path choice; the
+      // result set is the plain box query over the same pages
+      s"""$pagesCte
+         |SELECT doc_id, lon, lat FROM pages
+         |WHERE lon >= ${Box._1} AND lon <= ${Box._2}
+         |  AND lat >= ${Box._3} AND lat <= ${Box._4}""".stripMargin)) { (s, dir) =>
       // the KV-layout access path driven end to end: box scan by the
       // compound ROW KEY (salt ‖ cell) through the salt × SFC
       // cross-product ranges (CompoundIndexStrategy.getQueryRanges) over
@@ -984,8 +1779,19 @@ object SparkEntry {
       Ops.spatialBoxQueryRowKey(graft.spark.Ingest.readStore(s, path),
           Box._1, Box._2, Box._3, Box._4, saltCount = 8)
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q89_snapshot_asof" -> ((s, dir) => {
+    },
+    Query("q89_snapshot_asof", Sql(
+      // time travel is pure history bookkeeping: as-of V0 = everything,
+      // V1 = minus the first delete, live = minus both — each version a
+      // plain anti-predicate over the same pages
+      s"""$pagesCte
+         |SELECT CAST(0 AS INTEGER) AS version, doc_id, lon, lat FROM pages
+         |UNION ALL
+         |SELECT CAST(1 AS INTEGER), doc_id, lon, lat FROM pages
+         |WHERE NOT (lon >= 100.0 AND lat >= 20.0)
+         |UNION ALL
+         |SELECT CAST(2 AS INTEGER), doc_id, lon, lat FROM pages
+         |WHERE NOT (lon >= 100.0 AND lat >= 20.0) AND NOT (lon < -100.0)""".stripMargin)) { (s, dir) =>
       // snapshot time travel over the copy-on-write store — the
       // Iceberg-parity piece (version log + retained pre-images; the
       // reference gets the same capability from Accumulo/HBase cell
@@ -1009,8 +1815,13 @@ object SparkEntry {
       tag(graft.spark.Snapshots.readStoreAsOf(s, path, 0), 0)
         .unionByName(tag(graft.spark.Snapshots.readStoreAsOf(s, path, 1), 1))
         .unionByName(tag(graft.spark.Ingest.readStore(s, path), 2))
-    }),
-    "q91_snapshot_diff" -> ((s, dir) => {
+    },
+    Query("q91_snapshot_diff", Sql(
+      // the delta between v0 and v2 is exactly the rows the two deletes
+      // removed — nothing is added by a delete
+      s"""$pagesCte
+         |SELECT 'removed' AS change, doc_id, lon, lat FROM pages
+         |WHERE (lon >= 100.0 AND lat >= 20.0) OR (lon < -100.0)""".stripMargin)) { (s, dir) =>
       // the incremental-recrawl primitive (Iceberg changelog read): rows
       // removed/added between two store versions, scanning ONLY buckets a
       // mutation in the range touched. Shares q89's fingerprinted
@@ -1029,8 +1840,11 @@ object SparkEntry {
       graft.spark.Ingest.deleteByQuery(s, path, col("lon") < -100.0)
       graft.spark.Snapshots.diff(s, path, 0, 2)
         .select(col("change"), col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q90_compact_store" -> ((s, dir) => {
+    },
+    Query("q90_compact_store", Sql(
+      // compaction is invisible to readers: exact row conservation
+      s"""$pagesCte
+         |SELECT doc_id, lon, lat FROM pages""".stripMargin)) { (s, dir) =>
       // store compaction (Iceberg rewrite_data_files; the verb the
       // reference delegates to Accumulo/HBase major compaction): a
       // deliberately fragmented ingest (2-bucket batches × 16 write
@@ -1048,8 +1862,26 @@ object SparkEntry {
       graft.spark.Ingest.compactBuckets(s, path, maxFilesPerBucket = 1)
       graft.spark.Ingest.readStore(s, path)
         .select(col("doc_id"), col("lon"), col("lat"))
-    }),
-    "q85_transform_vis" -> ((s, dir) => {
+    },
+    Query("q85_transform_vis", Sql(
+      // visibility-transform oracle (VisibilityTransformer.java:25-60):
+      // replaceFirst is DuckDB regexp_replace's non-global default; no
+      // leading operator can be exposed here ('b' is never the leading
+      // term), so the strip branch is exercised by spec, not SQL.
+      // Visible under {a,c}: 'a' always; 'b&a' only where the lon<0
+      // rewrite made it 'c&a'; 'c|b' always (c satisfies either form);
+      // '(a|c)&d' never (d is not held).
+      s"""$pagesCte
+         |SELECT doc_id,
+         |  CASE WHEN lon < 0 THEN regexp_replace(vis0, 'b', 'c') ELSE vis0 END AS vis
+         |FROM (
+         |  SELECT doc_id, lon,
+         |    CASE CAST(doc_id % 4 AS INTEGER) WHEN 0 THEN 'a' WHEN 1 THEN 'b&a'
+         |         WHEN 2 THEN 'c|b' ELSE '(a|c)&d' END AS vis0
+         |  FROM pages)
+         |WHERE CAST(doc_id % 4 AS INTEGER) = 0
+         |   OR (CAST(doc_id % 4 AS INTEGER) = 1 AND lon < 0)
+         |   OR CAST(doc_id % 4 AS INTEGER) = 2""".stripMargin)) { (s, dir) =>
       // the store's third mutation verb, oracle-gated end to end: ingest a
       // store carrying a per-row visibility expression, rewrite the
       // visibility of rows matching a spatial predicate (replaceFirst
@@ -1072,8 +1904,10 @@ object SparkEntry {
       graft.spark.Visibility.filter(
           graft.spark.Ingest.readStore(s, path), "vis", Seq("a", "c"))
         .select(col("doc_id"), col("vis"))
-    }),
-    "q71_text_range_cs" -> ((s, dir) => {
+    },
+    Query("q71_text_range_cs", Sql(
+      s"""SELECT doc_id AS id FROM documents
+         |WHERE text >= 'the' AND text <= 'these'""".stripMargin)) { (s, dir) =>
       // CASE-SENSITIVE whole-value range through the stored UNFOLDED
       // anchored_cs index (round 3 served this with a full scan): the
       // original-case posting store prunes the probe exactly like the
@@ -1082,8 +1916,8 @@ object SparkEntry {
       graft.spark.TextIndex.rangeSearchStored(s, docs, "doc_id", "text",
         "the", "these", tmpIndexPath(dir, "graft-textanchored-cs"),
         caseSensitive = true)
-    }),
-    "q104_biased_st_box" -> ((s, dir) => {
+    },
+    Query("q104_biased_st_box", Sql(eventsStBoxSql)) { (s, dir) =>
       // the TEMPORAL-bias spatio-temporal index end to end (the Bias
       // preset the reference exposes on SpatialTemporalDimensionalityType
       // Provider): store keyed by the 10/10/40 UNEQUAL-precision
@@ -1102,16 +1936,16 @@ object SparkEntry {
       ev.where(graft.spark.SpatialPlanner.rangesPredicate(col("cell_id_stb"), ranges))
         .where(fine)
         .select(col("event_id"), col("lon"), col("lat"), col("ts"))
-    }),
-    "q105_dbscan_geom" -> ((s, dir) => {
+    },
+    Query("q105_dbscan_geom", Sql(dbscanGeomSql(eps = 6.0, minPts = 4))) { (s, dir) =>
       // GEOMETRY-input DBSCAN (the reference clusters arbitrary geometries
       // with closest-two-points item distance): deterministic 3-point
       // multipoints per page, envelope-cover eps-join + exact JTS
       // closest-points filter, same core/border/noise contract as q25
       graft.spark.Analytics.dbscanGeometry(
         geomPages(s, dir), "id", "wkb", eps = 6.0, minPts = 4)
-    }),
-    "q106_dbscan_geom_hulls" -> ((s, dir) => {
+    },
+    Query("q106_dbscan_geom_hulls", Sql(dbscanGeomHullsSql(eps = 6.0, minPts = 4))) { (s, dir) =>
       // per-cluster hull compression of the geometry DBSCAN clusters
       // (DBScanClusterList/ClusterUnionList hull union, batch-shaped):
       // oracle-checkable projection — member count + hull envelope (the
@@ -1122,8 +1956,14 @@ object SparkEntry {
           geomPages(s, dir), "id", "wkb", eps = 6.0, minPts = 4)
         .select(col("cluster"), col("n_members"),
           col("min_x"), col("max_x"), col("min_y"), col("max_y"))
-    }),
-    "q109_geom_within_query" -> ((s, dir) => {
+    },
+    Query("q109_geom_within_query", Sql(
+      s"""WITH pages AS (
+         |  SELECT doc_id, ${Tables.pagesLonSql} AS lon, ${Tables.pagesLatSql} AS lat FROM documents),
+         |pts AS (
+         |  SELECT doc_id, lon + o.dx AS x, lat + o.dy AS y FROM pages, $geomOffsets)
+         |SELECT doc_id AS id FROM pts GROUP BY 1
+         |HAVING bool_and(x > 10.005 AND x < 120.005 AND y > -20.005 AND y < 60.005)""".stripMargin)) { (s, dir) =>
       // the CONSTRAIN side of the completed geometry-filter visitor
       // (GeometryFilterExtract): WITHIN extracts its literal, the
       // envelope-keyed WKB store scans through the decomposed all-tier
@@ -1139,8 +1979,14 @@ object SparkEntry {
         graft.spark.GeometryFilterExtract.Within(rect))
       assert(constrained, "WITHIN must route through the range prefilter")
       res.select(col("id"))
-    }),
-    "q110_geom_disjoint_query" -> ((s, dir) => {
+    },
+    Query("q110_geom_disjoint_query", Sql(
+      s"""WITH pages AS (
+         |  SELECT doc_id, ${Tables.pagesLonSql} AS lon, ${Tables.pagesLatSql} AS lat FROM documents),
+         |pts AS (
+         |  SELECT doc_id, lon + o.dx AS x, lat + o.dy AS y FROM pages, $geomOffsets)
+         |SELECT doc_id AS id FROM pts GROUP BY 1
+         |HAVING bool_and(NOT (x > 10.005 AND x < 120.005 AND y > -20.005 AND y < 60.005))""".stripMargin)) { (s, dir) =>
       // the REFUSE side: DISJOINT extracts infinity ("a hole in the
       // Cartesian plane"), so the query falls back to a full scan — and
       // must still answer EXACTLY through the fine filter
@@ -1152,8 +1998,20 @@ object SparkEntry {
         graft.spark.GeometryFilterExtract.Disjoint(rect))
       assert(!constrained, "DISJOINT must refuse the prefilter")
       res.select(col("id"))
-    }),
-    "q111_simhash_neardup" -> ((s, dir) => {
+    },
+    // brute-force Hamming ball over the q18 signatures — the banded plan is
+    // lossless for <= maxHamming, so the all-pairs oracle matches exactly
+    Query("q111_simhash_neardup", Sql(
+      s"""WITH words AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents WHERE doc_id % 3 = 0),
+         |wh AS (SELECT doc_id, ${duckHash("w")} AS h FROM words),
+         |bits AS (SELECT doc_id, j, sum(((h >> j) & 1) * 2 - 1) AS s
+         |         FROM wh, (SELECT unnest(range(31)) AS j) GROUP BY 1, 2),
+         |sig AS (SELECT doc_id AS id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
+         |        FROM bits GROUP BY 1)
+         |SELECT a.id AS a_id, b.id AS b_id,
+         |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
+         |FROM sig a JOIN sig b ON a.id < b.id
+         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2""".stripMargin)) { (s, dir) =>
       // Manku-style Hamming-ball near-dup pairs over the 31-bit simhash:
       // pigeonhole banding (maxHamming+1 bands) is LOSSLESS for
       // <= maxHamming, so the banded candidate join + exact popcount
@@ -1166,8 +2024,24 @@ object SparkEntry {
         s.read.parquet(s"$dir/documents.parquet")
           .where(col("doc_id") % 3 === 0), "doc_id", "text",
         maxHamming = 2)
-    }),
-    "q112_minhash_lsh_incremental" -> ((s, dir) => {
+    },
+    // the q17 pipeline run asymmetrically: NEW-batch buckets probe
+    // CORPUS buckets (candidates cross sides only), exact Jaccard verify
+    Query("q112_minhash_lsh_incremental", Sql(
+      s"""WITH ${minhashSideCtes("N", "doc_id % 3 = 0")},
+         |${minhashSideCtes("C", "doc_id % 3 <> 0")},
+         |cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id FROM bucketsN a
+         |         JOIN bucketsC b ON a.band = b.band AND a.bucket = b.bucket),
+         |pairs AS (SELECT c.a_id, c.b_id, count(*) AS inter FROM cand c
+         |          JOIN shN sa ON sa.doc_id = c.a_id
+         |          JOIN shC sb ON sb.doc_id = c.b_id AND sa.shingle = sb.shingle
+         |          GROUP BY 1, 2)
+         |SELECT p.a_id, p.b_id, p.inter, sa.sz AS size_a, sb.sz AS size_b,
+         |       CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) AS jac
+         |FROM pairs p
+         |JOIN (SELECT doc_id, count(*) AS sz FROM shN GROUP BY 1) sa ON sa.doc_id = p.a_id
+         |JOIN (SELECT doc_id, count(*) AS sz FROM shC GROUP BY 1) sb ON sb.doc_id = p.b_id
+         |WHERE CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) >= 0.5""".stripMargin)) { (s, dir) =>
       // recrawl-delta near-dup: the NEW batch (doc_id % 3 = 0) probes the
       // EXISTING corpus (the other two thirds) through banded LSH buckets —
       // candidates cross sides only, exact Jaccard verify, same bands/
@@ -1176,8 +2050,8 @@ object SparkEntry {
       graft.spark.TextOps.minhashLshPairsAgainst(
         docs.where(col("doc_id") % 3 =!= 0), docs.where(col("doc_id") % 3 === 0),
         "doc_id", "text", n = 3, bands = 4, rowsPerBand = 4, tau = 0.5)
-    }),
-    "q113_mixture_sample" -> ((s, dir) => {
+    },
+    Query("q113_mixture_sample", Sql(mixtureSampleSql(MixWeights, default = 1.0))) { (s, dir) =>
       // deterministic training-mix sampling: en downsampled to 0.6,
       // zh upsampled to 2.3 (two whole copies + 30% a third), fr dropped,
       // es/de at the 1.0 default — epoch = 0-based copy index; the draw
@@ -1185,8 +2059,14 @@ object SparkEntry {
       graft.spark.TextOps.mixtureSample(
         s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("lang")),
         "doc_id", "lang", MixWeights)
-    }),
-    "q114_embed_lsh_incremental" -> ((s, dir) => {
+    },
+    // q20's CTE chain per side: the NEW batch's buckets probe the corpus's
+    Query("q114_embed_lsh_incremental", Sql(
+      s"""WITH ${embedSideCtes("N", "vec_id % 3 = 0")},
+         |${embedSideCtes("C", "vec_id % 3 <> 0")}
+         |SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.bucket AS bucket, $cosExpr AS cos
+         |FROM qbN a JOIN qbC b ON a.bucket = b.bucket
+         |WHERE $cosExpr >= 0.4""".stripMargin)) { (s, dir) =>
       // recrawl-delta near-dup for EMBEDDINGS: the new batch
       // (vec_id % 3 = 0) probes the corpus's hyperplane buckets
       // (candidates cross sides only), exact quantized cosine verifies —
@@ -1195,23 +2075,41 @@ object SparkEntry {
       graft.spark.TextOps.embeddingLshPairsAgainst(
         emb.where(col("vec_id") % 3 =!= 0), emb.where(col("vec_id") % 3 === 0),
         "vec_id", "embedding", dims = 64, bits = 8, tau = 0.4)
-    }),
-    "q115_pack_sequences" -> ((s, dir) => {
+    },
+    // DuckDB SUM(BIGINT) window is HUGEINT — CAST back; // is integer div
+    Query("q115_pack_sequences", Sql(
+      s"""WITH t AS (SELECT doc_id AS id,
+         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_tokens,
+         |  ${duckHash("CAST(doc_id AS VARCHAR)")} % 8 AS shard FROM documents),
+         |s AS (SELECT id, n_tokens, shard,
+         |  CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
+         |  FROM t)
+         |SELECT id, n_tokens, shard, start_offset, start_offset // 2048 AS bin FROM s""".stripMargin)) { (s, dir) =>
       // GPT-style concat-and-cut packing: 8 hash shards, 2048-token
       // sequences; every doc's stream offset and first-sequence bin are
       // pure integer window arithmetic the oracle replays exactly
       graft.spark.TextOps.packSequences(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         budget = 2048L, shards = 8)
-    }),
-    "q116_bpe_pairs" -> ((s, dir) => {
+    },
+    // BMP text only: pairs are cut by code point on both sides, checked
+    // over ASCII corpora alone (see TextOps.bpePairCounts)
+    Query("q116_bpe_pairs", Sql(
+      """WITH w AS (SELECT unnest(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS w FROM documents),
+        |p AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair
+        |      FROM w WHERE length(w) >= 2),
+        |c AS (SELECT pair, CAST(count(*) AS BIGINT) AS cnt FROM p GROUP BY 1)
+        |SELECT pair, cnt, rnk FROM (
+        |  SELECT pair, cnt, CAST(row_number() OVER (ORDER BY cnt DESC, pair) AS BIGINT) AS rnk FROM c)
+        |WHERE rnk <= 50""".stripMargin)) { (s, dir) =>
       // BPE merge-candidate mining: top-50 within-word adjacent character
       // pairs corpus-wide (count desc, pair asc tie-break) — the first
       // merge round of tokenizer training as one agg + bounded rank
       graft.spark.TextOps.bpePairCounts(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", k = 50)
-    }),
-    "q96_multi_index_heuristic" -> ((s, dir) => {
+    },
+    Query("q96_multi_index_heuristic", Sql(eventsStBoxSql)) { (s, dir) =>
       // the HEURISTIC-MATCH chooser (most constrained dimensions, then
       // bits-used; ChooseHeuristicMatchIndexQueryStrategy) over the
       // ConstraintAlgebra composition of the box and time cubes — with a
@@ -1224,8 +2122,8 @@ object SparkEntry {
       mi.queryBestHeuristic(store, Box._1, Box._2, Box._3, Box._4,
         Some(TsMin), Some(TsMax))._2
         .select(col("event_id"), col("lon"), col("lat"), col("ts"))
-    }),
-    "q67_multi_index_locality" -> ((s, dir) => {
+    },
+    Query("q67_multi_index_locality", Sql(eventsStBoxSql)) { (s, dir) =>
       // the LOCALITY-PRESERVING chooser (max fixed-prefix-bits,
       // ChooseLocalityPreservingQueryStrategy) — identical result set to
       // q48/q64 whichever index the bits-used score elects
@@ -1233,8 +2131,8 @@ object SparkEntry {
       val store = mi.encode(Tables.geoEvents(s, dir))
       mi.queryBestLocality(store, Box._1, Box._2, Box._3, Box._4, TsMin, TsMax)._2
         .select(col("event_id"), col("lon"), col("lat"), col("ts"))
-    }),
-    "q64_multi_index_stats" -> ((s, dir) => {
+    },
+    Query("q64_multi_index_stats", Sql(eventsStBoxSql)) { (s, dir) =>
       // the STATS-driven best-match chooser (scored by the store's own
       // prefix-histogram row counts, ChooseBestMatchIndexQueryStrategy
       // with real statistics) — identical result set to q48 whichever
@@ -1246,16 +2144,9 @@ object SparkEntry {
       mi.queryBestStats(store, Box._1, Box._2, Box._3, Box._4,
         TsMin, TsMax, histSp, histSt)._2
         .select(col("event_id"), col("lon"), col("lat"), col("ts"))
-    }),
+    },
   )
 
-  // ---- DuckDB twins of the portable integer hashing in TextOps ----
-
-  /** fold of codepoints: (acc*31 + ord) mod p; DuckDB list_reduce seeds
-    * with the first element, which equals the 0-seeded fold. Empty input is
-    * guarded (list_reduce errors on an empty list; the Spark fold yields
-    * its 0 seed). Parity holds for ASCII text — FIXTURES.md pins the
-    * documents fixture to ASCII, where bytes == chars == codepoints. */
   /**
    * Deterministic tmp path for an INGEST-TIME artifact derived from the
    * corpus: `<prefix>-<corpusKey>-<contentFp>`. The fingerprint covers
@@ -1386,6 +2277,13 @@ object SparkEntry {
        |cclean AS (SELECT d.doc_id, COALESCE(cr.clean_text, '') AS clean_text
        |           FROM $src d LEFT JOIN cr ON cr.doc_id = d.doc_id)""".stripMargin
 
+  // ---- DuckDB twins of the portable integer hashing in TextOps ----
+
+  /** fold of codepoints: (acc*31 + ord) mod p; DuckDB list_reduce seeds
+    * with the first element, which equals the 0-seeded fold. Empty input is
+    * guarded (list_reduce errors on an empty list; the Spark fold yields
+    * its 0 seed). Parity holds for ASCII text — FIXTURES.md pins the
+    * documents fixture to ASCII, where bytes == chars == codepoints. */
   private def duckHash(e: String): String =
     s"(CASE WHEN length($e) = 0 THEN CAST(0 AS BIGINT) ELSE list_reduce(list_transform(range(1, length($e)+1), ch -> CAST(ord(substr($e, ch, 1)) AS BIGINT)), (a, x) -> (a * 31 + x) % 2147483647) END)"
 
@@ -1489,1048 +2387,28 @@ object SparkEntry {
        |  SELECT event_id, ${Tables.eventsLonSql} AS lon, ${Tables.eventsLatSql} AS lat, ts
        |  FROM events)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q01_spatial_box" ->
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}""".stripMargin,
-    "q02_spatial_polygon" ->
-      // triangle (0.005,0.005) (60.005,0.005) (30.005,40.005): half-plane signs.
-      // edge1: y >= 0.005 (horizontal); edge2 right: cross((60.005,0.005)->(30.005,40.005), p) >= 0;
-      // edge3 left: cross((30.005,40.005)->(0.005,0.005), p) >= 0
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE lat >= 0.005
-         |  AND (30.005 - 60.005) * (lat - 0.005) - (40.005 - 0.005) * (lon - 60.005) >= 0
-         |  AND (0.005 - 30.005) * (lat - 40.005) - (0.005 - 40.005) * (lon - 30.005) >= 0""".stripMargin,
-    "q03_st_box" ->
-      s"""$eventsCte
-         |SELECT event_id, lon, lat, ts FROM ev
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}
-         |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q04_distance_join" ->
-      s"""$eventsCte
-         |SELECT a.event_id AS a_id, b.event_id AS b_id
-         |FROM ev a JOIN ev b ON a.event_id < b.event_id
-         |WHERE (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat) < 1.0""".stripMargin,
-    "q107_distance_join_topk" ->
-      s"""$eventsCte
-         |SELECT a_id, b_id, rnk FROM (
-         |  SELECT a.event_id AS a_id, b.event_id AS b_id,
-         |         ROW_NUMBER() OVER (PARTITION BY a.event_id ORDER BY
-         |           (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat), b.event_id) AS rnk
-         |  FROM ev a JOIN ev b ON a.event_id <> b.event_id
-         |  WHERE (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat) < 1.0
-         |) WHERE rnk <= 3""".stripMargin,
-    "q05_knn" ->
-      s"""$pagesCte
-         |SELECT centroid_id, id, rn FROM (
-         |  SELECT c.doc_id AS centroid_id, p.doc_id AS id,
-         |         ROW_NUMBER() OVER (PARTITION BY c.doc_id ORDER BY
-         |           (p.lon - c.lon) * (p.lon - c.lon) + (p.lat - c.lat) * (p.lat - c.lat), p.doc_id) AS rn
-         |  FROM pages p CROSS JOIN (SELECT * FROM pages WHERE doc_id % 50 = 0) c
-         |) WHERE rn <= 10""".stripMargin,
-    "q06_tile_assign" ->
-      s"""$pagesCte
-         |SELECT doc_id,
-         |  CAST(GREATEST(CEIL(((lon + 180) / 360) * 256) - 1, 0) AS BIGINT) AS tx,
-         |  CAST(GREATEST(CEIL(((lat + 180) / 360) * 256) - 1, 0) AS BIGINT) AS ty
-         |FROM pages""".stripMargin,
-    "q07_bbox_stats" ->
-      s"""$pagesCte
-         |SELECT lang, COUNT(*) AS cnt, MIN(lon) AS min_lon, MAX(lon) AS max_lon,
-         |       MIN(lat) AS min_lat, MAX(lat) AS max_lat
-         |FROM pages GROUP BY lang""".stripMargin,
-    "q08_time_range" ->
-      """SELECT event_type, COUNT(*) AS cnt, MIN(ts) AS min_ts, MAX(ts) AS max_ts
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q09_histogram" ->
-      """SELECT CAST(FLOOR(o_totalprice / 10000.0) AS BIGINT) AS bin, COUNT(*) AS cnt
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q10_dedup_exact" ->
-      """SELECT md5(text) AS text_md5, MIN(doc_id) AS keeper_id, COUNT(*) AS dup_cnt
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q11_text_quality" ->
-      """SELECT doc_id,
-        |  CAST(LENGTH(text) AS BIGINT) AS n_chars,
-        |  CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) AS BIGINT) AS n_spaces,
-        |  CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS BIGINT) AS token_est,
-        |  CAST((LENGTH(text) - LENGTH(REPLACE(text, 'the', ''))) / 3 AS BIGINT) AS the_cnt
-        |FROM documents""".stripMargin,
-    "q12_ann_topk" ->
-      """WITH quant AS (
-        |  SELECT vec_id, [CAST(ROUND(x * 1000) AS BIGINT) FOR x IN embedding] AS v
-        |  FROM embeddings
-        |), q AS (SELECT vec_id AS q_id, v AS qv FROM quant WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.q_id, b.vec_id,
-        |    CAST(list_sum(list_transform(list_zip(q.qv, b.v), t -> t[1] * t[2])) AS DOUBLE) /
-        |      SQRT(CAST(list_sum(list_transform(q.qv, x -> x * x)) AS DOUBLE) *
-        |           CAST(list_sum(list_transform(b.v, x -> x * x)) AS DOUBLE)) AS cos
-        |  FROM quant b CROSS JOIN q
-        |)
-        |SELECT q_id, vec_id, rn FROM (
-        |  SELECT q_id, vec_id, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rn
-        |  FROM scored
-        |) WHERE rn <= 10""".stripMargin,
-    "q13_distinct_knn" ->
-      s"""$pagesCte
-         |SELECT centroid_id, id, rn FROM (
-         |  SELECT centroid_id, id,
-         |         ROW_NUMBER() OVER (PARTITION BY centroid_id ORDER BY d2, id) AS rn
-         |  FROM (
-         |    SELECT c.doc_id AS centroid_id, p.doc_id AS id,
-         |           (p.lon - c.lon) * (p.lon - c.lon) + (p.lat - c.lat) * (p.lat - c.lat) AS d2,
-         |           ROW_NUMBER() OVER (PARTITION BY p.doc_id ORDER BY
-         |             (p.lon - c.lon) * (p.lon - c.lon) + (p.lat - c.lat) * (p.lat - c.lat), c.doc_id) AS cr
-         |    FROM pages p CROSS JOIN (SELECT * FROM pages WHERE doc_id % 50 = 0) c
-         |  ) WHERE cr = 1
-         |) WHERE rn <= 10""".stripMargin,
-    "q14_polygon_join" ->
-      s"""$pagesCte
-         |SELECT p.doc_id, r.region_id
-         |FROM pages p
-         |JOIN (VALUES ${Tables.regionBoxesSqlValues(40)}) r(region_id, lon_min, lon_max, lat_min, lat_max)
-         |  ON p.lon >= r.lon_min AND p.lon <= r.lon_max
-         | AND p.lat >= r.lat_min AND p.lat <= r.lat_max""".stripMargin,
-    "q15_knn_ring" ->
-      s"""$pagesCte
-         |SELECT q_id, id, rn FROM (
-         |  SELECT q.doc_id AS q_id, p.doc_id AS id,
-         |         ROW_NUMBER() OVER (PARTITION BY q.doc_id ORDER BY
-         |           (p.lon - q.lon) * (p.lon - q.lon) + (p.lat - q.lat) * (p.lat - q.lat), p.doc_id) AS rn
-         |  FROM pages p CROSS JOIN (SELECT * FROM pages WHERE doc_id % 97 = 0) q
-         |) WHERE rn <= 10""".stripMargin,
-    "q95_property_query" ->
-      // the index route is an access-path choice; the result set is the
-      // raw predicate over orders
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE (o_totalprice > 50000.0 AND o_totalprice <= 80000.0)
-        |   OR (o_totalprice >= 140000.0 AND o_totalprice < 160000.0)""".stripMargin,
-    "q94_time_filter_query" ->
-      // the index route is an access-path choice; the result set is the
-      // raw predicate over events
-      """SELECT event_id, ts FROM events
-        |WHERE (ts > TIMESTAMP '2024-01-03 00:00:00'
-        |       AND ts < TIMESTAMP '2024-01-06 00:00:00')
-        |   OR NOT (ts >= TIMESTAMP '2024-01-20 00:00:00'
-        |        OR ts < TIMESTAMP '2024-01-12 00:00:00')""".stripMargin,
-    "q93_best_k_per_group" ->
-      // the jump scan re-derived in SQL: ascending-count lag deltas (base
-      // 0.0), first maximal jump wins = smallest count among the maxima
-      s"""WITH g AS (SELECT DISTINCT doc_id % 5 AS group_id FROM documents),
-         |d AS (SELECT group_id, cc AS cluster_count,
-         |        CAST((group_id * 7 + cc * cc * 13) % 100 AS DOUBLE) / 10.0 AS distortion
-         |      FROM g, (SELECT unnest(range(1, 5)) AS cc)),
-         |j AS (SELECT group_id, cluster_count,
-         |        distortion - COALESCE(lag(distortion) OVER (
-         |          PARTITION BY group_id ORDER BY cluster_count), 0.0) AS jump
-         |      FROM d)
-         |SELECT j.group_id, CAST(min(j.cluster_count) AS BIGINT) AS best_count
-         |FROM j JOIN (SELECT group_id, max(jump) AS mj FROM j GROUP BY 1) m
-         |  ON j.group_id = m.group_id AND j.jump = m.mj
-         |GROUP BY 1""".stripMargin,
-    "q92_decontaminate" ->
-      // every-97th-doc benchmark; hits = distinct shared 3-gram shingles
-      s"""WITH $shCte,
-         |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0)
-         |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hits
-         |FROM sh s JOIN ev USING (shingle)
-         |WHERE s.doc_id % 97 <> 0
-         |GROUP BY 1""".stripMargin,
-    "q16_ngram_jaccard" ->
-      // hot-shingle cap (maxDf = 5) mirrored from ngramJaccardPairs:
-      // candidates only from rare shingles, exact inter over full sets
-      s"""WITH $shCte,
-         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-         |rareshingle AS (SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= 5),
-         |rare AS (SELECT s.doc_id, s.shingle FROM sh s JOIN rareshingle USING (shingle)),
-         |cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-         |         FROM rare a JOIN rare b ON a.shingle = b.shingle AND a.doc_id < b.doc_id),
-         |pairs AS (SELECT c.a_id, c.b_id, count(*) AS inter FROM cand c
-         |          JOIN sh sa ON sa.doc_id = c.a_id
-         |          JOIN sh sb ON sb.doc_id = c.b_id AND sa.shingle = sb.shingle
-         |          GROUP BY 1, 2)
-         |$jaccardTail""".stripMargin,
-    "q17_minhash_lsh" -> minhashSql,
-    "q18_simhash" ->
-      s"""WITH words AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents),
-         |wh AS (SELECT doc_id, ${duckHash("w")} AS h FROM words),
-         |bits AS (SELECT doc_id, j, sum(((h >> j) & 1) * 2 - 1) AS s
-         |         FROM wh, (SELECT unnest(range(31)) AS j) GROUP BY 1, 2)
-         |SELECT doc_id AS id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
-         |FROM bits GROUP BY 1""".stripMargin,
-    "q19_embed_neardup" ->
-      s"""WITH $quantCte
-         |SELECT a.vec_id AS a_id, b.vec_id AS b_id, $cosExpr AS cos
-         |FROM quant a JOIN quant b ON a.vec_id < b.vec_id
-         |WHERE $cosExpr >= 0.4""".stripMargin,
-    "q20_embed_lsh" ->
-      s"""WITH $quantCte,
-         |sigs AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS bucket FROM (
-         |    SELECT q.vec_id, jj.j, sum(q.v[ii.i + 1] * ((jj.j * 1000003 + (ii.i + 1) * 7919) % 2001 - 1000)) AS dot
-         |    FROM quant q, (SELECT unnest(range(8)) AS j) jj, (SELECT unnest(range(64)) AS i) ii
-         |    GROUP BY 1, 2) GROUP BY 1),
-         |qb AS (SELECT q.vec_id, q.v, s.bucket FROM quant q JOIN sigs s USING (vec_id))
-         |SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.bucket AS bucket, $cosExpr AS cos
-         |FROM qb a JOIN qb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-         |WHERE $cosExpr >= 0.4""".stripMargin,
-    // q20's CTE chain per side: the NEW batch's buckets probe the corpus's
-    "q114_embed_lsh_incremental" ->
-      s"""WITH ${embedSideCtes("N", "vec_id % 3 = 0")},
-         |${embedSideCtes("C", "vec_id % 3 <> 0")}
-         |SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.bucket AS bucket, $cosExpr AS cos
-         |FROM qbN a JOIN qbC b ON a.bucket = b.bucket
-         |WHERE $cosExpr >= 0.4""".stripMargin,
-    "q21_langid" ->
-      """WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |sc AS (SELECT doc_id AS id,
-        |  CAST(sum(CASE WHEN w IN ('the','and','of') THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-        |  CAST(sum(CASE WHEN w IN ('der','und','die') THEN 1 ELSE 0 END) AS BIGINT) AS n_de,
-        |  CAST(sum(CASE WHEN w IN ('le','et','les') THEN 1 ELSE 0 END) AS BIGINT) AS n_fr,
-        |  CAST(sum(CASE WHEN w IN ('el','y','los') THEN 1 ELSE 0 END) AS BIGINT) AS n_es
-        |  FROM words GROUP BY 1)
-        |SELECT id, n_en, n_de, n_fr, n_es,
-        |  CASE WHEN n_en >= n_de AND n_en >= n_fr AND n_en >= n_es AND n_en > 0 THEN 'en'
-        |       WHEN n_de > n_en AND n_de >= n_fr AND n_de >= n_es AND n_de > 0 THEN 'de'
-        |       WHEN n_fr > n_en AND n_fr > n_de AND n_fr >= n_es AND n_fr > 0 THEN 'fr'
-        |       WHEN n_es > n_en AND n_es > n_de AND n_es > n_fr AND n_es > 0 THEN 'es'
-        |       ELSE 'und' END AS lang_id
-        |FROM sc""".stripMargin,
-    "q22_tokens" ->
-      """SELECT doc_id AS id,
-        |  CAST(len(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS BIGINT) AS n_words,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_tokens
-        |FROM documents""".stripMargin,
-    "q23_fingerprint" -> {
-      val gram = (0 until 8).foldLeft("0::BIGINT") { (acc, off) =>
-        s"(($acc) * 31 + ord(substr(text, i + $off, 1))) % 2147483647"
-      }
-      s"""WITH grams AS (
-         |  SELECT doc_id, unnest([$gram FOR i IN range(1, length(text) - 6)]) AS h
-         |  FROM documents WHERE length(text) >= 8)
-         |SELECT doc_id AS id, min(h) AS fp_min, max(h) AS fp_max, bit_xor(h) AS fp_xor
-         |FROM grams GROUP BY 1""".stripMargin
-    },
-    "q24_kmeans" -> kmeansSql(3),
-    "q25_dbscan" -> dbscanSql(eps = 0.4, minPts = 4),
-    "q105_dbscan_geom" -> dbscanGeomSql(eps = 6.0, minPts = 4),
-    "q106_dbscan_geom_hulls" -> dbscanGeomHullsSql(eps = 6.0, minPts = 4),
-    "q109_geom_within_query" ->
-      s"""WITH pages AS (
-         |  SELECT doc_id, ${Tables.pagesLonSql} AS lon, ${Tables.pagesLatSql} AS lat FROM documents),
-         |pts AS (
-         |  SELECT doc_id, lon + o.dx AS x, lat + o.dy AS y FROM pages, $geomOffsets)
-         |SELECT doc_id AS id FROM pts GROUP BY 1
-         |HAVING bool_and(x > 10.005 AND x < 120.005 AND y > -20.005 AND y < 60.005)""".stripMargin,
-    "q110_geom_disjoint_query" ->
-      s"""WITH pages AS (
-         |  SELECT doc_id, ${Tables.pagesLonSql} AS lon, ${Tables.pagesLatSql} AS lat FROM documents),
-         |pts AS (
-         |  SELECT doc_id, lon + o.dx AS x, lat + o.dy AS y FROM pages, $geomOffsets)
-         |SELECT doc_id AS id FROM pts GROUP BY 1
-         |HAVING bool_and(NOT (x > 10.005 AND x < 120.005 AND y > -20.005 AND y < 60.005))""".stripMargin,
-    // brute-force Hamming ball over the q18 signatures — the banded plan is
-    // lossless for <= maxHamming, so the all-pairs oracle matches exactly
-    "q111_simhash_neardup" ->
-      s"""WITH words AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w FROM documents WHERE doc_id % 3 = 0),
-         |wh AS (SELECT doc_id, ${duckHash("w")} AS h FROM words),
-         |bits AS (SELECT doc_id, j, sum(((h >> j) & 1) * 2 - 1) AS s
-         |         FROM wh, (SELECT unnest(range(31)) AS j) GROUP BY 1, 2),
-         |sig AS (SELECT doc_id AS id, CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
-         |        FROM bits GROUP BY 1)
-         |SELECT a.id AS a_id, b.id AS b_id,
-         |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-         |FROM sig a JOIN sig b ON a.id < b.id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2""".stripMargin,
-    // the q17 pipeline run asymmetrically: NEW-batch buckets probe
-    // CORPUS buckets (candidates cross sides only), exact Jaccard verify
-    "q112_minhash_lsh_incremental" ->
-      s"""WITH ${minhashSideCtes("N", "doc_id % 3 = 0")},
-         |${minhashSideCtes("C", "doc_id % 3 <> 0")},
-         |cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id FROM bucketsN a
-         |         JOIN bucketsC b ON a.band = b.band AND a.bucket = b.bucket),
-         |pairs AS (SELECT c.a_id, c.b_id, count(*) AS inter FROM cand c
-         |          JOIN shN sa ON sa.doc_id = c.a_id
-         |          JOIN shC sb ON sb.doc_id = c.b_id AND sa.shingle = sb.shingle
-         |          GROUP BY 1, 2)
-         |SELECT p.a_id, p.b_id, p.inter, sa.sz AS size_a, sb.sz AS size_b,
-         |       CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) AS jac
-         |FROM pairs p
-         |JOIN (SELECT doc_id, count(*) AS sz FROM shN GROUP BY 1) sa ON sa.doc_id = p.a_id
-         |JOIN (SELECT doc_id, count(*) AS sz FROM shC GROUP BY 1) sb ON sb.doc_id = p.b_id
-         |WHERE CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) >= 0.5""".stripMargin,
-    "q113_mixture_sample" -> mixtureSampleSql(MixWeights, default = 1.0),
-    // BMP text only: pairs are cut by code point on both sides, checked
-    // over ASCII corpora alone (see TextOps.bpePairCounts)
-    "q116_bpe_pairs" ->
-      """WITH w AS (SELECT unnest(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS w FROM documents),
-        |p AS (SELECT unnest(list_transform(range(1, length(w)), i -> substr(w, i, 2))) AS pair
-        |      FROM w WHERE length(w) >= 2),
-        |c AS (SELECT pair, CAST(count(*) AS BIGINT) AS cnt FROM p GROUP BY 1)
-        |SELECT pair, cnt, rnk FROM (
-        |  SELECT pair, cnt, CAST(row_number() OVER (ORDER BY cnt DESC, pair) AS BIGINT) AS rnk FROM c)
-        |WHERE rnk <= 50""".stripMargin,
-    // DuckDB SUM(BIGINT) window is HUGEINT — CAST back; // is integer div
-    "q115_pack_sequences" ->
-      s"""WITH t AS (SELECT doc_id AS id,
-         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_tokens,
-         |  ${duckHash("CAST(doc_id AS VARCHAR)")} % 8 AS shard FROM documents),
-         |s AS (SELECT id, n_tokens, shard,
-         |  CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-         |  FROM t)
-         |SELECT id, n_tokens, shard, start_offset, start_offset // 2048 AS bin FROM s""".stripMargin,
-    "q26_kde" -> kdeSql(bits = 5),
-    "q61_kde_levels" -> kdeLevelsSql(minBits = 3, maxBits = 5),
-    "q62_bucketed_join" -> {
-      val bins = 64
-      def tileCte(src: String, lonSql: String, latSql: String) =
-        s"""SELECT
-           |  CAST(GREATEST(CEIL((($lonSql + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-           |  CAST(GREATEST(CEIL((($latSql + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
-           |FROM $src""".stripMargin
-      s"""WITH p AS (${tileCte("documents", Tables.pagesLonSql, Tables.pagesLatSql)}),
-         |e AS (${tileCte("events", Tables.eventsLonSql, Tables.eventsLatSql)})
-         |SELECT p.tx, p.ty, CAST(COUNT(*) AS BIGINT) AS n_pairs
-         |FROM p JOIN e ON p.tx = e.tx AND p.ty = e.ty
-         |GROUP BY 1, 2""".stripMargin
-    },
-    "q63_dateline_box" ->
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE (lon >= 150.0 OR lon <= -150.0) AND lat >= -40.0 AND lat <= 40.0""".stripMargin,
-    // convex hull per group, oracled on exact integer geometry: a directed
-    // pair (a, b) is a minimal-hull edge iff every other point of the group
-    // is strictly left of line a→b, or collinear and strictly between a and
-    // b (so collinear boundary points are NOT vertices — JTS ConvexHull's
-    // cleanRing semantics). Vertices = edges; ring closes, so
-    // n_vertices = edges + 1; CCW edge walk gives 2×area via the shoelace.
-    // Coordinates lie on the 0.01° grid → centi-degree longs are exact.
-    "q29_hull" ->
-      s"""$pagesCte,
-         |hp AS (SELECT DISTINCT doc_id % 5 AS g,
-         |         CAST(ROUND(lon * 100) AS BIGINT) AS x,
-         |         CAST(ROUND(lat * 100) AS BIGINT) AS y
-         |       FROM pages),
-         |edges AS (
-         |  SELECT a.g, a.x AS ax, a.y AS ay, b.x AS bx, b.y AS b_y
-         |  FROM hp a JOIN hp b ON a.g = b.g AND (a.x <> b.x OR a.y <> b.y)
-         |  WHERE NOT EXISTS (
-         |    SELECT 1 FROM hp c
-         |    WHERE c.g = a.g AND (c.x <> a.x OR c.y <> a.y) AND (c.x <> b.x OR c.y <> b.y)
-         |      AND NOT ((b.x - a.x) * (c.y - a.y) - (b.y - a.y) * (c.x - a.x) > 0
-         |        OR ((b.x - a.x) * (c.y - a.y) - (b.y - a.y) * (c.x - a.x) = 0
-         |            AND (b.x - a.x) * (c.x - a.x) + (b.y - a.y) * (c.y - a.y) > 0
-         |            AND (b.x - a.x) * (c.x - a.x) + (b.y - a.y) * (c.y - a.y)
-         |              < (b.x - a.x) * (b.x - a.x) + (b.y - a.y) * (b.y - a.y)))))
-         |SELECT g AS group_id, CAST(COUNT(*) + 1 AS BIGINT) AS n_vertices,
-         |       CAST(SUM(ax * b_y - ay * bx) AS BIGINT) AS area_x2_c2
-         |FROM edges GROUP BY g""".stripMargin,
-    "q40_multilevel_kmeans" -> multiLevelKmeansSql(iters = 2, childK = 3),
-    "q27_tile_cover" -> {
-      val bins = 64
-      s"""WITH envs AS (SELECT * FROM (VALUES ${Tables.regionBoxesSqlValues(20)})
-         |  v(env_id, lon_min, lon_max, lat_min, lat_max)),
-         |b AS (SELECT env_id,
-         |  CAST(GREATEST(CEIL(((lon_min + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS x0,
-         |  CAST(GREATEST(CEIL(((lon_max + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS x1,
-         |  CAST(GREATEST(CEIL(((lat_min + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS y0,
-         |  CAST(GREATEST(CEIL(((lat_max + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS y1
-         |  FROM envs)
-         |SELECT env_id, xs.tx, ys.ty
-         |FROM b, LATERAL (SELECT unnest(range(x0, x1 + 1)) AS tx) xs,
-         |        LATERAL (SELECT unnest(range(y0, y1 + 1)) AS ty) ys""".stripMargin
-    },
-    "q28_tile_bounds" -> {
-      val bins = 64
-      s"""$pagesCte
-         |SELECT tx, ty,
-         |  CAST(tx AS DOUBLE) / $bins * 360 - 180 AS lon_min,
-         |  CAST(tx + 1 AS DOUBLE) / $bins * 360 - 180 AS lon_max,
-         |  GREATEST(CAST(ty AS DOUBLE) / $bins * 360 - 180, -90.0) AS lat_min,
-         |  LEAST(CAST(ty + 1 AS DOUBLE) / $bins * 360 - 180, 90.0) AS lat_max
-         |FROM (
-         |  SELECT DISTINCT
-         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
-         |  FROM pages)""".stripMargin
-    },
-    "q30_stats_profile" ->
-      s"""$pagesCte
-         |SELECT COUNT(*) AS cnt, COUNT(DISTINCT doc_id) AS n_ids,
-         |  MIN(lon) AS min_lon, MAX(lon) AS max_lon,
-         |  MIN(lat) AS min_lat, MAX(lat) AS max_lat
-         |FROM pages""".stripMargin,
-    "q31_subsample" -> {
-      val bins = 64
-      s"""$pagesCte
-         |SELECT MIN(doc_id) AS doc_id, tx, ty FROM (
-         |  SELECT doc_id,
-         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
-         |  FROM pages) GROUP BY tx, ty""".stripMargin
-    },
-    "q32_range_histogram" -> {
-      val bins = 64
-      s"""$pagesCte
-         |SELECT tx, ty, COUNT(*) AS cnt FROM (
-         |  SELECT
-         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
-         |  FROM pages) GROUP BY tx, ty""".stripMargin
-    },
-    "q33_media_features" -> q33Sql,
-    "q34_stream_ingest" -> q34Sql,
-    "q35_haversine" ->
-      s"""$pagesCte
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |  CAST(ROUND(2.0 * 6371008.8 * ASIN(SQRT(
-         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
-         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
-         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2)))) AS BIGINT) AS dist_m
-         |FROM (SELECT * FROM pages WHERE doc_id % 101 = 0 AND ABS(lat) <= 85) a,
-         |     (SELECT * FROM pages WHERE doc_id % 101 = 0 AND ABS(lat) <= 85) b
-         |WHERE a.doc_id < b.doc_id
-         |  AND 2.0 * 6371008.8 * ASIN(SQRT(
-         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
-         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
-         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2))) < 12000000.0""".stripMargin,
-    "q36_time_bin" ->
-      """SELECT event_id, CAST(year(ts) AS VARCHAR) AS bin_y,
-        |  CAST(year(ts) AS VARCHAR) || '_' || lpad(CAST(month(ts) - 1 AS VARCHAR), 2, '0') AS bin_m
-        |FROM events""".stripMargin,
-    "q37_kde_compare" -> {
-      val bins = 32
-      val kern = graft.spark.Analytics.KdeKernel
-        .map { case (dx, dy, w) => s"($dx, $dy, $w)" }.mkString(", ")
-      def splat(pred: String) =
-        s"""SELECT tx, ty, CAST(SUM(w) AS BIGINT) AS weight FROM (
-           |  SELECT
-           |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) + k.dx AS tx,
-           |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) + k.dy AS ty,
-           |    k.w
-           |  FROM pages, (SELECT * FROM (VALUES $kern) v(dx, dy, w)) k
-           |  WHERE $pred)
-           |WHERE tx >= 0 AND tx <= ${bins - 1} AND ty >= 0 AND ty <= ${bins - 1}
-           |GROUP BY 1, 2""".stripMargin
-      s"""$pagesCte,
-         |wa AS (${splat("doc_id % 2 = 0")}),
-         |wb AS (${splat("doc_id % 2 = 1")})
-         |SELECT COALESCE(wa.tx, wb.tx) AS tx, COALESCE(wa.ty, wb.ty) AS ty,
-         |  COALESCE(wa.weight, 0) AS w_a, COALESCE(wb.weight, 0) AS w_b,
-         |  COALESCE(wa.weight, 0) - COALESCE(wb.weight, 0) AS diff
-         |FROM wa FULL OUTER JOIN wb ON wa.tx = wb.tx AND wa.ty = wb.ty""".stripMargin
-    },
-    "q38_text_search" ->
-      "SELECT doc_id AS id FROM documents WHERE text LIKE '%scan merge%'",
-    "q41_distance_join_m" ->
-      s"""$pagesCte
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |  CAST(ROUND(2.0 * 6371008.8 * ASIN(SQRT(
-         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
-         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
-         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2)))) AS BIGINT) AS dist_m
-         |FROM (SELECT * FROM pages WHERE ABS(lat) <= 85) a,
-         |     (SELECT * FROM pages WHERE ABS(lat) <= 85) b
-         |WHERE a.doc_id < b.doc_id
-         |  AND 2.0 * 6371008.8 * ASIN(SQRT(
-         |    SIN(RADIANS(b.lat - a.lat) / 2) * SIN(RADIANS(b.lat - a.lat) / 2) +
-         |    COS(RADIANS(a.lat)) * COS(RADIANS(b.lat)) *
-         |    SIN(RADIANS(b.lon - a.lon) / 2) * SIN(RADIANS(b.lon - a.lon) / 2))) < 100000.0""".stripMargin,
-    "q45_st_distance_join" ->
-      s"""$eventsCte
-         |SELECT a.event_id AS a_id, b.event_id AS b_id
-         |FROM ev a JOIN ev b ON a.event_id < b.event_id
-         |WHERE (a.lon - b.lon) * (a.lon - b.lon) + (a.lat - b.lat) * (a.lat - b.lat) < 1.0
-         |  AND ABS(epoch_us(a.ts) - epoch_us(b.ts)) <= 3600000000""".stripMargin,
-    "q46_region_counts" ->
-      s"""$pagesCte
-         |SELECT r.region_id, COUNT(*) AS cnt
-         |FROM pages p
-         |JOIN (VALUES ${Tables.regionBoxesSqlValues(40)}) r(region_id, lon_min, lon_max, lat_min, lat_max)
-         |  ON p.lon >= r.lon_min AND p.lon <= r.lon_max
-         | AND p.lat >= r.lat_min AND p.lat <= r.lat_max
-         |GROUP BY 1""".stripMargin,
-    "q44_minhash_sigs" ->
-      s"""WITH $shCte,
-         |shh AS (SELECT doc_id, ${duckHash("shingle")} AS h FROM sh)
-         |SELECT doc_id AS id, $minhashSigCols FROM shh GROUP BY doc_id""".stripMargin,
-    "q43_ann_ivf" ->
-      s"""WITH $quantCte,
-         |qn AS (SELECT vec_id, v, CAST(list_sum(list_transform(v, x -> x * x)) AS BIGINT) AS n2 FROM quant),
-         |cents AS (SELECT vec_id AS cid, v AS cv, n2 AS cn2 FROM qn WHERE vec_id < 16),
-         |ranked AS (
-         |  SELECT q.vec_id, q.v, q.n2, c.cid, ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-         |    q.n2 + c.cn2 - 2 * CAST(list_sum(list_transform(list_zip(q.v, c.cv), t -> t[1] * t[2])) AS BIGINT),
-         |    c.cid) AS crn
-         |  FROM qn q CROSS JOIN cents c),
-         |lists AS (SELECT vec_id, cid, v AS vv, n2 AS vn2 FROM ranked WHERE crn = 1),
-         |probes AS (SELECT vec_id AS q_id, cid, v AS qv, n2 AS qn2 FROM ranked
-         |           WHERE crn <= 4 AND vec_id IN (0, 100, 200, 300, 400))
-         |SELECT q_id, vec_id, rn FROM (
-         |  SELECT p.q_id, l.vec_id, ROW_NUMBER() OVER (PARTITION BY p.q_id ORDER BY
-         |    CAST(list_sum(list_transform(list_zip(p.qv, l.vv), t -> t[1] * t[2])) AS DOUBLE) /
-         |      SQRT(CAST(p.qn2 AS DOUBLE) * CAST(l.vn2 AS DOUBLE)) DESC, l.vec_id) AS rn
-         |  FROM probes p JOIN lists l USING (cid)
-         |) WHERE rn <= 10""".stripMargin,
-    "q42_envelope_query" ->
-      s"""SELECT region_id AS rid
-         |FROM (VALUES ${Tables.regionBoxesSqlValues(60)}) v(region_id, lon_min, lon_max, lat_min, lat_max)
-         |WHERE lon_max >= -50 AND lon_min <= 50 AND lat_max >= -40 AND lat_min <= 40""".stripMargin,
-    "q47_polygon_join_dist" ->
-      s"""$pagesCte
-         |SELECT p.doc_id, r.region_id
-         |FROM pages p
-         |JOIN (VALUES ${Tables.regionBoxesSqlValues(40)}) r(region_id, lon_min, lon_max, lat_min, lat_max)
-         |  ON p.lon >= r.lon_min AND p.lon <= r.lon_max
-         | AND p.lat >= r.lat_min AND p.lat <= r.lat_max""".stripMargin,
-    "q49_secondary_index" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice >= 50000.0 AND o_totalprice <= 100000.0""".stripMargin,
-    "q59_range_join" -> {
-      // literal VALUES twin of the Spark-side bands
-      val values = (0 until 20).map(i => f"('b$i%02d', ${i * 15000.0}, ${i * 15000.0 + 25000.0})")
-        .mkString(", ")
-      s"""SELECT o.o_orderkey, b.band_id
-         |FROM orders o
-         |JOIN (VALUES $values) b(band_id, lo, hi)
-         |  ON o.o_totalprice >= b.lo AND o.o_totalprice <= b.hi""".stripMargin
-    },
-    "q60_incremental_dedup" ->
-      """SELECT a.doc_id, md5(a.text) AS text_md5
-        |FROM documents a
-        |WHERE a.doc_id < 250
-        |  AND EXISTS (SELECT 1 FROM documents b WHERE b.doc_id >= 200 AND b.text = a.text)""".stripMargin,
-    "q57_top_tokens" ->
-      """WITH t AS (SELECT unnest(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS token
-        |           FROM documents)
-        |SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM t
-        |GROUP BY 1 ORDER BY cnt DESC, token LIMIT 50""".stripMargin,
-    "q58_tf_df" ->
-      """WITH t AS (SELECT doc_id AS id,
-        |             unnest(list_filter(string_split(text, ' '), w -> length(w) > 0)) AS token
-        |           FROM documents),
-        |tf AS (SELECT id, token, CAST(COUNT(*) AS BIGINT) AS tf FROM t GROUP BY 1, 2),
-        |df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1)
-        |SELECT tf.id, tf.token, tf.tf, df.df FROM tf JOIN df USING (token)
-        |WHERE tf.id % 10 = 0""".stripMargin,
-    "q56_asof_join" ->
-      """WITH u AS (
-        |  SELECT event_id, user_id, ts, 1 AS side, CAST(NULL AS BIGINT) AS sid, event_id AS tie
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT NULL, user_id, ts, 0, event_id, event_id
-        |  FROM events WHERE event_type = 'signup'),
-        |m AS (SELECT *, LAST_VALUE(sid IGNORE NULLS) OVER (
-        |        PARTITION BY user_id ORDER BY ts, side, tie
-        |        ROWS UNBOUNDED PRECEDING) AS ls FROM u)
-        |SELECT event_id, user_id, COALESCE(ls, -1) AS last_signup_id
-        |FROM m WHERE side = 1""".stripMargin,
-    "q84_quantile_hist" ->
-      // the oracle pins the IN-QUERY verification verdicts (see the q84
-      // query comment): exact row count + all rank/monotonicity checks TRUE
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n, TRUE AS cnt_ok, TRUE AS ok25,
-        |  TRUE AS ok50, TRUE AS ok75, TRUE AS mono_ok FROM events""".stripMargin,
-    "q108_stanag4676_ingest" ->
-      s"""WITH ev AS (
-         |  SELECT event_id, ${Tables.eventsLonSql} AS lon, ${Tables.eventsLatSql} AS lat, ts, value
-         |  FROM events WHERE event_id < 500)
-         |SELECT event_id AS input_id,
-         |  'm' || CAST(event_id % 7 AS VARCHAR) AS mission,
-         |  'TN' || CAST(event_id AS VARCHAR) AS track_number,
-         |  'uuid-' || CAST(event_id AS VARCHAR) AS track_uuid,
-         |  CASE CAST(event_id % 4 AS INTEGER) WHEN 0 THEN 'INITIATING' WHEN 1 THEN 'MAINTAINING'
-         |    WHEN 2 THEN 'DROPPING' ELSE 'STOPPED' END AS track_status,
-         |  'UNKNOWN' AS track_item_classification,
-         |  date_trunc('milliseconds', ts) AS ts,
-         |  value AS speed,
-         |  CAST(event_id % 360 AS DOUBLE) AS course,
-         |  lat, lon,
-         |  CAST(-1 AS BIGINT) AS end_ts_ms
-         |FROM ev""".stripMargin,
-    "q103_gdelt_ingest" ->
-      s"""WITH ev AS (
-         |  SELECT event_id, event_type, ${graft.spark.Tables.eventsLonSql} AS lon,
-         |         ${graft.spark.Tables.eventsLatSql} AS lat, ts
-         |  FROM events)
-         |SELECT CAST(event_id AS INTEGER) AS eventid, CAST(ts AS DATE) AS ts, lat, lon,
-         |  event_type AS actor1, 'US' AS action_country,
-         |  CAST(event_id % 11 AS INTEGER) AS n_articles,
-         |  (event_id % 100) / 10.0 AS avg_tone
-         |FROM ev WHERE event_id < 500""".stripMargin,
-    "q102_gpx_ingest" ->
-      s"""$eventsCte
-         |SELECT
-         |  'e' || CAST(event_id AS VARCHAR) || '_' ||
-         |    (CASE WHEN lat < 0 THEN '-' ELSE '' END ||
-         |     lpad(CAST(CAST(round(abs(lat) * 10000000) AS BIGINT) AS VARCHAR), 10, '0')) || '_' ||
-         |    (CASE WHEN lon < 0 THEN '-' ELSE '' END ||
-         |     lpad(CAST(CAST(round(abs(lon) * 10000000) AS BIGINT) AS VARCHAR), 10, '0')) AS id,
-         |  'e' || CAST(event_id AS VARCHAR) AS name,
-         |  lat, lon, CAST(event_id % 100 AS DOUBLE) AS elevation
-         |FROM ev WHERE event_id < 500""".stripMargin,
-    "q101_corpus_pipeline" ->
-      s"""WITH $plantedPiiCte,
-         |scrub AS (
-         |  SELECT doc_id,
-         |    regexp_replace(regexp_replace(regexp_replace(text,
-         |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}', '<EMAIL>', 'g'),
-         |      '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}', '<IP>', 'g'),
-         |      '[0-9]{3}[-][0-9]{3}[-][0-9]{4}', '<PHONE>', 'g') AS text
-         |  FROM planted),
-         |${chunkDedupCtes("scrub")},
-         |gated AS (
-         |  SELECT doc_id, clean_text,
-         |    CAST(len(list_filter(string_split(clean_text, ' '), x -> length(x) > 0)) AS BIGINT) AS n_words
-         |  FROM cclean)
-         |SELECT doc_id AS id,
-         |  CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val' ELSE 'test' END AS split,
-         |  n_words
-         |FROM (SELECT doc_id, n_words, ${duckHash("clean_text")} % 100 AS h
-         |      FROM gated WHERE n_words >= 20)""".stripMargin,
-    "q100_pii_redact" ->
-      s"""WITH $plantedPiiCte
-         |SELECT doc_id AS id,
-        |  regexp_replace(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}', '<IP>', 'g'),
-        |    '[0-9]{3}[-][0-9]{3}[-][0-9]{4}', '<PHONE>', 'g') AS clean_text,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text, '[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}')) AS BIGINT) AS n_ips,
-        |  CAST(len(regexp_extract_all(text, '[0-9]{3}[-][0-9]{3}[-][0-9]{4}')) AS BIGINT) AS n_phones
-        |FROM planted""".stripMargin,
-    "q98_repetition_quality" ->
-      """WITH w AS (
-        |  SELECT doc_id, u.word
-        |  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws
-        |        FROM documents) d, UNNEST(d.ws) AS u(word)),
-        |wc AS (SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2),
-        |tw AS (SELECT doc_id, max(c) AS top_word_cnt, CAST(sum(c) AS BIGINT) AS n_words
-        |       FROM wc GROUP BY 1),
-        |tri AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(ws) >= 3 THEN len(ws) - 2 ELSE 0 END AS n_trigrams,
-        |    CASE WHEN len(ws) >= 3 THEN len(ws) - 2 - len(list_distinct(
-        |      list_transform(range(1, CAST(len(ws) - 1 AS BIGINT)),
-        |        i -> ws[CAST(i AS BIGINT)] || ' ' || ws[CAST(i + 1 AS BIGINT)] || ' ' || ws[CAST(i + 2 AS BIGINT)])))
-        |    ELSE 0 END AS dup_trigram_cnt
-        |  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws
-        |        FROM documents))
-        |SELECT d.doc_id AS id,
-        |  COALESCE(tw.n_words, 0) AS n_words,
-        |  COALESCE(tw.top_word_cnt, 0) AS top_word_cnt,
-        |  CAST(tri.n_trigrams AS BIGINT) AS n_trigrams,
-        |  CAST(tri.dup_trigram_cnt AS BIGINT) AS dup_trigram_cnt
-        |FROM documents d
-        |LEFT JOIN tw ON tw.doc_id = d.doc_id
-        |JOIN tri ON tri.doc_id = d.doc_id""".stripMargin,
-    "q99_chunk_dedup" ->
-      s"""WITH ${chunkDedupCtes("documents")}
-         |SELECT doc_id AS id, clean_text FROM cclean""".stripMargin,
-    "q54_quality_ext" ->
-      """WITH w AS (SELECT doc_id, text,
-        |  list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws FROM documents)
-        |SELECT doc_id AS id,
-        |  CAST(len(ws) AS BIGINT) AS n_words,
-        |  CASE WHEN len(ws) = 0 THEN CAST(0 AS BIGINT)
-        |       ELSE CAST(FLOOR(CAST(CAST(list_sum(list_transform(ws, x -> length(x))) AS BIGINT) * 100 AS DOUBLE) / len(ws)) AS BIGINT) END AS mean_word_len_c,
-        |  CAST(len(list_filter(ws, x -> x IN ('the', 'and', 'of'))) AS BIGINT) AS stopword_cnt,
-        |  CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS digit_cnt,
-        |  CAST(len(regexp_extract_all(text, '[A-Z]')) AS BIGINT) AS upper_cnt,
-        |  CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS BIGINT) AS symbol_cnt
-        |FROM w""".stripMargin,
-    "q55_geohash" -> {
-      // 6 chars = 30 bits (15 lon ‖ 15 lat, interleaved lon-first): the
-      // bisection equals the binary digits of floor(norm * 2^15); boundary
-      // grid points are dyadic, so the float math agrees bit-for-bit
-      val interleave = (0 until 15).map { b =>
-        s"(((xi >> ${14 - b}) & 1) << ${29 - 2 * b}) + (((yi >> ${14 - b}) & 1) << ${28 - 2 * b})"
-      }.mkString(" + ")
-      val chars = (0 until 6).map { c =>
-        s"substr('0123456789bcdefghjkmnpqrstuvwxyz', CAST((v >> ${25 - 5 * c}) & 31 AS INTEGER) + 1, 1)"
-      }.mkString(" || ")
-      s"""$pagesCte,
-         |gidx AS (SELECT doc_id,
-         |  CAST(FLOOR((lon + 180) / 360 * 32768) AS BIGINT) AS xi,
-         |  CAST(FLOOR((lat + 90) / 180 * 32768) AS BIGINT) AS yi
-         |  FROM pages),
-         |iv AS (SELECT doc_id, $interleave AS v FROM gidx)
-         |SELECT doc_id, $chars AS gh FROM iv""".stripMargin
-    },
-    "q53_decimate" -> {
-      val bins = 32
-      s"""$pagesCte
-         |SELECT doc_id, tx, ty FROM (
-         |  SELECT doc_id, tx, ty, ROW_NUMBER() OVER (PARTITION BY tx, ty ORDER BY doc_id) AS rn
-         |  FROM (
-         |    SELECT doc_id,
-         |      CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-         |      CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
-         |    FROM pages)
-         |) WHERE rn <= 3""".stripMargin
-    },
-    "q97_field_visibility" ->
-      """SELECT doc_id,
-        |  CASE WHEN CAST(doc_id % 3 AS INTEGER) = 2 THEN source END AS source,
-        |  CASE WHEN CAST(doc_id % 3 AS INTEGER) <> 1 THEN text END AS text
-        |FROM documents""".stripMargin,
-    "q52_visibility" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 4 AS INTEGER) WHEN 0 THEN 'a' WHEN 1 THEN 'b&a'
-        |       WHEN 2 THEN 'c|b' ELSE '(a|c)&d' END AS vis
-        |FROM documents WHERE doc_id % 4 IN (0, 3)""".stripMargin,
-    "q50_sessionize" ->
-      """WITH w AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |      OR epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-        |      THEN 1 ELSE 0 END AS new_sess
-        |  FROM events),
-        |s AS (SELECT user_id, ts,
-        |  SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS session_id FROM w)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  COUNT(*) AS n_events, MIN(ts) AS start_ts, MAX(ts) AS end_ts
-        |FROM s GROUP BY 1, 2""".stripMargin,
-    "q51_neardup_clusters" ->
-      s"""WITH RECURSIVE $minhashCtes,
-         |dup AS (SELECT a_id, b_id FROM ($jaccardTail)),
-         |e AS (SELECT a_id AS src, b_id AS dst FROM dup
-         |      UNION ALL SELECT b_id, a_id FROM dup
-         |      UNION ALL SELECT doc_id, doc_id FROM documents),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM e
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src)
-         |SELECT src AS id, MIN(dst) AS cluster, (MIN(dst) = src) AS is_keeper
-         |FROM reach GROUP BY 1""".stripMargin,
-    "q48_multi_index" ->
-      s"""$eventsCte
-         |SELECT event_id, lon, lat, ts FROM ev
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}
-         |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q65_hash_split" ->
-      s"""SELECT CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val' ELSE 'test' END AS split,
-         |       CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-         |FROM (SELECT n_chars, ${duckHash("text")} % 100 AS h FROM documents)
-         |GROUP BY 1""".stripMargin,
-    "q66_host_cap" ->
-      s"""SELECT doc_id, source FROM (
-         |  SELECT doc_id, source,
-         |         ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-         |  FROM documents) WHERE rn <= 3""".stripMargin,
-    "q68_text_range" ->
-      s"""SELECT doc_id, n_chars FROM documents
-         |WHERE lower(text) >= 'the' AND lower(text) <= 'these'""".stripMargin,
-    "q69_text_range_indexed" ->
-      s"""SELECT doc_id AS id FROM documents
-         |WHERE lower(text) >= 'the' AND lower(text) <= 'these'""".stripMargin,
-    "q72_kde_pyramid_tiles" -> kdePyramidTilesSql(minBits = 3, maxBits = 5, tileBits = 2),
-    "q73_balanced_scan" ->
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}""".stripMargin,
-    "q76_like_filter" -> {
-      // regexp_full_match (RE2), not LIKE: SQL LIKE's % crosses newlines
-      // while the reference's Matcher.matches() `.*` does not. RE2's `.`
-      // excludes only \n, while Java's also excludes \r, NEL and the
-      // Unicode line/paragraph separators - spell out the exact Java
-      // dot class so the oracle matches likeSearch on ANY corpus.
-      val d = """[^\x{000A}\x{000D}\x{0085}\x{2028}\x{2029}]"""
-      s"SELECT doc_id AS id FROM documents WHERE regexp_full_match(text, '$d*the$d* the$d*')"
-    },
-    "q77_stream_window" -> {
-      val bins = 64
-      s"""$eventsCte
-         |SELECT TIMESTAMP '1970-01-01 00:00:00'
-         |         + INTERVAL '1 day' * CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS win_start,
-         |  CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-         |  CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty,
-         |  COUNT(*) AS cnt
-         |FROM ev GROUP BY 1, 2, 3""".stripMargin
-    },
-    "q79_stream_state" -> {
-      val bins = 64
-      s"""$eventsCte
-         |SELECT tx * $bins + ty AS tile, COUNT(*) AS cnt FROM (
-         |  SELECT
-         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
-         |  FROM ev) GROUP BY 1""".stripMargin
-    },
-    "q80_stream_enrich" ->
-      s"""$eventsCte
-         |SELECT e.event_id, r.region_id
-         |FROM ev e
-         |JOIN (VALUES ${Tables.regionBoxesSqlValues(40)}) r(region_id, lon_min, lon_max, lat_min, lat_max)
-         |  ON e.lon >= r.lon_min AND e.lon <= r.lon_max
-         | AND e.lat >= r.lat_min AND e.lat <= r.lat_max""".stripMargin,
-    "q81_stream_dedup" ->
-      ("SELECT DISTINCT event_type || '#' || CAST(event_id % 1000 AS VARCHAR) " +
-        "AS content FROM events"),
-    "q82_coord_cosine" ->
-      s"""WITH ev AS (
-         |  SELECT event_id, ${Tables.eventsLonSql} AS lon, ${Tables.eventsLatSql} AS lat, value
-         |  FROM events)
-         |SELECT event_id,
-         |  (lon*3.0 + lat*2.0 + value*1.0) /
-         |    (sqrt(lon*lon + lat*lat + value*value) * sqrt(3.0*3.0 + 2.0*2.0 + 1.0*1.0)) AS cosine
-         |FROM ev WHERE NOT (lon = 0 AND lat = 0 AND value = 0)""".stripMargin,
-    "q78_raster_mosaic" -> {
-      def px(x: String, y: String) =
-        s"CAST(CASE WHEN (tx*64 + ty*16 + ($y*8 + $x)) % 13 = 0 THEN 0 " +
-          s"ELSE (tx*31 + ty*17 + ($y*8 + $x)*7) % 256 END AS DOUBLE)"
-      s"""WITH targets AS (
-         |  SELECT a.gx, b.gy FROM (SELECT unnest(range(4)) AS gx) a,
-         |                         (SELECT unnest(range(4)) AS gy) b),
-         |tb AS (
-         |  SELECT gx, gy,
-         |    CAST(gx AS DOUBLE)/4*360 - 180 AS dlonmin,
-         |    CAST(gx+1 AS DOUBLE)/4*360 - 180 AS dlonmax,
-         |    GREATEST(CAST(gy AS DOUBLE)/4*360 - 180, -90.0) AS dlatmin,
-         |    LEAST(CAST(gy+1 AS DOUBLE)/4*360 - 180, 90.0) AS dlatmax
-         |  FROM targets),
-         |pairs AS (
-         |  SELECT t.*, gx*2 + x.cx AS tx, gy*2 + y.cy AS ty,
-         |    CAST(gx*2 + x.cx AS DOUBLE)/8*360 - 180 AS slonmin,
-         |    CAST(gx*2 + x.cx + 1 AS DOUBLE)/8*360 - 180 AS slonmax,
-         |    GREATEST(CAST(gy*2 + y.cy AS DOUBLE)/8*360 - 180, -90.0) AS slatmin,
-         |    LEAST(CAST(gy*2 + y.cy + 1 AS DOUBLE)/8*360 - 180, 90.0) AS slatmax
-         |  FROM tb t, (SELECT unnest(range(2)) AS cx) x, (SELECT unnest(range(2)) AS cy) y),
-         |pixels AS (
-         |  SELECT p.*, ii.i, jj.j, CAST(jj.j*8 + ii.i AS BIGINT) AS pos,
-         |    dlonmin + (ii.i + 0.5)/8*(dlonmax - dlonmin) AS wx,
-         |    dlatmin + (jj.j + 0.5)/8*(dlatmax - dlatmin) AS wy,
-         |    slonmax - slonmin AS sw, slatmax - slatmin AS sh
-         |  FROM pairs p, (SELECT unnest(range(8)) AS i) ii, (SELECT unnest(range(8)) AS j) jj),
-         |uv AS (
-         |  SELECT *,
-         |    CASE WHEN sw > 0 AND sh > 0 AND wx >= slonmin AND wx < slonmax
-         |              AND wy >= slatmin AND wy < slatmax THEN 1 ELSE 0 END AS ok,
-         |    CASE WHEN sw > 0 THEN (wx - slonmin)/sw*8 - 0.5 ELSE 0.0 END AS u,
-         |    CASE WHEN sh > 0 THEN (wy - slatmin)/sh*8 - 0.5 ELSE 0.0 END AS v
-         |  FROM pixels),
-         |cl AS (
-         |  SELECT *, GREATEST(0, LEAST(7, CAST(FLOOR(u) AS INTEGER))) AS u0,
-         |            GREATEST(0, LEAST(7, CAST(FLOOR(v) AS INTEGER))) AS v0
-         |  FROM uv),
-         |cl2 AS (
-         |  SELECT *, LEAST(7, u0 + 1) AS u1, LEAST(7, v0 + 1) AS v1,
-         |    GREATEST(0.0, LEAST(1.0, u - u0)) AS fu,
-         |    GREATEST(0.0, LEAST(1.0, v - v0)) AS fv
-         |  FROM cl),
-         |contrib AS (
-         |  SELECT gx, gy, pos, ok,
-         |    ${px("u0", "v0")}*(1 - fu)*(1 - fv) + ${px("u1", "v0")}*fu*(1 - fv)
-         |      + ${px("u0", "v1")}*(1 - fu)*fv + ${px("u1", "v1")}*fu*fv AS value
-         |  FROM cl2)
-         |SELECT CAST(gx AS BIGINT) AS ntx, CAST(gy AS BIGINT) AS nty, pos,
-         |  CAST(SUM(CASE WHEN ok = 1
-         |                THEN LEAST(255, GREATEST(0, CAST(ROUND(value) AS INTEGER)))
-         |                ELSE 0 END) AS BIGINT) AS v
-         |FROM contrib GROUP BY 1, 2, 3""".stripMargin
-    },
-    "q75_raster_resize" -> {
-      def px(x: String, y: String) =
-        s"CAST(CASE WHEN (tx*64 + ty*16 + ($y*8 + $x)) % 13 = 0 THEN 0 " +
-          s"ELSE (tx*31 + ty*17 + ($y*8 + $x)*7) % 256 END AS DOUBLE)"
-      s"""WITH parents AS (
-         |  SELECT a.tx, b.ty FROM (SELECT unnest(range(4)) AS tx) a,
-         |                         (SELECT unnest(range(4)) AS ty) b),
-         |cb AS (
-         |  SELECT tx, ty,
-         |    CAST(tx AS DOUBLE)/4*360 - 180 AS slonmin,
-         |    CAST(tx+1 AS DOUBLE)/4*360 - 180 AS slonmax,
-         |    GREATEST(CAST(ty AS DOUBLE)/4*360 - 180, -90.0) AS slatmin,
-         |    LEAST(CAST(ty+1 AS DOUBLE)/4*360 - 180, 90.0) AS slatmax
-         |  FROM parents),
-         |children AS (
-         |  SELECT cb.*, tx*2 + x.cx AS ntx, ty*2 + y.cy AS nty,
-         |    CAST(tx*2 + x.cx AS DOUBLE)/8*360 - 180 AS dlonmin,
-         |    CAST(tx*2 + x.cx + 1 AS DOUBLE)/8*360 - 180 AS dlonmax,
-         |    GREATEST(CAST(ty*2 + y.cy AS DOUBLE)/8*360 - 180, -90.0) AS dlatmin,
-         |    LEAST(CAST(ty*2 + y.cy + 1 AS DOUBLE)/8*360 - 180, 90.0) AS dlatmax
-         |  FROM cb, (SELECT unnest(range(2)) AS cx) x, (SELECT unnest(range(2)) AS cy) y),
-         |pixels AS (
-         |  SELECT c.*, ii.i, jj.j, CAST(jj.j*8 + ii.i AS BIGINT) AS pos,
-         |    dlonmin + (ii.i + 0.5)/8*(dlonmax - dlonmin) AS wx,
-         |    dlatmin + (jj.j + 0.5)/8*(dlatmax - dlatmin) AS wy,
-         |    slonmax - slonmin AS sw, slatmax - slatmin AS sh
-         |  FROM children c, (SELECT unnest(range(8)) AS i) ii, (SELECT unnest(range(8)) AS j) jj),
-         |uv AS (
-         |  SELECT *,
-         |    CASE WHEN sw > 0 AND sh > 0 AND wx >= slonmin AND wx < slonmax
-         |              AND wy >= slatmin AND wy < slatmax THEN 1 ELSE 0 END AS ok,
-         |    CASE WHEN sw > 0 THEN (wx - slonmin)/sw*8 - 0.5 ELSE 0.0 END AS u,
-         |    CASE WHEN sh > 0 THEN (wy - slatmin)/sh*8 - 0.5 ELSE 0.0 END AS v
-         |  FROM pixels),
-         |cl AS (
-         |  SELECT *, GREATEST(0, LEAST(7, CAST(FLOOR(u) AS INTEGER))) AS u0,
-         |            GREATEST(0, LEAST(7, CAST(FLOOR(v) AS INTEGER))) AS v0
-         |  FROM uv),
-         |cl2 AS (
-         |  SELECT *, LEAST(7, u0 + 1) AS u1, LEAST(7, v0 + 1) AS v1,
-         |    GREATEST(0.0, LEAST(1.0, u - u0)) AS fu,
-         |    GREATEST(0.0, LEAST(1.0, v - v0)) AS fv
-         |  FROM cl),
-         |vals AS (
-         |  SELECT ntx, nty, pos, ok,
-         |    ${px("u0", "v0")}*(1 - fu)*(1 - fv) + ${px("u1", "v0")}*fu*(1 - fv)
-         |      + ${px("u0", "v1")}*(1 - fu)*fv + ${px("u1", "v1")}*fu*fv AS value
-         |  FROM cl2)
-         |SELECT CAST(ntx AS BIGINT) AS ntx, CAST(nty AS BIGINT) AS nty, pos,
-         |  CAST(CASE WHEN ok = 1
-         |            THEN LEAST(255, GREATEST(0, CAST(ROUND(value) AS INTEGER)))
-         |            ELSE 0 END AS BIGINT) AS v
-         |FROM vals""".stripMargin
-    },
-    "q74_raster_stats" ->
-      s"""WITH px AS (
-         |  SELECT doc_id AS tile_id, i,
-         |    CASE WHEN (doc_id + i) % 11 = 0 THEN 0 ELSE (doc_id * 31 + i * 7) % 256 END AS v
-         |  FROM documents, (SELECT unnest(range(64)) AS i)),
-         |st AS (
-         |  SELECT tile_id,
-         |    CAST(COUNT(*) AS BIGINT) AS n_pixels,
-         |    CAST(SUM(CASE WHEN v = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_nodata,
-         |    CAST(COALESCE(MIN(CASE WHEN v <> 0 THEN v END), 0) AS BIGINT) AS px_min,
-         |    CAST(COALESCE(MAX(CASE WHEN v <> 0 THEN v END), 0) AS BIGINT) AS px_max,
-         |    CAST(COALESCE(SUM(CASE WHEN v <> 0 THEN v END), 0) AS BIGINT) AS px_sum
-         |  FROM px GROUP BY 1),
-         |hist AS (
-         |  SELECT p.tile_id, b.bin,
-         |    CAST(COALESCE(SUM(CASE WHEN p.v <> 0 AND (p.v >> 4) = b.bin THEN 1 END), 0) AS BIGINT) AS bin_cnt
-         |  FROM px p, (SELECT unnest(range(16)) AS bin) b
-         |  GROUP BY 1, 2)
-         |SELECT st.tile_id, st.n_pixels, st.n_nodata, st.px_min, st.px_max, st.px_sum,
-         |       h.bin, h.bin_cnt
-         |FROM st JOIN hist h USING (tile_id)""".stripMargin,
-    "q70_delete_store" ->
-      // the delete path's anti-join oracle (BaseDataStore.java:327-499
-      // semantics): survivors = everything minus the id set minus the
-      // spatial predicate
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE doc_id NOT IN (11, 101, 202, 303, 404)
-         |  AND NOT (lon >= 100.0 AND lat >= 20.0)""".stripMargin,
-    "q71_text_range_cs" ->
-      s"""SELECT doc_id AS id FROM documents
-         |WHERE text >= 'the' AND text <= 'these'""".stripMargin,
-    "q89_snapshot_asof" ->
-      // time travel is pure history bookkeeping: as-of V0 = everything,
-      // V1 = minus the first delete, live = minus both — each version a
-      // plain anti-predicate over the same pages
-      s"""$pagesCte
-         |SELECT CAST(0 AS INTEGER) AS version, doc_id, lon, lat FROM pages
-         |UNION ALL
-         |SELECT CAST(1 AS INTEGER), doc_id, lon, lat FROM pages
-         |WHERE NOT (lon >= 100.0 AND lat >= 20.0)
-         |UNION ALL
-         |SELECT CAST(2 AS INTEGER), doc_id, lon, lat FROM pages
-         |WHERE NOT (lon >= 100.0 AND lat >= 20.0) AND NOT (lon < -100.0)""".stripMargin,
-    "q90_compact_store" ->
-      // compaction is invisible to readers: exact row conservation
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages""".stripMargin,
-    "q91_snapshot_diff" ->
-      // the delta between v0 and v2 is exactly the rows the two deletes
-      // removed — nothing is added by a delete
-      s"""$pagesCte
-         |SELECT 'removed' AS change, doc_id, lon, lat FROM pages
-         |WHERE (lon >= 100.0 AND lat >= 20.0) OR (lon < -100.0)""".stripMargin,
-    "q88_rowkey_scan" ->
-      // the row_key compound-range scan is an access-path choice; the
-      // result set is the plain box query over the same pages
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2}
-         |  AND lat >= ${Box._3} AND lat <= ${Box._4}""".stripMargin,
-    "q86_stats_clipped_box" ->
-      // the clip is a pure pruning optimization: the oracle filters the
-      // shard with the ORIGINAL (unclipped) query box
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE lon >= 0.0 AND lon <= 50.0 AND lat >= 0.0 AND lat <= 40.0
-         |  AND lon >= 25.0 AND lon <= 179.0 AND lat >= 20.0 AND lat <= 89.0""".stripMargin,
-    "q87_radius_meters" ->
-      // PURE haversine oracle (q41's exact operation order) — no envelope
-      // terms: the Spark side's haversine-disk envelope cover must be a
-      // SOUND superset of the disk, so any under-coverage shows up here
-      // as a hash mismatch
-      s"""$pagesCte
-         |SELECT doc_id, lon, lat FROM pages
-         |WHERE 2.0 * 6371008.8 * ASIN(SQRT(
-         |    SIN(RADIANS(lat - ${RadCenter._2}) / 2) * SIN(RADIANS(lat - ${RadCenter._2}) / 2) +
-         |    COS(RADIANS(${RadCenter._2})) * COS(RADIANS(lat)) *
-         |    SIN(RADIANS(lon - ${RadCenter._1}) / 2) * SIN(RADIANS(lon - ${RadCenter._1}) / 2)))
-         |    <= $RadMeters""".stripMargin,
-    "q85_transform_vis" ->
-      // visibility-transform oracle (VisibilityTransformer.java:25-60):
-      // replaceFirst is DuckDB regexp_replace's non-global default; no
-      // leading operator can be exposed here ('b' is never the leading
-      // term), so the strip branch is exercised by spec, not SQL.
-      // Visible under {a,c}: 'a' always; 'b&a' only where the lon<0
-      // rewrite made it 'c&a'; 'c|b' always (c satisfies either form);
-      // '(a|c)&d' never (d is not held).
-      s"""$pagesCte
-         |SELECT doc_id,
-         |  CASE WHEN lon < 0 THEN regexp_replace(vis0, 'b', 'c') ELSE vis0 END AS vis
-         |FROM (
-         |  SELECT doc_id, lon,
-         |    CASE CAST(doc_id % 4 AS INTEGER) WHEN 0 THEN 'a' WHEN 1 THEN 'b&a'
-         |         WHEN 2 THEN 'c|b' ELSE '(a|c)&d' END AS vis0
-         |  FROM pages)
-         |WHERE CAST(doc_id % 4 AS INTEGER) = 0
-         |   OR (CAST(doc_id % 4 AS INTEGER) = 1 AND lon < 0)
-         |   OR CAST(doc_id % 4 AS INTEGER) = 2""".stripMargin,
-    "q104_biased_st_box" ->
-      s"""$eventsCte
-         |SELECT event_id, lon, lat, ts FROM ev
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}
-         |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q96_multi_index_heuristic" ->
-      s"""$eventsCte
-         |SELECT event_id, lon, lat, ts FROM ev
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}
-         |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q67_multi_index_locality" ->
-      s"""$eventsCte
-         |SELECT event_id, lon, lat, ts FROM ev
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}
-         |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q64_multi_index_stats" ->
-      s"""$eventsCte
-         |SELECT event_id, lon, lat, ts FROM ev
-         |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}
-         |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q39_zorder" -> {
-      val bins = 256
-      // morton interleave, x-major: x bit b → out bit 2b+1, y bit b → 2b
-      val interleave = (0 until 8).map { b =>
-        s"(((tx >> $b) & 1) << ${2 * b + 1}) + (((ty >> $b) & 1) << ${2 * b})"
-      }.mkString(" + ")
-      s"""$pagesCte
-         |SELECT doc_id, CAST($interleave AS BIGINT) AS zid FROM (
-         |  SELECT doc_id,
-         |    CAST(GREATEST(CEIL(((lon + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS tx,
-         |    CAST(GREATEST(CEIL(((lat + 180) / 360) * $bins) - 1, 0) AS BIGINT) AS ty
-         |  FROM pages)""".stripMargin
-    },
-  )
+  /** the `Box` page scan (q01, q73). */
+  private val pagesBoxSql =
+    s"""$pagesCte
+       |SELECT doc_id, lon, lat FROM pages
+       |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}""".stripMargin
 
-  private val q33Sql: String =
-    s"""SELECT doc_id AS id, CAST(length(text) AS BIGINT) AS n_bytes,
-       |  CAST(ord(substr(text, 1, 1)) AS BIGINT) AS head_byte,
-       |  ${duckHash("text")} AS checksum
-       |FROM documents""".stripMargin
+  /** pages joined to the 40 region boxes (q14, q47). */
+  private val regionJoinSql =
+    s"""$pagesCte
+       |SELECT p.doc_id, r.region_id
+       |FROM pages p
+       |JOIN (VALUES ${Tables.regionBoxesSqlValues(40)}) r(region_id, lon_min, lon_max, lat_min, lat_max)
+       |  ON p.lon >= r.lon_min AND p.lon <= r.lon_max
+       | AND p.lat >= r.lat_min AND p.lat <= r.lat_max""".stripMargin
 
-  private val q34Sql: String =
-    s"""SELECT event_id,
-       |  CAST(GREATEST(CEIL(((${Tables.eventsLonSql} + 180) / 360) * 256) - 1, 0) AS BIGINT) AS tx,
-       |  CAST(GREATEST(CEIL(((${Tables.eventsLatSql} + 180) / 360) * 256) - 1, 0) AS BIGINT) AS ty
-       |FROM events""".stripMargin
+  /** the `Box` × [`TsMin`, `TsMax`] event scan (q03 and its index variants
+    * q48, q64, q67, q96, q104). */
+  private val eventsStBoxSql =
+    s"""$eventsCte
+       |SELECT event_id, lon, lat, ts FROM ev
+       |WHERE lon >= ${Box._1} AND lon <= ${Box._2} AND lat >= ${Box._3} AND lat <= ${Box._4}
+       |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin
 
   /** unrolled Lloyd iterations mirroring Analytics.kmeans exactly. */
   private def kmeansSql(iters: Int): String = {

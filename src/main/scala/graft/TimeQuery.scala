@@ -16,13 +16,11 @@ object TimeQuery {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try for (name <- args) {
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name' (known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")})"))
+    try for (q <- args.map(SparkEntry.query)) {
       for (label <- Seq("cold", "warm")) {
         val t0 = System.nanoTime()
-        val n = fn(spark, dir).count()
-        println(f"TIMEQ $name($label) ${(System.nanoTime() - t0) / 1e9}%.2f sec rows=$n")
+        val n = q.plan(spark, dir).count()
+        println(f"TIMEQ ${q.name}($label) ${(System.nanoTime() - t0) / 1e9}%.2f sec rows=$n")
       }
     } finally spark.stop()
   }

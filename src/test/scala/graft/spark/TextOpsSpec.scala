@@ -553,4 +553,50 @@ class TextOpsSpec extends SparkTestBase {
     * the round-0 driver collapse (the per-hash-aggregate ladder it
     * replaced ran 31). */
   private val JobPin = 15
+
+  // Exchange-count pins read the EXECUTED plan after an action:
+  // queryExecution.sparkPlan predates EnsureRequirements (no inserted
+  // exchanges yet), and AQE hides children behind the adaptive wrapper —
+  // the final plan string is the honest record of what actually shuffled.
+  private def executedExchangeCount(df: DataFrame): Int = {
+    df.collect()
+    // the adaptive plan string prints Final AND Initial sections — count
+    // only the final one (everything before the "== Initial Plan ==" echo)
+    val finalSection = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    "Exchange hashpartitioning".r.findAllIn(finalSection).length
+  }
+
+  test("mixtureSample plan: zero Exchange (a pure narrow column pass)") {
+    val docs = spark.range(0, 50, 1, 4)
+      .select(col("id").as("doc_id"),
+        when(col("id") % 2 === 0, "en").otherwise("zh").as("lang"))
+    val df = TextOps.mixtureSample(docs, "doc_id", "lang", Map("en" -> 0.5, "zh" -> 2.5))
+    assert(executedExchangeCount(df) == 0,
+      "mixture sampling must not shuffle:\n" + df.queryExecution.executedPlan)
+  }
+
+  test("packSequences plan: exactly one Exchange (the shard partitioning) below the window") {
+    // multi-partition source: a single-partition LocalRelation would
+    // satisfy the window's clustering for free and elide the exchange
+    val docs = spark.range(0, 50, 1, 4).select(col("id").as("doc_id"), lit("a b c").as("text"))
+    val df = TextOps.packSequences(docs, "doc_id", "text", budget = 4L, shards = 4)
+    assert(executedExchangeCount(df) == 1,
+      "packing must pay exactly the one shard shuffle:\n" + df.queryExecution.executedPlan)
+  }
+
+  test("simhashNearDupPairs: every join is an equi-join (no Cartesian/BNLJ anywhere in the plan)") {
+    import spark.implicits._
+    val docs = (0L until 60L)
+      .map(i => (i, s"token${i % 7} shared words alpha beta gamma delta ${i % 3}"))
+      .toDF("doc_id", "text")
+    val df = TextOps.simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 2)
+    val plan = df.queryExecution.sparkPlan
+    val offenders = plan.collect {
+      case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
+      case b: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => b
+    }
+    assert(offenders.isEmpty,
+      "candidate generation must stay a banded equi-join, found:\n" + offenders.mkString("\n"))
+  }
 }
