@@ -2,8 +2,9 @@ package graft.spark
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import GeoFunctions._
 
 /**
@@ -15,7 +16,17 @@ import GeoFunctions._
  * pipeline: derive `cell_id` via the codegen'd [[CellIdSpatial]] expression,
  * salt on a deterministic url hash (the reference's HashKeyIndexStrategy
  * hot-cell breaker, core/index/.../simple/HashKeyIndexStrategy.java:51-130),
- * range-repartition by (salt, cell_id) and write sorted runs per bucket.
+ * range-split each batch on `cell_id` and write runs sorted by
+ * (bucket, row_key). Each file then covers about 1/`targetPartitions` of
+ * the cell keyspace, so the pushed `cell_id` range predicate skips row
+ * groups by their parquet min/max stats (the salt byte leads `row_key`,
+ * so a split on it would give every file the whole keyspace).
+ *
+ * The store opens from its own metadata: ingest records the read schema
+ * once in `_schema.ddl`, and every store read ([[readStore]], the
+ * mutation rewrites, `Snapshots.readStoreAsOf`) passes it to the parquet
+ * reader, so no read runs a schema-inference job. A resumed ingest whose
+ * read-back schema differs from the recorded one throws.
  *
  * Resumability contract (north rule: "resumable from checkpoint with
  * per-partition lineage + metrics"): the input is split into `numBuckets`
@@ -117,17 +128,28 @@ object Ingest {
       // byte order of row_key == (salt, cell_id) tuple order because the
       // prefix is fixed-width.
       .withColumn("row_key", compoundKey(col("salt"), col("cell_id")))
-    // record the stored schema once (DDL) so an emptied store still reads
-    // as a typed empty frame (readStore's no-bucket fallback). Recorded in
-    // the READ-BACK order: the parquet reader appends the bucket partition
-    // column LAST, not where the ingest frame carries it — the fallback
-    // frame must be positionally identical to a real read
+    // record the stored schema once (DDL): it is the store's READ schema
+    // (readStore and every mutation read pass it to the parquet reader, so
+    // no read infers one) and an emptied store's typed empty frame.
+    // Recorded in the READ-BACK order: the parquet reader appends the
+    // bucket partition column LAST, not where the ingest frame carries it
+    val readBack = StructType(
+      encoded.schema.fields.filterNot(_.name == "bucket") :+ encoded.schema("bucket"))
     val schemaFile = Paths.get(outDir, SchemaFile)
-    if (!Files.exists(schemaFile)) {
-      val readBack = org.apache.spark.sql.types.StructType(
-        encoded.schema.fields.filterNot(_.name == "bucket") :+ encoded.schema("bucket"))
-      // tmp + atomic move: a torn DDL would break every emptied-store read
-      // forever (the existence guard above would never rewrite it)
+    if (Files.exists(schemaFile)) {
+      // a resumed ingest must write the recorded schema: the reader applies
+      // it to every file, so an extra column would be dropped and a retyped
+      // one misread, silently
+      val recorded = recordedSchema(outDir)
+      def shape(s: StructType) = s.fields.toSeq.map(f => f.name -> readable(f.dataType))
+      if (shape(readBack) != shape(recorded))
+        throw new IllegalArgumentException(
+          s"Ingest.run: the pages' schema ${readBack.toDDL} differs from the store's " +
+            s"recorded $SchemaFile ${recorded.toDDL} at $outDir (names, order and " +
+            "types must match to resume or append)")
+    } else {
+      // tmp + atomic move: a torn DDL would break every store read forever
+      // (the existence guard above would never rewrite it)
       val tmp = Paths.get(outDir, SchemaFile + ".tmp")
       Files.write(tmp, readBack.toDDL.getBytes(StandardCharsets.UTF_8))
       Files.move(tmp, schemaFile, StandardCopyOption.ATOMIC_MOVE)
@@ -146,12 +168,16 @@ object Ingest {
       // the observation sits ABOVE the range exchange: RangePartitioner
       // samples its child in a separate pass, which would double-count
       // metrics attached below it
+      // split on cell_id, not row_key (whose leading salt byte would give
+      // every file every cell): each file's cell_id min/max then spans
+      // ~1/targetPartitions of the keyspace, so row-group stats skip it
+      // under the pushed cell_id ranges.
       // bucket leads the within-partition sort so the dynamic-partition
       // writer's required ordering (partition columns first) is already
       // satisfied — otherwise it inserts its own non-stable sort by bucket
       // and the row_key runs inside each file are destroyed
       slice
-        .repartitionByRange(cfg.targetPartitions, col("row_key"))
+        .repartitionByRange(cfg.targetPartitions, col("cell_id"))
         .observe(obs, metricAggs.head, metricAggs.tail: _*)
         .sortWithinPartitions(col("bucket"), col("row_key"))
         .write.mode("overwrite")
@@ -297,20 +323,43 @@ object Ingest {
       try s.anyMatch(p => p.getFileName.toString.startsWith("bucket="))
       finally s.close()
     }
-    if (!hasBuckets && Files.exists(Paths.get(outDir, SchemaFile)))
-      typedEmptyStore(spark, outDir)
-    else spark.read.parquet(dataDir.toString)
+    if (!hasBuckets) typedEmptyStore(spark, outDir)
+    else storeReader(spark, outDir).parquet(dataDir.toString)
   }
 
   /** the ingest-recorded schema as an empty frame — positionally identical
     * to a real bucket read (bucket partition column last). */
-  private[spark] def typedEmptyStore(spark: SparkSession, outDir: String): DataFrame = {
+  private[spark] def typedEmptyStore(spark: SparkSession, outDir: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      recordedSchema(outDir))
+
+  /** a parquet reader over this store's files that applies the recorded
+    * `_schema.ddl` (without `bucket` for a lone bucket dir, which carries
+    * no partition column), so building the frame runs no inference job. */
+  private[spark] def storeReader(spark: SparkSession, outDir: String,
+                                 withBucket: Boolean = true): DataFrameReader = {
+    val s = recordedSchema(outDir)
+    spark.read.schema(if (withBucket) s else StructType(s.filterNot(_.name == "bucket")))
+  }
+
+  /** `_schema.ddl` as the schema a parquet read infers: the file source
+    * reads every column as nullable, and the DDL keeps the ingest frame's
+    * NOT NULLs. */
+  private def recordedSchema(outDir: String): StructType = {
     val schemaFile = Paths.get(outDir, SchemaFile)
     require(Files.exists(schemaFile),
       s"store at $outDir has no recorded $SchemaFile (pre-schema-file ingest?)")
     val ddl = new String(Files.readAllBytes(schemaFile), StandardCharsets.UTF_8)
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    readable(StructType.fromDDL(ddl)).asInstanceOf[StructType]
+  }
+
+  /** `t` with every level nullable, as the parquet reader serves it. */
+  private def readable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = readable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(readable(a.elementType), containsNull = true)
+    case m: MapType => MapType(readable(m.keyType), readable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /**
@@ -414,7 +463,7 @@ object Ingest {
     // their rescan is a no-op over zero files.
     val obs = org.apache.spark.sql.Observation(s"alt-append-${System.nanoTime()}")
     val cntAggs = buckets.map(b => count(when(col("bucket") === b, 1)).as(s"n_$b"))
-    spark.read.parquet(s"$outDir/data")
+    storeReader(spark, outDir).parquet(s"$outDir/data")
       .where(col("bucket").isin(buckets: _*))
       .select(col(idCol), col("bucket"))
       .repartitionByRange(math.max(1, math.min(buckets.size, 8)), col(idCol))
@@ -747,7 +796,7 @@ object Ingest {
       Snapshots.writePendingMeta(outDir, snapV, verb, livePre, buckets)
     }
     val archivedB = Seq.newBuilder[Int]
-    val store = spark.read.parquet(dataDir)
+    val store = storeReader(spark, outDir).parquet(dataDir)
     val stagingRoot = Paths.get(outDir, ".delete-staging")
     graft.FsUtils.deleteRecursively(stagingRoot)
     Files.createDirectories(stagingRoot)

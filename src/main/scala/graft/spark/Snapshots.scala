@@ -339,7 +339,8 @@ object Snapshots {
     // (the first post-V mutation to touch it archived its content AT V), or
     // from the live store if never archived after V — with `basePath` so
     // `bucket` stays the discovered partition column in readStore's
-    // positional schema.
+    // positional schema. Every read applies the store's recorded schema,
+    // so none runs an inference job.
     val assigned = scala.collection.mutable.Set.empty[Int]
     val perVersion = later.flatMap { e =>
       val mine = e.archived.filter(b => liveAtV.contains(b) && assigned.add(b))
@@ -360,7 +361,7 @@ object Snapshots {
             "disabled between mutations) — this version is not reconstructable")
         p.toString
       }
-      spark.read.option("basePath", base.toString).parquet(paths: _*)
+      Ingest.storeReader(spark, outDir).option("basePath", base.toString).parquet(paths: _*)
     }
     val frames =
       perVersion.map { case (v, bs) =>
@@ -368,8 +369,8 @@ object Snapshots {
           .headOption.getOrElse(versionDir(outDir, v))
         readBuckets(base, bs, s"archive v$v/")
       } ++
-        midSwap.map(b => spark.read.parquet(retiredPath(b).toString)
-          .withColumn("bucket", lit(b))) ++
+        midSwap.map(b => Ingest.storeReader(spark, outDir, withBucket = false)
+          .parquet(retiredPath(b).toString).withColumn("bucket", lit(b))) ++
         (if (untouched.isEmpty) Nil
          else Seq(readBuckets(dataDir, untouched, "live")))
     frames.reduce(_.unionByName(_))
