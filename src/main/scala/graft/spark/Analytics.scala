@@ -1,7 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.{Aggregator, Window}
+import graft.index.MinimalBinHistogram
 import org.apache.spark.sql.functions._
 
 /**
@@ -55,7 +56,7 @@ object Analytics {
     var stats: DataFrame = null
     for (_ <- 0 until iters) {
       stats = kmeansAssignStats(pts, centroids)
-      // carry forward memberless centroids (same contract as kmeansVec):
+      // carry forward memberless centroids:
       // the groupBy emits no row for them, and silently shrinking k would
       // change every later iteration AND the k the caller asked for
       centroids = refreshCentroids(centroids, stats.collect())
@@ -379,140 +380,6 @@ object Analytics {
   }
 
   /**
-   * Deterministic k-means|| initialization (Bahman et al.): `rounds`
-   * oversampling passes, each admitting points with pseudo-probability
-   * l·k·cost(x)/totalCost (the coin flip is a hash of (id, round), so the
-   * sample is reproducible and partition-independent), then keep the k
-   * admitted points with the largest attracted population — the
-   * KSamplerMapReduce + BahmanEtAlSampleProbabilityFn + strip-weak chain
-   * (analytics/mapreduce/.../kmeans/KSamplerMapReduce.java:105,
-   * BahmanEtAlSampleProbabilityFn.java:11-28,
-   * StripWeakCentroidsRunner.java:27).
-   */
-  def kmeansParallelInit(pts: DataFrame, k: Int, rounds: Int = 3,
-                         l: Double = 4.0): Seq[(Long, Double, Double)] = {
-    val PREC = 1000000L
-    // seed: the lowest-id point
-    var cents = pts.select("id", "lon", "lat").orderBy("id").limit(1).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-    for (round <- 1 to rounds) {
-      // per-point cost = min d² as one codegen'd argmin column — no
-      // explode and no per-id shuffle (see kmeansAssignStats)
-      val cost = pts.select(col("id"), col("lon"), col("lat"),
-          GeoFunctions.gw_nearest_centroid(col("lon"), col("lat"), cents)
-            .getField("d2").as("cost"))
-        .cache()
-      val total = cost.agg(sum("cost")).collect()(0).getDouble(0)
-      if (total > 0) {
-        val p = least(col("cost") * (l * k) / total, lit(1.0))
-        val admitted = cost
-          .where(pmod(xxhash64(col("id"), lit(round)), lit(PREC)).cast("double") < p * PREC)
-          .select("id", "lon", "lat").collect()
-          .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-        cents = (cents ++ admitted).distinctBy(_._1)
-      }
-      cost.unpersist() // every action on this round's costs has run
-    }
-    // strip: keep the k candidates with the largest attracted population
-    val weights = kmeansAssignStats(pts, cents).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    cents.sortBy { case (id, _, _) => (-weights.getOrElse(id, 0L), id) }.take(k)
-  }
-
-  /**
-   * Lloyd k-means over QUANTIZED EMBEDDING VECTORS (array<bigint>) — the
-   * d-dimensional generalization of [[kmeans]], used to train the IVF
-   * coarse quantizer (the reference trains its analytic centroids the
-   * same way before clustering-driven queries). Deterministic init (the
-   * k lowest-id vectors); assignment by exact integer L2 as one codegen'd
-   * argmin expression ([[NearestCentroidVec]]); update =
-   * per-dimension integer sums (posexplode → (cid, dim) aggregation —
-   * one shuffle of n·d narrow rows per iteration, map-side combined).
-   * Returns (cid, centroid: Array[Long] — floor-averaged, deterministic).
-   */
-  def kmeansVec(emb: DataFrame, idCol: String, vecCol: String,
-                k: Int, iters: Int): Seq[(Long, Array[Long])] = {
-    val q = emb.select(col(idCol).as("id"),
-        transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")).as("v"))
-      .cache()
-    var cents: Seq[(Long, Array[Long])] = q.orderBy("id").limit(k).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    for (_ <- 0 until iters) {
-      // assignment = one codegen'd integer-L2 argmin column (the row's own
-      // |v|² is constant under the argmin, so the expression minimizes
-      // |c|² − 2·v·c) — no explode, no per-id window shuffle
-      val assigned = q.select(
-        GeoFunctions.gw_nearest_centroid_vec(col("v"), cents).as("cid"), col("v"))
-      val sums = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy("cid", "dim")
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("cnt"))
-        .collect()
-      val updated = sums.groupBy(_.getLong(0)).map { case (cid, rows) =>
-        val dims = rows.map(r => (r.getInt(1), r.getLong(2) / r.getLong(3))).sortBy(_._1)
-        (cid, dims.map(_._2).toArray)
-      }
-      // a centroid that attracts no members vanishes from the groupBy;
-      // carry it forward unchanged (and say so) instead of silently
-      // shrinking k for every subsequent iteration
-      val lost = cents.map(_._1).filterNot(updated.contains)
-      if (lost.nonEmpty)
-        println(s"[graft] kmeansVec: centroids ${lost.mkString(",")} attracted no members this iteration; carried forward unchanged")
-      cents = cents.map { case (cid, cv) => (cid, updated.getOrElse(cid, cv)) }
-        .sortBy(_._1)
-    }
-    q.unpersist()
-    cents
-  }
-
-  /** average assignment cost (mean min-d² to the given centroids) — the
-    * distortion input of the reference's KMeansDistortionMapReduce. */
-  def kmeansCost(pts: DataFrame, centroids: Seq[(Long, Double, Double)]): Double =
-    pts.select(GeoFunctions.gw_nearest_centroid(col("lon"), col("lat"), centroids)
-        .getField("d2").as("best"))
-      .agg(avg("best")).collect()(0).getDouble(0)
-
-  /** the reference's distortion statistic from a (Σ min-d², n) aggregate —
-    * expectation = Σ d² / n, distortion = (expectation / numDims)^(−numDims/2)
-    * (KMeansDistortionMapReduce reducer, KMeansDistortionMapReduce.java:
-    * 211-253; its test pins (0.34 + 0.75)/2 at dims=2 → 3.6697247706422016).
-    * None when the group is empty (the reducer's ptCount == 0 no-write). */
-  def distortion(sumSquaredError: Double, count: Long, dims: Int = 2): Option[Double] =
-    if (count <= 0) None
-    else Some(distortionOfExpectation(sumSquaredError / count, dims))
-
-  /** the distortion transform of an already-averaged expectation —
-    * shared by [[distortion]] and [[kmeansJump]]. */
-  def distortionOfExpectation(expectation: Double, dims: Int): Double =
-    math.pow(expectation / dims, -(dims / 2.0))
-
-  /** KMeans-jump k selection: run kmeans per candidate k, distortion per
-    * the reference's Sugar–James reducer (mean cost / dims)^(−dims/2)
-    * (KMeansDistortionMapReduce.java:243-246, applied by
-    * DistortionGroupManagement.java:61), pick the k with the largest jump
-    * (reference: KMeansJumpJobRunner.java:53-130). Returns (bestK, per-k
-    * distortions). */
-  def kmeansJump(pts: DataFrame, initFor: Int => Seq[(Long, Double, Double)],
-                 ks: Seq[Int], iters: Int, dims: Int = 2): (Int, Seq[(Int, Double)]) = {
-    val distortions = ks.map { k =>
-      val stats = kmeans(pts, initFor(k), iters)
-      val cents = stats.collect().map { r =>
-        (r.getLong(0), r.getLong(2).toDouble / r.getLong(1) / 100.0,
-          r.getLong(3).toDouble / r.getLong(1) / 100.0)
-      }.toSeq
-      k -> distortionOfExpectation(kmeansCost(pts, cents), dims)
-    }
-    // sort by k before differencing — the reference sorts its
-    // clusterCountToDistortion list ascending before the jump scan
-    // (DistortionGroupManagement.java:325-348); caller-order ks would
-    // otherwise produce meaningless adjacent deltas
-    val byK = distortions.sortBy(_._1)
-    val jumps = byK.zip(0.0 +: byK.map(_._2))
-      .map { case ((k, d), prev) => (k, d - prev) }
-    (jumps.maxBy(_._2)._1, byK)
-  }
-
-  /**
    * Per-GROUP best cluster count by the reference's jump rule —
    * DistortionGroupManagement.DistortionGroup.bestCount
    * (analytics/api/.../clustering/DistortionGroupManagement.java:302-348):
@@ -549,170 +416,45 @@ object Analytics {
         .withColumnRenamed("best_count", countCol)),
       Seq(groupCol, countCol))
 
-  /**
-   * Faithful ports of the reference's centroid-strip break strategies
-   * (StripWeakCentroidsRunner.java:151-351), golden-tested against
-   * StripWeakCentroidsRunnerTest's literal vectors. Input: association
-   * counts in LIST ORDER (the runner pre-sorts descending); output: the
-   * number of centroids to KEEP.
-   */
-  object BreakStrategies {
-    /** commons-math StandardDeviation: bias-corrected sample stddev. */
-    private def sampleStd(xs: Seq[Double]): Double =
-      if (xs.size < 2) 0.0
-      else {
-        val m = xs.sum / xs.size
-        math.sqrt(xs.map(x => (x - m) * (x - m)).sum / (xs.size - 1))
-      }
-
-    private def initialMax(tail: Boolean, chgs: Seq[Double]): Double =
-      if (!tail || chgs.isEmpty) 0.0
-      else chgs.sum / chgs.size + sampleStd(chgs)
-
-    /** MaxChangeBreakStrategy (`tail = false`) / TailMaxBreakStrategy
-      * (`tail = true`, the runner's DEFAULT): largest adjacent change,
-      * thresholded for the tail variant at mean + stddev of all changes;
-      * a count <= 1 stops the scan (StripWeakCentroidsRunner.java:151-203,
-      * 329-339). Ties update to the LATER position, as `Math.max(max,
-      * chg) == chg` does. */
-    def maxChange(counts: Seq[Long], tail: Boolean): Int = {
-      var position = counts.size
-      if (counts.size < 2) return position
-      val chgs = counts.sliding(2).map { case Seq(a, b) =>
-        math.abs(a.toDouble - b.toDouble) }.toSeq
-      var max = initialMax(tail, chgs)
-      var prior = Double.NaN
-      var count = 0
-      var stop = false
-      val it = counts.iterator
-      while (it.hasNext && !stop) {
-        val c = it.next()
-        if (c <= 1) {
-          if (position == 0) position = count
-          stop = true
-        } else {
-          if (!prior.isNaN) {
-            val chg = math.abs(prior - c.toDouble)
-            if (chg >= max) { position = count; max = chg }
-          }
-          prior = c.toDouble
-          count += 1
-        }
-      }
-      position
-    }
-
-    /** StableChangeBreakStrategy (`tail = false`) /
-      * TailStableChangeBreakStrategy (`tail = true`): sort the adjacent
-      * changes descending (stable, like Collections.sort), then find the
-      * largest change-of-change along that sorted sequence
-      * (StripWeakCentroidsRunner.java:254-327, 341-351). */
-    def stableChange(counts: Seq[Long], tail: Boolean): Int = {
-      if (counts.size < 2) return counts.size
-      val cs = counts.toIndexedSeq // List call sites: keep indexing O(1)
-      val changes = cs.indices.map { i =>
-        (i, if (i == 0) 0.0
-            else math.abs(cs(i - 1).toDouble - cs(i).toDouble))
-      }
-      val sorted = changes.sortBy(-_._2) // stable sort = Collections.sort
-      val chgOfChgs = sorted.sliding(2).map { case Seq(a, b) =>
-        math.abs(a._2 - b._2) }.toSeq
-      var max = initialMax(tail, chgOfChgs)
-      var position = sorted.head._1
-      if (sorted.head._2 < max) return counts.size
-      var prior = sorted.head
-      for (cur <- sorted.tail) {
-        val coc = math.abs(prior._2 - cur._2)
-        if (coc > max) { position = math.max(position, cur._1); max = coc }
-        prior = cur
-      }
-      position
-    }
-  }
+  /** the reference's distortion statistic from a (Σ min-d², n) aggregate —
+    * expectation = Σ d² / n, distortion = (expectation / numDims)^(−numDims/2)
+    * (KMeansDistortionMapReduce reducer, KMeansDistortionMapReduce.java:
+    * 211-253; its test pins (0.34 + 0.75)/2 at dims=2 → 3.6697247706422016).
+    * None when the group is empty (the reducer's ptCount == 0 no-write). */
+  def distortion(sumSquaredError: Double, count: Long, dims: Int = 2): Option[Double] =
+    if (count <= 0) None
+    else Some(math.pow(sumSquaredError / count / dims, -(dims / 2.0)))
 
   /** the mergeable Ben-Haim/Tom-Tov histogram as a typed Aggregator —
-    * per-partition streaming [[graft.index.MinimalBinHistogram]]s merged
+    * per-partition streaming [[MinimalBinHistogram]]s merged
     * pairwise by the paper's Algorithm 2, the exact shape of the
     * reference's mergeable FeatureNumericHistogramStatistics
     * (DataStatistics.merge). Only k·nbins numbers ever cross the wire. */
-  /** one typed Aggregator for every mergeable-histogram port: zero /
-    * streaming add / mutating merge / binary finish differ only in the
-    * buffer class, so both the dynamic-bin and fixed-bin paths share it
-    * (a serialization or null-handling fix lands in one place). */
-  private final class HistAgg[H <: AnyRef](mk: () => H,
-                                           addTo: (H, Double) => Unit,
-                                           mergeInto: (H, H) => Unit,
-                                           ser: H => Array[Byte])
-                                          (implicit ct: scala.reflect.ClassTag[H])
-      extends org.apache.spark.sql.expressions.Aggregator[Double, H, Array[Byte]] {
-    override def zero: H = mk()
-    override def reduce(h: H, v: Double): H = { addTo(h, v); h }
-    override def merge(a: H, b: H): H = { mergeInto(a, b); a }
-    override def finish(h: H): Array[Byte] = ser(h)
-    override def bufferEncoder: org.apache.spark.sql.Encoder[H] =
-      org.apache.spark.sql.Encoders.javaSerialization
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
+  private final class MinimalBinAgg(nbins: Int)
+      extends Aggregator[Double, MinimalBinHistogram, Array[Byte]] {
+    override def zero: MinimalBinHistogram = new MinimalBinHistogram(nbins)
+    override def reduce(h: MinimalBinHistogram, v: Double): MinimalBinHistogram = { h.add(v); h }
+    override def merge(a: MinimalBinHistogram, b: MinimalBinHistogram): MinimalBinHistogram = {
+      a.merge(b); a
+    }
+    override def finish(h: MinimalBinHistogram): Array[Byte] = h.toBytes
+    override def bufferEncoder: Encoder[MinimalBinHistogram] = Encoders.javaSerialization
+    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
-
-  private def minimalBinAgg(nbins: Int) =
-    new HistAgg[graft.index.MinimalBinHistogram](
-      () => new graft.index.MinimalBinHistogram(nbins),
-      _.add(_), _.merge(_), _.toBytes)
-
-  private def fixedBinAgg(nbins: Int) =
-    new HistAgg[graft.index.FixedBinHistogram](
-      () => new graft.index.FixedBinHistogram(nbins),
-      _.add(_), _.merge(_), _.toBytes)
 
   /** distributed approximate quantiles/CDF over a numeric column via the
     * dynamic-bin histogram: returns the merged histogram itself so the
     * caller can take quantiles, cdf and per-bin counts from ONE pass. */
   def minimalBinHistogram(df: DataFrame, valueCol: String,
-                          nbins: Int = 1024): graft.index.MinimalBinHistogram = {
+                          nbins: Int = 1024): MinimalBinHistogram = {
     val spark = df.sparkSession
     import spark.implicits._
     // nulls are skipped (the reference statistics ingest only present
     // values); without the filter the primitive deserializer would throw
     val bytes = df.select(col(valueCol).cast("double"))
       .where(col(valueCol).isNotNull).as[Double]
-      .select(minimalBinAgg(nbins).toColumn).collect()(0)
-    graft.index.MinimalBinHistogram.fromBytes(bytes)
-  }
-
-  /** the reference's RowRangeHistogramStatistics as one distributed pass
-    * (RowRangeHistogramStatistics.java:176-183: every row id projected
-    * through the histogram ByteUtils' key→double, ingested into a
-    * FixedBinNumericHistogram, per-tablet partials merged): row keys from
-    * `keyCol` (binary) → [[graft.index.KeyBytes.toDouble]] → per-partition
-    * [[graft.index.FixedBinHistogram]]s merged map-side. The returned
-    * histogram answers cdf / quantile / re-binned count — the inputs the
-    * reference's splits provider and stats-driven chooser consume. */
-  def rowRangeHistogram(df: DataFrame, keyCol: String = "row_key",
-                        nbins: Int = 1024): graft.index.FixedBinHistogram = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bytes = df.select(col(keyCol))
-      .where(col(keyCol).isNotNull).as[Array[Byte]]
-      .map(graft.index.KeyBytes.toDouble)
-      .select(fixedBinAgg(nbins).toColumn).collect()(0)
-    graft.index.FixedBinHistogram.fromBytes(bytes)
-  }
-
-  /** drop weak centroids exactly as the reference's runner does
-    * (StripWeakCentroidsRunner.java:93-122): sort descending by
-    * association count, take the break strategy's keep-count (default
-    * TailMaxBreakStrategy, the reference's default) clamped to the
-    * runner's [minimum, maximum] retention bounds (defaults 1 / 1000 —
-    * a degenerate breakpoint can otherwise strip every centroid). */
-  def stripWeakCentroids(stats: Seq[(Long, Long)],
-                         breakPoint: Seq[Long] => Int =
-                           BreakStrategies.maxChange(_, tail = true),
-                         minimum: Int = 1, maximum: Int = 1000): Seq[Long] = {
-    val sorted = stats.sortBy(-_._2) // strongest-first on EVERY path
-    if (stats.size <= minimum) return sorted.map(_._1)
-    val keep = math.min(math.max(minimum, breakPoint(sorted.map(_._2))), maximum)
-    sorted.take(keep).map(_._1)
+      .select(new MinimalBinAgg(nbins).toColumn).collect()(0)
+    MinimalBinHistogram.fromBytes(bytes)
   }
 
   /** one grouped Lloyd assignment pass for ALL parents at once: each point
@@ -720,7 +462,7 @@ object Analytics {
     * [[NearestCentroidGrouped2D]] argmin (no explode, no per-id window —
     * the only exchange is the (parent, centroid)-row partial-agg handoff),
     * integer stats grouped by (parent_id, centroid_id). */
-  private def groupedAssignStats(assigned: DataFrame,
+  private[spark] def groupedAssignStats(assigned: DataFrame,
                                  centroids: Seq[(Long, Long, Double, Double)]): DataFrame =
     assigned
       .select(col("parent_id"),
@@ -735,11 +477,6 @@ object Analytics {
       .agg(count(lit(1)).as("cnt"),
         sum(cents(col("lon"))).as("sum_lon_c"),
         sum(cents(col("lat"))).as("sum_lat_c"))
-
-  /** test hook for the private grouped assignment pass. */
-  private[spark] def groupedAssignStatsForTest(assigned: DataFrame,
-      centroids: Seq[(Long, Long, Double, Double)]): DataFrame =
-    groupedAssignStats(assigned, centroids)
 
   /** multi-level (zoom) clustering: kmeans at level 1, then kmeans again
     * within each level-1 cluster (reference: MultiLevelKMeansClustering
@@ -783,7 +520,7 @@ object Analytics {
     for (_ <- 0 until iters) {
       stats = groupedAssignStats(assigned, cents2)
       // grouped carry-forward: a memberless child centroid keeps its spot
-      // (same contract as refreshCentroids / kmeansVec)
+      // (same contract as refreshCentroids)
       val updated = stats.collect().map { r =>
         (r.getLong(0), r.getLong(1)) -> ((
           r.getLong(3).toDouble / r.getLong(2) / 100.0,
@@ -800,50 +537,6 @@ object Analytics {
   }
 
   /**
-   * KDE raster tiles: the heatmap cells assembled into tileSide² grids
-   * per parent tile with the reference's THREE bands — raw weight,
-   * normalized weight (weight / max weight, the reference's
-   * AccumuloKDEReducer normalization) and global percentile
-   * (AccumuloKDEReducer.java:20-256; tile x/y from cell position,
-   * row-major within the tile). Assembly is a map-from-entries lookup per
-   * position, so it is order-independent; the max weight arrives via a
-   * broadcast of a one-row aggregate, never a global window.
-   */
-  def kdeTiles(pts: DataFrame, cellBits: Int, tileBits: Int): DataFrame = {
-    require(tileBits < cellBits)
-    // tileSide² positions are materialized per tile; beyond 2^30 the Int
-    // arithmetic overflows SILENTLY (sequence(0, tileSide²-1) would get a
-    // garbage bound) and the tile would be absurd to assemble anyway
-    require(cellBits - tileBits <= 15,
-      s"tile side 2^${cellBits - tileBits} too large to assemble (max 2^15 per axis)")
-    val k = cellBits - tileBits
-    val tileSide = 1 << k
-    val mask = (tileSide - 1).toLong
-    // kdeHeatmap returns a checkpointed table — both uses below read the
-    // materialized RDD, no extra cache (and no leak) needed
-    val cells0 = kdeHeatmap(pts, cellBits)
-    val maxw = cells0.agg(max(col("weight")).as("maxw"))
-    val cells = cells0.crossJoin(broadcast(maxw))
-      .withColumn("norm", col("weight").cast("double") / col("maxw").cast("double"))
-    val positions = sequence(lit(0), lit(tileSide * tileSide - 1))
-    cells
-      .withColumn("tile_x", expr(s"shiftright(tx, $k)"))
-      .withColumn("tile_y", expr(s"shiftright(ty, $k)"))
-      .withColumn("pos", (col("ty").bitwiseAND(mask) * tileSide + col("tx").bitwiseAND(mask)).cast("int"))
-      .groupBy("tile_x", "tile_y")
-      .agg(map_from_entries(collect_list(struct(col("pos"), col("weight")))).as("wm"),
-        map_from_entries(collect_list(struct(col("pos"), col("pr")))).as("pm"),
-        map_from_entries(collect_list(struct(col("pos"), col("norm")))).as("nm"))
-      .select(col("tile_x"), col("tile_y"),
-        transform(positions, i => coalesce(element_at(col("wm"), i.cast("int")), lit(0L)))
-          .as("band_weight"),
-        transform(positions, i => coalesce(element_at(col("pm"), i.cast("int")), lit(0.0)))
-          .as("band_pct"),
-        transform(positions, i => coalesce(element_at(col("nm"), i.cast("int")), lit(0.0)))
-          .as("band_norm"))
-  }
-
-  /**
    * PYRAMID KDE raster tiles: per-(level, tile) 3-band tiles assembled
    * from [[kdeMultiLevel]] — the missing half of AccumuloKDEReducer
    * parity (AccumuloKDEReducer.java:20-256 emits, per level, tiles whose
@@ -852,9 +545,9 @@ object Analytics {
    * computed, normalized and percent-ranked by the shared multi-level
    * dataflow, then grouped under a FIXED `tileBits` tile grid — a level-l
    * tile holds a (2^(l−tileBits))² row-major cell grid, so tiles deepen
-   * as the pyramid zooms, exactly like map-tile pyramids. Assembly is the
-   * same order-independent map-from-entries lookup as [[kdeTiles]];
-   * absent cells are zero-filled.
+   * as the pyramid zooms, exactly like map-tile pyramids. Assembly is an
+   * order-independent map-from-entries lookup per position; absent cells
+   * are zero-filled.
    */
   def kdeTilesMultiLevel(pts: DataFrame, minBits: Int, maxBits: Int,
                          tileBits: Int): DataFrame = {
@@ -873,8 +566,7 @@ object Analytics {
         map_from_entries(collect_list(struct(col("pos"), col("norm")))).as("nm"),
         map_from_entries(collect_list(struct(col("pos"), col("pr")))).as("pm"))
       .withColumn("side", expr(s"shiftleft(1L, level - $tileBits)"))
-      // band order matches kdeTiles (weight, pct, norm) so positional
-      // consumers can switch between the single-level and pyramid APIs
+      // band order (weight, pct, norm)
       .select(col("level"), col("tile_x"), col("tile_y"),
         transform(sequence(lit(0), (col("side") * col("side") - 1).cast("int")),
           i => coalesce(element_at(col("wm"), i), lit(0L))).as("band_weight"),

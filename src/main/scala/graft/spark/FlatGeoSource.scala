@@ -1,18 +1,13 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * The reference's flat-file geo format plugins re-expressed as declarative
- * line parsers — GDELT (extensions/formats/gdelt/.../GDELTUtils.java:39-180,
- * GDELTIngestPlugin.java:150-360), GeoLife
- * (extensions/formats/geolife/.../GeoLifeIngestPlugin.java:173-240) and
- * T-Drive (extensions/formats/tdrive/.../TdriveIngestPlugin.java:110-130,
- * TdriveUtils.java:26-40). Each takes a frame of raw LINES (or whole
- * documents for GeoLife's per-file PLT layout) and yields the typed
- * feature frame; malformed rows drop exactly where the reference's
+ * The reference's GDELT flat-file format plugin re-expressed as a
+ * declarative line parser (extensions/formats/gdelt/.../GDELTUtils.java:
+ * 39-180, GDELTIngestPlugin.java:150-360). It takes a frame of raw LINES
+ * and yields the typed feature frame; malformed rows drop exactly where the reference's
  * catch-and-continue loops drop them (expressed as try_-family nulls +
  * filters, so the plan stays codegen'd and scan-parallel).
  */
@@ -27,17 +22,6 @@ object FlatGeoSource {
   /** empty tokens become NULL attributes, as the reference's
     * `if (x != null && !x.isEmpty()) set(x)` guards leave them. */
   private def nonEmpty(c: Column): Column = when(length(c) > 0, c)
-
-  /** the reference's GeometryUtils.adjustCoordinateDimensionToRange
-    * (extensions/adapters/vector/.../GeometryUtils.java:341-358): wrap a
-    * coordinate into [lower, lower+bound) by whole-bound steps toward
-    * zero — GeoLife applies it to both axes. */
-  private def wrapToRange(v: Column, lower: Double, upper: Double): Column = {
-    val bound = upper - lower
-    val sgn = signum(v)
-    val mult = floor(abs((v + sgn * lit(-1.0 * lower)) / lit(bound)))
-    v - mult * lit(bound) * sgn
-  }
 
   /**
    * GDELT event lines (tab-separated, 57 or 58 columns under JAVA
@@ -87,67 +71,5 @@ object FlatGeoSource {
           at(col("v"), 34).try_cast("double").as("avg_tone"),
           when(size(col("v")) === 58, nonEmpty(at(col("v"), 57))).as("source_url"))
     }
-  }
-
-  /**
-   * GeoLife PLT documents: `lat,lon,0,altitude,days,date,time` records;
-   * the ONLY record gate is the reference's `vals.length != 7` skip (the
-   * 6 header lines never have exactly 7 comma fields), timestamps parse
-   * from "date time" as yyyy-MM-dd HH:mm:ss, the -777 altitude sentinel
-   * reads as null, and coordinates wrap into WGS84 range
-   * (adjustCoordinateDimensionToRange on both axes). `pointinstance` is
-   * the reference's 0-based counter over KEPT records, in file order.
-   * Documents split on \r?\n — real PLT files are CRLF.
-   */
-  def geolifePoints(docs: DataFrame, fileCol: String, contentCol: String): DataFrame =
-    docs.select(col(fileCol).as("file_id"),
-        posexplode(split(col(contentCol), "\\r?\\n")).as(Seq("i", "line")))
-      .select(col("file_id"), col("i"), split(col("line"), ",", -1).as("v"))
-      .where(size(col("v")) === 7)
-      .select(col("file_id"), col("i"),
-        wrapToRange(at(col("v"), 0).try_cast("double"), -90, 90).as("lat"),
-        wrapToRange(at(col("v"), 1).try_cast("double"), -180, 180).as("lon"),
-        nullif(at(col("v"), 3).try_cast("double"), lit(-777.0)).as("altitude"),
-        try_to_timestamp(concat(at(col("v"), 5), lit(" "), at(col("v"), 6)),
-          lit("yyyy-MM-dd HH:mm:ss")).as("ts"))
-      .where(col("lat").isNotNull && col("lon").isNotNull)
-      .withColumn("pointinstance",
-        row_number().over(Window.partitionBy(col("file_id")).orderBy(col("i"))) - 1)
-      .drop("i")
-
-  /** GeoLife per-file trajectory: the reference's geolifetrack feature —
-    * point count, FIRST/LAST record timestamps (not min/max: the loop
-    * keeps the first and the latest, GeoLifeIngestPlugin.java:219-224),
-    * duration, ordered path arrays. */
-  def geolifeTracks(docs: DataFrame, fileCol: String, contentCol: String): DataFrame =
-    geolifePoints(docs, fileCol, contentCol)
-      .groupBy(col("file_id"))
-      .agg(
-        count(lit(1)).as("n_points"),
-        min_by(col("ts"), col("pointinstance")).as("start_ts"),
-        max_by(col("ts"), col("pointinstance")).as("end_ts"),
-        (unix_millis(max_by(col("ts"), col("pointinstance"))) -
-          unix_millis(min_by(col("ts"), col("pointinstance")))).as("duration_ms"),
-        transform(array_sort(collect_list(struct(col("pointinstance"), col("lon"), col("lat")))),
-          s => s.getField("lon")).as("lons"),
-        transform(array_sort(collect_list(struct(col("pointinstance"), col("lon"), col("lat")))),
-          s => s.getField("lat")).as("lats"))
-
-  /**
-   * T-Drive taxi lines: `taxiid,datetime,lon,lat`. The reference keeps a
-   * row whose datetime fails to parse (it only logs) — mirrored here as
-   * a null ts; rows with unparseable id/coordinates drop (the outer
-   * catch-and-continue).
-   */
-  def tdrivePoints(lines: DataFrame, lineCol: String): DataFrame = {
-    val v = split(col(lineCol), ",", -1)
-    lines.select(v.as("v"))
-      .where(size(col("v")) >= 4)
-      .select(
-        at(col("v"), 0).try_cast("int").as("taxi_id"),
-        try_to_timestamp(at(col("v"), 1), lit("yyyy-MM-dd HH:mm:ss")).as("ts"),
-        at(col("v"), 2).try_cast("double").as("lon"),
-        at(col("v"), 3).try_cast("double").as("lat"))
-      .where(col("taxi_id").isNotNull && col("lon").isNotNull && col("lat").isNotNull)
   }
 }

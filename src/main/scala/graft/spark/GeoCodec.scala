@@ -73,26 +73,6 @@ object GeoCodec {
     Array(lonMin, lonMax, latMin, latMax)
   }
 
-  /** The partitioner's cube identifiers — the point's own tile (primary)
-    * plus every tile its ±(dxDeg, dyDeg) threshold box overlaps, with the
-    * x-axis wrapping through the antimeridian (reference:
-    * AbstractPartitioner.getCubeIdentifiers:79-102 — primary insertion id
-    * + expansion-box ids, deduped keeping the primary flag —
-    * OrthodromicDistancePartitioner.java:98-145 normalized-longitude
-    * expansion). The driver-side twin of Ops.neighborhoodSelfJoin's
-    * cell emission: a point away from every cell border emits exactly
-    * one tile; at a corner, four — never the full (2k+1)² stencil. */
-  def cubeIdentifiers(lon: Double, lat: Double, dxDeg: Double, dyDeg: Double,
-                      bits: Int): Seq[(Long, Long, Boolean)] = {
-    val bins = 1L << bits
-    def raw(v: Double) = math.ceil((v + 180.0) / 360.0 * bins).toLong - 1L
-    val px = bucketLon(lon, bits); val py = bucketLat(lat, bits)
-    val txs = (raw(lon - dxDeg) to raw(lon + dxDeg))
-      .map(t => ((t % bins) + bins) % bins).distinct
-    val tys = math.max(raw(lat - dyDeg), 0L) to math.min(raw(lat + dyDeg), bins - 1L)
-    for (tx <- txs; ty <- tys) yield (tx, ty, tx == px && ty == py)
-  }
-
   /** full tiered spatial insertion id of a point: tier byte 31 ‖ 8 sfc bytes.
     * Points always land on the finest tier with a single id. */
   def cellIdSpatial(lon: Double, lat: Double): Array[Byte] = {
@@ -435,92 +415,16 @@ object GeoCodec {
     b * bigA * (sigma - deltaSigma)
   }
 
-  /** WKB encode choosing dimensionality by Z presence — 2-D when the first
-    * coordinate's Z is NaN, 3-D otherwise (reference
-    * GeometryUtils.geometryToBinary, core/geotime/.../GeometryUtils.java:
-    * 249-261; its test pins that a 2-D round trip reads Z back as NaN and
-    * a 3-D one preserves it). */
-  def geometryToBinary(geom: org.locationtech.jts.geom.Geometry): Array[Byte] = {
-    val dims =
-      if (geom.isEmpty || java.lang.Double.isNaN(
-        geom.getCoordinate.getOrdinate(org.locationtech.jts.geom.Coordinate.Z))) 2
-      else 3
-    new org.locationtech.jts.io.WKBWriter(dims).write(geom)
-  }
-
-  /** inverse of [[geometryToBinary]] (GeometryUtils.java:270-281). */
-  def geometryFromBinary(wkb: Array[Byte]): org.locationtech.jts.geom.Geometry =
-    new org.locationtech.jts.io.WKBReader().read(wkb)
-
-  /**
-   * Vincenty's DIRECT problem on WGS84: destination (lon, lat) from a
-   * start point, an initial bearing in degrees, and a distance in meters —
-   * the geodesic step GeoTools' GeodeticCalculator takes inside the
-   * reference's GeometryCalculations.buildSurroundingGeometries
-   * (analytics/api/.../GeometryCalculations.java:41-99). Longitude is
-   * normalized to [-180, 180] like the calculator's geographic output.
-   */
-  def vincentyDirect(lon1: Double, lat1: Double,
-                     bearingDeg: Double, distMeters: Double): (Double, Double) = {
-    val a = 6378137.0
-    val f = 1.0 / 298.257223563
-    val b = (1.0 - f) * a
-    val alpha1 = math.toRadians(bearingDeg)
-    val sinAlpha1 = math.sin(alpha1); val cosAlpha1 = math.cos(alpha1)
-    val tanU1 = (1.0 - f) * math.tan(math.toRadians(lat1))
-    val cosU1 = 1.0 / math.sqrt(1.0 + tanU1 * tanU1)
-    val sinU1 = tanU1 * cosU1
-    val sigma1 = math.atan2(tanU1, cosAlpha1)
-    val sinAlpha = cosU1 * sinAlpha1
-    val cosSqAlpha = 1.0 - sinAlpha * sinAlpha
-    val uSq = cosSqAlpha * (a * a - b * b) / (b * b)
-    val bigA = 1.0 + uSq / 16384.0 *
-      (4096.0 + uSq * (-768.0 + uSq * (320.0 - 175.0 * uSq)))
-    val bigB = uSq / 1024.0 * (256.0 + uSq * (-128.0 + uSq * (74.0 - 47.0 * uSq)))
-    var sigma = distMeters / (b * bigA)
-    var cos2SigmaM = 0.0; var sinSigma = 0.0; var cosSigma = 0.0
-    var delta = Double.MaxValue
-    var iter = 0
-    while (delta > 1e-12 && iter < 200) {
-      cos2SigmaM = math.cos(2.0 * sigma1 + sigma)
-      sinSigma = math.sin(sigma); cosSigma = math.cos(sigma)
-      val deltaSigma = bigB * sinSigma * (cos2SigmaM + bigB / 4.0 *
-        (cosSigma * (-1.0 + 2.0 * cos2SigmaM * cos2SigmaM) -
-          bigB / 6.0 * cos2SigmaM * (-3.0 + 4.0 * sinSigma * sinSigma) *
-            (-3.0 + 4.0 * cos2SigmaM * cos2SigmaM)))
-      val prev = sigma
-      sigma = distMeters / (b * bigA) + deltaSigma
-      delta = math.abs(sigma - prev)
-      iter += 1
-    }
-    val t = sinU1 * sinSigma - cosU1 * cosSigma * cosAlpha1
-    val lat2 = math.atan2(sinU1 * cosSigma + cosU1 * sinSigma * cosAlpha1,
-      (1.0 - f) * math.sqrt(sinAlpha * sinAlpha + t * t))
-    val lambda = math.atan2(sinSigma * sinAlpha1,
-      cosU1 * cosSigma - sinU1 * sinSigma * cosAlpha1)
-    val c = f / 16.0 * cosSqAlpha * (4.0 + f * (4.0 - 3.0 * cosSqAlpha))
-    val bigL = lambda - (1.0 - c) * f * sinAlpha *
-      (sigma + c * sinSigma * (cos2SigmaM +
-        c * cosSigma * (-1.0 + 2.0 * cos2SigmaM * cos2SigmaM)))
-    var lon2 = lon1 + math.toDegrees(bigL)
-    // normalize to geographic [-180, 180]
-    while (lon2 > 180.0) lon2 -= 360.0
-    while (lon2 < -180.0) lon2 += 360.0
-    (lon2, math.toDegrees(lat2))
-  }
-
   /**
    * SOUND bounding envelope(s) of the haversine disk of radius `rMeters`
    * around a center, on the same sphere (R = 6371008.8) the haversine
-   * filter uses — antimeridian-split like [[surroundingEnvelopes]]. Unlike
-   * the 4-cardinal-destination envelope, this covers the disk's true
-   * east/west extremes, which lie POLEWARD of the center latitude:
-   * dLon = asin(sin(r/R) / cos(lat)) (vs the bearing-90 destination's
-   * smaller atan-based offset). A disk reaching a pole or with
-   * cos(lat) <= sin(r/R) spans all longitudes. Use this to bound a
-   * haversine-decided radius query; [[surroundingEnvelopes]] remains the
-   * GeometryCalculations port with the reference's own (envelope-decides)
-   * semantics.
+   * filter uses, split in two where it crosses the antimeridian. Unlike
+   * the reference's 4-cardinal-destination envelope
+   * (GeometryCalculations.buildSurroundingGeometries), this covers the
+   * disk's true east/west extremes, which lie POLEWARD of the center
+   * latitude: dLon = asin(sin(r/R) / cos(lat)) (vs the bearing-90
+   * destination's smaller atan-based offset). A disk reaching a pole or
+   * with cos(lat) <= sin(r/R) spans all longitudes.
    */
   def haversineDiskEnvelopes(lon: Double, lat: Double, rMeters: Double): Seq[StatsClip.Env] = {
     val R = 6371008.8
@@ -539,61 +443,5 @@ object GeoCodec {
     else if (xE > 180.0)
       Seq(StatsClip.Env(-180.0, xE - 360.0, loY, hiY), StatsClip.Env(xW, 180.0, loY, hiY))
     else Seq(StatsClip.Env(xW, xE, loY, hiY))
-  }
-
-  /**
-   * Geodesic buffer ring: `segments` vertices, each the WGS84 direct-
-   * problem destination at distance `meters` from the center, azimuths
-   * evenly spaced — the geometry the reference's DWITHIN query rewrite
-   * produces (ExtractGeometryFilterVisitor: CQL DWITHIN → buffered
-   * geometry whose boundary lies AT the distance,
-   * extensions/adapters/vector/.../plugin/ExtractGeometryFilterVisitor.java;
-   * its test asserts every boundary coordinate sits at the requested
-   * orthodromic distance). Longitudes normalize to [-180, 180] (a
-   * dateline-crossing ring is valid input to the split-envelope cover).
-   * Returned ring is closed (first point repeated last).
-   */
-  def geodesicBufferRing(lon: Double, lat: Double, meters: Double,
-                         segments: Int = 32): Seq[(Double, Double)] = {
-    require(segments >= 3, s"a ring needs >= 3 segments, got $segments")
-    require(meters > 0.0, s"buffer distance must be > 0, got $meters")
-    def norm(x: Double): Double = {
-      val m = ((x + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
-      if (m == -180.0 && x > 0) 180.0 else m
-    }
-    val pts = (0 until segments).map { k =>
-      val (dLon, dLat) = vincentyDirect(lon, lat, 360.0 * k / segments, meters)
-      (norm(dLon), math.min(90.0, math.max(-90.0, dLat)))
-    }
-    pts :+ pts.head
-  }
-
-  /**
-   * Geodesic envelope(s) of half-width xMeters / half-height yMeters
-   * around a center — the reference's
-   * GeometryCalculations.buildSurroundingGeometries +
-   * handleBoundaries (GeometryCalculations.java:41-170): destinations due
-   * north/east/west/south via the geodesic direct problem, then ONE
-   * envelope, or TWO when the east or west edge wraps the antimeridian
-   * (detected by the reference's signum comparison against the center),
-   * preserving its emission order. Latitudes clamp to [-90, 90]; envelope
-   * min/max normalize like JTS Envelope.
-   */
-  def surroundingEnvelopes(lon: Double, lat: Double,
-                           xMeters: Double, yMeters: Double): Seq[StatsClip.Env] = {
-    val (_, yN) = vincentyDirect(lon, lat, 0.0, yMeters)
-    val (xE, _) = vincentyDirect(lon, lat, 90.0, xMeters)
-    val (xW, _) = vincentyDirect(lon, lat, -90.0, xMeters)
-    val (_, yS) = vincentyDirect(lon, lat, 180.0, yMeters)
-    val loY = math.min(math.max(yN, -90.0), math.min(yS, 90.0))
-    val hiY = math.max(math.max(yN, -90.0), math.min(yS, 90.0))
-    def env(x1: Double, x2: Double) =
-      StatsClip.Env(math.min(x1, x2), math.max(x1, x2), loY, hiY)
-    if (math.signum(xW) > math.signum(lon))      // west edge wrapped east
-      Seq(env(xW, 180.0), env(-180.0, xE))
-    else if (math.signum(xE) < math.signum(lon)) // east edge wrapped west
-      Seq(env(-180.0, xE), env(xW, 180.0))
-    else
-      Seq(env(xW, xE))
   }
 }

@@ -6,51 +6,22 @@ import org.apache.spark.sql.types._
 
 /**
  * GPX format plugin — the Spark-native re-expression of the reference's
- * streaming GPX consumer (extensions/formats/gpx/.../GPXConsumer.java:88-926):
- * one GPX document string per row parses declaratively with `from_xml`
- * into the track / waypoint / route families, then explodes into typed
- * feature frames. Observable semantics ported and pinned by GpxSourceSpec
- * against the reference's own sample document
- * (GPXConsumerTest.java:40-205):
- *  - trackpoints carry lat/lon/ele/time plus fix/sat/hdop/vdop/pdop;
- *  - a track aggregates ALL its segments' points: NumberPoints,
- *    StartTimeStamp/EndTimeStamp (min/max child time) and Duration =
- *    end − start ms, set only when both ends exist (GPXConsumer.build:
- *    735-792); a track or route with no points yields NO feature;
- *  - waypoint/route-point ids embed the reference's `toID` coordinate
- *    format: DecimalFormat("0000000000") of value × 1e7 (HALF_EVEN —
- *    Spark's `bround`), sign leading (GPXConsumer.toID:922-925);
- *  - `<time>` accepts both the seconds and the millis ISO forms
- *    (GpxUtils.parseDateSeconds / parseDateMillis fallback chain).
- *
- * Deliberate divergence, documented: the reference's feature ids embed a
- * per-parent CHILD COUNTER that also counts unrecognized header tags (the
- * sample's "A track" is child #6 because author/email/keywords/bounds/
- * metadata precede it — GPXConsumer.addChild:509-518), an artifact of the
- * StAX walk. Ids here use the track `<number>` when present (as the
- * reference does) and otherwise the track's ordinal among TRACKS — a
- * deterministic scheme that does not depend on how many unknown header
- * elements a generator emits.
+ * streaming GPX consumer (extensions/formats/gpx/.../GPXConsumer.java:88-926),
+ * for its waypoint family: one GPX document string per row parses
+ * declaratively with `from_xml`, then explodes into a typed waypoint
+ * frame. Waypoint ids embed the reference's `toID` coordinate format:
+ * DecimalFormat("0000000000") of value × 1e7 (HALF_EVEN — Spark's
+ * `bround`), sign leading (GPXConsumer.toID:922-925). GpxSourceSpec pins
+ * them against the reference's own sample document
+ * (GPXConsumerTest.java:40-205).
  */
 object GpxSource {
 
-  /** GPX 1.1 subset schema for `from_xml` (attributes use the default
+  /** GPX 1.1 waypoint schema for `from_xml` (attributes use the default
     * `_` prefix). */
   val gpxSchema: StructType = StructType.fromDDL(
-    """trk ARRAY<STRUCT<name: STRING, number: STRING,
-      |  trkseg: ARRAY<STRUCT<trkpt: ARRAY<STRUCT<
-      |    _lat: DOUBLE, _lon: DOUBLE, ele: DOUBLE, time: STRING,
-      |    fix: STRING, sat: INT, hdop: DOUBLE, vdop: DOUBLE, pdop: DOUBLE>>>>>>,
-      |wpt ARRAY<STRUCT<_lat: DOUBLE, _lon: DOUBLE, ele: DOUBLE, time: STRING,
-      |  name: STRING, desc: STRING, sym: STRING, type: STRING>>,
-      |rte ARRAY<STRUCT<name: STRING, number: STRING, desc: STRING, sym: STRING,
-      |  type: STRING, rtept: ARRAY<STRUCT<_lat: DOUBLE, _lon: DOUBLE, name: STRING>>>>"""
-      .stripMargin)
-
-  /** GpxUtils' two accepted `<time>` forms: seconds, then millis. */
-  private def gpxTime(c: Column): Column = coalesce(
-    try_to_timestamp(c, lit("yyyy-MM-dd'T'HH:mm:ss'Z'")),
-    try_to_timestamp(c, lit("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")))
+    "wpt ARRAY<STRUCT<_lat: DOUBLE, _lon: DOUBLE, ele: DOUBLE, name: STRING, " +
+      "desc: STRING, sym: STRING, type: STRING>>")
 
   /** the reference's toID coordinate key: DecimalFormat("0000000000") of
     * value × 1e7 — HALF_EVEN integer, zero-padded to 10 digits, sign
@@ -59,66 +30,11 @@ object GpxSource {
     when(v < 0, lit("-")).otherwise(lit("")),
     lpad(abs(bround(v * 1e7, 0)).cast("long").cast("string"), 10, "0"))
 
-  /** parse the raw document column; adds a `gpx` struct. */
-  def parse(docs: DataFrame, xmlCol: String): DataFrame =
-    docs.withColumn("gpx", from_xml(col(xmlCol), gpxSchema))
-
-  /** the track id part: `<number>` if present, else the ordinal among
-    * tracks (1-based) — see the divergence note in the object doc. */
-  private def trackKey(trk: Column, ordinal1: Column): Column =
-    coalesce(trk.getField("number"), ordinal1.cast("string"))
-
-  /** one row per trackpoint, across every segment of every track. */
-  def trackPoints(docs: DataFrame, idCol: String, xmlCol: String): DataFrame = {
-    parse(docs, xmlCol)
-      .select(col(idCol).as("input_id"), posexplode(col("gpx.trk")).as(Seq("ti", "trk")))
-      .select(col("input_id"), col("ti"), col("trk"),
-        posexplode(col("trk.trkseg")).as(Seq("si", "seg")))
-      .select(col("input_id"), col("ti"), col("trk"), col("si"),
-        posexplode(col("seg.trkpt")).as(Seq("pi", "pt")))
-      .select(
-        concat_ws("_", col("input_id"), trackKey(col("trk"), col("ti") + 1),
-          regexp_replace(col("trk.name"), lit("\\s+"), lit("_")),
-          (col("si") + 1).cast("string"), (col("pi") + 1).cast("string")).as("id"),
-        col("pt._lat").as("lat"), col("pt._lon").as("lon"),
-        col("pt.ele").as("elevation"),
-        gpxTime(col("pt.time")).as("ts"),
-        col("pt.fix").as("fix"), col("pt.sat").as("satellites"),
-        col("pt.hdop").as("hdop"), col("pt.vdop").as("vdop"), col("pt.pdop").as("pdop"))
-  }
-
-  /** one row per non-empty track: point count, time bounds, duration,
-    * and the ordered lon/lat path (the LineString's coordinate arrays). */
-  def tracks(docs: DataFrame, idCol: String, xmlCol: String): DataFrame = {
-    // an empty <trkseg/> parses as a NULL trkpt array and would null the
-    // whole flatten — drop such segments first (the reference's recursive
-    // buildCoordinates simply finds no coordinates under them)
-    val pts = flatten(transform(
-      filter(col("trk.trkseg"), s => s.getField("trkpt").isNotNull),
-      s => s.getField("trkpt")))
-    val times = filter(transform(pts, p => gpxTime(p.getField("time"))), _.isNotNull)
-    val start = array_min(times)
-    val end = array_max(times)
-    parse(docs, xmlCol)
-      .select(col(idCol).as("input_id"), posexplode(col("gpx.trk")).as(Seq("ti", "trk")))
-      .where(size(pts) > 0)
-      .select(
-        concat_ws("_", col("input_id"), trackKey(col("trk"), col("ti") + 1),
-          regexp_replace(col("trk.name"), lit("\\s+"), lit("_"))).as("id"),
-        col("trk.name").as("name"),
-        size(pts).cast("long").as("n_points"),
-        start.as("start_ts"), end.as("end_ts"),
-        when(start.isNotNull && end.isNotNull,
-          unix_millis(end) - unix_millis(start)).as("duration_ms"),
-        transform(pts, p => p.getField("_lon")).as("lons"),
-        transform(pts, p => p.getField("_lat")).as("lats"))
-  }
-
   /** one row per waypoint; the id embeds name and the toID coordinates
     * exactly as the reference's composeID does for wpt. */
   def waypoints(docs: DataFrame, idCol: String, xmlCol: String): DataFrame =
-    parse(docs, xmlCol)
-      .select(col(idCol).as("input_id"), explode(col("gpx.wpt")).as("w"))
+    docs.select(col(idCol).as("input_id"),
+        explode(from_xml(col(xmlCol), gpxSchema).getField("wpt")).as("w"))
       .select(
         concat_ws("_",
           regexp_replace(col("w.name"), lit("\\s+"), lit("_")),
@@ -127,31 +43,4 @@ object GpxSource {
         col("w.ele").as("elevation"), col("w.name").as("name"),
         col("w.desc").as("description"), col("w.sym").as("symbol"),
         col("w.type").as("wpt_type"))
-
-  /** one row per non-empty route (+ a frame of its route points). */
-  def routes(docs: DataFrame, idCol: String, xmlCol: String): DataFrame =
-    parse(docs, xmlCol)
-      .select(col(idCol).as("input_id"), posexplode(col("gpx.rte")).as(Seq("ri", "rte")))
-      .where(size(col("rte.rtept")) > 0)
-      .select(
-        concat_ws("_", col("input_id"),
-          coalesce(col("rte.number"), (col("ri") + 1).cast("string")),
-          regexp_replace(col("rte.name"), lit("\\s+"), lit("_"))).as("id"),
-        col("rte.name").as("name"), col("rte.desc").as("description"),
-        size(col("rte.rtept")).cast("long").as("n_points"))
-
-  def routePoints(docs: DataFrame, idCol: String, xmlCol: String): DataFrame =
-    parse(docs, xmlCol)
-      .select(col(idCol).as("input_id"), posexplode(col("gpx.rte")).as(Seq("ri", "rte")))
-      .select(col("input_id"), col("ri"), col("rte"),
-        posexplode(col("rte.rtept")).as(Seq("pi", "pt")))
-      .select(
-        concat_ws("_", col("input_id"),
-          coalesce(col("rte.number"), (col("ri") + 1).cast("string")),
-          regexp_replace(col("rte.name"), lit("\\s+"), lit("_")),
-          (col("pi") + 1).cast("string"),
-          regexp_replace(col("pt.name"), lit("\\s+"), lit("_")),
-          coordId(col("pt._lat")), coordId(col("pt._lon"))).as("id"),
-        col("pt._lat").as("lat"), col("pt._lon").as("lon"),
-        col("pt.name").as("name"))
 }

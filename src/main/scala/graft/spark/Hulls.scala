@@ -21,9 +21,6 @@ import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, Polygon
  */
 object Hulls {
 
-  /** reference default N (GeometryHullTool.java:42) */
-  val DefaultConcaveThreshold = 1.8
-
   private final class Edge(val start: Coordinate, val end: Coordinate,
                            val length: Double, val seq: Int) {
     var next: Edge = _
@@ -70,8 +67,10 @@ object Hulls {
     false
   }
 
+  /** `concaveThreshold` is Park & Oh's N (the reference defaults it to
+    * 1.8, GeometryHullTool.java:42). */
   def concaveHullParkOh(coordsIn: Array[Coordinate], gf: GeometryFactory,
-                        concaveThreshold: Double = DefaultConcaveThreshold): Geometry = {
+                        concaveThreshold: Double): Geometry = {
     val convex = new org.locationtech.jts.algorithm.ConvexHull(coordsIn, gf).getConvexHull
     if (!convex.isInstanceOf[Polygon]) return convex
     val ring = convex.getCoordinates
@@ -148,155 +147,6 @@ object Hulls {
       // degenerate dig (shouldn't happen with the crossing guards): fall
       // back to the convex hull like createHullFromGeometry's catch (:246)
       case _: Exception => convex
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Hull CONNECT — merging two cluster hulls into one polygon, the step
-  // the reference's multi-iteration clustering runs whenever two cluster
-  // groups coalesce (GeometryHullTool.connect + walk + takeBiggestStep,
-  // analytics/api/.../GeometryHullTool.java:612-1110): anchor at the
-  // closest vertex pair, then walk tangent "legs" outward on both rings
-  // (angle-greedy, orientation-aware) to find the upper and lower bridge
-  // points, and reassemble one ring from the two outer arcs. Disjoint
-  // polygons take the tangent walk; everything else unions via JTS.
-  // ------------------------------------------------------------------
-
-  /** signed-sum ring orientation test (GeometryHullTool.clockwise:807-816
-    * — its x-delta / y-sum variant, kept verbatim). */
-  def clockwise(set: Array[Coordinate]): Boolean = {
-    var sum = 0.0
-    var i = 1
-    while (i < set.length) {
-      sum += (set(i).x - set(i - 1).x) / (set(i).y + set(i - 1).y)
-      i += 1
-    }
-    sum > 0.0
-  }
-
-  /** angle from vertex→one to vertex→two in degrees
-    * (GeometryHullTool.calcAngle:838-852). */
-  def calcAngle(one: Coordinate, vertex: Coordinate, two: Coordinate): Double = {
-    val angle1 = math.toDegrees(math.atan2(one.y - vertex.y, one.x - vertex.x))
-    val angle2 = math.toDegrees(math.atan2(two.y - vertex.y, two.x - vertex.x))
-    angle2 - angle1
-  }
-
-  /** index pair of the closest vertices under `distFn`
-    * (GeometryHullTool.getClosestPoints:913-940). */
-  def getClosestPoints(shape1: Geometry, shape2: Geometry,
-                       distFn: (Coordinate, Coordinate) => Double): (Int, Int) = {
-    var best = (0, 0)
-    var minDist = Double.MaxValue
-    val c1 = shape1.getCoordinates
-    val c2 = shape2.getCoordinates
-    for (i <- c1.indices; j <- c2.indices) {
-      val d = distFn(c1(i), c2(j))
-      if (d < minDist) { minDist = d; best = (i, j) }
-    }
-    best
-  }
-
-  /** the reference's ring iterator: steps +1 or −1 mod n from `start`
-    * until `stop`, negating angles when told (Increase/DecreaseDirection,
-    * :998-1096). */
-  private final class Dir(val start: Int, stop: Int, n: Int,
-                          inc: Boolean, val angleNeg: Boolean) {
-    private def step(i: Int): Int = if (inc) (i + 1) % n else if (i == 0) n - 1 else i - 1
-    private var current = step(start)
-    def hasNext: Boolean = current != stop
-    def next(): Int = { val v = current; current = step(current); v }
-    def angleChange(a: Double): Double = if (angleNeg) -a else a
-  }
-
-  /** angle-greedy leg advance (takeBiggestStep:942-976). */
-  private def takeBiggestStep(visited: mutable.Set[Coordinate], station: Coordinate,
-                              coords: Array[Coordinate], leg: Dir): Int = {
-    var angle = 0.0
-    val startPoint = coords(leg.start)
-    var last = leg.start
-    var lastCoordinate = coords(last)
-    while (leg.hasNext) {
-      val pos = leg.next()
-      if (!coords(pos).equals(lastCoordinate)) {
-        lastCoordinate = coords(pos)
-        if (visited.contains(lastCoordinate)) return last
-        var cur = leg.angleChange(calcAngle(startPoint, station, lastCoordinate))
-        if (cur < -180) cur += 360
-        if (cur >= angle && cur < 180.0) {
-          angle = cur
-          last = pos
-          visited += coords(pos)
-        } else return last
-      }
-    }
-    last
-  }
-
-  /** alternate leg walks until the right foot stops moving (walk:761-805). */
-  @annotation.tailrec
-  private def walk(visited: mutable.Set[Coordinate],
-                   c1: Array[Coordinate], c2: Array[Coordinate],
-                   s1: Int, s2: Int,
-                   leftLeg: (Int, Int) => Dir, rightLeg: (Int, Int) => Dir): (Int, Int) = {
-    val up = takeBiggestStep(visited, c2(s2), c1, leftLeg(s1, c1.length))
-    val down = takeBiggestStep(visited, c1(up), c2, rightLeg(s2, c2.length))
-    if (down != s2) walk(visited, c1, c2, up, down, leftLeg, rightLeg)
-    else (up, s2)
-  }
-
-  /**
-   * Merge two cluster hulls (GeometryHullTool.connect:612-760). Disjoint
-   * polygon pairs bridge via the tangent walk; intersecting or
-   * non-polygonal inputs union via JTS; any failure falls back to the
-   * convex hull of both shapes' coordinates (the reference's
-   * createHullFromGeometry catch). Default distance = WGS84 Vincenty
-   * (the reference test's CoordinateCircleDistanceFn).
-   */
-  def connectHulls(shape1: Geometry, shape2: Geometry,
-                   distFn: (Coordinate, Coordinate) => Double =
-                     (a, b) => GeoCodec.vincentyMeters(a.x, a.y, b.x, b.y)): Geometry = {
-    try {
-      if (shape1.isInstanceOf[Polygon] && shape2.isInstanceOf[Polygon] &&
-        !shape1.intersects(shape2)) {
-        val closest = getClosestPoints(shape1, shape2, distFn)
-        var (leftCoords, rightCoords) = (shape1.getCoordinates, shape2.getCoordinates)
-        var (startLeft, startRight) = closest
-        if (!(leftCoords(closest._1).x < rightCoords(closest._2).x)) {
-          leftCoords = shape2.getCoordinates
-          rightCoords = shape1.getCoordinates
-          startLeft = closest._2
-          startRight = closest._1
-        }
-        val visited = mutable.Set(leftCoords(startLeft), rightCoords(startRight))
-        val leftCw = clockwise(leftCoords)
-        val rightCw = clockwise(rightCoords)
-        val upper = walk(visited, leftCoords, rightCoords, startLeft, startRight,
-          (s, n) => new Dir(s, s, n, inc = leftCw, angleNeg = true),
-          (s, n) => new Dir(s, s, n, inc = !rightCw, angleNeg = false))
-        val lower = walk(visited, leftCoords, rightCoords, startLeft, startRight,
-          (s, n) => new Dir(s, s, n, inc = !leftCw, angleNeg = false),
-          (s, n) => new Dir(s, s, n, inc = rightCw, angleNeg = true))
-        // reassemble: the left ring's outer arc upper→lower, then the
-        // right ring's outer arc lower→upper, closed at the start
-        val out = mutable.ArrayBuffer.empty[Coordinate]
-        val leftSet =
-          if (leftCw) new Dir(upper._1, (lower._1 + 1) % leftCoords.length, leftCoords.length, inc = true, angleNeg = true)
-          else new Dir(upper._1, if (lower._1 == 0) leftCoords.length - 1 else lower._1 - 1, leftCoords.length, inc = false, angleNeg = true)
-        out += leftCoords(upper._1)
-        while (leftSet.hasNext) out += leftCoords(leftSet.next())
-        val rightSet =
-          if (rightCw) new Dir(lower._2, (upper._2 + 1) % rightCoords.length, rightCoords.length, inc = true, angleNeg = true)
-          else new Dir(lower._2, if (upper._2 == 0) rightCoords.length - 1 else upper._2 - 1, rightCoords.length, inc = false, angleNeg = true)
-        out += rightCoords(lower._2)
-        while (rightSet.hasNext) out += rightCoords(rightSet.next())
-        out += leftCoords(upper._1)
-        shape1.getFactory.createPolygon(out.toArray)
-      } else shape1.union(shape2)
-    } catch {
-      case _: Exception =>
-        val gf = shape1.getFactory
-        gf.createGeometryCollection(Array(shape1, shape2)).convexHull()
     }
   }
 }

@@ -47,8 +47,8 @@ object Ingest {
     * `altIndexCol` enables INLINE alt-index maintenance: each committed
     * bucket batch appends its (id, bucket) rows to `_alt` and extends the
     * coverage metadata — the reference's DataStoreIndexWriter alt-index
-    * callbacks at write time, so [[deleteByIds]] never needs the
-    * full-store [[buildAltIndex]] rebuild. */
+    * callbacks at write time, so [[deleteByIds]] never needs a
+    * full-store rebuild. */
   final case class Config(
       numBuckets: Int = 16,
       batchSize: Int = 4,
@@ -241,25 +241,13 @@ object Ingest {
     // the prefix spends exactly ONE byte; lpad(hex(salt), 2) would
     // silently TRUNCATE a salt > 255 ('100' → '10', colliding with salt
     // 16 and breaking the row_key order invariant). Config enforces the
-    // range for the ingest salt; external compositions (e.g.
-    // roundRobinSalt(n > 256), which the reference allows standalone)
-    // must fail loudly instead
+    // range for the ingest salt; external compositions must fail loudly
+    // instead
     val guarded = when(salt.between(0, 255), salt)
       .otherwise(raise_error(format_string(
         "compoundKey: salt %s outside [0, 255] (one prefix byte)", salt)).cast("int"))
     concat(unhex(lpad(hex(guarded), 2, "0")), cellId)
   }
-
-  /** rotating per-writer partition prefix — the reference's
-    * RoundRobinKeyIndexStrategy (core/index/.../simple/
-    * RoundRobinKeyIndexStrategy.java:48,126-143: each writer cycles
-    * 0..n-1 in insertion order). `monotonically_increasing_id` is
-    * (partitionId << 33) | rowInPartition, so `mod n` rotates within every
-    * task independently — the same per-writer counter contract, computed
-    * with zero shuffle. Alternative to the hash salt when keys must spread
-    * evenly regardless of value skew (identical keys still land apart). */
-  def roundRobinSalt(n: Int): org.apache.spark.sql.Column =
-    pmod(monotonically_increasing_id(), lit(n.toLong)).cast("int")
 
   /**
    * Write a tile-keyed store BUCKETED by its tile coordinates — the
@@ -383,40 +371,6 @@ object Ingest {
    */
   // --------------------------------------------------------- alt index
 
-  /**
-   * ALT (data id → location) index — the reference's optional secondary
-   * mapping written beside the primary store so id-addressed operations
-   * need no primary scan (BaseDataStore secondary/alt-index path;
-   * DeleteWriterAltIndexTest semantics). Here: an (id, bucket) parquet
-   * table sorted by id, so a `WHERE id IN (…)` probe prunes to matching
-   * row groups. Entries are an OVER-approximation after deletes (a stale
-   * id maps to a bucket that no longer holds it — harmless: the rewrite
-   * simply finds no rows); rebuild to compact.
-   */
-  def buildAltIndex(spark: SparkSession, outDir: String,
-                    idCol: String = "doc_id", numFiles: Int = 8): Unit = {
-    val alt = readStore(spark, outDir).select(col(idCol), col("bucket")).persist()
-    // coverage = the buckets whose rows the index ACTUALLY read — derived
-    // from the alt data itself, never from lineage: a bucket committed by
-    // a concurrent ingest mid-build, or hidden behind a crashed delete's
-    // grace marker, is then uncovered (redundantly scanned — harmless)
-    // instead of covered-but-absent (its ids would be permanently
-    // undeletable via the probe)
-    val covered = alt.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    try alt
-      .repartitionByRange(numFiles, col(idCol))
-      .sortWithinPartitions(idCol)
-      .write.mode("overwrite").parquet(s"$outDir/_alt")
-    finally alt.unpersist()
-    // tmp + atomic move like appendAltRows: a torn coverage file would
-    // either wedge later parses or silently claim buckets covered
-    val tmp = Paths.get(outDir, "_alt", "_graft_covered.json.tmp")
-    Files.write(tmp, covered.mkString("[", ",", "]").getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(outDir, "_alt", "_graft_covered.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** the coverage-metadata set as recorded (empty when absent). */
   private def readCoveredBuckets(outDir: String): Set[Int] = {
     val meta = Paths.get(outDir, "_alt", "_graft_covered.json")
@@ -435,20 +389,21 @@ object Ingest {
     if (hasAlt && !Files.isRegularFile(meta))
       println(s"[graft] deleteByIds: alt index at $outDir/_alt has no coverage " +
         "metadata (built by an older version?) — falling back to the full " +
-        "deleteByQuery scan; rebuild with buildAltIndex to restore the probe")
+        "deleteByQuery scan; remove _alt and re-run Ingest.run with altIndexCol to rebuild it")
     if (!hasAlt || !Files.isRegularFile(meta)) None
     else Some(readCoveredBuckets(outDir))
   }
 
   /**
-   * Append `buckets`' (id, bucket) rows to the alt store and extend the
-   * coverage metadata — the incremental twin of [[buildAltIndex]]. Reads
-   * ONLY the listed buckets (partition-pruned) and only the two columns.
-   * Coverage commits AFTER the data append (a crash in between leaves the
-   * buckets uncovered → redundantly rescanned, never covered-but-absent).
-   * A crash-resumed batch may append its rows twice — duplicate alt
-   * entries are an over-approximation the probe's `distinct` absorbs;
-   * [[buildAltIndex]] compacts.
+   * Append `buckets`' (id, bucket) rows to the ALT (data id → location)
+   * index — the reference's optional secondary mapping written beside the
+   * primary store (BaseDataStore alt-index path; DeleteWriterAltIndexTest
+   * semantics) — and extend its coverage metadata. Reads ONLY the listed
+   * buckets (partition-pruned) and only the two columns. Coverage commits
+   * AFTER the data append (a crash in between leaves the buckets
+   * uncovered → redundantly rescanned, never covered-but-absent). A
+   * crash-resumed batch may append its rows twice — duplicate alt entries
+   * are an over-approximation the probe's `distinct` absorbs.
    */
   private def appendAltRows(spark: SparkSession, outDir: String,
                             idCol: String, buckets: Seq[Int]): Unit = {
@@ -485,8 +440,9 @@ object Ingest {
    * scanned and rewritten — no full-store scan to discover locations,
    * which at 100 TB is the difference between touching 3 partitions and
    * reading the corpus. Falls back to [[deleteByQuery]] when no alt
-   * index exists. The alt index itself is left over-approximate (see
-   * [[buildAltIndex]]).
+   * index exists. The alt index itself is left over-approximate: a stale
+   * id maps to a bucket that no longer holds it, and the rewrite simply
+   * finds no rows.
    */
   def deleteByIds(spark: SparkSession, outDir: String, ids: Seq[Long],
                   idCol: String = "doc_id"): Seq[BucketLineage] = {

@@ -1,68 +1,21 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
  * Multimodal column plumbing: image/audio/video ride along as opaque
- * `binary` payloads with typed metadata; decode / feature-extract /
- * resize / frame-sample run as batched per-partition transforms over the
- * payload bytes.
- *
- * The actual media codecs are STUBBED (this container ships no image or
- * audio libraries): [[StubExtractor]] derives deterministic pseudo-features
- * from the raw bytes. The Spark-side contract — schema, batch shape,
- * partition-local execution, explode of per-frame rows — is real and
- * tested; swapping in a true decoder is a one-class change.
+ * `binary` payloads with typed metadata. The media codecs are not shipped;
+ * the features are deterministic functions of the raw bytes.
  */
 object Multimodal {
 
-  /** per-payload features; `vec` stands in for an embedding. */
-  final case class MediaFeatures(id: Long, nBytes: Long, headByte: Int,
-                                 checksum: Long, vec: Array[Float])
-
-  /** batched payload → features transform; the stub derives everything
-    * from the bytes so results are deterministic and portable. */
-  trait FeatureExtractor extends Serializable {
-    def extract(id: Long, payload: Array[Byte]): MediaFeatures
-  }
-
-  /** STUB decode: portable-hash checksum (fold of byte values mod 2^31-1,
-    * matching TextOps.portableHash on ASCII payloads) + an 8-dim fake
-    * embedding from byte samples. Replace with a real codec off-sandbox. */
-  object StubExtractor extends FeatureExtractor {
-    override def extract(id: Long, payload: Array[Byte]): MediaFeatures = {
-      var acc = 0L
-      var i = 0
-      while (i < payload.length) { acc = (acc * 31 + (payload(i) & 0xff)) % TextOps.P; i += 1 }
-      val vec = Array.tabulate(8) { d =>
-        if (payload.isEmpty) 0f
-        else (payload(d * payload.length / 8) & 0xff).toFloat / 255f
-      }
-      MediaFeatures(id, payload.length.toLong,
-        if (payload.isEmpty) -1 else payload(0) & 0xff, acc, vec)
-    }
-  }
-
-  /** payload column → feature rows, batched per partition (the
-    * mapInPandas-shaped plumbing, JVM-native). Use this for PLUGGABLE
-    * extractors (real codecs); for the scalar stub features prefer the
-    * fused-plan [[mediaFeatureColumns]]. */
-  def extractFeatures(df: DataFrame, idCol: String, payloadCol: String,
-                      extractor: FeatureExtractor = StubExtractor): Dataset[MediaFeatures] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it => it.map { case (id, p) => extractor.extract(id, p) } }
-  }
-
-  /** the scalar [[StubExtractor]] features as pure COLUMN EXPRESSIONS —
-    * size and head byte via built-ins, the checksum via the codegen'd
-    * byte-fold [[PortableHashBytes]] — so the stage fuses into
-    * WholeStageCodegen instead of paying a SerializeFromObject /
-    * mapPartitions hop per row (same values as [[extractFeatures]] with
-    * the stub; Round3Spec pins both the equality and the plan). */
+  /** per-payload features as pure COLUMN EXPRESSIONS — size and head
+    * byte via built-ins, the checksum via the codegen'd byte-fold
+    * [[PortableHashBytes]] (fold of byte values mod 2^31-1) — so the stage
+    * fuses into WholeStageCodegen instead of paying a SerializeFromObject /
+    * mapPartitions hop per row (Round3Spec pins the plan and the equality
+    * with the mapPartitions stub extractor its oracle keeps). */
   def mediaFeatureColumns(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
     import org.apache.spark.sql.GraftBridge.{column, expression}
     val p = col(payloadCol)
@@ -72,131 +25,5 @@ object Multimodal {
       when(length(p) === 0, lit(-1L))
         .otherwise(conv(hex(substring(p, 1, 1)), 16, 10).cast("long")).as("head_byte"),
       column(PortableHashBytes(expression(p))).as("checksum"))
-  }
-
-  /** video frame sampling: one row per sampled frame index (every
-    * `stride`-th of `nFrames`), with a stub frame checksum derived from
-    * (payload, frameIdx). Plumbing = explode + per-row transform. */
-  def sampleFrames(df: DataFrame, idCol: String, payloadCol: String,
-                   nFramesCol: String, stride: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol),
-        col(nFramesCol).cast("int"))
-      .as[(Long, Array[Byte], Int)]
-      .flatMap { case (id, p, n) =>
-        (0 until n by stride).map { f =>
-          // STUB frame decode: checksum of payload bytes rotated by frame idx
-          var acc = f.toLong
-          var i = 0
-          while (i < p.length) { acc = (acc * 31 + (p((i + f) % p.length) & 0xff)) % TextOps.P; i += 1 }
-          (id, f, acc)
-        }
-      }
-      .toDF("id", "frame_idx", "frame_checksum")
-  }
-
-  /** per-image decode results: dimensions + 8-bit luminance raster
-    * (row-major, row 0 = top) + mean luma in milli-units. */
-  final case class ImageFeatures(id: Long, width: Int, height: Int,
-                                 nBytes: Long, meanLumaMilli: Long,
-                                 luma: Array[Byte])
-
-  /**
-   * REAL image decode — PNG/JPEG/BMP/GIF readers ship with the JDK
-   * (javax.imageio), so this path needs no external codec: payload bytes →
-   * BufferedImage → integer BT.601 luminance raster ((299r + 587g +
-   * 114b) / 1000 — integer math, deterministic across platforms) + typed
-   * metadata. Undecodable payloads yield width = height = 0 (poisoned
-   * rows survive the batch — corrupt files must not kill a 100 TB job).
-   * Partition-local batches; ImageIO's disk cache is disabled per task.
-   */
-  def decodeImages(df: DataFrame, idCol: String, payloadCol: String): Dataset[ImageFeatures] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (id, bytes) =>
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          // oversized-but-valid images poison too: w*h must fit an array
-          // (and stay within a sane per-row budget) or the task would die
-          // on NegativeArraySizeException — same contract as corrupt bytes
-          if (img == null ||
-            img.getWidth.toLong * img.getHeight > 256L * 1024 * 1024)
-            ImageFeatures(id, 0, 0, bytes.length.toLong, 0L, Array.emptyByteArray)
-          else {
-            val w = img.getWidth; val h = img.getHeight
-            val luma = new Array[Byte](w * h)
-            var sum = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = img.getRGB(x, y)
-                val l = (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-                luma(y * w + x) = l.toByte
-                sum += l
-                x += 1
-              }
-              y += 1
-            }
-            ImageFeatures(id, w, h, bytes.length.toLong,
-              if (w == 0 || h == 0) 0L else sum * 1000 / (w.toLong * h), luma)
-          }
-        }
-      }
-  }
-
-  /** general bilinear byte-raster resize (row-major w×h → outW×outH),
-    * HALF_UP — delegates per-pixel sampling to the shared core in
-    * [[Tiling.sampleBilinear]] (one kernel for media resize AND raster
-    * tile resample, so rounding/clamping can never diverge). */
-  def bilinearResize(src: Array[Byte], w: Int, h: Int, outW: Int, outH: Int): Array[Byte] = {
-    val out = new Array[Byte](outW * outH)
-    if (w <= 0 || h <= 0 || src.length < w * h) return out
-    var j = 0
-    while (j < outH) {
-      val v = (j + 0.5) * h / outH - 0.5
-      var i = 0
-      while (i < outW) {
-        val u = (i + 0.5) * w / outW - 0.5
-        out(j * outW + i) = Tiling.sampleBilinear(src, w, h, u, v)
-        i += 1
-      }
-      j += 1
-    }
-    out
-  }
-
-  /** REAL image resize: decode (JDK ImageIO) → bilinear luminance resample
-    * to `side`×`side` — the decoded twin of [[resizePayload]]. */
-  def resizeImages(df: DataFrame, idCol: String, payloadCol: String, side: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    decodeImages(df, idCol, payloadCol)
-      .map(f => (f.id, f.width, f.height, bilinearResize(f.luma, f.width, f.height, side, side)))
-      .toDF("id", "width", "height", "tile")
-  }
-
-  /** resize stub: deterministic byte subsample of the payload to a fixed
-    * `outBytes`-sized tile (nearest-index sampling — the shape a real
-    * bilinear resize would have). */
-  def resizePayload(df: DataFrame, idCol: String, payloadCol: String,
-                    outBytes: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, p) =>
-        val out =
-          if (p.isEmpty) Array.emptyByteArray
-          else Array.tabulate(outBytes)(i => p((i.toLong * p.length / outBytes).toInt))
-        (id, out)
-      }
-      .toDF("id", "tile")
   }
 }

@@ -130,30 +130,6 @@ object Ops {
     }
   }
 
-  /** Stats-clipped spatio-temporal box query: bbox clip as above plus the
-    * temporal clip (QueryIndexHelper.clipIndexedTemporalConstraints,
-    * QueryIndexHelper.java:54-106) against the store's time-range
-    * statistic before decomposition. */
-  def stBoxQueryClipped(evts: DataFrame, lonMin: Double, lonMax: Double,
-                        latMin: Double, latMax: Double,
-                        tsMin: java.sql.Timestamp, tsMax: java.sql.Timestamp,
-                        statsEnv: Option[graft.index.StatsClip.Env],
-                        statsTs: Option[(Long, Long)]): DataFrame = {
-    import graft.index.{StatsClip, TemporalAlgebra}
-    val box = StatsClip.clipEnvelope(StatsClip.Env(lonMin, lonMax, latMin, latMax), statsEnv)
-    val time = statsTs match {
-      case None => List(TemporalAlgebra.TemporalRange(tsMin.getTime, tsMax.getTime))
-      case Some((lo, hi)) =>
-        StatsClip.clipTime(List(TemporalAlgebra.TemporalRange(tsMin.getTime, tsMax.getTime)), lo, hi)
-    }
-    (box, time) match {
-      case (Some(e), t :: _) =>
-        stBoxQuery(evts, e.minX, e.maxX, e.minY, e.maxY,
-          new java.sql.Timestamp(t.start), new java.sql.Timestamp(t.end))
-      case _ => evts.where(lit(false))
-    }
-  }
-
   /** Spatial box scan by the COMPOUND ROW KEY (salt byte ‖ cell id) — the
     * reference's physical access path: CompoundIndexStrategy.getQueryRanges
     * fans the SFC ranges across every salt prefix and the sorted store is
@@ -542,10 +518,21 @@ object Ops {
    * first `nlist` vectors; swap in Analytics.kmeans centroids off-oracle)
    * so the oracle reproduces the exact candidate sets. The list join is a
    * bucket equi-join — the scale path next to the LSH variant.
+   *
+   * List ASSIGNMENT is a codegen'd map-side argmin ([[NearestCentroidVec]]
+   * via gw_nearest_centroid_vec) — the full vector side never crosses an
+   * Exchange or Window before the final list equi-join (reference
+   * KMeansMapReduce.java:62-308 assigns in the mapper too). Only the
+   * broadcast-sized `isin(queryIds)` probe subset pays a centroid join +
+   * rank window to pick its nProbe lists, and the probe side is broadcast
+   * into the candidate join, so at scale the base vectors stream
+   * scan→argmin→hash-probe with zero shuffles.
    */
   def annIvf(emb: DataFrame, idCol: String, vecCol: String,
              nlist: Int, nProbe: Int, queryIds: Seq[Long], k: Int): DataFrame = {
     import GeoFunctions.dot_long
+    val spark = emb.sparkSession
+    import spark.implicits._
     val q = emb.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
       .withColumn("n2", dot_long(col("v"), col("v")))
     // the coarse quantizer is nlist-sized (k-sized, like Lloyd centroids):
@@ -553,34 +540,6 @@ object Ops {
     val centSeq: Seq[(Long, Array[Long])] =
       q.where(col("id") < nlist).select(col("id"), col("v")).collect().toSeq
         .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    annIvfImpl(q, centSeq, nProbe, queryIds, k)
-  }
-
-  /** IVF with a TRAINED coarse quantizer — centroids from
-    * [[Analytics.kmeansVec]] instead of the deterministic first-nlist
-    * stub: better-balanced inverted lists, same probe plan. */
-  def annIvfTrained(emb: DataFrame, idCol: String, vecCol: String,
-                    centroids: Seq[(Long, Array[Long])], nProbe: Int,
-                    queryIds: Seq[Long], k: Int): DataFrame = {
-    import GeoFunctions.dot_long
-    val q = emb.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
-      .withColumn("n2", dot_long(col("v"), col("v")))
-    annIvfImpl(q, centroids, nProbe, queryIds, k)
-  }
-
-  /** List ASSIGNMENT is a codegen'd map-side argmin ([[NearestCentroidVec]]
-    * via gw_nearest_centroid_vec) — the full vector side never crosses an
-    * Exchange or Window before the final list equi-join (same mapper-side
-    * shape as the Lloyd fix; reference KMeansMapReduce.java:62-308 assigns
-    * in the mapper too). Only the broadcast-sized `isin(queryIds)` probe
-    * subset pays a centroid join + rank window to pick its nProbe lists,
-    * and the probe side is broadcast into the candidate join, so at scale
-    * the base vectors stream scan→argmin→hash-probe with zero shuffles. */
-  private def annIvfImpl(q: DataFrame, centSeq: Seq[(Long, Array[Long])], nProbe: Int,
-                         queryIds: Seq[Long], k: Int): DataFrame = {
-    import GeoFunctions.dot_long
-    val spark = q.sparkSession
-    import spark.implicits._
     // same argmin as the old window ORDER BY (d2, cid): per-row |v|² is
     // constant under argmin and NearestCentroidVec tie-breaks to lowest cid
     val lists = q.select(col("id").as("vec_id"),

@@ -128,46 +128,12 @@ object SpatialPlanner {
     out.toSeq
   }
 
-  /** INTERSECTION-merge of key ranges — the reference's
-    * ByteArrayRange.mergeIntersections(INTERSECTION)
-    * (core/index/.../ByteArrayRange.java:124-151): sorted; the current
-    * range consumes each following range it still intersects, shrinking
-    * to the common intersection; the first non-intersecting range starts
-    * a new group. The AND-combination of two decomposed constraint sets. */
-  def intersectRanges(ranges: Seq[(Array[Byte], Array[Byte])]): Seq[(Array[Byte], Array[Byte])] = {
-    val sorted = ranges.sortWith { (a, b) =>
-      val c = ByteUtils.compareUnsigned(a._1, b._1)
-      if (c != 0) c < 0 else ByteUtils.compareUnsigned(a._2, b._2) < 0
-    }.toIndexedSeq
-    val out = Seq.newBuilder[(Array[Byte], Array[Byte])]
-    var i = 0
-    while (i < sorted.length) {
-      var r1 = sorted(i)
-      var j = i + 1
-      var open = true
-      while (j < sorted.length && open) {
-        val r2 = sorted(j)
-        val intersects = ByteUtils.compareUnsigned(r1._2, r2._1) >= 0 &&
-          ByteUtils.compareUnsigned(r2._2, r1._1) >= 0
-        if (intersects) {
-          r1 = (
-            if (ByteUtils.compareUnsigned(r1._1, r2._1) >= 0) r1._1 else r2._1,
-            if (ByteUtils.compareUnsigned(r1._2, r2._2) <= 0) r1._2 else r2._2)
-          j += 1
-        } else open = false
-      }
-      i = j
-      out += r1
-    }
-    out.result()
-  }
-
   /** EXACT intersection of two internally-disjoint sorted range sets
     * (two-pointer sweep): emits each pairwise overlap and drops
-    * non-overlapping leftovers — unlike [[intersectRanges]] (the faithful
-    * mergeIntersections port), which keeps isolated ranges whole. This is
-    * the sound-and-minimal AND-composition the pushdown rule wants: the
-    * result covers exactly (∪a) ∩ (∪b). */
+    * non-overlapping leftovers — unlike the reference's
+    * ByteArrayRange.mergeIntersections, which keeps isolated ranges whole.
+    * This is the sound-and-minimal AND-composition the pushdown rule
+    * wants: the result covers exactly (∪a) ∩ (∪b). */
   def intersectSets(a: Seq[(Array[Byte], Array[Byte])],
                     b: Seq[(Array[Byte], Array[Byte])]): Seq[(Array[Byte], Array[Byte])] = {
     val sa = mergeRanges(a).toIndexedSeq

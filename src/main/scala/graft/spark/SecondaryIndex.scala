@@ -57,21 +57,6 @@ object SecondaryIndex {
     primary.join(hits, idCol)
   }
 
-  /** open-ended constraint ranges, matching the reference's
-    * NumericIndexStrategy query semantics (NumericIndexStrategyTest:
-    * equals → [lex(v), lex(v)]; >= v → [lex(v), lex(max)];
-    * <= v → [lex(min), lex(v)]). Open ends use ±Infinity so rows with
-    * infinite values are included; equals(±0.0) spans both signed zeros
-    * (they lexicode apart but compare SQL-equal). NaN keys are outside
-    * the lexicoder contract. */
-  def queryEquals(primary: DataFrame, index: DataFrame, idCol: String, v: Double): DataFrame =
-    if (v == 0.0) queryRange(primary, index, idCol, -0.0, 0.0)
-    else queryRange(primary, index, idCol, v, v)
-  def queryGte(primary: DataFrame, index: DataFrame, idCol: String, v: Double): DataFrame =
-    queryRange(primary, index, idCol, v, Double.PositiveInfinity)
-  def queryLte(primary: DataFrame, index: DataFrame, idCol: String, v: Double): DataFrame =
-    queryRange(primary, index, idCol, Double.NegativeInfinity, v)
-
   /** sign-flip long lexicode as a codegen'd expression (the temporal
     * secondary key — epoch millis, TemporalIndexStrategy semantics). */
   case class LongLexicode(child: Expression) extends UnaryExpression {
@@ -98,13 +83,4 @@ object SecondaryIndex {
     df.select(
       lexicodeLong(unix_millis(col(tsCol).cast("timestamp"))).as("sec_key"),
       col(idCol))
-
-  def queryTimeRange(primary: DataFrame, index: DataFrame, idCol: String,
-                     t0Millis: Long, t1Millis: Long): DataFrame = {
-    val hits = index
-      .where(col("sec_key") >= lit(graft.index.Lexicoders.encodeLong(t0Millis)) &&
-        col("sec_key") <= lit(graft.index.Lexicoders.encodeLong(t1Millis)))
-      .select(col(idCol))
-    primary.join(hits, idCol)
-  }
 }

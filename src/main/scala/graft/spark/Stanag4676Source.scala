@@ -11,18 +11,11 @@ import org.apache.spark.sql.types._
  * IngestMessageHandler.java:64-280): one 4676 XML TrackMessage per row
  * parses declaratively with `from_xml`, `<items>` children discriminate on
  * their `xsi:type` attribute (TrackPoint vs MotionEventInformation —
- * NATO4676Decoder.java:397-419), and the plugin emits the same three typed
- * frames the reference's ingest produces:
- *
- *  - [[trackPoints]] — one row per TrackPoint item with the exact field
- *    set IngestMessageHandler.setTrackPointData extracts (mission, track
- *    number/uuid/status/classification, item uuid/source/classification,
- *    event time, speed, course, lat/lon/elevation; end time fixed at −1);
- *  - [[motionEvents]] — one row per MotionEventInformation item, same
- *    shape plus the motion event code and a REAL end time
- *    (IngestMessageHandler.java:236-280);
- *  - [[tracks]] — the per-track rollup the reducer assembles (point
- *    count, min/max event time, duration).
+ * NATO4676Decoder.java:397-419), and [[trackPoints]] emits one row per
+ * TrackPoint item with the exact field set
+ * IngestMessageHandler.setTrackPointData extracts (mission, track
+ * number/uuid/status/classification, item uuid/source/classification,
+ * event time, speed, course, lat/lon/elevation; end time fixed at −1).
  *
  * Ported quirks, pinned by Stanag4676SourceSpec:
  *  - mission id falls back to the track COMMENT when missionID is absent,
@@ -34,9 +27,7 @@ import org.apache.spark.sql.types._
  *  - timestamps accept the decoder's fallback chain — micros truncate to
  *    millis via the `(\.\d{3})\d+Z` rewrite, then millis-Z / millis /
  *    seconds-Z / seconds forms (NATO4676Decoder.DateStringToLong:
- *    1320-1344), GMT calendar;
- *  - a motion point's position reads from either trackPointPosition or
- *    motionEventPosition (NATO4676Decoder.readMotionPoint:557-581).
+ *    1320-1344), GMT calendar.
  *
  * Out of scope, documented: the embedded base64 motion-imagery chips
  * (IngestMessageHandler decodes/rescales them with ImageIO — the same
@@ -107,58 +98,32 @@ object Stanag4676Source {
   def parse(docs: DataFrame, xmlCol: String): DataFrame =
     docs.withColumn("msg", from_xml(col(xmlCol), trackMessageSchema))
 
-  /** (input_id, track struct, item struct) for a given xsi:type. */
-  private def items(docs: DataFrame, idCol: String, xmlCol: String,
-                    xsiType: String): DataFrame =
+  /** one row per TrackPoint item with the setTrackPointData field set
+    * (end_ts fixed at −1, as the handler emits —
+    * IngestMessageHandler.java:180-181). */
+  def trackPoints(docs: DataFrame, idCol: String, xmlCol: String): DataFrame = {
+    val pos = col("item.trackPointPosition")
     parse(docs, xmlCol)
       .select(col(idCol).as("input_id"), explode(col("msg.tracks")).as("trk"))
       .select(col("input_id"), col("trk"), explode(col("trk.items")).as("item"))
-      .where(col("item").getField("_xsi:type") === xsiType)
-
-  /** the setTrackPointData field set shared by both item frames. */
-  private def commonColumns(pos: Column): Seq[Column] = Seq(
-    missionOf(col("trk")).as("mission"),
-    coalesce(col("trk.trackNumber"), lit("")).as("track_number"),
-    col("trk.trackUUID").as("track_uuid"),
-    coalesce(col("trk.trackStatus"), lit("")).as("track_status"),
-    coalesce(col("trk.trackSecurity.classification"), lit("")).as("track_classification"),
-    col("item.trackItemUUID").as("track_item_uuid"),
-    coalesce(col("item.trackPointSource"), lit("")).as("track_point_source"),
-    trackTime(col("item.trackItemTime")).as("ts"),
-    col("item.trackPointSpeed").as("speed"),
-    col("item.trackPointCourse").as("course"),
-    coalesce(col("item.trackItemSecurity.classification"), lit("UNKNOWN"))
-      .as("track_item_classification"),
-    pos.getField("latitude").as("lat"),
-    pos.getField("longitude").as("lon"),
-    pos.getField("elevation").as("elevation"))
-
-  /** one row per TrackPoint item (end_ts fixed at −1, as the handler
-    * emits — IngestMessageHandler.java:180-181). */
-  def trackPoints(docs: DataFrame, idCol: String, xmlCol: String): DataFrame =
-    items(docs, idCol, xmlCol, "TrackPoint")
-      .select(col("input_id") +: (commonColumns(col("item.trackPointPosition")) :+
-        lit(-1L).as("end_ts_ms")): _*)
-
-  /** one row per MotionEventInformation item: adds the motion event code
-    * and the REAL end time; position falls back between the two forms. */
-  def motionEvents(docs: DataFrame, idCol: String, xmlCol: String): DataFrame = {
-    val pos = coalesce(
-      col("item.trackPointPosition"), col("item.motionEventPosition"))
-    items(docs, idCol, xmlCol, "MotionEventInformation")
-      .select(col("input_id") +: (commonColumns(pos) ++ Seq(
-        trim(col("item.motionEvent")).as("motion_event"),
-        trackTime(col("item.motionEventEndTime")).as("end_ts"))): _*)
+      .where(col("item").getField("_xsi:type") === "TrackPoint")
+      .select(
+        col("input_id"),
+        missionOf(col("trk")).as("mission"),
+        coalesce(col("trk.trackNumber"), lit("")).as("track_number"),
+        col("trk.trackUUID").as("track_uuid"),
+        coalesce(col("trk.trackStatus"), lit("")).as("track_status"),
+        coalesce(col("trk.trackSecurity.classification"), lit("")).as("track_classification"),
+        col("item.trackItemUUID").as("track_item_uuid"),
+        coalesce(col("item.trackPointSource"), lit("")).as("track_point_source"),
+        trackTime(col("item.trackItemTime")).as("ts"),
+        col("item.trackPointSpeed").as("speed"),
+        col("item.trackPointCourse").as("course"),
+        coalesce(col("item.trackItemSecurity.classification"), lit("UNKNOWN"))
+          .as("track_item_classification"),
+        pos.getField("latitude").as("lat"),
+        pos.getField("longitude").as("lon"),
+        pos.getField("elevation").as("elevation"),
+        lit(-1L).as("end_ts_ms"))
   }
-
-  /** per-track rollup over its TrackPoint items (the reducer's track
-    * feature: point census + time span). Tracks with no points yield no
-    * row, like the handler's `points.size() > 0` gate. */
-  def tracks(docs: DataFrame, idCol: String, xmlCol: String): DataFrame =
-    trackPoints(docs, idCol, xmlCol)
-      .groupBy(col("input_id"), col("track_uuid"), col("mission"),
-        col("track_number"), col("track_status"), col("track_classification"))
-      .agg(count(lit(1)).as("n_points"),
-        min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"),
-        (unix_millis(max(col("ts"))) - unix_millis(min(col("ts")))).as("duration_ms"))
 }

@@ -21,8 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object TextOps {
 
-  val P = 2147483647L // 2^31 - 1
-
   /** portable string hash: fold(a*31 + codepoint) mod p over characters.
     * (SQL twin: list_reduce over ord(substr(w,i,1)).) One codegen'd
     * expression — the higher-order aggregate/transform/split chain it
@@ -362,13 +360,6 @@ object TextOps {
       s"embeddingNearDupPairs is the all-pairs exactness baseline ($n rows > maxRows=$maxRows): " +
         "use embeddingLshPairs (hyperplane LSH buckets) or Ops.annIvf (inverted lists) at this scale, " +
         "or raise maxRows explicitly if an exact quadratic pass is intended")
-    embeddingNearDupPairsUnguarded(emb, idCol, vecCol, tau)
-  }
-
-  /** the exact all-pairs plan without the row-count guard — for callers
-    * (embeddingNearDupAuto) that have already sized the input. */
-  private def embeddingNearDupPairsUnguarded(emb: DataFrame, idCol: String, vecCol: String,
-                                             tau: Double): DataFrame = {
     val q = quantized(emb, idCol, vecCol)
     cosineAtLeast(q.as("a").join(q.as("b"), col("a.id") < col("b.id")), tau)
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"), col("cos"))
@@ -453,23 +444,6 @@ object TextOps {
     Graphs.minLabelComponents(fwd.unionByName(rev).unionByName(self))
       .select(col("id"), col("lbl").as("cluster"),
         (col("lbl") === col("id")).as("is_keeper"))
-  }
-
-  /** strategy selection for embedding near-dup — the similarity twin of
-    * SpatialJoin.polygonJoinAuto: under `maxExact` rows the exact
-    * all-pairs baseline runs (recall 1.0), above it the hyperplane-LSH
-    * bucket join takes over. Returns (strategyName, pairs); both paths
-    * share the (a_id, b_id, cos) columns. */
-  def embeddingNearDupAuto(emb: DataFrame, idCol: String, vecCol: String,
-                           dims: Int, tau: Double,
-                           maxExact: Long = 100000, lshBits: Int = 8): (String, DataFrame) = {
-    val n = emb.count()
-    if (n <= maxExact)
-      // size already measured here — skip the guard's second count
-      ("exact", embeddingNearDupPairsUnguarded(emb, idCol, vecCol, tau))
-    else
-      ("lsh", embeddingLshPairs(emb, idCol, vecCol, dims, lshBits, tau)
-        .select(col("a_id"), col("b_id"), col("cos")))
   }
 
   /** marker words per language for the n-gram-heuristic language id. */

@@ -54,38 +54,6 @@ object Tiling {
       copy(first = f, second = s, third = t, fourth = q)
   }
 
-  /** spatial-temporal insertion ids for a (point, time-range) record —
-    * the TimeRange data model (core/geotime/.../store/dimension/Time.java,
-    * TimeDescriptors startRange/endRange): a range spanning calendar years
-    * expands to one bin per year (BinnedNumericDataset.applyBins cross
-    * product) before the tiered decomposition. Timestamps in micros
-    * (Spark internal). */
-  case class CellIdsForTimeRange(first: Expression, second: Expression,
-                                 third: Expression, fourth: Expression)
-      extends QuaternaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def nullSafeEval(lon: Any, lat: Any, tsStart: Any, tsEnd: Any): Any = {
-      val startMs = Math.floorDiv(tsStart.asInstanceOf[Long], 1000L)
-      val endMs = Math.floorDiv(tsEnd.asInstanceOf[Long], 1000L)
-      val ids = GeoCodec.spatialTemporal.getInsertionIds(Array(
-        graft.index.NumericData(lon.asInstanceOf[Double], lon.asInstanceOf[Double]),
-        graft.index.NumericData(lat.asInstanceOf[Double], lat.asInstanceOf[Double]),
-        graft.index.NumericData(startMs.toDouble, endMs.toDouble)))
-      new GenericArrayData(ids.toArray[Any])
-    }
-    override protected def withNewChildrenInternal(f: Expression, s: Expression,
-                                                   t: Expression, q: Expression): Expression =
-      copy(first = f, second = s, third = t, fourth = q)
-  }
-
-  def gw_cell_ids_time_range(lon: Column, lat: Column,
-                             tsStart: Column, tsEnd: Column): Column = {
-    import org.apache.spark.sql.GraftBridge.{column, expression}
-    column(CellIdsForTimeRange(expression(lon), expression(lat),
-      expression(tsStart), expression(tsEnd)))
-  }
-
   /** Z-order (Morton) tile id from grid coordinates — the alternative
     * curve (reference: core/index/.../sfc/zorder/ZOrderSFC.java:62-160). */
   case class ZOrderIdFromXY(left: Expression, right: Expression, bits: Int)
@@ -147,17 +115,6 @@ object Tiling {
       .withColumn("lon_max", (col("tx") + 1).cast("double") / bins * 360 - 180)
       .withColumn("lat_min", greatest(col("ty").cast("double") / bins * 360 - 180, lit(-90.0)))
       .withColumn("lat_max", least((col("ty") + 1).cast("double") / bins * 360 - 180, lit(90.0)))
-  }
-
-  /** pyramid level (bits/dim) whose cell span best matches the coverage's
-    * native resolution: finest tier with cellSpan >= pixelSpan*tileSize/(1+eps)
-    * (reference: RasterDataAdapter.java:503-553 floor rule). */
-  def pyramidLevel(envWidthDeg: Double, pixelsWide: Long, tileSize: Int,
-                   maxBits: Int = 31, eps: Double = 1e-10): Int = {
-    val tileSpanDeg = envWidthDeg / pixelsWide * tileSize // degrees per tile at native res
-    var bits = 0
-    while (bits < maxBits && 360.0 / (1L << (bits + 1)) >= tileSpanDeg * (1 - eps)) bits += 1
-    bits
   }
 
   /** mosaic merge of equally-sized tile payloads: per-byte no-data(0)
@@ -244,9 +201,8 @@ object Tiling {
    * overlapping source tiles compose via [[noDataMerge]].
    */
   /** clamped bilinear sample of a row-major w×h byte raster at fractional
-    * pixel coordinates, HALF_UP-rounded to a byte — the SINGLE sampling
-    * kernel behind raster tile resampling and media resize
-    * (Multimodal.bilinearResize), so rounding/clamping cannot diverge. */
+    * pixel coordinates, HALF_UP-rounded to a byte — the sampling kernel
+    * behind raster tile resampling. */
   def sampleBilinear(src: Array[Byte], w: Int, h: Int, u: Double, v: Double): Byte = {
     val u0 = math.max(0, math.min(w - 1, math.floor(u).toInt))
     val v0 = math.max(0, math.min(h - 1, math.floor(v).toInt))
@@ -323,26 +279,5 @@ object Tiling {
       (ntile, resampleTilePayload(p, tileSize, s._1, s._2, s._3, s._4, d._1, d._2, d._3, d._4))
     }.toDF("new_tile", "payload")
     mosaicMerge(resampled, "new_tile", "payload")
-  }
-
-  /**
-   * Re-tile a coverage to a new grid level: each source tile (tx, ty at
-   * `bitsOld`) maps onto the target tiles its bounds cover at `bitsNew`,
-   * payloads mosaic-merged per target tile (reference:
-   * RasterTileResizeJobRunner.java:38 map→combine→reduce). Key algebra
-   * only — [[resizeTilesResampled]] is the variant with real pixels.
-   */
-  def resizeTiles(tiles: DataFrame, bitsOld: Int, bitsNew: Int): DataFrame = {
-    // exact integer level mapping (cells nest by powers of two) — float
-    // boundary probing would leak edge tiles into their lower neighbors
-    val d = bitsNew - bitsOld
-    def span(c: Column): Column =
-      if (d >= 0) sequence(c * (1L << d), (c + 1) * (1L << d) - 1)
-      else sequence(shiftright(c, -d), shiftright(c, -d))
-    val covered = tiles
-      .withColumn("ntx", explode(span(col("tx"))))
-      .withColumn("nty", explode(span(col("ty"))))
-      .withColumn("new_tile", gw_tile_id_xy(col("ntx"), col("nty"), bitsNew))
-    mosaicMerge(covered, "new_tile", "payload")
   }
 }

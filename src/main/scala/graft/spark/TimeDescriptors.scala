@@ -18,12 +18,12 @@ import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampNTZT
  */
 object TimeDescriptors {
 
-  sealed trait Descriptor { def hasTime: Boolean = true }
+  sealed trait Descriptor
   /** one instant attribute drives the index. */
   final case class SingleTime(time: String) extends Descriptor
   /** a [start, end] attribute pair drives the index. */
   final case class RangeTime(start: String, end: String) extends Descriptor
-  case object NoTime extends Descriptor { override def hasTime: Boolean = false }
+  case object NoTime extends Descriptor
 
   private def isTemporal(dt: DataType): Boolean = dt match {
     case TimestampType | TimestampNTZType | DateType => true

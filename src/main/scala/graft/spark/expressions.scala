@@ -329,18 +329,6 @@ case class STEnvelope(child: Expression) extends UnaryExpression with CodegenFal
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** centroid [x, y] of a WKB geometry. */
-case class STCentroid(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  @transient private lazy val reader = new WKBReader()
-  override def nullSafeEval(wkb: Any): Any = {
-    val c = reader.read(wkb.asInstanceOf[Array[Byte]]).getCentroid
-    new GenericArrayData(Array(c.getX, c.getY))
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** integer dot product of two array<bigint> columns (codegen'd static
   * call — the embedding-similarity hot loop). */
 case class DotLongArrays(left: Expression, right: Expression)
@@ -487,19 +475,6 @@ case class CharGrams(child: Expression, minN: Int, maxN: Int) extends UnaryExpre
     GeoCodec.charGrams(s.asInstanceOf[UTF8String], minN, maxN)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s => s"graft.spark.GeoCodec.charGrams($s, $minN, $maxN)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** all word n-gram shingles of a text (codegen'd one-pass; empty array
-  * below n words — callers filter/distinct as needed). */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(s: Any): Any =
-    GeoCodec.wordShingles(s.asInstanceOf[UTF8String], n)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.spark.GeoCodec.wordShingles($s, $n)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -699,13 +674,10 @@ object GeoFunctions {
     column(TileId(expression(lon), expression(lat), bits))
   def gw_tile_x(lon: Column, bits: Int): Column = column(TileX(expression(lon), bits))
   def gw_tile_y(lat: Column, bits: Int): Column = column(TileY(expression(lat), bits))
-  def gw_tile_bounds(tile: Column, bits: Int): Column = column(TileBounds(expression(tile), bits))
   def gw_cell_in_ranges(cell: Column, starts: Array[Array[Byte]], ends: Array[Array[Byte]]): Column =
     column(CellInRanges(expression(cell), starts, ends))
   def st_covers_point(lon: Column, lat: Column, wkb: Array[Byte], contains: Boolean = false): Column =
     column(STCoversPoint(expression(lon), expression(lat), wkb, contains))
-  def st_point_wkb(lon: Column, lat: Column): Column =
-    column(STPointWkb(expression(lon), expression(lat)))
   def st_multipoint_wkb(lons: Column, lats: Column): Column =
     column(STMultiPointWkb(expression(lons), expression(lats)))
   def st_geom_distance(a: Column, b: Column): Column =
@@ -713,12 +685,6 @@ object GeoFunctions {
   def dot_long(a: Column, b: Column): Column =
     column(DotLongArrays(expression(a), expression(b)))
   def st_envelope(wkb: Column): Column = column(STEnvelope(expression(wkb)))
-  def st_centroid(wkb: Column): Column = column(STCentroid(expression(wkb)))
-  /** the reference's SpatialQueryFilter.CompareOperation
-    * (SpatialQueryFilter.java:50-80): `contains=false` → OVERLAPS
-    * (prepared.intersects), `contains=true` → CONTAINS (prepared.contains). */
-  def st_geom_predicate(geomWkb: Column, queryWkb: Array[Byte], contains: Boolean = false): Column =
-    st_geom_relate(geomWkb, queryWkb, if (contains) RelateOp.Within else RelateOp.Intersects)
   def st_geom_relate(geomWkb: Column, queryWkb: Array[Byte], op: RelateOp): Column =
     column(STGeomRelate(expression(geomWkb), queryWkb, op))
   def gw_time_bin(ts: Column, unit: graft.index.TimeUnits.Value = graft.index.TimeUnits.Year): Column =

@@ -94,30 +94,6 @@ class AnalyticsSpec extends SparkTestBase {
     assert(math.abs(got(maxCell)._2 - 1.0) < 1e-12)
   }
 
-  test("kdeTiles: row-major tile assembly matches the cell heatmap") {
-    val cellBits = 5; val tileBits = 2
-    val tileSide = 1 << (cellBits - tileBits)
-    val cells = Analytics.kdeHeatmap(pts, cellBits).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3)))).toMap
-    val tiles = Analytics.kdeTiles(pts, cellBits, tileBits).collect()
-    assert(tiles.nonEmpty)
-    var checked = 0
-    for (t <- tiles) {
-      val (tx0, ty0) = (t.getLong(0) << (cellBits - tileBits), t.getLong(1) << (cellBits - tileBits))
-      val bw = t.getSeq[Long](2)
-      val bp = t.getSeq[Double](3)
-      assert(bw.length == tileSide * tileSide && bp.length == tileSide * tileSide)
-      for (oy <- 0 until tileSide; ox <- 0 until tileSide) {
-        val cell = cells.get((tx0 + ox, ty0 + oy))
-        val pos = oy * tileSide + ox
-        assert(bw(pos) == cell.map(_._1).getOrElse(0L), s"tile $t pos $pos")
-        assert(bp(pos) == cell.map(_._2).getOrElse(0.0))
-        if (cell.isDefined) checked += 1
-      }
-    }
-    assert(checked == cells.size, "every heatmap cell appears in exactly one tile")
-  }
-
   test("convexHullPerGroup matches direct JTS hull") {
     val grouped = pts.withColumn("g", col("id") % 5)
     val got = Analytics.convexHullPerGroup(grouped, "g").collect()
@@ -136,7 +112,7 @@ class AnalyticsSpec extends SparkTestBase {
     val convex = Analytics.convexHullPerGroup(grouped, "g").collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toMap
     val concave = Analytics.convexHullPerGroup(grouped, "g",
-        concaveThreshold = graft.spark.Hulls.DefaultConcaveThreshold)
+        concaveThreshold = 1.8) // the reference's default N (GeometryHullTool.java:42)
       .collect().map(r => (r.getLong(0), (r.getDouble(2), r.getString(4)))).toMap
     val reader = new org.locationtech.jts.io.WKTReader()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
@@ -277,27 +253,5 @@ class AnalyticsSpec extends SparkTestBase {
     val tied = Seq(("g", 1, 0.2), ("g", 2, 0.4))
       .toDF("group_id", "cluster_count", "distortion")
     assert(Analytics.bestGroupCount(tied).collect()(0).getInt(1) == 1)
-  }
-
-  test("rowRangeHistogram Aggregator: distributed row-key cdf matches local ingest") {
-    // the reference's RowRangeHistogramStatistics shape: row keys →
-    // ByteUtils.toDouble → fixed-bin histogram, per-partition partials
-    // merged. Distributed cdf must track a single-stream local ingest of
-    // the same keys (merge order redistributes bins — approximation
-    // contract, not bit identity).
-    val keys = (0L until 8000L).map(i =>
-      (String.format("\n%5h", java.lang.Long.valueOf(7 + i)) + "20030f89").getBytes)
-    import spark.implicits._
-    val df = keys.toDF("row_key").repartition(8)
-    val h = Analytics.rowRangeHistogram(df, "row_key")
-    assert(h.totalCount == 8000)
-    val local = new graft.index.FixedBinHistogram(1024)
-    keys.foreach(k => local.add(graft.index.KeyBytes.toDouble(k)))
-    for (i <- Seq(0L, 2000L, 4000L, 6000L, 8000L)) {
-      val v = graft.index.KeyBytes.toDouble(
-        (String.format("\n%5h", java.lang.Long.valueOf(7 + i)) + "20030f89").getBytes)
-      assert(math.abs(h.cdf(v) - local.cdf(v)) < 0.02, s"key offset $i")
-    }
-    assert(math.abs(h.cdf(Double.MaxValue) - 1.0) < 1e-9)
   }
 }

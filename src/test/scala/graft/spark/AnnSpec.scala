@@ -76,18 +76,4 @@ class AnnSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected)
   }
-
-  test("annIvfTrained parity: map-side assignment honors trained centroids (ties -> lowest cid)") {
-    val emb = embFixture(150)
-    // two byte-identical centroids force exact argmin ties
-    val base = Array.tabulate(16)(d => (((7L * 31 + d * 7) % 19) - 9) * 1000L / 9L)
-    val far = Array.tabulate(16)(d => (((3L * 31 + d * 7) % 19) - 9) * 1000L / 9L)
-    val cents = Seq((9L, base), (4L, base.clone()), (2L, far))
-    val got = Ops.annIvfTrained(emb, "vec_id", "embedding", cents,
-      nProbe = 1, queryIds = Seq(7L), k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.length == 3 && got.forall(_._1 == 7L))
-    // top-1 must be the query itself (cos = 1 with itself, lowest id tie-break)
-    assert(got.minBy(_._3)._2 == 7L)
-  }
 }

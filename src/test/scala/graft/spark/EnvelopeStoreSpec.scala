@@ -53,35 +53,6 @@ class EnvelopeStoreSpec extends SparkTestBase {
     }
   }
 
-  test("time-range records: year-spanning ranges expand to one bin per year") {
-    import spark.implicits._
-    val recs = Seq(
-      // within one year → single-bin ids
-      (1L, 10.0, 20.0, "2012-03-01 00:00:00", "2012-06-01 00:00:00"),
-      // spans 2011..2013 → ids carry three distinct year bins
-      (2L, 10.0, 20.0, "2011-11-01 00:00:00", "2013-02-01 00:00:00"))
-      .toDF("id", "lon", "lat", "ts_start", "ts_end")
-      .withColumn("ts_start", to_timestamp(col("ts_start")))
-      .withColumn("ts_end", to_timestamp(col("ts_end")))
-    val out = recs.select(col("id"),
-        explode(Tiling.gw_cell_ids_time_range(col("lon"), col("lat"),
-          col("ts_start"), col("ts_end"))).as("cell"))
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-    def yearBins(id: Long): Set[String] =
-      out.filter(_._1 == id)
-        .map(c => new String(c._2.slice(1, 5), java.nio.charset.StandardCharsets.UTF_8))
-        .toSet
-    assert(yearBins(1L) == Set("2012"))
-    assert(yearBins(2L) == Set("2011", "2012", "2013"))
-    // matches the index layer directly
-    val direct = GeoCodec.spatialTemporal.getInsertionIds(Array(
-      graft.index.NumericData(10.0, 10.0), graft.index.NumericData(20.0, 20.0),
-      graft.index.NumericData(
-        java.time.Instant.parse("2011-11-01T00:00:00Z").toEpochMilli.toDouble,
-        java.time.Instant.parse("2013-02-01T00:00:00Z").toEpochMilli.toDouble)))
-    assert(out.filter(_._1 == 2L).map(_._2.toSeq).toSet == direct.map(_.toSeq).toSet)
-  }
-
   test("fuzz: 60 random stored boxes x 20 random queries == brute force") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)

@@ -4,8 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.index.{BasicDim, Lexicoders, SFCDimension, ZOrderSFC}
 
-/** Lexicoders, Z-order curve, clustering extensions, raster resize,
-  * export sink. Property-style checks use a seeded RNG. */
+/** Lexicoders, Z-order curve, clustering extensions, export sink. Property-style checks use a seeded RNG. */
 class ExtendedOpsSpec extends SparkTestBase {
 
   private val rnd = new scala.util.Random(42)
@@ -64,40 +63,6 @@ class ExtendedOpsSpec extends SparkTestBase {
   private lazy val pts = Tables.synthPages(spark, 800)
     .select(col("doc_id").as("id"), col("lon"), col("lat")).cache()
 
-  test("kmeansJump picks a k and reports positive distortions") {
-    val local = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    def initFor(k: Int) = local.sortBy(_._1).take(k).toSeq
-    val (bestK, dists) = Analytics.kmeansJump(pts, initFor, Seq(2, 4, 8), iters = 2)
-    assert(Seq(2, 4, 8).contains(bestK))
-    assert(dists.map(_._2).forall(_ > 0))
-    assert(dists.last._2 > dists.head._2, "more clusters should cut cost")
-  }
-
-  test("kmeansParallelInit: deterministic, k data-point centroids, decent quality") {
-    val k = 8
-    val init1 = Analytics.kmeansParallelInit(pts, k)
-    val init2 = Analytics.kmeansParallelInit(pts, k)
-    assert(init1 == init2, "sampling must be reproducible")
-    assert(init1.size == k)
-    val local = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSet
-    assert(init1.forall(local.contains), "centroids are actual data points")
-    // quality contract is post-Lloyd (the reference runs full kmeans from
-    // the stripped sample): after 3 iterations the ||-init must be in the
-    // same ballpark as naive-first-k init
-    def refined(init: Seq[(Long, Double, Double)]): Double = {
-      val stats = Analytics.kmeans(pts, init, iters = 3).collect()
-      val cents = stats.map { r =>
-        (r.getLong(0), r.getLong(2).toDouble / r.getLong(1) / 100.0,
-          r.getLong(3).toDouble / r.getLong(1) / 100.0)
-      }.toSeq
-      Analytics.kmeansCost(pts, cents)
-    }
-    val naive = local.toSeq.sortBy(_._1).take(k)
-    val costPar = refined(init1)
-    val costNaive = refined(naive)
-    assert(costPar < costNaive * 2.0, s"par=$costPar naive=$costNaive")
-  }
-
   test("results are invariant to shuffle parallelism") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     def run(): (Set[(Long, Long, Long)], Map[Long, Long]) = {
@@ -120,33 +85,6 @@ class ExtendedOpsSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  test("stripWeakCentroids drops below the largest count gap") {
-    val stats = Seq((1L, 500L), (2L, 480L), (3L, 30L), (4L, 20L))
-    assert(Analytics.stripWeakCentroids(stats).toSet == Set(1L, 2L))
-    assert(Analytics.stripWeakCentroids(Seq((9L, 5L))) == Seq(9L))
-  }
-
-  test("StripWeakCentroidsRunnerTest golden vectors: all four break strategies") {
-    import Analytics.BreakStrategies._
-    // StripWeakCentroidsRunnerTest.java testStable1 / testStableUniform
-    val stable = Seq(1000L, 851L, 750L, 650L, 525L, 200L, 100L, 90L, 70L)
-    assert(stableChange(stable, tail = false) == 5)
-    assert(stableChange(stable, tail = true) == 5)
-    // testMaxDense: below the mean+stddev threshold, nothing stripped
-    assert(maxChange(Seq(900L, 600L, 800L), tail = true) == 3)
-    // testMaxUniform
-    assert(maxChange(Seq(1000L, 851L, 750L, 650L, 525L, 200L, 90L, 70L),
-      tail = true) == 5)
-    // a count <= 1 stops the scan before it is considered a change
-    assert(maxChange(Seq(500L, 1L), tail = false) == 2)
-    // the runner's [minimum, maximum] clamp (StripWeakCentroidsRunner
-    // .java:113-119): a degenerate breakpoint (all-equal counts ->
-    // stableChange position 0) must still keep at least `minimum`
-    val flat = Seq((1L, 5L), (2L, 5L), (3L, 5L))
-    assert(Analytics.stripWeakCentroids(flat,
-      stableChange(_, tail = false)).size == 1)
-  }
-
   test("multiLevelKmeans: child stats nest inside parent assignment") {
     val local = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val init1 = local.sortBy(_._1).take(3).toSeq
@@ -154,24 +92,6 @@ class ExtendedOpsSpec extends SparkTestBase {
     val parents = out.map(_.getLong(0)).distinct
     assert(parents.length == 3)
     assert(out.map(_.getLong(2)).sum == 800L, "every point in exactly one child cluster")
-  }
-
-  // ---- raster resize ----
-
-  test("resizeTiles: coarser level aggregates children; payloads merged") {
-    import spark.implicits._
-    // disjoint non-zero byte positions → merge result is order-independent
-    val src = Seq(
-      (0L, 0L, Array[Byte](1, 0, 0)), (1L, 0L, Array[Byte](0, 2, 0)),
-      (0L, 1L, Array[Byte](0, 0, 3)), (3L, 3L, Array[Byte](0, 4, 0)))
-      .toDF("tx", "ty", "payload")
-    val out = Tiling.resizeTiles(src, bitsOld = 2, bitsNew = 1).collect()
-      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toMap
-    val newId00 = GeoCodec.curve2d(1).index(Array(0L, 0L))
-    val newId11 = GeoCodec.curve2d(1).index(Array(1L, 1L))
-    assert(out.keySet == Set(newId00, newId11))
-    assert(out(newId00) == Seq[Byte](1, 2, 3))
-    assert(out(newId11) == Seq[Byte](0, 4, 0))
   }
 
   // ---- export sink ----

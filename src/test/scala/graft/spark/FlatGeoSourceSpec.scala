@@ -3,15 +3,11 @@ package graft.spark
 import org.apache.spark.sql.functions._
 
 /**
- * Fixture semantics for [[FlatGeoSource]] against the reference plugins'
- * drop rules: GDELT (Java-split column-count window, actionGeoType gate,
- * empty coordinate skip, empty-token-null vs unparseable-numeric-kills-
- * the-line, 58-column source URL — GDELTIngestPlugin.java:150-360),
- * GeoLife (the vals.length == 7 gate, CRLF documents, -777 altitude
- * sentinel, coordinate wrapping, kept-row 0-based pointinstance,
- * first/last track timestamps — GeoLifeIngestPlugin.java:173-240) and
- * T-Drive (bad-timestamp rows kept with null ts, the logged-and-continue
- * path — TdriveIngestPlugin.java:110-130).
+ * Fixture semantics for [[FlatGeoSource]] against the reference GDELT
+ * plugin's drop rules: Java-split column-count window, actionGeoType
+ * gate, empty coordinate skip, empty-token-null vs
+ * unparseable-numeric-kills-the-line, 58-column source URL
+ * (GDELTIngestPlugin.java:150-360).
  */
 class FlatGeoSourceSpec extends SparkTestBase {
 
@@ -74,55 +70,5 @@ class FlatGeoSourceSpec extends SparkTestBase {
     // the non-extended path keeps both (the reference only parses
     // supplemental fields when includeSupplementalFields is set)
     assert(FlatGeoSource.gdeltEvents(Seq(empty, bad).toDF("line"), "line").count() === 2L)
-  }
-
-  test("GeoLife: header skip via the ==7 gate, CRLF, -777 sentinel, pointinstance over kept rows") {
-    val plt = Seq(
-      "Geolife trajectory", "WGS 84", "Altitude is in Feet", "Reserved 3",
-      "0,2,255,My Track,0,0,2,8421376", "0",
-      "39.906631,116.385564,0,492,39925.448,2009-04-22,10:45:13",
-      "bad,line",                                                     // not 7 fields: skipped
-      "39.906554,116.385625,0,-777,39925.449,2009-04-22,10:46:13"     // -777 altitude
-    ).mkString("\r\n")                                                // CRLF document
-    val docs = Seq(("trip1.plt", plt)).toDF("file", "content")
-    val pts = FlatGeoSource.geolifePoints(docs, "file", "content")
-      .orderBy("pointinstance").collect()
-    assert(pts.length === 2)
-    // 0-based, counting KEPT records only (the skipped line leaves no gap)
-    assert(pts.map(_.getAs[Int]("pointinstance")).toSeq === Seq(0, 1))
-    assert(pts(0).getAs[Double]("lat") === 39.906631 &&
-      pts(0).getAs[Double]("lon") === 116.385564)
-    assert(pts(0).getAs[Double]("altitude") === 492.0)
-    assert(pts(0).getAs[java.sql.Timestamp]("ts").toString === "2009-04-22 10:45:13.0")
-    assert(pts(1).isNullAt(pts(1).fieldIndex("altitude")))            // -777 -> null
-    val trk = FlatGeoSource.geolifeTracks(docs, "file", "content").collect()(0)
-    assert(trk.getAs[Long]("n_points") === 2L)
-    assert(trk.getAs[Long]("duration_ms") === 60000L)
-    assert(trk.getAs[Seq[Double]]("lons") === Seq(116.385564, 116.385625))
-  }
-
-  test("GeoLife: coordinates wrap into WGS84 range (adjustCoordinateDimensionToRange)") {
-    val plt = "100.0,190.0,0,10,0,2009-04-22,10:45:13"
-    val docs = Seq(("f.plt", plt)).toDF("file", "content")
-    val p = FlatGeoSource.geolifePoints(docs, "file", "content").collect()(0)
-    // lat 100 wraps by one 180-band toward zero: -80; lon 190 by one
-    // 360-band: -170 (the reference's modular adjust, not a pole clamp)
-    assert(p.getAs[Double]("lat") === -80.0)
-    assert(p.getAs[Double]("lon") === -170.0)
-  }
-
-  test("T-Drive: typed parse; a bad timestamp keeps the row with null ts") {
-    val lines = Seq(
-      "368,2008-02-02 13:30:45,116.52889,39.92447",
-      "368,not-a-time,116.5,39.9",
-      "x,2008-02-02 13:30:45,116.5,39.9",     // bad taxi id: dropped
-      "too,short"                              // wrong arity: dropped
-    ).toDF("line")
-    val got = FlatGeoSource.tdrivePoints(lines, "line").collect()
-    assert(got.length === 2)
-    assert(got(0).getAs[Int]("taxi_id") === 368 &&
-      got(0).getAs[Double]("lon") === 116.52889)
-    assert(!got(0).isNullAt(got(0).fieldIndex("ts")))
-    assert(got(1).isNullAt(got(1).fieldIndex("ts")))
   }
 }

@@ -5,27 +5,11 @@ import org.locationtech.jts.geom.{Coordinate, GeometryFactory, Polygon}
 
 /**
  * GeometryUtilsTest port (core/geotime/src/test/.../GeometryUtilsTest.java):
- * WKB dimensionality by Z presence and per-sub-geometry constraint
- * envelopes from a multipolygon.
+ * per-sub-geometry constraint envelopes from a multipolygon.
  */
 class GeometryUtilsPortSpec extends AnyFunSuite {
 
   private val gf = new GeometryFactory()
-
-  test("test2DGeometryBinaryConversion: x/y preserved, Z reads back NaN") {
-    val p = gf.createPoint(new Coordinate(1.0, 2.0))
-    val conv = GeoCodec.geometryFromBinary(GeoCodec.geometryToBinary(p))
-    val c = conv.getCoordinates()(0)
-    assert(c.x == 1.0 && c.y == 2.0)
-    assert(java.lang.Double.isNaN(c.getOrdinate(Coordinate.Z)))
-  }
-
-  test("test3DGeometryBinaryConversion: x/y/z all preserved") {
-    val p = gf.createPoint(new Coordinate(1.0, 2.0, 3.0))
-    val conv = GeoCodec.geometryFromBinary(GeoCodec.geometryToBinary(p))
-    val c = conv.getCoordinates()(0)
-    assert(c.x == 1.0 && c.y == 2.0 && c.getOrdinate(Coordinate.Z) == 3.0)
-  }
 
   test("testConstraintGeneration: multipolygon decomposes to one envelope per member") {
     // (GeometryUtilsTest.java:103-175): [(10,30)-(20,40)] and [(-9,-2)-(-8,-1)]

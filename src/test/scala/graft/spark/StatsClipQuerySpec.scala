@@ -54,27 +54,4 @@ class StatsClipQuerySpec extends SparkTestBase {
       s"expected an empty LocalRelation, got:\n${df.queryExecution.optimizedPlan}")
     assert(df.count() == 0)
   }
-
-  test("stBoxQueryClipped: temporal clip keeps results identical and disjoint time scans nothing") {
-    val evts = Tables.geoEvents(spark, "/root/testdata/sf0.001")
-    val tsMin = java.sql.Timestamp.valueOf("2024-01-10 00:00:00")
-    val tsMax = java.sql.Timestamp.valueOf("2024-12-31 00:00:00") // overhangs the fixture span
-    val r = evts.agg(min(col("ts")), max(col("ts"))).collect()(0)
-    def millis(v: Any): Long = v match {
-      case t: java.sql.Timestamp => t.getTime
-      case d: java.time.LocalDateTime => d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      case i: java.time.Instant => i.toEpochMilli
-    }
-    val statsTs = (millis(r.get(0)), millis(r.get(1)))
-    val stats = Ops.bboxStatsEnv(evts).get
-    val plain = Ops.stBoxQuery(evts, 10.0, 120.0, -20.0, 60.0, tsMin, tsMax)
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    val clipped = Ops.stBoxQueryClipped(evts, 10.0, 120.0, -20.0, 60.0, tsMin, tsMax,
-        Some(stats), Some(statsTs))
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    assert(clipped == plain && plain.nonEmpty)
-    val disjoint = Ops.stBoxQueryClipped(evts, 10.0, 120.0, -20.0, 60.0, tsMin, tsMax,
-      Some(stats), Some((0L, 1000L)))
-    assert(disjoint.count() == 0)
-  }
 }

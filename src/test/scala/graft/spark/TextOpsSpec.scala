@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * portable integer hashing. */
 class TextOpsSpec extends SparkTestBase {
 
-  val P = TextOps.P
+  val P = 2147483647L // 2^31 - 1
 
   // small doc fixture with planted near-duplicates
   private lazy val docs = {

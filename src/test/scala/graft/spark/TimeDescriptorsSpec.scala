@@ -22,12 +22,12 @@ class TimeDescriptorsSpec extends AnyFunSuite {
 
   test("testOneTime: the first plain temporal field is the single time") {
     val td = infer(schema(geom, pop, ("when", TimestampType), ("whennot", TimestampType), pid))
-    assert(td === SingleTime("when") && td.hasTime)
+    assert(td === SingleTime("when"))
   }
 
   test("testRangeTime: start+end names form a range") {
     val td = infer(schema(geom, pop, ("start", TimestampType), ("end", TimestampType), pid))
-    assert(td === RangeTime("start", "end") && td.hasTime)
+    assert(td === RangeTime("start", "end"))
   }
 
   test("testMixedTime: a complete range clears the single field") {
@@ -60,7 +60,7 @@ class TimeDescriptorsSpec extends AnyFunSuite {
 
   test("no temporal field: NoTime; DateType counts as temporal") {
     assert(infer(schema(geom, pop, pid)) === NoTime)
-    assert(!infer(schema(geom)).hasTime)
+    assert(infer(schema(geom)) === NoTime)
     assert(infer(schema(("day", DateType))) === SingleTime("day"))
   }
 }
