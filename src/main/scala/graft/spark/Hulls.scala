@@ -47,7 +47,7 @@ object Hulls {
 
   /** decision distance: perpendicular distance when the projection falls
     * inside the segment, −1 otherwise (calcDistance:902-911). */
-  private def calcDistance(a: Coordinate, b: Coordinate, p: Coordinate): Double = {
+  private[spark] def calcDistance(a: Coordinate, b: Coordinate, p: Coordinate): Double = {
     val (t, o) = distanceSegment(a, b, p)
     if (t < 0.0 || t > 1.0) -1.0 else o
   }

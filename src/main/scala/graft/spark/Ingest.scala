@@ -350,25 +350,6 @@ object Ingest {
     case other => other
   }
 
-  /**
-   * Copy-on-write DELETE by query — the reference's `DataStore.delete`
-   * (core/store/.../base/BaseDataStore.java:327-499: scan the query,
-   * delete matching rows, fire the stats-adjusting deletion callbacks)
-   * re-expressed for an immutable-file store, Iceberg-style:
-   *
-   *  1. one pushdown-pruned scan counts matching rows PER BUCKET — only
-   *     buckets that actually contain matches are touched;
-   *  2. each affected bucket's SURVIVING rows are staged to
-   *     `.delete-staging/` preserving the row_key sort, then swapped over
-   *     the live bucket directory with an atomic FS rename;
-   *  3. the bucket's lineage record recommits with the new row count,
-   *     min/max cell and xor text checksum (the stats callback analogue).
-   *
-   * Untouched buckets' files are never rewritten or moved. A crash
-   * between stage and swap leaves a committed store (old or new bucket,
-   * never a mix) plus an inert staging dir; re-running the same delete is
-   * idempotent. Returns the updated lineage of the rewritten buckets.
-   */
   // --------------------------------------------------------- alt index
 
   /** the coverage-metadata set as recorded (empty when absent). */
@@ -606,6 +587,26 @@ object Ingest {
     Snapshots.finalizePending(outDir)
   }
 
+  /**
+   * Copy-on-write DELETE by query — the reference's `DataStore.delete`
+   * (core/store/.../base/BaseDataStore.java:327-499: scan the query,
+   * delete matching rows, fire the stats-adjusting deletion callbacks)
+   * re-expressed for an immutable-file store, Iceberg-style:
+   *
+   *  1. one pushdown-pruned scan finds the buckets holding matches —
+   *     only those buckets are touched;
+   *  2. each affected bucket's SURVIVING rows are staged to
+   *     `.delete-staging/`, range-split on cell_id like ingest and sorted
+   *     by row_key within each file, then swapped over the live bucket
+   *     directory with an atomic FS rename;
+   *  3. the bucket's lineage record recommits with the new row count,
+   *     min/max cell and xor text checksum (the stats callback analogue).
+   *
+   * Untouched buckets' files are never rewritten or moved. A crash
+   * between stage and swap leaves a committed store (old or new bucket,
+   * never a mix) plus an inert staging dir; re-running the same delete is
+   * idempotent. Returns the updated lineage of the rewritten buckets.
+   */
   def deleteByQuery(spark: SparkSession, outDir: String,
                     predicate: org.apache.spark.sql.Column): Seq[BucketLineage] = {
     recoverStaleDelete(spark, outDir)
@@ -762,13 +763,17 @@ object Ingest {
     val t0 = System.nanoTime()
     // compaction hash-routes each bucket to exactly ONE task (buckets never
     // span hash partitions), so partitionBy emits one file per bucket; the
-    // mutation paths keep range partitioning so a huge rewritten bucket can
-    // still parallelize across tasks/files
+    // mutation paths range-split on cell_id like ingest, so each rewritten
+    // file again covers a slice of the keyspace its row-group stats can
+    // skip. Each range task writes one file per bucket, so one range per
+    // file of the largest rewritten bucket keeps every bucket's file count.
     val partitioned =
       if (singleFilePerBucket)
         survivors.repartition(math.max(buckets.size, 1), col("bucket"))
-      else
-        survivors.repartitionByRange(math.max(buckets.size, 1), col("bucket"), col("row_key"))
+      else {
+        val files = buckets.map(b => parquetFileCount(Paths.get(dataDir, s"bucket=$b"))).max
+        survivors.repartitionByRange(math.max(files, 1), col("cell_id"))
+      }
     partitioned
       .observe(obs, metricAggs.head, metricAggs.tail: _*)
       .sortWithinPartitions(col("bucket"), col("row_key"))

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
@@ -234,51 +234,137 @@ object SpatialJoin {
   }
 
   /**
-   * Exact k nearest neighbors (euclidean degrees) of each query point via
-   * iterative ring expansion over SFC tiles — the scale path for point kNN
-   * (north star; the reference only ships centroid-kNN,
-   * AnalyticRecipes.scala:38-41, plus tier-coordinate neighbor walks,
-   * TieredSFCIndexStrategy.java:222-238).
+   * Exact k nearest neighbors (euclidean degrees) of each query point by
+   * ring expansion over SFC tiles — the scale path for point kNN (north
+   * star; the reference only ships centroid-kNN, AnalyticRecipes.scala:38-41,
+   * plus tier-coordinate neighbor walks, TieredSFCIndexStrategy.java:222-238).
    *
-   * Round at `bits`: candidates = points in the 3x3 tile neighborhood of
+   * Tier at `bits`: candidates = points in the 3x3 tile neighborhood of
    * each query. A query is resolved when it has >= k candidates and its
    * k-th distance is strictly below one cell span — every unseen point is
-   * then provably farther. Unresolved queries retry one tier coarser;
-   * bits=0 is a single world cell, so termination is brute-force exact.
+   * then provably farther. `startBits < 0` picks the first tier from one
+   * count of the points: the tier whose 3x3 neighborhood holds ~4k points
+   * under uniformity.
    *
-   * Queries are broadcast (small side); each round is a broadcast join +
-   * per-query window — no all-pairs shuffle. Driver loops on metadata
-   * (resolved counts), never on row data.
+   * `broadcastQueries = true` (the default) collects the query set to the
+   * driver once — it is the broadcast side, so it must fit there anyway —
+   * and scores the first tier in ONE plan: the points, keyed by tile, meet
+   * a driver-built local relation of every query's 9 neighbor tiles in a
+   * broadcast join, a per-query window takes the top k and applies the
+   * stop rule, and the resolved rows (at most k per query) come back as a
+   * local frame, leaving no cache or checkpoint behind. Only queries the
+   * first tier leaves unresolved (sparse regions) enter the ring loop, one
+   * tier coarser.
+   *
+   * `broadcastQueries = false` runs the ring loop from the first tier: each
+   * round is a shuffled tile equi-join — required when the query set is
+   * too large to broadcast (both-sides-big kNN) — with the same candidates
+   * and stop rule. Output: (`q_id`, `id`, `rn`) with the input id types.
    */
-  /** `broadcastQueries=false` turns each round's candidate join into a
-    * shuffled tile equi-join — required when the query set itself is too
-    * large to broadcast (both-sides-big kNN); candidate generation and
-    * the stop rule are identical. */
   def knnRing(pts: DataFrame, idCol: String, queries: DataFrame, qIdCol: String,
               k: Int, startBits: Int = -1, broadcastQueries: Boolean = true): DataFrame = {
-    // every round rescans the points; cache once for the loop
-    val base = pts.select(col(idCol).as("id"), col("lon"), col("lat")).cache()
-    var remaining = queries.select(col(qIdCol).as("q_id"),
+    val base = pts.select(col(idCol).as("id"), col("lon"), col("lat"))
+    val qs = queries.select(col(qIdCol).as("q_id"),
       col("lon").as("q_lon"), col("lat").as("q_lat"))
+    if (!broadcastQueries) return withCachedPoints(base)(b =>
+      ringLoop(b, qs, knnStartTier(b, k, startBits), k, broadcastQueries = false))
+    val spark = pts.sparkSession
+    // a query without a position has no neighborhood and no answer
+    val qRows = qs.collect().filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+    val bits = knnStartTier(base, k, startBits)
+    val neigh = for {
+      q <- qRows
+      qx = GeoCodec.bucketLon(q.getDouble(1), bits)
+      qy = GeoCodec.bucketLat(q.getDouble(2), bits)
+      dx <- -1 to 1
+      dy <- -1 to 1
+    } yield Row(q.get(0), q.get(1), q.get(2), tileKey(qx + dx, qy + dy, bits))
+    val qSide = spark.createDataFrame(java.util.Arrays.asList(neigh: _*),
+      qs.schema.add("key", LongType, nullable = false))
+    val first = resolvedAt(base, broadcast(qSide), k, bits)
+    val rows = first.collect()
+    val resolved = spark.createDataFrame(java.util.Arrays.asList(rows: _*), first.schema)
+    // binary ids compare by content; every other id type by equals
+    def idKey(v: Any): Any = v match { case b: Array[Byte] => b.toSeq; case o => o }
+    val done = rows.iterator.map(r => idKey(r.get(0))).toSet
+    val rest = qRows.filterNot(r => done.contains(idKey(r.get(0))))
+    if (rest.isEmpty || bits == 0) resolved
+    else resolved.unionByName(withCachedPoints(base)(b => ringLoop(b,
+      spark.createDataFrame(java.util.Arrays.asList(rest: _*), qs.schema),
+      bits - 1, k, broadcastQueries = true)))
+  }
+
+  /** packed probe key of tile (jx, jy) at `bits`: the two-digit base-m
+    * number (jx+1, jy+1), m = 2^bits + 2. A 3x3 neighborhood reaches one
+    * tile past each grid edge (−1 and 2^bits), so both digits lie in
+    * [0, m−1] and the key is injective over every tile a query can name
+    * (`x·2^bits + y` would alias (x, −1) with (x−1, 2^bits−1)); it stays
+    * below 2^63 for bits <= 31. */
+  private[spark] def tileKey(jx: Long, jy: Long, bits: Int): Long =
+    (jx + 1) * ((1L << bits) + 2) + (jy + 1)
+
+  private def tileKey(jx: Column, jy: Column, bits: Int): Column =
+    (jx + 1) * lit((1L << bits) + 2) + (jy + 1)
+
+  /** density-derived first tier (see [[knnRing]]); skewed regions fall
+    * through to coarser tiers correctly. */
+  private[spark] def knnStartTier(base: DataFrame, k: Int, startBits: Int): Int =
+    if (startBits >= 0) startBits
+    else {
+      // an RDD count is one job; Dataset.count adds a shuffle-stage job
+      val nPts = base.select().rdd.count().toDouble
+      val target = math.max(1.0, 9.0 * nPts / (4.0 * k))
+      math.min(16, math.max(0, (math.log(target) / math.log(4.0)).toInt))
+    }
+
+  /** the ring loop rescans the points every round: cache them for it. Its
+    * result reads checkpointed blocks, so the cache can go on return. */
+  private def withCachedPoints(base: DataFrame)(loop: DataFrame => DataFrame): DataFrame = {
+    val cached = base.cache()
+    try loop(cached) finally cached.unpersist()
+  }
+
+  /** the (q_id, id, rn) rows one tier proves exact: each query's top k by
+    * (d2, id) among the points sharing a `key` with its neighbor rows in
+    * `qSide` (q_id, q_lon, q_lat, key), kept where the stop rule holds. */
+  private def resolvedAt(base: DataFrame, qSide: DataFrame, k: Int, bits: Int): DataFrame = {
+    val cellDeg = 360.0 / (1L << bits)
+    val p = base.withColumn("key", tileKey(GeoFunctions.gw_tile_x(col("lon"), bits),
+      GeoFunctions.gw_tile_y(col("lat"), bits), bits))
+    val d2 = (col("lon") - col("q_lon")) * (col("lon") - col("q_lon")) +
+      (col("lat") - col("q_lat")) * (col("lat") - col("q_lat"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
+    val wAll = Window.partitionBy(col("q_id"))
+    // bits=0 is the single world cell: the join saw every point, so
+    // whatever top-k exists is exact regardless of distance.
+    val done =
+      if (bits == 0) lit(true)
+      else col("cnt") >= k && col("kth_d2") < lit(cellDeg * cellDeg)
+    p.join(qSide, Seq("key"))
+      .withColumn("d2", d2)
+      .withColumn("rn", row_number().over(w).cast("long"))
+      .where(col("rn") <= k)
+      .withColumn("kth_d2", max(col("d2")).over(wAll))
+      .withColumn("cnt", count(lit(1)).over(wAll))
+      .where(done)
+      .select(col("q_id"), col("id"), col("rn"))
+  }
+
+  /** tier-by-tier loop from `startBits` down: each round resolves what it
+    * can and retries the rest one tier coarser; bits=0 is a single world
+    * cell, so termination is brute-force exact. The driver loops on
+    * metadata (resolved counts), never on row data. */
+  private def ringLoop(base: DataFrame, queries: DataFrame, startBits: Int, k: Int,
+                       broadcastQueries: Boolean): DataFrame = {
+    var remaining = queries
     // empty-input-safe zero accumulator with the exact output schema
     var acc: DataFrame = remaining.limit(0).select(col("q_id"))
       .crossJoin(base.limit(0).select(col("id")))
       .withColumn("rn", lit(0L))
     // handle of the current `remaining` generation's checkpoint blocks
     var remRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    // startBits < 0 → derive from density: pick the tier whose 3×3 tile
-    // neighborhood holds ~4k points under uniformity, so most queries
-    // resolve in round 1 instead of walking down from a fixed tier
-    // (skewed regions still fall through to coarser rounds correctly).
-    var bits =
-      if (startBits >= 0) startBits
-      else {
-        val nPts = base.count().toDouble
-        val target = math.max(1.0, 9.0 * nPts / (4.0 * k))
-        math.min(16, math.max(0, (math.log(target) / math.log(4.0)).toInt))
-      }
+    var bits = startBits
     while (bits >= 0 && !remaining.isEmpty) {
-      val cellDeg = 360.0 / (1L << bits)
       val offs = Seq(-1L, 0L, 1L)
       val neigh = offs.flatMap(dx => offs.map(dy => struct(lit(dx).as("dx"), lit(dy).as("dy"))))
       val q = remaining
@@ -287,33 +373,14 @@ object SpatialJoin {
         .select(col("q_id"), col("q_lon"), col("q_lat"),
           explode(array(neigh: _*)).as("o"), col("qx"), col("qy"))
         .select(col("q_id"), col("q_lon"), col("q_lat"),
-          (col("qx") + col("o.dx")).as("jx"), (col("qy") + col("o.dy")).as("jy"))
-      val p = base
-        .withColumn("jx", GeoFunctions.gw_tile_x(col("lon"), bits))
-        .withColumn("jy", GeoFunctions.gw_tile_y(col("lat"), bits))
-      val d2 = (col("lon") - col("q_lon")) * (col("lon") - col("q_lon")) +
-        (col("lat") - col("q_lat")) * (col("lat") - col("q_lat"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
-      val wAll = Window.partitionBy(col("q_id"))
-      val qSide = if (broadcastQueries) broadcast(q) else q
-      val scored = p.join(qSide, Seq("jx", "jy"))
-        .withColumn("d2", d2)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= k)
-        .withColumn("kth_d2", max(col("d2")).over(wAll))
-        .withColumn("cnt", count(lit(1)).over(wAll))
-      // bits=0 is the single world cell: the join saw every point, so
-      // whatever top-k exists is exact regardless of distance.
-      val done =
-        if (bits == 0) lit(true)
-        else col("cnt") >= k && col("kth_d2") < lit(cellDeg * cellDeg)
+          tileKey(col("qx") + col("o.dx"), col("qy") + col("o.dy"), bits).as("key"))
       // loop hygiene: Lineage.cut (RDD-level local checkpoint — see
       // Lineage for why Dataset.localCheckpoint chains must not be used
       // in loops) truncates the accumulated unionByName/anti-join DAG
       // each round; superseded `remaining` generations are dropped as
       // soon as the next exists. `resolved` blocks stay — acc reads them.
       val (resolved, _) = Lineage.cut(
-        scored.where(done).select(col("q_id"), col("id"), col("rn")))
+        resolvedAt(base, if (broadcastQueries) broadcast(q) else q, k, bits))
       acc = acc.unionByName(resolved)
       val (nextRemaining, nextRemRdd) = Lineage.cut(
         remaining.join(resolved.select("q_id").distinct(), Seq("q_id"), "left_anti"))
@@ -322,7 +389,6 @@ object SpatialJoin {
       remaining = nextRemaining
       bits -= 1
     }
-    base.unpersist() // acc is checkpoint-backed; the loop's scan cache can go
     remRdd.foreach(_.unpersist(false)) // final remaining is empty/unread
     acc
   }

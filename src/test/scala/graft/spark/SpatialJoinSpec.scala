@@ -1,6 +1,10 @@
 package graft.spark
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 
 class SpatialJoinSpec extends SparkTestBase {
@@ -100,5 +104,131 @@ class SpatialJoinSpec extends SparkTestBase {
     val queries = pages.where(col("doc_id") === 0)
     val got = SpatialJoin.knnRing(tiny, "doc_id", queries, "doc_id", k = 10).collect()
     assert(got.length == 5)
+  }
+
+  /** (id, lon, lat) rows in three tight (±0.2°) clusters; the rest of the
+    * world is empty. */
+  private def clustered(n: Int): Seq[(Long, Double, Double)] = {
+    val r = new scala.util.Random(17)
+    val centres = Seq((10.0, 20.0), (12.0, 21.0), (-40.0, -10.0))
+    (0 until n).map { i =>
+      val (cx, cy) = centres(i % centres.size)
+      (i.toLong, cx + (r.nextDouble() - 0.5) * 0.4, cy + (r.nextDouble() - 0.5) * 0.4)
+    }
+  }
+  private lazy val clusterPts = clustered(3000)
+  private lazy val clusterDf = spark.createDataFrame(clusterPts).toDF("id", "lon", "lat").cache()
+  // one in-cluster query per centre region, taken from the points
+  private lazy val nearQs = clusterPts.filter(_._1 % 250 == 0)
+  // at least 90° from every point
+  private lazy val farQs = Seq((-1L, 150.0, 60.0), (-2L, -150.0, -60.0), (-3L, 100.0, -70.0))
+
+  private def bruteKnn(pts: Seq[(Long, Double, Double)], qx: Double, qy: Double,
+                       k: Int): Seq[Long] =
+    pts.map { case (id, x, y) => (id, (x - qx) * (x - qx) + (y - qy) * (y - qy)) }
+      .sortBy { case (id, d2) => (d2, id) }.take(k).map(_._1)
+
+  /** q_id -> ids ordered by rn. */
+  private def byQuery(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._3).map(_._2) }
+
+  /** Spark jobs started while `body` runs (suites run one at a time). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftBridge.drainListenerBus(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("tileKey is injective over every tile a 3x3 neighborhood names, bits 0-16") {
+    for (bits <- 0 to 16) {
+      val n = 1L << bits
+      // the grid's edge tiles, the out-of-grid neighbors −1 and 2^bits,
+      // and seeded interior tiles
+      val r = new scala.util.Random(bits)
+      val xs = (Seq(-1L, 0L, 1L, n / 2, n - 2, n - 1, n) ++ Seq.fill(8)(r.nextLong(n)))
+        .filter(x => x >= -1 && x <= n).distinct
+      val m = n + 2
+      val keys = for (x <- xs; y <- xs) yield {
+        val key = SpatialJoin.tileKey(x, y, bits)
+        // the key decodes back to its tile: no two tiles share one
+        assert((key / m - 1, key % m - 1) == (x, y), s"bits $bits tile ($x, $y)")
+        assert(key >= 0 && key < m * m)
+        key
+      }
+      assert(keys.distinct.size == keys.size, s"bits $bits")
+      if (bits <= 5) { // exhaustive over the whole emitted range
+        val all = for (x <- -1L to n; y <- -1L to n) yield SpatialJoin.tileKey(x, y, bits)
+        assert(all.distinct.size == all.size && all.min == 0 && all.max == m * m - 1, s"bits $bits")
+      }
+      // the naive x·2^bits + y aliases (1, −1) with (0, 2^bits − 1)
+      def naive(x: Long, y: Long) = x * n + y
+      assert(naive(1, -1) == naive(0, n - 1))
+      assert(SpatialJoin.tileKey(1, -1, bits) != SpatialJoin.tileKey(0, n - 1, bits))
+    }
+  }
+
+  test("knnRing == brute force when the first tier leaves queries unresolved") {
+    val k = 10
+    val bits = SpatialJoin.knnStartTier(clusterDf, k, -1)
+    // every far query's nearest point lies beyond its 3x3 neighborhood at
+    // the first tier, so only the ring loop can answer it
+    for ((_, qx, qy) <- farQs) {
+      val near = clusterPts.map { case (_, x, y) => math.hypot(x - qx, y - qy) }.min
+      assert(near > 3 * 360.0 / (1L << bits))
+    }
+    val qs = nearQs ++ farQs
+    val got = byQuery(SpatialJoin.knnRing(clusterDf, "id",
+      spark.createDataFrame(qs).toDF("id", "lon", "lat"), "id", k))
+    assert(got.keySet == qs.map(_._1).toSet)
+    for ((qid, qx, qy) <- qs) assert(got(qid) == bruteKnn(clusterPts, qx, qy, k), s"query $qid")
+  }
+
+  test("knnRing: Int ids keep their type; duplicate query ids match the ring loop") {
+    val ptsInt = clusterDf.select(col("id").cast("int").as("id"), col("lon"), col("lat"))
+    val qsInt = spark.createDataFrame(nearQs ++ farQs).toDF("id", "lon", "lat")
+      .select(col("id").cast("int").as("qid"), col("lon"), col("lat"))
+    val out = SpatialJoin.knnRing(ptsInt, "id", qsInt, "qid", k = 5)
+    assert(out.columns.toSeq == Seq("q_id", "id", "rn"))
+    assert(out.schema.map(_.dataType) == Seq(IntegerType, IntegerType, LongType))
+    val rows = out.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+    for ((qid, qx, qy) <- nearQs ++ farQs)
+      assert(rows.filter(_._1 == qid.toInt).sortBy(_._3).map(_._2.toLong).toSeq ==
+        bruteKnn(clusterPts, qx, qy, 5), s"query $qid")
+    // a query listed twice, and one id naming two positions: the
+    // single-round path and the ring loop partition candidates the same way
+    val (a, b) = (nearQs(0), nearQs(1))
+    val dup = spark.createDataFrame(Seq(a, a, b, (b._1, -40.0, -10.0), farQs.head))
+      .toDF("id", "lon", "lat")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val single = sorted(SpatialJoin.knnRing(clusterDf, "id", dup, "id", k = 4))
+    assert(single.nonEmpty)
+    assert(single == sorted(SpatialJoin.knnRing(clusterDf, "id", dup, "id", k = 4,
+      broadcastQueries = false)))
+  }
+
+  test("knnRing resolved in the first tier: at most 5 jobs, no blocks left behind") {
+    val qs = clusterDf.where(col("id") % 250 === 0)
+    val k = 10
+    byQuery(SpatialJoin.knnRing(clusterDf, "id", qs, "id", k)) // warm-up
+    // the shared session's context cleaner may free other suites' blocks
+    // meanwhile, so the pin is on the cached RDDs the call adds
+    def cachedRdds = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = cachedRdds
+    var got: Map[Long, Seq[Long]] = Map.empty
+    val jobs = jobsDuring { got = byQuery(SpatialJoin.knnRing(clusterDf, "id", qs, "id", k)) }
+    // collect the queries, count the points, and one plan: broadcast,
+    // window shuffle, result
+    assert(jobs <= 5, s"$jobs jobs")
+    assert((cachedRdds -- before).isEmpty, "a cache or local-checkpoint block outlived the call")
+    for ((qid, qx, qy) <- nearQs) assert(got(qid) == bruteKnn(clusterPts, qx, qy, k), s"query $qid")
   }
 }

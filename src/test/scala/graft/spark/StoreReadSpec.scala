@@ -6,6 +6,7 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The store opens from its own metadata: reads apply the recorded
   * `_schema.ddl` (no inference job), a resumed ingest must match it, and
@@ -101,5 +102,42 @@ class StoreReadSpec extends SparkTestBase {
     // each file's cell_id min/max covers ~1/8 of the keyspace, so row-group
     // stats skip most of the store under the pushed cell_id ranges
     assert(scanned >= hits.length && scanned * 2 < total, s"scanned $scanned of $total rows")
+  }
+
+  private val unsigned: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
+
+  /** (min, max) of a binary column from a parquet file's footer stats. */
+  private def footerRange(file: java.nio.file.Path, col: String): (Array[Byte], Array[Byte]) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), spark.sparkContext.hadoopConfiguration))
+    try {
+      val stats = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == col).get.getStatistics
+      }
+      (stats.map(_.genericGetMin.asInstanceOf[Binary].getBytes).min(unsigned),
+        stats.map(_.genericGetMax.asInstanceOf[Binary].getBytes).max(unsigned))
+    } finally reader.close()
+  }
+
+  test("a delete rewrite keeps the cell_id split: several files, each a slice of its bucket") {
+    val dir = ingested("graft-read-rewrite", Tables.synthPages(spark, 60000),
+      Ingest.Config(numBuckets = 8, batchSize = 8, targetPartitions = 8))
+    val bucket0 = Ingest.readStore(spark, _: String).where(col("bucket") === 0)
+    val before = bucket0(dir).count()
+    Ingest.deleteByQuery(spark, dir, col("doc_id") % 100 === 0)
+    assert(bucket0(dir).count() < before, "bucket 0 was rewritten")
+    val files = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "data", "bucket=0"))
+      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      finally s.close()
+    }
+    assert(files.size > 1, s"${files.size} files")
+    val ranges = files.map(footerRange(_, "cell_id"))
+    val (lo, hi) = (ranges.map(_._1).min(unsigned), ranges.map(_._2).max(unsigned))
+    for (((fMin, fMax), f) <- ranges.zip(files))
+      assert(unsigned.gt(fMin, lo) || unsigned.lt(fMax, hi), s"$f spans the whole bucket")
   }
 }
