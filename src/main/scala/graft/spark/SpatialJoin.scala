@@ -171,8 +171,8 @@ object SpatialJoin {
    */
   def polygonJoinLarge(pts: DataFrame, regions: DataFrame, bits: Int = 6): DataFrame = {
     // collision-safe working names: user point tables can legitimately
-    // carry tx/ty/geom columns (knnRing closes its schema for the same
-    // reason); region_id stays the contractual output name
+    // carry tx/ty/geom columns (knnRing keeps only id, lon and lat of its
+    // inputs for the same reason); region_id stays the contractual output name
     for (reserved <- Seq("__pj_tx", "__pj_ty", "__pj_geom", "region_id"))
       require(!pts.columns.contains(reserved),
         s"polygonJoinLarge reserves column name '$reserved' on the points side")
@@ -242,56 +242,60 @@ object SpatialJoin {
    * Tier at `bits`: candidates = points in the 3x3 tile neighborhood of
    * each query. A query is resolved when it has >= k candidates and its
    * k-th distance is strictly below one cell span — every unseen point is
-   * then provably farther. `startBits < 0` picks the first tier from one
-   * count of the points: the tier whose 3x3 neighborhood holds ~4k points
-   * under uniformity.
+   * then provably farther. The walk starts at the tier whose 3x3
+   * neighborhood holds ~4k points under uniformity (one count of the
+   * points).
    *
-   * `broadcastQueries = true` (the default) collects the query set to the
-   * driver once — it is the broadcast side, so it must fit there anyway —
-   * and scores the first tier in ONE plan: the points, keyed by tile, meet
-   * a driver-built local relation of every query's 9 neighbor tiles in a
-   * broadcast join, a per-query window takes the top k and applies the
-   * stop rule, and the resolved rows (at most k per query) come back as a
-   * local frame, leaving no cache or checkpoint behind. Only queries the
-   * first tier leaves unresolved (sparse regions) enter the ring loop, one
-   * tier coarser.
-   *
-   * `broadcastQueries = false` runs the ring loop from the first tier: each
-   * round is a shuffled tile equi-join — required when the query set is
-   * too large to broadcast (both-sides-big kNN) — with the same candidates
-   * and stop rule. Output: (`q_id`, `id`, `rn`) with the input id types.
+   * The query set is the broadcast side, so it must fit on the driver: it
+   * is collected once and the open queries are held there. Each tier is
+   * ONE plan: the points, keyed by tile, meet a driver-built local relation
+   * of every open query's 9 neighbor tiles in a broadcast join, a per-query
+   * window takes the top k and applies the stop rule, and the resolved
+   * rows (at most k per query) are collected. Resolved queries leave the
+   * open set and the walk goes one tier coarser until none is open; bits=0
+   * is a single world cell, so termination is brute-force exact. The tiers
+   * after the first rescan the points, so those are cached for them and
+   * released on return; the rows come back as a local frame, so no cache
+   * or checkpoint outlives the call. A query or point without a position
+   * takes no part. Output: (`q_id`, `id`, `rn`) with the input id types.
    */
   def knnRing(pts: DataFrame, idCol: String, queries: DataFrame, qIdCol: String,
-              k: Int, startBits: Int = -1, broadcastQueries: Boolean = true): DataFrame = {
+              k: Int): DataFrame = {
+    require(k >= 1, s"knnRing needs k >= 1, got $k")
+    val spark = pts.sparkSession
     val base = pts.select(col(idCol).as("id"), col("lon"), col("lat"))
     val qs = queries.select(col(qIdCol).as("q_id"),
       col("lon").as("q_lon"), col("lat").as("q_lat"))
-    if (!broadcastQueries) return withCachedPoints(base)(b =>
-      ringLoop(b, qs, knnStartTier(b, k, startBits), k, broadcastQueries = false))
-    val spark = pts.sparkSession
-    // a query without a position has no neighborhood and no answer
-    val qRows = qs.collect().filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-    val bits = knnStartTier(base, k, startBits)
-    val neigh = for {
-      q <- qRows
-      qx = GeoCodec.bucketLon(q.getDouble(1), bits)
-      qy = GeoCodec.bucketLat(q.getDouble(2), bits)
-      dx <- -1 to 1
-      dy <- -1 to 1
-    } yield Row(q.get(0), q.get(1), q.get(2), tileKey(qx + dx, qy + dy, bits))
-    val qSide = spark.createDataFrame(java.util.Arrays.asList(neigh: _*),
-      qs.schema.add("key", LongType, nullable = false))
-    val first = resolvedAt(base, broadcast(qSide), k, bits)
-    val rows = first.collect()
-    val resolved = spark.createDataFrame(java.util.Arrays.asList(rows: _*), first.schema)
+    val qSchema = qs.schema.add("key", LongType, nullable = false)
     // binary ids compare by content; every other id type by equals
     def idKey(v: Any): Any = v match { case b: Array[Byte] => b.toSeq; case o => o }
-    val done = rows.iterator.map(r => idKey(r.get(0))).toSet
-    val rest = qRows.filterNot(r => done.contains(idKey(r.get(0))))
-    if (rest.isEmpty || bits == 0) resolved
-    else resolved.unionByName(withCachedPoints(base)(b => ringLoop(b,
-      spark.createDataFrame(java.util.Arrays.asList(rest: _*), qs.schema),
-      bits - 1, k, broadcastQueries = true)))
+    // a query without a position has no neighborhood and no answer
+    var open = qs.collect().filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+    val start = knnStartTier(base, k)
+    var bits = start
+    var cached = false
+    val out = Array.newBuilder[Row]
+    try {
+      while (open.nonEmpty && bits >= 0) {
+        // the tiers after the first rescan the points
+        if (bits == start - 1) { base.cache(); cached = true }
+        val neigh = for {
+          q <- open
+          qx = GeoCodec.bucketLon(q.getDouble(1), bits)
+          qy = GeoCodec.bucketLat(q.getDouble(2), bits)
+          dx <- -1 to 1
+          dy <- -1 to 1
+        } yield Row(q.get(0), q.get(1), q.get(2), tileKey(qx + dx, qy + dy, bits))
+        val qSide = spark.createDataFrame(java.util.Arrays.asList(neigh: _*), qSchema)
+        val rows = resolvedAt(base, broadcast(qSide), k, bits).collect()
+        out ++= rows
+        val done = rows.iterator.map(r => idKey(r.get(0))).toSet
+        open = open.filterNot(r => done.contains(idKey(r.get(0))))
+        bits -= 1
+      }
+    } finally if (cached) base.unpersist()
+    spark.createDataFrame(java.util.Arrays.asList(out.result(): _*), StructType(Seq(
+      qs.schema("q_id"), base.schema("id"), StructField("rn", LongType, nullable = false))))
   }
 
   /** packed probe key of tile (jx, jy) at `bits`: the two-digit base-m
@@ -308,20 +312,11 @@ object SpatialJoin {
 
   /** density-derived first tier (see [[knnRing]]); skewed regions fall
     * through to coarser tiers correctly. */
-  private[spark] def knnStartTier(base: DataFrame, k: Int, startBits: Int): Int =
-    if (startBits >= 0) startBits
-    else {
-      // an RDD count is one job; Dataset.count adds a shuffle-stage job
-      val nPts = base.select().rdd.count().toDouble
-      val target = math.max(1.0, 9.0 * nPts / (4.0 * k))
-      math.min(16, math.max(0, (math.log(target) / math.log(4.0)).toInt))
-    }
-
-  /** the ring loop rescans the points every round: cache them for it. Its
-    * result reads checkpointed blocks, so the cache can go on return. */
-  private def withCachedPoints(base: DataFrame)(loop: DataFrame => DataFrame): DataFrame = {
-    val cached = base.cache()
-    try loop(cached) finally cached.unpersist()
+  private[spark] def knnStartTier(base: DataFrame, k: Int): Int = {
+    // an RDD count is one job; Dataset.count adds a shuffle-stage job
+    val nPts = base.select().rdd.count().toDouble
+    val target = math.max(1.0, 9.0 * nPts / (4.0 * k))
+    math.min(16, math.max(0, (math.log(target) / math.log(4.0)).toInt))
   }
 
   /** the (q_id, id, rn) rows one tier proves exact: each query's top k by
@@ -348,48 +343,5 @@ object SpatialJoin {
       .withColumn("cnt", count(lit(1)).over(wAll))
       .where(done)
       .select(col("q_id"), col("id"), col("rn"))
-  }
-
-  /** tier-by-tier loop from `startBits` down: each round resolves what it
-    * can and retries the rest one tier coarser; bits=0 is a single world
-    * cell, so termination is brute-force exact. The driver loops on
-    * metadata (resolved counts), never on row data. */
-  private def ringLoop(base: DataFrame, queries: DataFrame, startBits: Int, k: Int,
-                       broadcastQueries: Boolean): DataFrame = {
-    var remaining = queries
-    // empty-input-safe zero accumulator with the exact output schema
-    var acc: DataFrame = remaining.limit(0).select(col("q_id"))
-      .crossJoin(base.limit(0).select(col("id")))
-      .withColumn("rn", lit(0L))
-    // handle of the current `remaining` generation's checkpoint blocks
-    var remRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    var bits = startBits
-    while (bits >= 0 && !remaining.isEmpty) {
-      val offs = Seq(-1L, 0L, 1L)
-      val neigh = offs.flatMap(dx => offs.map(dy => struct(lit(dx).as("dx"), lit(dy).as("dy"))))
-      val q = remaining
-        .withColumn("qx", GeoFunctions.gw_tile_x(col("q_lon"), bits))
-        .withColumn("qy", GeoFunctions.gw_tile_y(col("q_lat"), bits))
-        .select(col("q_id"), col("q_lon"), col("q_lat"),
-          explode(array(neigh: _*)).as("o"), col("qx"), col("qy"))
-        .select(col("q_id"), col("q_lon"), col("q_lat"),
-          tileKey(col("qx") + col("o.dx"), col("qy") + col("o.dy"), bits).as("key"))
-      // loop hygiene: Lineage.cut (RDD-level local checkpoint — see
-      // Lineage for why Dataset.localCheckpoint chains must not be used
-      // in loops) truncates the accumulated unionByName/anti-join DAG
-      // each round; superseded `remaining` generations are dropped as
-      // soon as the next exists. `resolved` blocks stay — acc reads them.
-      val (resolved, _) = Lineage.cut(
-        resolvedAt(base, if (broadcastQueries) broadcast(q) else q, k, bits))
-      acc = acc.unionByName(resolved)
-      val (nextRemaining, nextRemRdd) = Lineage.cut(
-        remaining.join(resolved.select("q_id").distinct(), Seq("q_id"), "left_anti"))
-      remRdd.foreach(_.unpersist(false))
-      remRdd = Some(nextRemRdd)
-      remaining = nextRemaining
-      bits -= 1
-    }
-    remRdd.foreach(_.unpersist(false)) // final remaining is empty/unread
-    acc
   }
 }

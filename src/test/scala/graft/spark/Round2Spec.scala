@@ -84,16 +84,6 @@ class Round2Spec extends SparkTestBase {
     assert(uncapped.contains((0L, 1L)) && uncapped.size > 1)
   }
 
-  // ------------------------------------------------------------ knnRing
-
-  test("knnRing: empty query set returns an empty frame, not null") {
-    val pts = Tables.synthPages(spark, 200)
-      .select(col("doc_id").as("id"), col("lon"), col("lat"))
-    val out = SpatialJoin.knnRing(pts, "id", pts.where(lit(false)), "id", k = 3)
-    assert(out != null && out.count() == 0)
-    assert(out.columns.toSeq == Seq("q_id", "id", "rn"))
-  }
-
   // -------------------------------------------------------- multi-index
 
   test("multi-index chooser: ST index for timed queries, spatial otherwise; results exact") {
@@ -224,18 +214,6 @@ class Round2Spec extends SparkTestBase {
     assert(joined.count() == want && want > 0)
     spark.sql("DROP TABLE r2_store_a")
     spark.sql("DROP TABLE r2_store_b")
-  }
-
-  test("knnRing non-broadcast mode returns the identical exact result") {
-    val pts = Tables.synthPages(spark, 1500)
-      .select(col("doc_id").as("id"), col("lon"), col("lat"))
-    val queries = pts.where(col("id") % 37 === 0)
-    def flat(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val bc = flat(SpatialJoin.knnRing(pts, "id", queries, "id", k = 5))
-    val sh = flat(SpatialJoin.knnRing(pts, "id", queries, "id", k = 5,
-      broadcastQueries = false))
-    assert(bc == sh && bc.nonEmpty)
   }
 
   // ----------------------------------------------------------- visibility

@@ -99,6 +99,30 @@ class SpatialJoinSpec extends SparkTestBase {
     }
   }
 
+  test("knnRing == brute force on 1500 synthetic pages, every 37th id a query") {
+    val pts = Tables.synthPages(spark, 1500)
+      .select(col("doc_id").as("id"), col("lon"), col("lat"))
+    val local = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
+    val qs = local.filter(_._1 % 37 == 0)
+    val got = byQuery(SpatialJoin.knnRing(pts, "id", pts.where(col("id") % 37 === 0), "id", k = 5))
+    assert(got.keySet == qs.map(_._1).toSet && qs.nonEmpty)
+    for ((qid, qx, qy) <- qs) assert(got(qid) == bruteKnn(local, qx, qy, 5), s"query $qid")
+  }
+
+  test("knnRing: empty query set returns an empty frame, not null") {
+    val pts = Tables.synthPages(spark, 200)
+      .select(col("doc_id").as("id"), col("lon"), col("lat"))
+    val out = SpatialJoin.knnRing(pts, "id", pts.where(lit(false)), "id", k = 3)
+    assert(out != null && out.count() == 0)
+    assert(out.columns.toSeq == Seq("q_id", "id", "rn"))
+  }
+
+  test("knnRing rejects k < 1") {
+    val qs = pages.where(col("doc_id") === 0)
+    for (k <- Seq(0, -1))
+      intercept[IllegalArgumentException](SpatialJoin.knnRing(pages, "doc_id", qs, "doc_id", k))
+  }
+
   test("knnRing exact on tiny table (fewer points than k)") {
     val tiny = pages.limit(5)
     val queries = pages.where(col("doc_id") === 0)
@@ -132,6 +156,11 @@ class SpatialJoinSpec extends SparkTestBase {
   private def byQuery(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._3).map(_._2) }
+
+  /** ids of the RDDs holding cache or local-checkpoint blocks; the shared
+    * session's context cleaner may free other suites' blocks meanwhile, so
+    * pins compare the ids a call adds. */
+  private def cachedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
 
   /** Spark jobs started while `body` runs (suites run one at a time). */
   private def jobsDuring(body: => Unit): Int = {
@@ -177,9 +206,9 @@ class SpatialJoinSpec extends SparkTestBase {
 
   test("knnRing == brute force when the first tier leaves queries unresolved") {
     val k = 10
-    val bits = SpatialJoin.knnStartTier(clusterDf, k, -1)
+    val bits = SpatialJoin.knnStartTier(clusterDf, k)
     // every far query's nearest point lies beyond its 3x3 neighborhood at
-    // the first tier, so only the ring loop can answer it
+    // the first tier, so only a coarser tier can answer it
     for ((_, qx, qy) <- farQs) {
       val near = clusterPts.map { case (_, x, y) => math.hypot(x - qx, y - qy) }.min
       assert(near > 3 * 360.0 / (1L << bits))
@@ -191,7 +220,7 @@ class SpatialJoinSpec extends SparkTestBase {
     for ((qid, qx, qy) <- qs) assert(got(qid) == bruteKnn(clusterPts, qx, qy, k), s"query $qid")
   }
 
-  test("knnRing: Int ids keep their type; duplicate query ids match the ring loop") {
+  test("knnRing: Int ids keep their type; duplicate query ids keep their rows") {
     val ptsInt = clusterDf.select(col("id").cast("int").as("id"), col("lon"), col("lat"))
     val qsInt = spark.createDataFrame(nearQs ++ farQs).toDF("id", "lon", "lat")
       .select(col("id").cast("int").as("qid"), col("lon"), col("lat"))
@@ -202,26 +231,40 @@ class SpatialJoinSpec extends SparkTestBase {
     for ((qid, qx, qy) <- nearQs ++ farQs)
       assert(rows.filter(_._1 == qid.toInt).sortBy(_._3).map(_._2.toLong).toSeq ==
         bruteKnn(clusterPts, qx, qy, 5), s"query $qid")
-    // a query listed twice, and one id naming two positions: the
-    // single-round path and the ring loop partition candidates the same way
+    // a query listed twice, and one id naming two positions: the rows of
+    // one id are ranked together, so query 0 sees every candidate twice and
+    // query 250 the union of both neighborhoods (pinned to the rows every
+    // earlier knnRing path returned for this input)
     val (a, b) = (nearQs(0), nearQs(1))
     val dup = spark.createDataFrame(Seq(a, a, b, (b._1, -40.0, -10.0), farQs.head))
       .toDF("id", "lon", "lat")
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val single = sorted(SpatialJoin.knnRing(clusterDf, "id", dup, "id", k = 4))
-    assert(single.nonEmpty)
-    assert(single == sorted(SpatialJoin.knnRing(clusterDf, "id", dup, "id", k = 4,
-      broadcastQueries = false)))
+    val got = SpatialJoin.knnRing(clusterDf, "id", dup, "id", k = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(got == Seq[(Long, Long, Long)](
+      (-1, 1669, 1), (-1, 1780, 2), (-1, 1921, 4), (-1, 2041, 3),
+      (0, 0, 1), (0, 0, 2), (0, 2556, 3), (0, 2556, 4),
+      (250, 250, 1), (250, 374, 3), (250, 2561, 2), (250, 2995, 4)))
+  }
+
+  test("knnRing: null-position queries get no rows, null points never match") {
+    val nullPt = spark.createDataFrame(Seq((-100L, Option.empty[Double], Option.empty[Double])))
+      .toDF("id", "lon", "lat")
+    val pts = clusterDf.unionByName(nullPt)
+    val qs = nearQs ++ farQs
+    val qDf = spark.createDataFrame(qs.map { case (i, x, y) => (i, Option(x), Option(y)) } ++
+        Seq((-10L, None, Some(20.0)), (-11L, Some(10.0), None)))
+      .toDF("id", "lon", "lat")
+    val k = 10
+    val got = byQuery(SpatialJoin.knnRing(pts, "id", qDf, "id", k))
+    assert(got.keySet == qs.map(_._1).toSet)
+    assert(!got.values.exists(_.contains(-100L)))
+    for ((qid, qx, qy) <- qs) assert(got(qid) == bruteKnn(clusterPts, qx, qy, k), s"query $qid")
   }
 
   test("knnRing resolved in the first tier: at most 5 jobs, no blocks left behind") {
     val qs = clusterDf.where(col("id") % 250 === 0)
     val k = 10
     byQuery(SpatialJoin.knnRing(clusterDf, "id", qs, "id", k)) // warm-up
-    // the shared session's context cleaner may free other suites' blocks
-    // meanwhile, so the pin is on the cached RDDs the call adds
-    def cachedRdds = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
     val before = cachedRdds
     var got: Map[Long, Seq[Long]] = Map.empty
     val jobs = jobsDuring { got = byQuery(SpatialJoin.knnRing(clusterDf, "id", qs, "id", k)) }
@@ -230,5 +273,16 @@ class SpatialJoinSpec extends SparkTestBase {
     assert(jobs <= 5, s"$jobs jobs")
     assert((cachedRdds -- before).isEmpty, "a cache or local-checkpoint block outlived the call")
     for ((qid, qx, qy) <- nearQs) assert(got(qid) == bruteKnn(clusterPts, qx, qy, k), s"query $qid")
+  }
+
+  test("knnRing falling through to coarser tiers leaves no cache or checkpoint") {
+    val qs = nearQs ++ farQs
+    val k = 10
+    val before = cachedRdds
+    val got = byQuery(SpatialJoin.knnRing(clusterDf, "id",
+      spark.createDataFrame(qs).toDF("id", "lon", "lat"), "id", k))
+    assert((cachedRdds -- before).isEmpty, "a cache or local-checkpoint block outlived the call")
+    assert(got.keySet == qs.map(_._1).toSet)
+    for ((qid, qx, qy) <- qs) assert(got(qid) == bruteKnn(clusterPts, qx, qy, k), s"query $qid")
   }
 }
